@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession
 import graft.queries.Catalog
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -29,22 +30,13 @@ object SparkEntry {
         count(lit(1)).as("count_order"))
 
   /** Session settings every catalog query depends on, applied per call so
-    * the queries behave identically on a driver-created session: pre-ANSI
-    * cast semantics (reference parity), UTC (all date/time formatting),
-    * and nanos-as-long (the TIMESTAMP(NANOS) events table).
+    * the queries behave identically on a driver-created session: the whole
+    * [[GraftSession.sqlConfs]] set — pre-ANSI cast semantics (reference
+    * parity), UTC (all date/time formatting), nanos-as-long (the
+    * TIMESTAMP(NANOS) events table) and the AQE/cache-AQE switches.
     */
-  private def prepare(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // let AQE re-plan cache-populating fragments (see GraftSession.common
-    // — without it every persist() materializes at the static shuffle
-    // partition count and its consumers inherit that task count)
-    spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
-  }
+  private def prepare(spark: SparkSession): Unit =
+    GraftSession.sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

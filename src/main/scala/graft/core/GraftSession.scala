@@ -12,14 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** Settings shared by local and cluster deployments. */
-  private def common(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** The SQL confs every engine session runs under — the one copy. Builder
+    * sessions get them from `common`; `SparkEntry` sets them per call on a
+    * driver-created session, so both run the same conf set.
+    */
+  val sqlConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // r19 optimization: let AQE re-plan (and coalesce) the plan fragment
     // that POPULATES a cache. Off, every persist() in the dedup/ANN
     // family materializes at the static shuffle-partition count and all
@@ -28,8 +31,12 @@ object GraftSession {
     // cluster scale it equally lets cached fragments right-size to data
     // volume instead of the static conf. Results are partitioning-
     // independent by the repo-wide bit-determinism contract.
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64KB")
+
+  /** Settings shared by local and cluster deployments. */
+  private def common(b: SparkSession.Builder): SparkSession.Builder =
+    sqlConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
   /** Production factory for a real cluster: master/deploy come from
     * spark-submit; shuffle partitions sized 3× total cores (AQE coalesces

@@ -550,8 +550,9 @@ object Similarity {
         .withColumn("c_cos", cosine(s)(col("embedding"), col("c_emb")))
         // group by the scalar id only: an array-typed grouping key
         // forces a sort-based aggregate (~2× the hash-agg cost on this
-        // exact shape, AggIdiomProbe); the embedding is functionally
-        // dependent on the id, so carry it with first()
+        // exact shape, PLANS.md "Round-15: the last array-key groupBy");
+        // the embedding is functionally dependent on the id, so carry it
+        // with first()
         .groupBy(col(idCol))
         .agg(first(col("embedding")).as("embedding"), max("c_cos").as("closest"))
         // priority = d² / u: u = md5-uniform in (0, 1], d = angular gap

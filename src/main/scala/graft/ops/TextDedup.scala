@@ -188,7 +188,8 @@ object TextDedup {
     // lexicographic order for any long id (negatives included) — and a
     // primitive-buffer min gets a HashAggregate where a struct buffer
     // would force the SortAggregate this repo has measured at ~2× on
-    // corpus-sized shapes (AggIdiomProbe, PLANS.md). Non-integral ids
+    // corpus-sized shapes (PLANS.md "Round-14: rank windows → mergeable
+    // aggregates" and "Round-15: paragraph-level dedup"). Non-integral ids
     // fall back to the generic struct min, still map-side combined.
     val firstKey: Column = docs.schema(idCol).dataType match {
       case org.apache.spark.sql.types.ByteType
@@ -579,10 +580,11 @@ object TextDedup {
     * `bloomBits` (opt-in): batch-side Bloom prefilter for the exact
     * anti-join's corpus side; size it for the BATCH key count (~23 bits
     * per key for 1% fpp at 5 hashes). When to enable, measured
-    * (IncrementalBloomBench, 5.5k-doc batch, 3-trial medians): the
-    * filter costs one extra batch aggregate plus a per-corpus-row probe
-    * and saves the corpus-hash shuffle — it clearly LOSES below ~100k
-    * corpus rows (-0.7 s at 5k, -2.1 s at 100k) and trades inside host
+    * (PLANS.md "Round-14: the Bloom prefilter was on the wrong side",
+    * 5.5k-doc batch, 3-trial medians): the filter costs one extra batch
+    * aggregate plus a per-corpus-row probe and saves the corpus-hash
+    * shuffle — it clearly LOSES below ~100k corpus rows (-0.7 s at 5k,
+    * -2.1 s at 100k) and trades inside host
     * noise at 1M (+15% one capture, -13% another); treat ≥ ~1M corpus
     * rows as the earliest defensible enable point and measure in place.
     * The structurally bigger per-tick lever is
@@ -980,10 +982,11 @@ object TextDedup {
     // per-pair intersection is the codegen'd two-pointer merge
     // [[graft.functions.SortedIntersectCount]] — `array_intersect`
     // allocated and hashed an OpenHashSet per candidate PAIR, which
-    // dominated this path on low-vocabulary corpora (QueryJobProfile +
-    // JaccardProbe, sf0.1: 0.67 M candidates, verify was the query's
-    // hottest stage). Counts are identical: both sides are distinct-
-    // element sets and each shared element is counted once. The size-
+    // dominated this path on low-vocabulary corpora (QueryJobProfile,
+    // sf0.1: 0.67 M candidates, verify was the query's hottest stage —
+    // OPTIMIZATION_r19.md "Changes (batch 1)"). Counts are identical:
+    // both sides are distinct-element sets and each shared element is
+    // counted once. The size-
     // ratio prune runs BEFORE the merge so pairs the length bound
     // already excludes (candidates from the incremental paths carry no
     // such prune) never pay for one.

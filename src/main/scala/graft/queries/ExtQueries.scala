@@ -560,10 +560,11 @@ object ExtQueries {
       Similarity.writeIvfIndex(corpus, p, centroidStride = 50L))
 
   /** The deterministic paragraph fixture for `ext_dedup_paragraphs` and
-    * its scale probe (ParaDedupScaleBench): the corpus has no paragraph
-    * breaks, so both engines derive them as `width`-token chunks joined
-    * by '\n'. Newlines are normalized to spaces and empty tokens dropped
-    * BEFORE chunking, so a future fixture containing newlines, empty
+    * its scale measurement (PLANS.md "Round-15: paragraph-level dedup"):
+    * the corpus has no paragraph breaks, so both engines derive them as
+    * `width`-token chunks joined by '\n'. Newlines are normalized to
+    * spaces and empty tokens dropped BEFORE chunking, so a future fixture
+    * containing newlines, empty
     * texts, or space runs cannot make a chunk that re-splits differently
     * than the oracle counts it — the oracle SQL mirrors this with
     * `replace(text, chr(10), ' ')` + `list_filter`. One definition so

@@ -2,11 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared timing/forcing helpers for the standalone bench mains
-  * (ReferenceShapeBench, ScaleCurveBench, DedupScaleBench). One copy so a
-  * methodology fix lands everywhere at once; `graft.Bench` keeps its own
-  * richer `timeMedian` (cache clearing + GC/load telemetry) because its
-  * numbers feed the per-round BENCH artifact.
+/** Shared timing/forcing helpers for the standalone measurement mains
+  * (ReferenceShapeBench, QueryJobProfile) plus the history/steal
+  * bookkeeping of `graft.Bench`'s artifact. One copy so a methodology fix
+  * lands everywhere at once; `graft.Bench` keeps its own richer
+  * `timeMedian` (cache clearing + GC/load telemetry) because its numbers
+  * feed the per-round BENCH artifact.
   */
 private[graft] object BenchUtil {
 
@@ -158,93 +159,4 @@ private[graft] object BenchUtil {
         case _ => None
       }
     }.sortBy(-_._4)
-
-  /** Recursive delete for stale fixture/scratch dirs under /tmp. */
-  def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-    ()
-  }
-
-  /** The ONE copy of the scale-bench session (DedupScaleBench,
-    * DsirScaleBench, TextScaleBench): local[`SPARK_GRAFT_CPUS`], AQE on,
-    * ANSI off, UTC, UI off — a config fix here lands on every bench at
-    * once instead of silently leaving one measuring something different.
-    */
-  def scaleSession(): org.apache.spark.sql.SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // see GraftSession.common (r19): AQE may re-plan cache-populating
-      // fragments, so caches are sized by data, not the static conf
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Median-of-trials with the cache cleared between trials — the shared
-    * measurement loop of the scale benches. */
-  def medianTrials(spark: org.apache.spark.sql.SparkSession, trials: Int)(
-      body: => Unit): Double =
-    median((1 to trials).map { _ =>
-      val t = time(body)
-      spark.sharedState.cacheManager.clearCache()
-      t
-    })
-
-  /** Replicate a table `r`× with ids shifted by the table's id span —
-    * the shared worst-case-duplication corpus builder of the scale
-    * benches. */
-  def replicateById(df: DataFrame, idCol: String, r: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    if (r <= 1) df
-    else {
-      val span = df.agg(max(col(idCol))).head().getLong(0) + 1
-      (0 until r).map(i => df.withColumn(idCol, col(idCol) + lit(i * span)))
-        .reduce(_.unionAll(_))
-    }
-  }
-
-  /** [[replicateById]] for LARGE r: one `explode(sequence(...))` instead
-    * of an r-way union (a 2000-branch union plan chokes the analyzer
-    * long before the data moves). Same id-shift layout. */
-  def replicateExplode(df: DataFrame, idCol: String, r: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    if (r <= 1) df
-    else {
-      val span = df.agg(max(col(idCol))).head().getLong(0) + 1
-      df.withColumn("__rep",
-          explode(sequence(lit(0L), lit(r - 1L))))
-        .withColumn(idCol, col(idCol) + col("__rep") * lit(span))
-        .drop("__rep")
-    }
-  }
-
-  /** Zipf-duplicated corpus: row with rank i (1-based, by ascending id)
-    * appears ~C/i times, C chosen so the total lands near `targetRows`.
-    * The realistic web-scale dup profile — a huge boilerplate head and a
-    * long unique tail — and the adversarial input for any per-group
-    * quadratic (the head group alone is ~targetRows/H_n rows). */
-  def replicateZipf(df: DataFrame, idCol: String, targetRows: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val n = df.count()
-    val hn = (1 to n.toInt).map(1.0 / _).sum
-    val c = targetRows / hn
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col(idCol))
-    val span = df.agg(max(col(idCol))).head().getLong(0) + 1
-    df.withColumn("__rank", row_number().over(w))
-      .withColumn("__copies",
-        greatest(lit(1L), round(lit(c) / col("__rank")).cast("long")))
-      .withColumn("__rep", explode(sequence(lit(0L), col("__copies") - 1)))
-      .withColumn(idCol, col(idCol) + col("__rep") * lit(span))
-      .drop("__rank", "__copies", "__rep")
-  }
 }

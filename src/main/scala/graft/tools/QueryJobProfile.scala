@@ -2,6 +2,8 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Optimization-round instrument: attribute one catalog query's wall time
@@ -15,7 +17,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * Each named query runs once untimed (JIT/IO warm-up), then once under a
   * job listener; per-job rows print largest-first. The gap between the
   * summed job time and the query wall time is driver-side work (planning,
-  * collect post-processing, file listing).
+  * collect post-processing, file listing). The session is
+  * `GraftSession.local($SPARK_GRAFT_CPUS)` (default 32) over
+  * `$SPARK_GRAFT_SF_DIR` (default sf0.1), the same as `graft.Bench`'s; an
+  * unknown query name exits 2 before any session starts.
   */
 object QueryJobProfile {
 
@@ -24,8 +29,16 @@ object QueryJobProfile {
       site: String = "", tasks: Int = 0, stages: Int = 0)
 
   def main(args: Array[String]): Unit = {
-    val spark = BenchUtil.scaleSession()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val known = graft.queries.Catalog.all.map(q => q.name -> q).toMap
+    val unknown = args.filterNot(known.contains)
+    if (args.isEmpty || unknown.nonEmpty) {
+      if (args.isEmpty) System.err.println("usage: QueryJobProfile <queryName> [more...]")
+      else System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
+      System.err.println(s"known queries: ${known.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-query-job-profile")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val jobs = new ConcurrentHashMap[Int, JobRow]()
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[(Long, Int, String)]()
@@ -53,34 +66,29 @@ object QueryJobProfile {
       }
     }
     args.foreach { name =>
-      graft.queries.Catalog.all.find(_.name == name) match {
-        case None => System.err.println(s"[profile] no such query: $name")
-        case Some(q) =>
-          BenchUtil.force(q.run(spark, dir)) // warm-up, untimed
-          spark.sharedState.cacheManager.clearCache()
-          jobs.clear()
-          stages.clear()
-          spark.sparkContext.addSparkListener(listener)
-          val wall = BenchUtil.time(BenchUtil.force(q.run(spark, dir)))
-          // listener delivery is async; give the bus a moment to drain
-          Thread.sleep(300)
-          spark.sparkContext.removeSparkListener(listener)
-          spark.sharedState.cacheManager.clearCache()
-          import scala.jdk.CollectionConverters._
-          val rows = jobs.values.asScala.toSeq.sortBy(r => -(r.ended - r.started))
-          val summed = rows.filter(_.ended > 0).map(r => r.ended - r.started).sum
-          println(f"%n[profile] $name wall=${wall}%.3f s jobs=${rows.size} " +
-            f"job_sum=${summed / 1000.0}%.3f s driver_gap=${wall - summed / 1000.0}%.3f s")
-          rows.take(15).foreach { r =>
-            val d = if (r.ended > 0) (r.ended - r.started) / 1000.0 else -1.0
-            println(f"[profile]   ${d}%7.3f s  tasks=${r.tasks}%4d stages=${r.stages}%2d  ${r.site}")
-          }
-          import scala.jdk.CollectionConverters._
-          val st = stages.asScala.toSeq.sortBy(-_._1)
-          println(f"[profile]  -- stages: n=${st.size} task_total=${st.map(_._2).sum} --")
-          st.take(30).foreach { case (d, n, nm) =>
-            println(f"[profile]   stage ${d / 1000.0}%7.3f s tasks=$n%4d  $nm")
-          }
+      val q = known(name)
+      BenchUtil.force(q.run(spark, dir)) // warm-up, untimed
+      spark.sharedState.cacheManager.clearCache()
+      jobs.clear()
+      stages.clear()
+      spark.sparkContext.addSparkListener(listener)
+      val wall = BenchUtil.time(BenchUtil.force(q.run(spark, dir)))
+      // listener delivery is async; give the bus a moment to drain
+      Thread.sleep(300)
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sharedState.cacheManager.clearCache()
+      val rows = jobs.values.asScala.toSeq.sortBy(r => -(r.ended - r.started))
+      val summed = rows.filter(_.ended > 0).map(r => r.ended - r.started).sum
+      println(f"%n[profile] $name wall=${wall}%.3f s jobs=${rows.size} " +
+        f"job_sum=${summed / 1000.0}%.3f s driver_gap=${wall - summed / 1000.0}%.3f s")
+      rows.take(15).foreach { r =>
+        val d = if (r.ended > 0) (r.ended - r.started) / 1000.0 else -1.0
+        println(f"[profile]   ${d}%7.3f s  tasks=${r.tasks}%4d stages=${r.stages}%2d  ${r.site}")
+      }
+      val st = stages.asScala.toSeq.sortBy(-_._1)
+      println(f"[profile]  -- stages: n=${st.size} task_total=${st.map(_._2).sum} --")
+      st.take(30).foreach { case (d, n, nm) =>
+        println(f"[profile]   stage ${d / 1000.0}%7.3f s tasks=$n%4d  $nm")
       }
     }
     spark.stop()

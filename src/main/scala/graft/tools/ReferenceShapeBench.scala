@@ -22,13 +22,15 @@ import graft.pipeline.DailyAggregatorJob
   * benefits from running later in a warm JVM.
   *
   * Usage: runMain graft.tools.ReferenceShapeBench [trials]
+  * (cores from `SPARK_GRAFT_CPUS`, default 32, as for `graft.Bench`)
   */
 object ReferenceShapeBench {
   import BenchUtil.{force, time, median, fmt3}
 
   def main(args: Array[String]): Unit = {
     val trials = if (args.nonEmpty) args(0).toInt else 3
-    val spark = graft.core.GraftSession.local(appName = "graft-reference-shape-bench")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.GraftSession.local(cpus, "graft-reference-shape-bench")
     val csv = MachineDayFixture.csv().getPath
     val rules = Rules.referenceDefaults
 

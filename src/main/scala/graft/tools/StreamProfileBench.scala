@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.GraftSession
 import graft.model.Rules
 
 /** Where does a streaming micro-batch's time go? Replays the machine-day
@@ -11,9 +10,11 @@ import graft.model.Rules
   * getBatch / walCommit / queryPlanning / commitOffsets) and per-operator
   * state-store telemetry (commit time, rows, memory) — instead of one
   * opaque wall-clock number. Knobs under test ride env vars so a sweep is
-  * a shell loop, not a rebuild:
+  * a shell loop, not a rebuild. The session is the production one
+  * (`GraftSession.local($SPARK_GRAFT_CPUS)`, default 32, as StreamingMain
+  * runs it); only these knobs are set on top:
   *
-  *   STREAM_SHUFFLE_PARTITIONS  state/shuffle partition count (default 32)
+  *   STREAM_SHUFFLE_PARTITIONS  state/shuffle partition count (default: the cores)
   *   STREAM_FILES_PER_TRIGGER   micro-batch size in files (default 2 of 24)
   *   STREAM_STATE_PROVIDER      "rocksdb" to swap the state store
   *   STREAM_CHUNKS              replay granularity (default 24 files/day)
@@ -34,27 +35,21 @@ object StreamProfileBench {
     val shuffle = sys.env.getOrElse("STREAM_SHUFFLE_PARTITIONS", cpus)
     val filesPerTrigger = sys.env.getOrElse("STREAM_FILES_PER_TRIGGER", "2").toInt
     val chunks = sys.env.getOrElse("STREAM_CHUNKS", "24").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // recentProgress keeps only the last N updates (default 100); a
-      // fine-grained sweep (STREAM_CHUNKS > 100 with 1 file/trigger)
-      // would silently truncate the per-batch table this tool exists
-      // to print, so size the buffer to the worst-case batch count.
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(100, chunks + 8).toString)
-    sys.env.get("STREAM_STATE_PROVIDER").foreach {
-      case "rocksdb" => builder.config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case "hdfs" => () // the default store, accepted so sweeps can name it
-      case other => sys.error(s"unknown STREAM_STATE_PROVIDER: $other")
+    val provider = sys.env.get("STREAM_STATE_PROVIDER") match {
+      case Some("rocksdb") =>
+        Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      case None | Some("hdfs") => None // the default store, accepted so sweeps can name it
+      case Some(other) => sys.error(s"unknown STREAM_STATE_PROVIDER: $other")
     }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt, "graft-stream-profile")
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    // recentProgress keeps only the last N updates (default 100); a
+    // fine-grained sweep (STREAM_CHUNKS > 100 with 1 file/trigger)
+    // would silently truncate the per-batch table this tool exists
+    // to print, so size the buffer to the worst-case batch count.
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+      math.max(100, chunks + 8).toString)
+    provider.foreach(spark.conf.set("spark.sql.streaming.stateStore.providerClass", _))
 
     val machines = sys.env.getOrElse("STREAM_MACHINES", "1").toInt
     val hours = sys.env.getOrElse("STREAM_HOURS", "24").toInt

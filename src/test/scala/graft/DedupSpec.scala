@@ -40,8 +40,9 @@ class DedupSpec extends AnyFunSuite {
     // The adversarial dedup input is a corpus where every doc is
     // replicated: every shingle's df multiplies, so jaccardPairs' df cap
     // (its bucket-size bound) trades recall exactly when dedup matters
-    // most — DedupScaleBench measured 5% pair recall at 10× replication
-    // under the default cap. MinHash/LSH has no df cap: identical docs
+    // most — 5% pair recall measured at 10× replication under the
+    // default cap (PLANS.md "Round-9: dedup family under 10×
+    // replication"). MinHash/LSH has no df cap: identical docs
     // get identical signatures and land in the same band buckets, so the
     // pair set must equal the UNCAPPED exact Jaccard pairs on the
     // replicated corpus. This pins the design claim that LSH banding is

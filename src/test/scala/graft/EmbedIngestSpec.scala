@@ -189,9 +189,10 @@ class EmbedIngestSpec extends AnyFunSuite {
   }
 
   test("frozen-centroid drift: ivfListStats fires, rebuild restores the probe bill") {
-    // Drift scenario (R15DriftProbe measurements, L=4 on the sf0.001
-    // embeddings): batches carry a strong shared component on axis 0
-    // that the frozen quantizer never trained on. On this uniform-
+    // Drift scenario (PLANS.md "Round-15: frozen-centroid drift"
+    // measurements, L=4 on the sf0.001 embeddings): batches carry a
+    // strong shared component on axis 0 that the frozen quantizer never
+    // trained on. On this uniform-
     // direction corpus the failure mode is the probe BILL, not recall —
     // the drifted mass piles into one hot list (hotShare 0.64 vs ~0.11
     // balanced), so every drifted query's nProbe=1 scan covers ~37% of

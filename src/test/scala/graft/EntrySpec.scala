@@ -17,6 +17,8 @@ class EntrySpec extends AnyFunSuite {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     s.conf.set("spark.sql.ansi.enabled", "true")
     s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     // events scan would throw Illegal Parquet type without the per-call
     // prepare(); date formatting would shift without UTC. The corpus has
     // shipped as TIMESTAMP(NANOS) (rounds 1-6) and MICROS-NTZ (round 7+);
@@ -33,6 +35,10 @@ class EntrySpec extends AnyFunSuite {
     val row = df.filter(org.apache.spark.sql.functions.col("event_id") === 0).collect().head
     assert(row.getAs[String]("d") == "2024-01-01") // UTC date, not EST
     assert(df.count() > 0)
+    // the query ran under the whole engine conf set, not just the parity trio
+    graft.core.GraftSession.sqlConfs.foreach { case (k, v) =>
+      assert(s.conf.get(k) == v, s"$k after a catalog query")
+    }
   }
 
   test("every catalog query name is unique and every oracle key has a query") {
