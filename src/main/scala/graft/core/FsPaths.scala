@@ -31,8 +31,9 @@ object FsPaths {
   }
 
   /** Direct children of `dir` whose name starts with `prefix` (0 when
-    * `dir` is absent) — one FileSystem listing, no Spark job; the slice
-    * counter the ingest loops' compaction trigger polls each tick.
+    * `dir` is absent) — one FileSystem listing, no Spark job. The
+    * ingest loops' compaction trigger reads [[childNames]] instead,
+    * because it must leave the permanent slices out of the count.
     */
   def countChildren(spark: SparkSession, dir: String, prefix: String): Int =
     childNames(spark, dir, prefix).size

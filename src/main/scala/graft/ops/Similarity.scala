@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.GraftExtensions
+import graft.core.{Actions, GraftExtensions}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -1080,8 +1080,10 @@ object Similarity {
     * codebooks copy verbatim (they are frozen — compaction never
     * re-assigns or re-encodes); lists and codes rows re-cluster by
     * `list_id` so each list lands in ONE file again. Writes to a NEW
-    * directory so a concurrent tick never probes a half-compacted index:
-    * build offline, swap between ticks.
+    * directory so a concurrent tick never probes a half-compacted index;
+    * in the loop, `EmbedIngest.compactIfNeeded` (opt-in `maxSlices`)
+    * builds it at the start of a tick and swaps it in through
+    * `FsPaths.rebuildAndSwap`.
     *
     * Why not fold everything into `base`: `batch=base` means "mass the
     * current quantizer was trained on" — the drift monitor
@@ -1151,8 +1153,9 @@ object Similarity {
     * distribution (the frozen quantizer then can't subdivide the new
     * mass: drifted ticks pile into few lists, and probe recall for
     * drifted queries decays — measured ladder in PLANS.md). Writes to a
-    * fresh directory like [[compactIvfIndex]] (build offline, swap
-    * between ticks — `FsPaths.rebuildAndSwap` in the loop); unlike
+    * fresh directory like [[compactIvfIndex]] (in the loop,
+    * `EmbedIngest.rebuildIfDrifted` swaps it in at the start of a tick
+    * through `FsPaths.rebuildAndSwap`); unlike
     * compaction the output is NOT probe-identical to the source by
     * design.
     *
@@ -1236,7 +1239,7 @@ object Similarity {
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val cbHolder =
       new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    TextDedup.inParallel(
+    Actions.inParallel(
       () => writeIvfIndex(emb, dir, centroidStride, idCol),
       () => {
         val cb = pqCodebooks(emb, m, ks, maxIter, idCol, trainSample, Some(dim))

@@ -608,33 +608,8 @@ object TextDedup {
     // exact layer: one anti-join on the 128-bit content hash. Persisted:
     // it feeds BOTH the batch shingling and the final anti-join.
     val corpusHashes = corpus.select(md5(col(textCol)).as("__h")).distinct()
-    val newHashed = newDocs.withColumn("__h", md5(col(textCol)))
-    val exactBase = bloomBits match {
-      case Some(m) =>
-        // Bloom prefilter (opt-in): one bounded driver-held bit table
-        // (m/8 bytes) built over the BATCH hashes — the SMALL side — and
-        // used to prune the CORPUS side of the anti-join. Size `m` for
-        // the batch, not the corpus (a batch-sized table is KBs, so the
-        // plan literal the probe embeds stays negligible). A corpus hash
-        // the filter rejects cannot equal any batch hash, so dropping it
-        // cannot change the anti-join — the filter changes cost, never
-        // the answer. This is the side that matters: the anti-join's
-        // dominant cost is shuffling the CORPUS hash set (O(corpus)),
-        // and the pruned corpus side shrinks to ~|dups| + fpp·|corpus|.
-        // (The first cut of this operator bloomed the batch-side rows
-        // against a corpus-sized table instead — measured STRICTLY worse
-        // at every corpus scale up to 1M docs, 4.7×→1.5×, because the
-        // corpus shuffle it was supposed to save survived untouched and
-        // the MB-sized literal inflated every task binary ~7×.)
-        val bloom = graft.functions.BloomFilter.build(
-          newHashed.select(col("__h")), col("__h"), m, bloomHashes)
-        val corpusMaybe = corpusHashes.filter(
-          graft.functions.BloomFilter.mightContain(
-            bloom, col("__h"), m, bloomHashes))
-        newHashed.join(corpusMaybe, Seq("__h"), "left_anti")
-      case None => newHashed.join(corpusHashes, Seq("__h"), "left_anti")
-    }
-    val exactSurvivors = exactBase.drop("__h").persist()
+    val exactSurvivors = exactSurvivorsVsHashes(
+      newDocs, corpusHashes, textCol, bloomBits, bloomHashes).persist()
     // near-dup layer: inverted-index candidates NEW × CORPUS only. The
     // df cap applies to the CORPUS posting lists (stop-shingles are a
     // corpus property); verification always uses full sets. Both shingle
@@ -662,25 +637,16 @@ object TextDedup {
     }
   }
 
-  /** Shared near-dup layer of the incremental forms: candidates from
-    * batch-shingles ⋈ df-capped corpus posting lists, full-set verify,
-    * anti-join the losers out. `shOld`/`dfOld` may be cached frames (the
+  /** Shared near-dup layer of the incremental forms and the ingest
+    * tick: candidates from batch-shingles ⋈ df-capped corpus posting
+    * lists, full-set verify, anti-join the losers out, materialized
+    * eagerly ([[eager]]). `shOld`/`dfOld` may be cached frames (the
     * self-contained form) or parquet scans (the indexed form).
     */
   private[graft] def nearDupSurvivors(
       exactSurvivors: DataFrame, shNew: DataFrame, shOld: DataFrame,
       dfOld: DataFrame, tau: Double, maxShingleDf: Long, idCol: String,
-      checkpointDir: Option[String]): DataFrame =
-    eager(nearDupSurvivorsLazy(
-      exactSurvivors, shNew, shOld, dfOld, tau, maxShingleDf, idCol),
-      checkpointDir)
-
-  /** [[nearDupSurvivors]] without the eager materialization — for a
-    * caller (the ingest tick) that owns persistence itself. */
-  private[graft] def nearDupSurvivorsLazy(
-      exactSurvivors: DataFrame, shNew: DataFrame, shOld: DataFrame,
-      dfOld: DataFrame, tau: Double, maxShingleDf: Long,
-      idCol: String): DataFrame = {
+      checkpointDir: Option[String]): DataFrame = {
     // cap disabled (Long.MaxValue) ⇒ every shingle passes the df filter:
     // skip the df aggregate + semi-join entirely instead of paying a
     // full corpus-df scan per tick for a provable no-op
@@ -694,7 +660,7 @@ object TextDedup {
       .select("d1", "d2").distinct()
     val losers = verifyJaccard(candidates, shNew.unionByName(shOld), tau, idCol)
       .select(col("d1").as(idCol)).distinct()
-    exactSurvivors.join(losers, Seq(idCol), "left_anti")
+    eager(exactSurvivors.join(losers, Seq(idCol), "left_anti"), checkpointDir)
   }
 
   /** Persist the corpus side of [[incrementalSurvivors]] as an on-disk
@@ -709,7 +675,8 @@ object TextDedup {
   def writeIncrementalIndex(
       corpus: DataFrame, dir: String, k: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    writeIndexSlice(corpus, dir, "base", k, idCol, textCol)
+    appendIndexSlicePrecomputed(corpus, shingles(corpus, k, idCol, textCol),
+      dir, "base", idCol, textCol)
 
   /** Append one ingest batch's survivors to a [[writeIncrementalIndex]]
     * index — the corpus-GROWTH half of the ingest loop. Each append
@@ -720,8 +687,9 @@ object TextDedup {
     * slices through ordinary partition discovery; the df table is
     * per-slice partial counts that [[incrementalSurvivorsIndexed]] sums
     * at read time (shingle-level rows — far smaller than the shingle
-    * table — so the per-tick re-aggregate is cheap; compact slices
-    * offline if the tag count ever grows pathological).
+    * table — so the per-tick re-aggregate is cheap; the loop's opt-in
+    * `maxSlices` trigger, `DedupStream.compactIfNeeded`, folds the
+    * slices back into one through [[compactIncrementalIndex]]).
     *
     * Only call with rows that SURVIVED against this index (the loop in
     * `DedupStream.incrementalIngest` does): survivors are new content by
@@ -730,24 +698,26 @@ object TextDedup {
   def appendIncrementalIndex(
       survivors: DataFrame, dir: String, batchTag: String, k: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
-    writeIndexSlice(survivors, dir, batchTag, k, idCol, textCol)
+    appendIndexSlicePrecomputed(survivors,
+      shingles(survivors, k, idCol, textCol), dir, batchTag, idCol, textCol)
 
   /** Merge every slice of a sliced incremental index into a single fresh
-    * `base` slice at `dstDir` — the offline compaction the slice
-    * layout's scaladoc defers to. After thousands of ingest ticks the
+    * `base` slice at `dstDir`. After thousands of ingest ticks the
     * per-tick costs that scale with SLICE COUNT (partition discovery
     * over `batch=` dirs, one parquet footer per slice file, the df
     * partial-count re-aggregate) creep up even though the data volume is
     * unchanged; compaction resets them to one slice per table.
     *
     * Writes to a NEW directory rather than in place so a concurrently
-    * running tick never sees a half-compacted index: build the compacted
-    * copy offline, then swap the directory (or the index-path config)
-    * between ticks. Slices are disjoint by construction (each tick
-    * appends only docs that survived against everything before it), so
-    * compaction is a pure re-layout — hashes stay distinct and shingle
-    * rows unique without a dedup shuffle; df partials are summed once
-    * here instead of on every future tick read.
+    * running tick never sees a half-compacted index. In the loop,
+    * `DedupStream.compactIfNeeded` (opt-in `maxSlices`) builds it into a
+    * scratch directory at the start of a tick and swaps it in through
+    * `FsPaths.rebuildAndSwap`; an offline caller swaps the directory (or
+    * the index-path config) between ticks. Slices are disjoint by
+    * construction (each tick appends only docs that survived against
+    * everything before it), so compaction is a pure re-layout — hashes
+    * stay distinct and shingle rows unique without a dedup shuffle; df
+    * partials are summed once here instead of on every future tick read.
     */
   def compactIncrementalIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -775,86 +745,26 @@ object TextDedup {
       .write.mode("overwrite").parquet(s"$dstDir/df/batch=base")
   }
 
-  /** Run independent actions concurrently from a small driver thread
-    * pool (guide §2.6: the scheduler happily overlaps jobs; actions are
-    * only sequential because driver code calls them sequentially) —
-    * used to overlap the 2–3 independent parquet writes of an index
-    * slice, whose per-write commit latency otherwise adds up serially.
-    * Rethrows the first failure.
-    */
-  private[graft] def inParallel(actions: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
-    import scala.concurrent.duration.Duration
-    if (actions.sizeIs <= 1) { actions.foreach(_()); return }
-    // bounded pool (one thread per action, never the unbounded global EC)
-    // and fail-fast collection: the FIRST failure anywhere rethrows
-    // immediately instead of being masked behind an earlier hung action
-    // (r20, verdict robustness note)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(actions.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val done = Promise[Unit]()
-    val remaining = new java.util.concurrent.atomic.AtomicInteger(actions.size)
-    try {
-      actions.foreach { a =>
-        Future(a()).onComplete {
-          case scala.util.Failure(e) => done.tryFailure(e); ()
-          case scala.util.Success(_) =>
-            if (remaining.decrementAndGet() == 0) { done.trySuccess(()); () }
-        }
-      }
-      Await.result(done.future, Duration.Inf)
-      ()
-    } finally {
-      pool.shutdown()
-      ()
-    }
-  }
-
-  private def writeIndexSlice(
-      docs: DataFrame, dir: String, tag: String, k: Int,
-      idCol: String, textCol: String): Unit = {
-    require(!tag.contains("/") && tag.nonEmpty, s"bad index batch tag: $tag")
-    // the shingle write itself fills the persist cache, so the df
-    // aggregate reads cached blocks — no separate materializing count.
-    // The hash write is independent of both and overlaps them (r19,
-    // guide §2.6); shingles → df stays ordered for the cache fill.
-    val sh = shingles(docs, k, idCol, textCol).persist()
-    try {
-      inParallel(
-        () => docs.select(md5(col(textCol)).as("__h")).distinct()
-          .write.mode("overwrite").parquet(s"$dir/hashes/batch=$tag"),
-        () => {
-          sh.write.mode("overwrite").parquet(s"$dir/shingles/batch=$tag")
-          sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$dir/df/batch=$tag")
-        })
-    } finally {
-      sh.unpersist()
-      ()
-    }
-  }
-
-  /** [[appendIncrementalIndex]] when the batch's shingle table is
-    * ALREADY materialized (the ingest tick computes it once for all
-    * three dedup layers — r19): writes the same three slices without
-    * re-shingling the written survivors, hashes overlapped with
-    * shingles+df (guide §2.6). `shKeep` must be exactly the shingle
-    * rows of `written`'s documents (the caller derives it by id
-    * semi-join from the tick's cached batch shingle table; shingle rows
-    * are per-document, so the filter IS the re-shingle).
+  /** The one writer of an index slice: the `batch=<tag>` slices of
+    * `hashes/`, `shingles/` and `df/` for `written`'s documents, hashes
+    * overlapped with shingles+df (guide §2.6). `shKeep` must be exactly
+    * the shingle rows of `written`'s documents — `shingles(written, k)`
+    * for the base build and the public append, and for the ingest tick
+    * an id semi-join on its cached batch shingle table (computed once
+    * for all three dedup layers — r19; shingle rows are per-document, so
+    * the filter IS the re-shingle).
     */
   private[graft] def appendIndexSlicePrecomputed(
       written: DataFrame, shKeep: DataFrame, dir: String, tag: String,
       idCol: String, textCol: String): Unit = {
     require(!tag.contains("/") && tag.nonEmpty, s"bad index batch tag: $tag")
-    // writeIndexSlice's persist contract applied here too (r20, ADVICE):
-    // the shingles write fills the cache, so the df aggregate reads
-    // cached blocks instead of re-running the id semi-join (and the
-    // shNew cache reads behind it) a second time; only the independent
-    // hash write overlaps.
+    // the shingles write fills the persist cache, so the df aggregate
+    // reads cached blocks — no separate materializing count, and no
+    // second evaluation of the shingle lineage; the independent hash
+    // write overlaps both, shingles → df stays ordered for the cache fill
     val shK = shKeep.select(col(idCol), col("shingle")).persist()
     try {
-      inParallel(
+      graft.core.Actions.inParallel(
         () => written.select(md5(col(textCol)).as("__h")).distinct()
           .write.mode("overwrite").parquet(s"$dir/hashes/batch=$tag"),
         () => {
@@ -931,10 +841,10 @@ object TextDedup {
     (corpusHashes, shOld, dfOld)
   }
 
-  /** The exact dedup layer of the incremental forms: anti-join the new
-    * batch against the corpus hash set, optionally Bloom-pruning the
-    * CORPUS side first (see [[incrementalSurvivors]] for why the filter
-    * sits on that side). Lazy; callers own persistence.
+  /** The exact dedup layer of the incremental forms and the ingest
+    * tick: anti-join the new batch against the corpus hash set,
+    * optionally Bloom-pruning the CORPUS side first (when to enable it:
+    * [[incrementalSurvivors]]). Lazy; callers own persistence.
     */
   private[graft] def exactSurvivorsVsHashes(
       newDocs: DataFrame, corpusHashes: DataFrame, textCol: String,
@@ -942,6 +852,21 @@ object TextDedup {
     val newHashed = newDocs.withColumn("__h", md5(col(textCol)))
     val exactBase = bloomBits match {
       case Some(m) =>
+        // Bloom prefilter (opt-in): one bounded driver-held bit table
+        // (m/8 bytes) built over the BATCH hashes — the SMALL side — and
+        // used to prune the CORPUS side of the anti-join. Size `m` for
+        // the batch, not the corpus (a batch-sized table is KBs, so the
+        // plan literal the probe embeds stays negligible). A corpus hash
+        // the filter rejects cannot equal any batch hash, so dropping it
+        // cannot change the anti-join — the filter changes cost, never
+        // the answer. This is the side that matters: the anti-join's
+        // dominant cost is shuffling the CORPUS hash set (O(corpus)),
+        // and the pruned corpus side shrinks to ~|dups| + fpp·|corpus|.
+        // (The first cut of this operator bloomed the batch-side rows
+        // against a corpus-sized table instead — measured STRICTLY worse
+        // at every corpus scale up to 1M docs, 4.7×→1.5×, because the
+        // corpus shuffle it was supposed to save survived untouched and
+        // the MB-sized literal inflated every task binary ~7×.)
         val bloom = graft.functions.BloomFilter.build(
           newHashed.select(col("__h")), col("__h"), m, bloomHashes)
         val corpusMaybe = corpusHashes.filter(

@@ -140,24 +140,12 @@ object DedupStream {
       val losers = TextDedup.clusters(intraPairs)
         .filter(col("cluster_id") =!= col("id"))
         .select(col("id").as(idCol))
-      // r20 (verdict task 5): materialize keepers ONCE (localCheckpoint —
-      // flat lineage, like the tick's other layer boundaries), then the
-      // output write and all three index-slice writes run as one
-      // overlapped action group off that checkpoint (guide §2.6) — the
-      // old shape serialized the output write before the appends because
-      // the appends re-read the written parquet. The count comes from the
-      // checkpointed rows instead of a footer re-read. Crash between
-      // overlapped writes: healed by per-tag overwrite replay +
-      // dropCrashedTag, exactly as before.
-      val keepers = TextDedup.eager(
-        vsCorpus.join(losers, Seq(idCol), "left_anti"), None)
-      val shKeep = shNew.join(
-        keepers.select(col(idCol)), Seq(idCol), "left_semi")
-      TextDedup.inParallel(
-        () => keepers.write.mode("overwrite").parquet(s"$outDir/batch=$batchTag"),
-        () => TextDedup.appendIndexSlicePrecomputed(
-          keepers, shKeep, indexDir, batchTag, idCol, textCol))
-      keepers.count()
+      val keepers = vsCorpus.join(losers, Seq(idCol), "left_anti")
+      SlicedIngest.commit(keepers, outDir, batchTag) { kept =>
+        TextDedup.appendIndexSlicePrecomputed(kept,
+          shNew.join(kept.select(col(idCol)), Seq(idCol), "left_semi"),
+          indexDir, batchTag, idCol, textCol)
+      }
     } finally {
       shNew.unpersist()
       exactSurvivors.unpersist()
@@ -200,64 +188,25 @@ object DedupStream {
       bloomBits: Option[Int] = None,
       maxTokens: Option[Int] = None,
       maxSlices: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val tag = s"b$batchId"
-        // a crashed attempt's leftovers are dropped at EVERY tick start
-        // (cheap existence check + delete), not only when a compaction
-        // happens to run — a loop without maxSlices gets the cleanup too
-        graft.core.FsPaths.dropCrashedTag(df.sparkSession, indexDir,
-          Seq("hashes", "shingles", "df"), tag)
-        maxSlices.foreach(m =>
-          compactIfNeeded(df.sparkSession, indexDir, m, currentTag = tag))
-        ingestTick(df.sparkSession, df, indexDir, outDir, tag,
-          k, tau, maxShingleDf, idCol, textCol, bloomBits, maxTokens): Unit
-      }
-      .start()
+    SlicedIngest.start(stream, textIndex, indexDir, checkpointDir) {
+      (spark, tag) =>
+        maxSlices.foreach(m => compactIfNeeded(spark, indexDir, m, currentTag = tag))
+    } { (spark, df, tag) =>
+      ingestTick(spark, df, indexDir, outDir, tag,
+        k, tau, maxShingleDf, idCol, textCol, bloomBits, maxTokens): Unit
+    }
 
-  /** Reset the index's slice-count creep IN the loop: when more than
-    * `maxSlices` LOOSE tick slices have accumulated — slices beyond the
-    * permanent floor of `batch=base` and `batch=<currentTag>`, which a
-    * compaction can never remove (base is the compaction target itself;
-    * currentTag is a crashed replay's leftover, dropped not folded) —
-    * compact them into a single base slice in a scratch directory and
-    * swap it in ([[graft.core.FsPaths.rebuildAndSwap]] — rename-based,
-    * so a tick never reads a half-compacted index; every crash window
-    * heals via `recoverSwap`, which this method runs first). Counting
-    * only removable slices keeps the trigger quiescent at steady state:
-    * with the old total-count form, a `maxSlices` at-or-below the floor
-    * size fired EVERY tick and rewrote the whole index for nothing.
-    * `maxSlices = 0` means "compact whenever any loose slice exists".
-    * Runs at the START of a tick, before the tick's own append: any
-    * `batch=<currentTag>` slices present then are a crashed attempt's
-    * uncommitted leftovers and are DROPPED (the replay rewrites them),
-    * never folded into base — folding them would make the replayed
-    * batch dedup against itself and silently lose its documents.
+  /** The text index: `hashes/shingles/df` slices over one `base`. */
+  private val textIndex = SlicedIndex(Seq("hashes", "shingles", "df"),
+    floor = Set("base"), TextDedup.compactIncrementalIndex(_, _, _, _))
+
+  /** [[SlicedIngest.compactIfNeeded]] over the text index: folds the
+    * loose tick slices into `base` ([[TextDedup.compactIncrementalIndex]]).
     *
     * @return true when a compaction ran.
     */
   def compactIfNeeded(
       spark: SparkSession, indexDir: String, maxSlices: Int,
-      currentTag: String): Boolean = {
-    require(maxSlices >= 0, "maxSlices must be >= 0")
-    graft.core.FsPaths.recoverSwap(spark, indexDir)
-    // crashed-attempt leftovers of THIS tag are dropped unconditionally
-    // (cheap delete), not merely excluded until a compaction fires —
-    // they are uncommitted by the replay contract and everything
-    // downstream already ignores them
-    graft.core.FsPaths.dropCrashedTag(
-      spark, indexDir, Seq("hashes", "shingles", "df"), currentTag)
-    val floor = Set("batch=base", s"batch=$currentTag")
-    val n = graft.core.FsPaths.childNames(
-      spark, s"$indexDir/hashes", "batch=").count(!floor.contains(_))
-    if (n > maxSlices) {
-      graft.core.FsPaths.rebuildAndSwap(spark, indexDir) { dst =>
-        TextDedup.compactIncrementalIndex(
-          spark, indexDir, dst, excludeTag = Some(currentTag))
-      }
-      true
-    } else false
-  }
+      currentTag: String): Boolean =
+    SlicedIngest.compactIfNeeded(spark, textIndex, indexDir, maxSlices, currentTag)
 }

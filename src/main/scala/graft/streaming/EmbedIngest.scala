@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.FsPaths
 import graft.ops.Similarity
 
 /** The embedding-corpus twin of [[DedupStream]]'s growing-corpus loop:
@@ -64,18 +65,11 @@ object EmbedIngest {
     val vecs = batch.select(col(idCol), col(embCol).as("embedding"))
     val keeperIds = Similarity.dedupByEmbedding(vecs, tau, idCol)
       .filter(col("is_keeper") === 1).select(idCol)
-    // Hadoop FS, not java.io.File: the index lives wherever parquet does
-    // (HDFS/S3 at deployment) — a local-only existence check would
-    // silently skip the vs-corpus dedup there
-    def exists(p: String): Boolean = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
-    }
-    if (!exists(s"$indexDir/centroids"))
+    if (!FsPaths.exists(spark, s"$indexDir/centroids"))
       Similarity.writeIvfCentroids(
         vecs.join(keeperIds, Seq(idCol)), indexDir, centroidStride, idCol)
     val survivorIds =
-      if (!exists(s"$indexDir/lists")) keeperIds
+      if (!FsPaths.exists(spark, s"$indexDir/lists")) keeperIds
       else {
         val dupIds = Similarity.ivfTopKIndexed(
             spark, indexDir, vecs.join(keeperIds, Seq(idCol)),
@@ -84,20 +78,11 @@ object EmbedIngest {
           .select(col("q_id").as(idCol)).distinct()
         keeperIds.join(dupIds, Seq(idCol), "left_anti")
       }
-    // materialize the survivor rows ONCE (localCheckpoint — flat
-    // lineage), then the output write and the index-list append run as
-    // one overlapped action group off the checkpoint (r20, guide §2.6 —
-    // the old shape serialized the append behind the output write
-    // because it re-read the written parquet); the tick count comes from
-    // the checkpointed rows. Crash between overlapped writes: healed by
-    // per-tag overwrite replay + dropCrashedTag, exactly as before.
-    val keepers = batch.join(survivorIds, Seq(idCol)).localCheckpoint()
-    graft.ops.TextDedup.inParallel(
-      () => keepers.write.mode("overwrite").parquet(s"$outDir/batch=$batchTag"),
-      () => Similarity.appendIvfIndex(spark,
-        keepers.select(col(idCol), col(embCol).as("embedding")),
-        indexDir, batchTag, idCol))
-    keepers.count()
+    SlicedIngest.commit(batch.join(survivorIds, Seq(idCol)), outDir, batchTag) {
+      kept => Similarity.appendIvfIndex(spark,
+        kept.select(col(idCol), col(embCol).as("embedding")),
+        indexDir, batchTag, idCol)
+    }
   }
 
   /** Streaming form: every micro-batch runs [[ingestTick]] against the
@@ -121,16 +106,8 @@ object EmbedIngest {
       rebuildMinRows: Long = 1000L,
       rebuildStride: Option[Long] = None,
       autoRebuildStride: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val tag = s"b$batchId"
-        // a crashed attempt's leftovers are dropped at EVERY tick start
-        // (cheap delete), independent of whether the rebuild or the
-        // compaction below runs this tick — same contract as the text loop
-        graft.core.FsPaths.dropCrashedTag(df.sparkSession, indexDir,
-          Seq("lists", "codes"), tag)
+    SlicedIngest.start(stream, ivfIndex, indexDir, checkpointDir) {
+      (spark, tag) =>
         // a rebuild resets slices too, so it subsumes this tick's
         // compaction check. rebuildStride decouples the REBUILD's
         // centroid allocation from the ingest path's: stride == expected
@@ -142,16 +119,16 @@ object EmbedIngest {
         // that number from the measured bill instead of a hand pick
         // ([[deriveRebuildStride]]); an explicit rebuildStride wins.
         val rebuilt = rebuildHotShare.exists(th =>
-          rebuildIfDrifted(df.sparkSession, indexDir, th,
+          rebuildIfDrifted(spark, indexDir, th,
             rebuildStride.getOrElse(centroidStride),
             currentTag = tag, minRows = rebuildMinRows,
             autoStride = autoRebuildStride && rebuildStride.isEmpty))
         if (!rebuilt) maxSlices.foreach(m =>
-          compactIfNeeded(df.sparkSession, indexDir, m, currentTag = tag))
-        ingestTick(df.sparkSession, df, indexDir, outDir, tag,
-          tau, nProbe, centroidStride, idCol, embCol): Unit
-      }
-      .start()
+          compactIfNeeded(spark, indexDir, m, currentTag = tag))
+    } { (spark, df, tag) =>
+      ingestTick(spark, df, indexDir, outDir, tag,
+        tau, nProbe, centroidStride, idCol, embCol): Unit
+    }
 
   /** The in-loop drift response: when the appended (non-`base`) slices'
     * hottest list owns at least `hotShareThreshold` of their rows — the
@@ -176,7 +153,7 @@ object EmbedIngest {
       autoStride: Boolean = false): Boolean = {
     require(hotShareThreshold > 0.0 && hotShareThreshold <= 1.0,
       "hotShareThreshold must be in (0, 1]")
-    graft.core.FsPaths.recoverSwap(spark, indexDir)
+    FsPaths.recoverSwap(spark, indexDir)
     // FS-only short-circuit: with no post-training slices (all mass in
     // `base` — right after a rebuild, or a fresh index) there is nothing
     // to measure drift ON; skip the stats job entirely. Judged by slice
@@ -187,7 +164,7 @@ object EmbedIngest {
     // The stats scan itself is cheap when it runs — list_id/batch are
     // partition columns and no data column is materialized — but a
     // directory listing is cheaper still
-    val appendedSlices = graft.core.FsPaths
+    val appendedSlices = FsPaths
       .childNames(spark, s"$indexDir/lists", "batch=")
       .filterNot(n => n == "batch=base" || n == s"batch=$currentTag")
     if (appendedSlices.isEmpty) return false
@@ -211,7 +188,7 @@ object EmbedIngest {
           System.err.println(d.telemetryJson)
           d.stride
         } else centroidStride
-      graft.core.FsPaths.rebuildAndSwap(spark, indexDir) { dst =>
+      FsPaths.rebuildAndSwap(spark, indexDir) { dst =>
         Similarity.rebuildIvfIndex(spark, indexDir, dst, stride,
           excludeTag = Some(currentTag))
       }
@@ -298,45 +275,20 @@ object EmbedIngest {
       saturated = floor > 0 && scaled < floor)
   }
 
-  /** IVF twin of `DedupStream.compactIfNeeded`: when more than
-    * `maxSlices` LOOSE tick slices have accumulated under `lists/`,
-    * compact them (centroids/codebooks copy frozen; lists/codes
-    * re-cluster to one file per list, post-training mass folded into a
-    * single `appended` slice so [[rebuildIfDrifted]] keeps its
-    * evidence) into a scratch directory and swap it in. "Loose"
-    * excludes the permanent floor — `batch=base`, `batch=appended`,
-    * and `batch=<currentTag>` — the slices a compaction can never
-    * remove; counting the floor (the old total-count form) made any
-    * `maxSlices <= 2` fire EVERY tick at steady state and rewrite the
-    * whole index even when there was nothing to fold, and gave this
-    * parameter a different effective meaning than the text twin's.
-    * `maxSlices = 0` means "compact whenever any loose slice exists".
-    * Same crash contract: `recoverSwap` heals interrupted swaps first,
-    * and `batch=<currentTag>` leftovers of a crashed attempt of THIS
-    * tick are dropped rather than folded, so the replayed batch never
-    * probes its own vectors.
+  /** The IVF index: `lists/codes` slices over `base` and `appended`. */
+  private val ivfIndex = SlicedIndex(Seq("lists", "codes"),
+    floor = Set("base", "appended"), Similarity.compactIvfIndex(_, _, _, _))
+
+  /** [[SlicedIngest.compactIfNeeded]] over the IVF index: folds the
+    * loose tick slices into one `appended` slice
+    * ([[Similarity.compactIvfIndex]]; centroids and codebooks stay
+    * frozen, and post-training mass stays out of `base`, so
+    * [[rebuildIfDrifted]] keeps its evidence).
     *
     * @return true when a compaction ran.
     */
   def compactIfNeeded(
       spark: SparkSession, indexDir: String, maxSlices: Int,
-      currentTag: String): Boolean = {
-    require(maxSlices >= 0, "maxSlices must be >= 0")
-    graft.core.FsPaths.recoverSwap(spark, indexDir)
-    // crashed-attempt leftovers of THIS tag: dropped unconditionally
-    // (cheap delete) instead of lingering excluded until a compaction
-    // fires — same contract as the text twin
-    graft.core.FsPaths.dropCrashedTag(
-      spark, indexDir, Seq("lists", "codes"), currentTag)
-    val floor = Set("batch=base", "batch=appended", s"batch=$currentTag")
-    val n = graft.core.FsPaths.childNames(
-      spark, s"$indexDir/lists", "batch=").count(!floor.contains(_))
-    if (n > maxSlices) {
-      graft.core.FsPaths.rebuildAndSwap(spark, indexDir) { dst =>
-        Similarity.compactIvfIndex(
-          spark, indexDir, dst, excludeTag = Some(currentTag))
-      }
-      true
-    } else false
-  }
+      currentTag: String): Boolean =
+    SlicedIngest.compactIfNeeded(spark, ivfIndex, indexDir, maxSlices, currentTag)
 }

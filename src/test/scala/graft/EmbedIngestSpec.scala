@@ -332,6 +332,40 @@ class EmbedIngestSpec extends AnyFunSuite {
       s"maxSlices=0 stream never compacted: $names")
   }
 
+  test("incrementalIngest stream drops a crashed tag's leftovers WITHOUT maxSlices") {
+    // pre-crash simulation: batch b0's lists slice landed but the tick
+    // never committed (no checkpoint offset). The replayed b0 must (a)
+    // not dedup against its own crashed vectors, and (b) find the
+    // leftover slice deleted at tick start even though neither a
+    // compaction nor a rebuild trigger is configured — the per-tick
+    // dropCrashedTag contract (the embedding twin of IngestLoopSpec's
+    // text-loop case).
+    val (idx, out) = freshDirs()
+    val ckpt = Files.createTempDirectory("graft_embing_crashckpt").toString
+    Similarity.writeIvfIndex(emb.filter($"vec_id" < 100), idx, centroidStride = 20L)
+    val fresh = negated(emb.filter($"vec_id" < 3), 1000L)
+    Similarity.appendIvfIndex(spark, fresh, idx, "b0")
+    val rows = fresh.select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
+    val corpusDup = copies(emb.filter($"vec_id" === 50), 2000L)
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].head()
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val source = MemoryStream[(Long, Seq[Float])]
+    val q = EmbedIngest.incrementalIngest(
+      source.toDF().toDF("vec_id", "embedding"), idx, out, ckpt,
+      tau = 0.8, nProbe = 2)
+    try {
+      source.addData(rows :+ corpusDup: _*) // fresh SURVIVE, the dup drops
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(ids(spark.read.parquet(out)) == Set(1000L, 1001L, 1002L),
+      "replayed batch deduped against its own crashed slice or lost the dup check")
+    // the replay's own committed slice is the only b0 slice left, and
+    // the crashed rows did not accumulate next to it
+    val b0 = spark.read.parquet(s"$idx/lists").filter($"batch" === "b0")
+    assert(b0.count() == 3L)
+    assert(b0.select("n_id").as[Long].collect().toSet == Set(1000L, 1001L, 1002L))
+  }
+
   test("incrementalIngest: rebuildStride decouples the rebuild's allocation") {
     // the measured drift lever (PLANS.md round-16): a rebuild may want
     // SMALLER lists than the ingest build — rebuildStride must reach
