@@ -425,9 +425,7 @@ object Bench {
       // API form: StreamingPipeline.configureStateSizing.
       val statePartitions =
         sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8").toInt
-      val shuffleRestore = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      graft.streaming.StreamingPipeline.withStateSizing(spark, statePartitions) {
         val clean = graft.streaming.StreamingPipeline.cleanse(
           graft.streaming.StreamingPipeline.readCsvStream(
             spark, streamDir.getPath, maxFilesPerTrigger = filesPerTrigger))
@@ -445,7 +443,7 @@ object Bench {
         // long-running deployment cares about more than the mean
         if (ms > 0) streamingTelemetry = Some(
           s"""{"input_rows":$rows,"rows_per_sec":${fm(rows * 1000.0 / ms, 0)},"mean_batch_ms":${fm(ms.toDouble / progs.length, 0)},"batches":${progs.length},"state_partitions":$statePartitions,"batch_ms":${perBatch.mkString("[", ",", "]")}}""")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", shuffleRestore)
+      }
     }
     workloadRunners("stream_machine_day") = () => streamMachineDayOnce()
     if (wantStream) try {
@@ -465,9 +463,7 @@ object Bench {
     def streamDriftOnce(): Unit = {
       val csv = ensureMachineDayCsv()
       val streamDir = graft.tools.MachineDayFixture.streamDir(chunks = 24)
-      val shuffleRestore = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+      graft.streaming.StreamingPipeline.withStateSizing(spark, statePartitions = 8) {
         val refClean = DailyAggregatorJob.cleanse(
           DailyAggregatorJob.readRawCsv(spark, csv.getPath))
         val spine = graft.ops.Quality.numericSpine(
@@ -495,7 +491,7 @@ object Bench {
           Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L))
         if (perBatch.nonEmpty) driftTelemetry = Some(
           s"""{"input_rows":${progs.map(_.numInputRows).sum},"batches":${progs.length},"batch_ms":${perBatch.mkString("[", ",", "]")}}""")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", shuffleRestore)
+      }
     }
     workloadRunners("stream_drift") = () => streamDriftOnce()
     if (only.forall(_.contains("stream_drift"))) try {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
 
@@ -30,6 +30,21 @@ object HourlyRollup {
     "as_vacuum_error_count", "pp_vacuum_error_count", "as_release_error_count",
     "pp_release_error_count", "pick_force_error_count", "place_force_error_count",
     "total_error_count")
+
+  private val roundedCols = Seq(
+    "min_cycle_time_seconds" -> 3, "max_cycle_time_seconds" -> 3, "avg_cycle_time_seconds" -> 3,
+    "avg_pick_force" -> 2, "max_pick_force" -> 2, "min_pick_force" -> 2,
+    "avg_place_force" -> 2, "max_place_force" -> 2, "min_place_force" -> 2)
+
+  private val outputCols = Seq(
+    "summary_date", "hour_of_day", "machine_id",
+    "avg_pick_force", "max_pick_force", "min_pick_force",
+    "avg_place_force", "max_place_force", "min_place_force",
+    "as_vacuum_error_count", "pp_vacuum_error_count",
+    "as_release_error_count", "pp_release_error_count",
+    "pick_force_error_count", "place_force_error_count",
+    "cycle_count", "min_cycle_time_seconds",
+    "max_cycle_time_seconds", "avg_cycle_time_seconds")
 
   private def withHourBucket(df: DataFrame): DataFrame = df
     // date_format(..).cast(date) in the reference (`:194`); to_date is the
@@ -72,29 +87,52 @@ object HourlyRollup {
       Seq("machine_id", "cycle_seq"),
       "left")
 
-    def forceValue(event: String) =
-      when(col("event_name") === event && col("parameter_name") === "PP_Force", col("value"))
-    def errorCount(param: String, event: String) =
-      sum(when(col("parameter_name") === param && col("event_name") === event &&
-        col("is_error") === 1, 1).otherwise(0))
-
+    val aggs = eventAggregates(rowsOn = None)
     withHourBucket(withStart)
       .groupBy("summary_date", "hour_of_day", "machine_id")
-      .agg(
-        avg(forceValue("Pick_Check")).as("avg_pick_force"),
-        max(forceValue("Pick_Check")).as("max_pick_force"),
-        min(forceValue("Pick_Check")).as("min_pick_force"),
-        avg(forceValue("Place_Check")).as("avg_place_force"),
-        max(forceValue("Place_Check")).as("max_place_force"),
-        min(forceValue("Place_Check")).as("min_place_force"),
-        errorCount("AS_VacuumUnits", "AS_Check").as("as_vacuum_error_count"),
-        errorCount("PP_VacuumUnits", "Pick_Check").as("pp_vacuum_error_count"),
-        errorCount("AS_VacuumUnits", "AS_Blowoff_Check").as("as_release_error_count"),
-        errorCount("PP_VacuumUnits", "Place_Check").as("pp_release_error_count"),
-        errorCount("PP_Force", "Pick_Check").as("pick_force_error_count"),
-        errorCount("PP_Force", "Place_Check").as("place_force_error_count"),
-        sum("is_error").as("total_error_count"))
+      .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The event-side aggregates: six force stats and seven error counters.
+    * `rowsOn` restricts every one of them to the rows it selects — the
+    * stream's windowed aggregation passes its event-row tag (`side =
+    * "e"`, see `StreamingPipeline.SummaryRow`); the batch, whose input
+    * holds events only, passes none.
+    */
+  private[graft] def eventAggregates(rowsOn: Option[Column]): Seq[Column] = {
+    def on(cond: Column) = rowsOn.fold(cond)(_ && cond)
+    def forceValue(event: String) =
+      when(on(col("event_name") === event && col("parameter_name") === "PP_Force"), col("value"))
+    def errorCount(param: String, event: String) =
+      sum(when(on(col("parameter_name") === param && col("event_name") === event &&
+        col("is_error") === 1), 1).otherwise(0))
+    Seq(
+      avg(forceValue("Pick_Check")).as("avg_pick_force"),
+      max(forceValue("Pick_Check")).as("max_pick_force"),
+      min(forceValue("Pick_Check")).as("min_pick_force"),
+      avg(forceValue("Place_Check")).as("avg_place_force"),
+      max(forceValue("Place_Check")).as("max_place_force"),
+      min(forceValue("Place_Check")).as("min_place_force"),
+      errorCount("AS_VacuumUnits", "AS_Check").as("as_vacuum_error_count"),
+      errorCount("PP_VacuumUnits", "Pick_Check").as("pp_vacuum_error_count"),
+      errorCount("AS_VacuumUnits", "AS_Blowoff_Check").as("as_release_error_count"),
+      errorCount("PP_VacuumUnits", "Place_Check").as("pp_release_error_count"),
+      errorCount("PP_Force", "Pick_Check").as("pick_force_error_count"),
+      errorCount("PP_Force", "Place_Check").as("place_force_error_count"),
+      rowsOn.fold(sum("is_error"))(r => sum(when(r, col("is_error")).otherwise(0)))
+        .as("total_error_count"))
+  }
+
+  /** Zero-fill, rounding and the 19-column output order
+    * (`daily_aggregator.py:238-265`), applied to aggregated rows that
+    * already carry `summary_date` and `hour_of_day`.
+    */
+  private[graft] def finishSummary(aggregated: DataFrame): DataFrame =
+    roundedCols
+      .foldLeft(aggregated.na.fill(0, zeroFillCols)) { case (df, (c, scale)) =>
+        df.withColumn(c, round(col(c), scale))
+      }
+      .select(outputCols.map(col): _*)
 
   /** Full-outer join of the two summaries + zero-fill + rounding + final
     * column order (`daily_aggregator.py:234-265`).
@@ -103,35 +141,18 @@ object HourlyRollup {
     hourlySummary(flaggedEvents, cycleTimes, cycleTimes)
 
   /** Variant with the event-side enrichment cycles separated from the
-    * cycle-stat cycles: an incremental caller (e.g. the streaming parity
-    * spec) can report an hour whose trailing cycle is still open — its
-    * events contribute to the event side while its not-yet-final cycle
-    * row is absent from the stats (which then zero-fill, exactly like the
-    * streaming aggregation).
+    * cycle-stat cycles: an incremental caller can report an hour whose
+    * trailing cycle is still open — its events contribute to the event
+    * side while its not-yet-final cycle row is absent from the stats
+    * (which then zero-fill). This is the batch expectation of the
+    * streaming summary (`StreamingPipeline.hourlySummaryStream`), which
+    * never emits the row of a cycle that has not closed.
     */
   def hourlySummary(
       flaggedEvents: DataFrame,
       enrichCycles: DataFrame,
-      statCycles: DataFrame): DataFrame = {
-    val joined = cycleSummary(statCycles)
+      statCycles: DataFrame): DataFrame =
+    finishSummary(cycleSummary(statCycles)
       .join(eventSummary(flaggedEvents, enrichCycles),
-        Seq("summary_date", "hour_of_day", "machine_id"), "outer")
-      .na.fill(0, zeroFillCols)
-
-    val rounded = Seq(
-      "min_cycle_time_seconds" -> 3, "max_cycle_time_seconds" -> 3, "avg_cycle_time_seconds" -> 3,
-      "avg_pick_force" -> 2, "max_pick_force" -> 2, "min_pick_force" -> 2,
-      "avg_place_force" -> 2, "max_place_force" -> 2, "min_place_force" -> 2
-    ).foldLeft(joined) { case (df, (c, scale)) => df.withColumn(c, round(col(c), scale)) }
-
-    rounded.select(
-      "summary_date", "hour_of_day", "machine_id",
-      "avg_pick_force", "max_pick_force", "min_pick_force",
-      "avg_place_force", "max_place_force", "min_place_force",
-      "as_vacuum_error_count", "pp_vacuum_error_count",
-      "as_release_error_count", "pp_release_error_count",
-      "pick_force_error_count", "place_force_error_count",
-      "cycle_count", "min_cycle_time_seconds",
-      "max_cycle_time_seconds", "avg_cycle_time_seconds")
-  }
+        Seq("summary_date", "hour_of_day", "machine_id"), "outer"))
 }

@@ -90,7 +90,7 @@ object Quality {
     val structs = checkStructs(checks, exactDistinct = true)
     val wide = joined.agg(structs.head.as("c0"),
       structs.tail.zipWithIndex.map { case (s, i) => s.as(s"c${i + 1}") }: _*)
-    explodeChecks(wide, structs.size, keyCols = Nil)
+    explodeChecks(wide, structs.size)
   }
 
   /** The ZERO-extra-pass form of [[expectations]]: attach the whole
@@ -147,7 +147,7 @@ object Quality {
     * distinct dimension, so the single aggregation pass can count them.
     * Stream-legal (stream-static broadcast joins are stateless).
     */
-  private[graft] def joinRiDims(df: DataFrame, checks: Seq[Check]): DataFrame = {
+  private def joinRiDims(df: DataFrame, checks: Seq[Check]): DataFrame = {
     val riChecks = checks.collect { case c: RefIntegrity => c }
     riChecks.zipWithIndex.foldLeft(df) { case (acc, (c, i)) =>
       val dim = c.dim.select(col(c.dimColumn).as(s"__dim_$i")).distinct()
@@ -160,12 +160,12 @@ object Quality {
   /** Compile each declared check into one
     * (check_type, col_name, metric, threshold, passed) struct of
     * aggregate expressions — the shared core of the batch gate and the
-    * windowed streaming gate. With `exactDistinct = false` the `Unique`
-    * metric uses `approx_count_distinct` (HLL++) instead of the exact
-    * distinct: streaming aggregations cannot carry distinct aggregates,
-    * and it is also the documented 100 TB batch swap.
+    * observed gate. With `exactDistinct = false` the `Unique` metric
+    * uses `approx_count_distinct` (HLL++) instead of the exact distinct:
+    * `CollectMetrics` cannot carry distinct aggregates, and it is also
+    * the documented 100 TB batch swap.
     */
-  private[graft] def checkStructs(checks: Seq[Check],
+  private def checkStructs(checks: Seq[Check],
       exactDistinct: Boolean): Seq[Column] = {
     val n = count(lit(1)).cast("double")
     def viol(cond: Column): Column =
@@ -218,16 +218,13 @@ object Quality {
     }
   }
 
-  /** Reshape the wide one-row-per-group check frame (c0..cN struct
-    * columns) into tall rows, carrying `keyCols` (e.g. window bounds)
-    * in front. A Generate over ≤ one row per group — shuffle-free.
+  /** Reshape the wide one-row check frame (c0..cN struct columns) into
+    * tall rows. A Generate over one row — shuffle-free.
     */
-  private[graft] def explodeChecks(wide: DataFrame, nChecks: Int,
-      keyCols: Seq[String]): DataFrame =
-    wide.select(keyCols.map(col) :+
-        explode(array((0 until nChecks).map(i => col(s"c$i")): _*)).as("s"): _*)
-      .select(keyCols.map(col) ++ Seq(col("s.check_type"), col("s.col_name"),
-        col("s.metric"), col("s.threshold"), col("s.passed")): _*)
+  private def explodeChecks(wide: DataFrame, nChecks: Int): DataFrame =
+    wide.select(explode(array((0 until nChecks).map(i => col(s"c$i")): _*)).as("s"))
+      .select(col("s.check_type"), col("s.col_name"),
+        col("s.metric"), col("s.threshold"), col("s.passed"))
 
   /** Exact `percentile_disc`-style edges of `column` over `df` at
     * p = i/bins (i = 1..bins-1): the smallest value whose cumulative

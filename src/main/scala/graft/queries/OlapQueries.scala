@@ -59,13 +59,14 @@ object OlapQueries {
     // The NATIVE gap-sessionization operator: Spark's session_window —
     // the same sessions as w4's lag+cumsum composition but computed by
     // the engine's own merging session-window aggregation, which is the
-    // form that carries over to Structured Streaming unchanged (the
-    // streaming twin + stream ≡ batch pin live in SessionStreamSpec).
+    // form that carries over to Structured Streaming unchanged.
     // Boundary: touching windows MERGE (the engine coalesces on
-    // start <= currentEnd — measured, pinned in SessionStreamSpec), so
-    // an event at EXACTLY the gap extends the session, identical to
-    // w4's strict-> test — the two operators are session-identical and
-    // the oracle is w4's, re-keyed by bounds instead of session_seq.
+    // start <= currentEnd — measured, pinned in ScaleTechniquesSpec "w8
+    // boundary: an event exactly one gap after the last extends the
+    // session"), so an event at EXACTLY the gap extends the session,
+    // identical to w4's strict-> test — the two operators are
+    // session-identical and the oracle is w4's, re-keyed by bounds
+    // instead of session_seq.
     // Scale shape: one shuffle on user_id, sessions merge inside the
     // aggregation — no windows, no cumsum pass.
     Q("w8_session_window",

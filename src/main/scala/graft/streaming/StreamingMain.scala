@@ -27,9 +27,12 @@ import graft.model.Rules
   *   - `GRAFT_STATE_PARTITIONS` — state/shuffle partitions for the
   *     stateful query (default 8, the measured key-geometry rule —
   *     see [[StreamingPipeline.configureStateSizing]]);
-  *   - `GRAFT_STATE_PROVIDER` — `rocksdb` to swap the state store
-  *     (measured to flip with key count; re-derive with
+  *   - `GRAFT_STATE_PROVIDER` — `hdfs` (default) or `rocksdb` to swap
+  *     the state store (measured to flip with key count; re-derive with
   *     `graft.tools.StreamProfileBench`).
+  *
+  * A malformed value exits 1 with a message naming the variable
+  * ([[settings]]).
   */
 object StreamingMain {
 
@@ -75,32 +78,62 @@ object StreamingMain {
         .start()
     }
 
+  /** What [[main]] reads from its environment (see the object doc). */
+  final case class Settings(
+      dataDir: String,
+      configPath: String,
+      checkpointDir: String,
+      watermark: String,
+      cores: Int,
+      statePartitions: Int,
+      rocksDbStateStore: Boolean,
+      url: String,
+      props: Map[String, String])
+
+  /** The environment contract, separated from [[main]] so tests can
+    * inject env. A missing DB variable, a state provider other than
+    * `hdfs`/`rocksdb`, or a count that is not a positive integer is an
+    * error naming the variable — the clean exit-1 path, not a
+    * NumberFormatException trace or a silently swapped store.
+    */
+  def settings(env: Map[String, String]): Either[String, Settings] = {
+    def positiveInt(key: String, default: Int): Either[String, Int] =
+      env.get(key).fold[Either[String, Int]](Right(default)) { raw =>
+        raw.toIntOption.filter(_ > 0)
+          .toRight(s"invalid $key '$raw' (expected a positive integer)")
+      }
+    for {
+      db <- graft.pipeline.DailyAggregatorMain.requiredEnv(
+        env, Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS"))
+      cores <- positiveInt("GRAFT_CORES", 32)
+      stateParts <- positiveInt("GRAFT_STATE_PARTITIONS", StreamingPipeline.DefaultStatePartitions)
+      rocksDb <- env.get("GRAFT_STATE_PROVIDER").fold[Either[String, Boolean]](Right(false))(
+        StreamingPipeline.stateStoreFlag("GRAFT_STATE_PROVIDER", _))
+    } yield Settings(
+      dataDir = env.getOrElse("GRAFT_DATA_DIR", "./raw_data"),
+      configPath = env.getOrElse("GRAFT_CONFIG", "./config/rules.json"),
+      checkpointDir = env.getOrElse("GRAFT_CHECKPOINT", "./checkpoint"),
+      watermark = env.getOrElse("GRAFT_WATERMARK", "2 hours"),
+      cores = cores,
+      statePartitions = stateParts,
+      rocksDbStateStore = rocksDb,
+      url = s"jdbc:postgresql://${db("DB_HOST")}/${db("DB_NAME")}",
+      props = Map(
+        "user" -> db("DB_USER"), "password" -> db("DB_PASS"),
+        "driver" -> "org.postgresql.Driver"))
+  }
+
   def main(args: Array[String]): Unit = {
-    val env = sys.env
-    val db = graft.pipeline.DailyAggregatorMain.requiredEnv(
-      env, Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS")) match {
-      case Right(e) => e
+    val cfg = settings(sys.env) match {
+      case Right(ok) => ok
       case Left(err) => System.err.println(err); sys.exit(1)
     }
-    val dataDir = env.getOrElse("GRAFT_DATA_DIR", "./raw_data")
-    val configPath = env.getOrElse("GRAFT_CONFIG", "./config/rules.json")
-    val ckpt = env.getOrElse("GRAFT_CHECKPOINT", "./checkpoint")
-    val wm = env.getOrElse("GRAFT_WATERMARK", "2 hours")
-    val stateParts = env.getOrElse("GRAFT_STATE_PARTITIONS",
-      StreamingPipeline.DefaultStatePartitions.toString).toInt
-    val rocksDb = env.get("GRAFT_STATE_PROVIDER").contains("rocksdb")
-    val rules = Rules.loadFileOrEmpty(configPath)
-
-    val url = s"jdbc:postgresql://${db("DB_HOST")}/${db("DB_NAME")}"
-    val props = Map(
-      "user" -> db("DB_USER"), "password" -> db("DB_PASS"),
-      "driver" -> "org.postgresql.Driver")
-
-    val spark = GraftSession.local(env.getOrElse("GRAFT_CORES", "32").toInt, "graft-streaming")
+    val rules = Rules.loadFileOrEmpty(cfg.configPath)
+    val spark = GraftSession.local(cfg.cores, "graft-streaming")
     try {
-      val q = run(spark, dataDir, url, "hourly_machine_summary",
-        JdbcSinks.dialectFor(url), ckpt, rules, wm, props,
-        statePartitions = stateParts, rocksDbStateStore = rocksDb)
+      val q = run(spark, cfg.dataDir, cfg.url, "hourly_machine_summary",
+        JdbcSinks.dialectFor(cfg.url), cfg.checkpointDir, rules, cfg.watermark, cfg.props,
+        statePartitions = cfg.statePartitions, rocksDbStateStore = cfg.rocksDbStateStore)
       q.awaitTermination()
     } catch {
       case e: Exception =>

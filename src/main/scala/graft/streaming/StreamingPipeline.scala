@@ -10,13 +10,14 @@ import graft.model.Schemas
 
 /** Structured-Streaming form of the pipeline (SURVEY §7.1 item 6): a file
   * source streams daily CSVs; cycle detection becomes *stateful* — the
-  * running `Cycle_Start` count lives in `flatMapGroupsWithState` state
-  * keyed by machine, so cycles survive micro-batch (and file) boundaries,
-  * which the batch job cannot do (it resets per file — an accepted
-  * divergence documented in SURVEY §7.4); the hourly rollup becomes a
-  * watermarked event-time window aggregation; the sink is a `foreachBatch`
-  * JDBC upsert (idempotent, so retried batches are safe — exactly-once
-  * effect on the summary table).
+  * running `Cycle_Start` count and the open cycle live in
+  * `flatMapGroupsWithState` state keyed by machine, so cycles survive
+  * micro-batch (and file) boundaries, which the batch job cannot do (it
+  * resets per file — an accepted divergence documented in SURVEY §7.4);
+  * the 19-column hourly summary becomes a watermarked event-time window
+  * aggregation. [[StreamingMain]] wires it to a `foreachBatch` JDBC
+  * upsert (idempotent, so retried batches are safe — exactly-once effect
+  * on the summary table).
   */
 object StreamingPipeline {
 
@@ -65,6 +66,19 @@ object StreamingPipeline {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
+  /** A deployment's state-store choice by name, as the
+    * `rocksDbStateStore` flag of [[configureStateSizing]]: `hdfs` (the
+    * default store) or `rocksdb`. Anything else is an error naming `key`,
+    * the setting it came from, so a misspelt provider cannot silently run
+    * the other store.
+    */
+  def stateStoreFlag(key: String, name: String): Either[String, Boolean] =
+    name match {
+      case "hdfs" => Right(false)
+      case "rocksdb" => Right(true)
+      case other => Left(s"invalid $key '$other' (expected hdfs or rocksdb)")
+    }
+
   /** [[configureStateSizing]] scoped to one query start: applies the
     * sizing, runs `startQuery`, and RESTORES the session's prior
     * `spark.sql.shuffle.partitions` / state-store provider before
@@ -100,14 +114,6 @@ object StreamingPipeline {
       parameter_name: String,
       value: Option[Float])
 
-  final case class SeqEvent(
-      event_timestamp: Timestamp,
-      machine_id: String,
-      event_name: String,
-      parameter_name: String,
-      value: Option[Float],
-      cycle_seq: Long)
-
   /** File-source stream of raw daily CSVs (same schema/format as S1). */
   def readCsvStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame =
     spark.readStream
@@ -116,314 +122,6 @@ object StreamingPipeline {
       .option("timestampFormat", Schemas.inputTimestampFormat)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(dir)
-
-  /** Group state of an event-time-ordered stateful stage: the reorder
-    * buffer of not-yet-releasable events plus the wrapped stage's own
-    * state. One case class so the WHOLE thing lives in a single
-    * `flatMapGroupsWithState` — a separate buffering operator feeding a
-    * second stateful operator trips Spark's global-watermark correctness
-    * check (the buffer emits rows at/behind the watermark, which a
-    * downstream stateful operator must treat as late).
-    */
-  final case class Buffered[S](
-      pending: List[CleanedEvent], inner: S,
-      lastReleasedMs: Long = Long.MinValue)
-
-  /** Event-time-ordered stateful processing — the cure for the one
-    * stream/batch divergence a per-batch sort cannot fix: an event that
-    * arrives a micro-batch later than a newer event would be replayed to
-    * the cycle state machine out of event-time order and land in the
-    * wrong cycle (or read as a spurious Start/End).
-    *
-    * Incoming events are held in per-machine group state and released to
-    * `step` strictly in event-time order once the watermark has passed
-    * them: an event is only processed when `event_timestamp < watermark`,
-    * i.e. when the engine guarantees nothing at-or-earlier can still
-    * arrive (Spark's late-data drop is strict, so an `== watermark` event
-    * may still show up — those stay buffered until the watermark moves
-    * past them), so the replay order `step` observes is provably
-    * non-decreasing in event time per machine and cross-batch disorder
-    * within the watermark delay is invisible to it.
-    *
-    * Cost model, for choosing `delay`: state holds the last `delay` of
-    * stream time per machine (O(rate × delay)) and every event's
-    * end-to-end latency grows by up to `delay` — the classic
-    * reorder-buffer trade. Groups with no fresh input drain via an
-    * event-time timeout pinned to their earliest pending event, so a
-    * machine that goes quiet still flushes as the global watermark
-    * advances.
-    *
-    * State lifetime: by default a drained group keeps `Buffered(Nil,
-    * inner)` forever because `inner` (the cycle counter / open-cycle
-    * start) must survive quiet periods — dropping it would restart cycle
-    * numbering when the machine wakes. Total state is therefore
-    * O(#machines-ever-seen), the same bounded-fleet assumption the
-    * unordered variants document.
-    *
-    * `idleTtl` opts into expiry for unbounded key churn (keys retired
-    * forever). The rule is defined in EVENT time so it is deterministic —
-    * independent of micro-batch boundaries and wall clocks: a key whose
-    * gap between consecutive (released) events exceeds the TTL restarts
-    * from `initial` at the next event. It is enforced twice, consistently:
-    * in-band, each released event more than TTL after the previous one
-    * resets `inner` before being processed (this is what makes the
-    * semantics exact — a timeout-only design silently keeps the counter
-    * when the reviving batch arrives together with the expiry timeout);
-    * and via an event-time timeout that `state.remove()`s a drained group
-    * once the watermark passes its last event + TTL (this is what makes
-    * the STATE shrink — the in-band rule alone would keep a row per
-    * retired key forever). A revival after removal re-creates the group
-    * at `initial`, which is exactly what the gap rule would have done —
-    * the two mechanisms can never disagree.
-    *
-    * The design decision, written down: expiry drops `inner` (cycle
-    * numbering restarts at 1 on revival). Keeping a counter snapshot
-    * forever is indistinguishable from not evicting — the state IS the
-    * counter — so the contract is: choose a TTL longer than any
-    * legitimate quiet period; keys active within the TTL keep exact
-    * numbering. Groups with a non-empty buffer never expire (their
-    * timeout is the release schedule, which always fires first, and the
-    * watermark can't be TTL past a pending event while that event is
-    * still unreleasable).
-    */
-  private def orderedStateful[S, O](
-      clean: Dataset[CleanedEvent], delay: String, initial: S,
-      idleTtl: Option[String] = None)(
-      step: (String, S, CleanedEvent, scala.collection.mutable.ArrayBuffer[O]) => S)(
-      implicit bt: scala.reflect.runtime.universe.TypeTag[Buffered[S]],
-      ot: scala.reflect.runtime.universe.TypeTag[O]): Dataset[O] = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val bEnc: org.apache.spark.sql.Encoder[Buffered[S]] = ExpressionEncoder()
-    implicit val oEnc: org.apache.spark.sql.Encoder[O] = ExpressionEncoder()
-    import clean.sparkSession.implicits._
-    val ttlMs = idleTtl.map(msOf)
-    clean
-      .withWatermark("event_timestamp", delay)
-      .groupByKey(_.machine_id)
-      .flatMapGroupsWithState[Buffered[S], O](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (machine: String, events: Iterator[CleanedEvent], state: GroupState[Buffered[S]]) =>
-          val st = state.getOption.getOrElse(Buffered(Nil, initial))
-          val pending = st.pending ++ events
-          val wm = state.getCurrentWatermarkMs()
-          // a TTL timeout (timed out with an empty buffer) is the idle
-          // eviction firing: drop the whole group. A timeout WITH pending
-          // events is the release schedule — fall through and process.
-          if (ttlMs.isDefined && state.hasTimedOut && pending.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-          // STRICTLY below the watermark: Spark's late-data drop is also
-          // strict, so an event with ts == wm can still arrive in a later
-          // micro-batch — releasing ties here would process it after its
-          // already-released equal-time peers, breaking the event-time
-          // order this wrapper exists to guarantee. Holding ties is also
-          // what the event-time timeout needs: it fires when wm moves
-          // strictly past the pinned timestamp, matching this predicate.
-          val (ripe, hold) = pending.partition(_.event_timestamp.getTime < wm)
-          val out = scala.collection.mutable.ArrayBuffer[O]()
-          var inner = st.inner
-          var lastMs = st.lastReleasedMs
-          ripe.sortBy(e => (e.event_timestamp.getTime, e.parameter_name))
-            .foreach { e =>
-              val ts = e.event_timestamp.getTime
-              // in-band expiry: an event-time gap beyond the TTL restarts
-              // the wrapped stage, batch boundaries notwithstanding
-              ttlMs.foreach { t =>
-                if (lastMs != Long.MinValue && ts - lastMs > t) inner = initial
-              }
-              inner = step(machine, inner, e, out)
-              lastMs = ts
-            }
-          state.update(Buffered(hold, inner, lastMs))
-          if (hold.nonEmpty)
-            // earliest pending ts is >= wm by construction (> wm is what
-            // the API requires only of FUTURE timestamps; max(_, wm+1)
-            // keeps an == wm tie legal and fires on the next advance)
-            state.setTimeoutTimestamp(
-              math.max(hold.map(_.event_timestamp.getTime).min, wm + 1))
-          else
-            // drained: arm the state-shrinking expiry clock at last event
-            // + TTL in event time (wm+1 floor keeps the API's
-            // must-be-future rule when the watermark already overtook it).
-            // Any new event re-enters this function and re-arms it.
-            ttlMs.foreach { t =>
-              val base = if (lastMs != Long.MinValue) lastMs else wm
-              state.setTimeoutTimestamp(math.max(base + t, wm + 1))
-            }
-          out.iterator
-          }
-      }
-  }
-
-  /** Calendar-interval string → milliseconds (day-time intervals only). */
-  private def msOf(d: String): Long = {
-    val i = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(d))
-    require(i.months == 0, s"month-based intervals unsupported here: $d")
-    i.days * 86400000L + i.microseconds / 1000L
-  }
-
-  /** Streaming W2: per-machine running Cycle_Start counter in group state.
-    *
-    * Events inside one micro-batch are sorted by (event_timestamp,
-    * parameter_name) before applying the counter — same order as the batch
-    * window; ties never involve Cycle_Start so assignment is deterministic.
-    * Cross-batch disorder is NOT absorbed here — use the reorder-buffered
-    * variant [[withCycleSeqOrdered]] when the source can deliver an older
-    * event in a later micro-batch. State is one Long per machine: O(#machines), no
-    * timeout needed for a bounded fleet (add a timeout if machines churn).
-    */
-  def withCycleSeq(clean: Dataset[CleanedEvent]): Dataset[SeqEvent] = {
-    import clean.sparkSession.implicits._
-    clean
-      .groupByKey(_.machine_id)
-      .flatMapGroupsWithState[Long, SeqEvent](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (machine: String, events: Iterator[CleanedEvent], state: GroupState[Long]) =>
-          var seq = state.getOption.getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer[SeqEvent]()
-          events.toSeq
-            .sortBy(e => (e.event_timestamp.getTime, e.parameter_name))
-            .foreach { e => seq = cycleSeqStep(machine, seq, e, out) }
-          state.update(seq)
-          out.iterator
-      }
-  }
-
-  private def cycleSeqStep(
-      machine: String, seq: Long, e: CleanedEvent,
-      out: scala.collection.mutable.ArrayBuffer[SeqEvent]): Long = {
-    val s = if (e.event_name == Schemas.cycleStartEvent) seq + 1 else seq
-    out += SeqEvent(e.event_timestamp, e.machine_id, e.event_name,
-      e.parameter_name, e.value, s)
-    s
-  }
-
-  /** [[withCycleSeq]] behind an event-time reorder buffer: correct cycle
-    * assignment even when delivery reorders events ACROSS micro-batches,
-    * as long as the disorder stays within `delay` (beyond it, events are
-    * watermark-late — the same contract as every watermarked stage).
-    */
-  def withCycleSeqOrdered(
-      clean: Dataset[CleanedEvent], delay: String,
-      idleTtl: Option[String] = None): Dataset[SeqEvent] =
-    orderedStateful(clean, delay, 0L, idleTtl)(cycleSeqStep)
-
-  final case class CycleOpenState(counter: Long, openStartMs: Option[Long])
-
-  final case class StreamCycleTime(
-      machine_id: String,
-      cycle_seq: Long,
-      cycle_start_ts: Timestamp,
-      cycle_time_seconds: Float)
-
-  /** Streaming A1/C2: per-machine open-cycle state — a Cycle_Start opens
-    * a cycle (incrementing the running counter), the matching Cycle_End
-    * closes it and emits the boundary row with its epoch-seconds duration
-    * (the batch C2 semantics). A cycle spanning two micro-batches closes
-    * correctly because the open start lives in state. A cycle whose End
-    * is lost closes with duration 0.0 when the next Start arrives (batch
-    * parity). Documented divergences from batch: the FINAL open cycle
-    * never emits (streams have no end-of-file; batch closes it with 0.0),
-    * and a duplicated Cycle_End extends the batch boundary but is ignored
-    * here (well-formed Start/End alternation assumed).
-    */
-  def cycleTimes(clean: Dataset[CleanedEvent]): Dataset[StreamCycleTime] = {
-    import clean.sparkSession.implicits._
-    clean
-      .groupByKey(_.machine_id)
-      .flatMapGroupsWithState[CycleOpenState, StreamCycleTime](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (machine: String, events: Iterator[CleanedEvent], state: GroupState[CycleOpenState]) =>
-          var st = state.getOption.getOrElse(CycleOpenState(0L, None))
-          val out = scala.collection.mutable.ArrayBuffer[StreamCycleTime]()
-          events.toSeq
-            .sortBy(e => (e.event_timestamp.getTime, e.parameter_name))
-            .foreach { e => st = cycleTimeStep(machine, st, e, out) }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  private[streaming] def cycleTimeStep(
-      machine: String, st: CycleOpenState, e: CleanedEvent,
-      out: scala.collection.mutable.ArrayBuffer[StreamCycleTime]): CycleOpenState =
-    e.event_name match {
-      case Schemas.cycleStartEvent =>
-        // batch parity: a cycle whose End never arrived before the next
-        // Start still exists with boundaries collapsed to its Start row —
-        // emit it with duration 0.0 (what the batch min/max-over-Start&End
-        // grouping produces)
-        st.openStartMs.foreach { startMs =>
-          out += StreamCycleTime(machine, st.counter, new Timestamp(startMs), 0.0f)
-        }
-        CycleOpenState(st.counter + 1, Some(e.event_timestamp.getTime))
-      case Schemas.cycleEndEvent =>
-        st.openStartMs.foreach { startMs =>
-          out += StreamCycleTime(machine, st.counter, new Timestamp(startMs),
-            ((e.event_timestamp.getTime / 1000.0) - (startMs / 1000.0)).toFloat)
-        }
-        st.copy(openStartMs = None)
-      case _ => st
-    }
-
-  /** [[cycleTimes]] behind an event-time reorder buffer (see
-    * [[withCycleSeqOrdered]] for the contract).
-    */
-  def cycleTimesOrdered(
-      clean: Dataset[CleanedEvent], delay: String,
-      idleTtl: Option[String] = None): Dataset[StreamCycleTime] =
-    orderedStateful(clean, delay, CycleOpenState(0L, None), idleTtl)(cycleTimeStep)
-
-  final case class EwmaPoint(
-      event_timestamp: Timestamp,
-      machine_id: String,
-      parameter_name: String,
-      value: Option[Float],
-      ewma: Option[Double])
-
-  /** Running adjust=True EWMA recursions: num_t = x_t + d·num_{t−1},
-    * den_t = 1 + d·den_{t−1}, ewma = num/den. TWO doubles per key.
-    */
-  final case class EwmaState(num: Double, den: Double)
-
-  private def ewmaStep(decay: Double)(
-      machine: String, st: EwmaState, e: CleanedEvent,
-      out: scala.collection.mutable.ArrayBuffer[EwmaPoint]): EwmaState =
-    e.value match {
-      case Some(v) =>
-        val next = EwmaState(v.toDouble + decay * st.num, 1.0 + decay * st.den)
-        out += EwmaPoint(e.event_timestamp, e.machine_id, e.parameter_name,
-          e.value, Some(next.num / next.den))
-        next
-      case None =>
-        // a null observation is absent, not zero: emit the current
-        // smooth unchanged (None before any observation) — the same
-        // skip semantics as the batch kernel
-        out += EwmaPoint(e.event_timestamp, e.machine_id, e.parameter_name,
-          None, if (st.den > 0) Some(st.num / st.den) else None)
-        st
-    }
-
-  /** Stream-native EWMA per machine — the sequential complement of
-    * `ops/Resample.ewma`: where the batch kernel truncates at `window`
-    * observations to stay a map-shaped fold, the stream keeps the EXACT
-    * unbounded-history recursion in two doubles of state per key (the
-    * numerator/denominator pair), so an always-on smoother never
-    * re-reads history and never grows state. Behind the event-time
-    * reorder buffer the released order is provably non-decreasing, so
-    * stream ≡ batch on the same series (the Horner evaluation here and
-    * the batch fold compute the same rational; for a long series the
-    * batch kernel's ≥ window-sized tail weighs < decay^window). `idleTtl`
-    * restarts the smooth for keys quiet beyond the TTL — for a smoother
-    * that is usually the RIGHT semantics even at bounded fleets: after
-    * a long outage yesterday's smooth is stale context.
-    */
-  def ewmaStreamOrdered(
-      clean: Dataset[CleanedEvent], delay: String, decay: Double = 0.5,
-      idleTtl: Option[String] = None): Dataset[EwmaPoint] =
-    orderedStateful(clean, delay, EwmaState(0.0, 0.0), idleTtl)(ewmaStep(decay))
 
   /** Batch cleanse re-expressed on the stream (identical expressions). */
   def cleanse(raw: DataFrame): Dataset[CleanedEvent] = {
@@ -446,23 +144,6 @@ object StreamingPipeline {
       clean: Dataset[CleanedEvent], watermark: String = "2 hours"): Dataset[CleanedEvent] =
     clean.withWatermark("event_timestamp", watermark)
       .dropDuplicatesWithinWatermark()
-
-  /** Watermarked hourly cycle counts: event-time window over Cycle_Start
-    * markers. Late events beyond the watermark are dropped — the streaming
-    * trade-off the batch job doesn't have to make.
-    */
-  def hourlyCycleCounts(clean: Dataset[CleanedEvent], watermark: String = "2 hours"): DataFrame =
-    clean.toDF()
-      .filter(col("event_name") === Schemas.cycleStartEvent)
-      .withWatermark("event_timestamp", watermark)
-      .groupBy(
-        window(col("event_timestamp"), "1 hour").as("w"),
-        col("machine_id"))
-      .agg(count(lit(1)).as("cycle_count"))
-      .select(
-        to_date(col("w.start")).as("summary_date"),
-        hour(col("w.start")).as("hour_of_day"),
-        col("machine_id"), col("cycle_count"))
 
   /** One tagged row of the streaming summary's input union: `side = "e"`
     * rows are events enriched with their cycle's start timestamp (the
@@ -494,12 +175,15 @@ object StreamingPipeline {
   /** Streaming input for the full hourly summary. Event rows carry the
     * enclosing cycle's start timestamp (events before the first
     * Cycle_Start are dropped — the batch left-join's null-date filter);
-    * cycle rows replicate [[cycleTimes]]'s emission rules, including the
-    * End-less cycle closed with 0.0 by the next Start and the final
-    * open cycle never emitting (the documented stream/batch divergence).
-    * Events are ordered per micro-batch only — use
-    * [[summaryRowsOrdered]] when delivery can reorder events across
-    * micro-batches.
+    * cycle rows follow the batch C2 boundaries: a Cycle_End closes the
+    * open cycle with its epoch-seconds duration, an End-less cycle is
+    * closed with 0.0 by the next Start, and the final open cycle never
+    * emits (streams have no end-of-file; the documented stream/batch
+    * divergence). Events are sorted per micro-batch by (event_timestamp,
+    * parameter_name), the batch window's order; an event delivered a
+    * micro-batch after a newer one of its machine is replayed out of
+    * order, so the source must deliver each machine's events in
+    * event-time order across files.
     */
   def summaryRows(clean: Dataset[CleanedEvent]): Dataset[SummaryRow] = {
     import clean.sparkSession.implicits._
@@ -545,28 +229,13 @@ object StreamingPipeline {
     st
   }
 
-  /** [[summaryRows]] behind an event-time reorder buffer (see
-    * [[withCycleSeqOrdered]] for the contract). Note: feeding this into
-    * [[hourlySummaryStream]]'s windowed aggregation means a watermarked
-    * stateful stage downstream of another — Spark's conservative
-    * global-watermark correctness check rejects that chain by default;
-    * rows released here sit exactly AT the watermark, so enabling the
-    * chain requires `spark.sql.streaming.statefulOperator
-    * .checkCorrectness.enabled=false` plus an aggregation watermark no
-    * tighter than `delay`.
-    */
-  def summaryRowsOrdered(
-      clean: Dataset[CleanedEvent], delay: String,
-      idleTtl: Option[String] = None): Dataset[SummaryRow] =
-    orderedStateful(clean, delay, SummaryState(0L, None, None), idleTtl)(summaryStep)
-
   /** The FULL streaming hourly summary — all 19 batch columns
     * ([[graft.ops.HourlyRollup.hourlySummary]] semantics) as one
     * watermarked event-time window aggregation over [[summaryRows]]'
     * tagged union. The batch job's full-outer join of cycle-side and
     * event-side aggregations disappears: both sides live in the same
     * (window, machine) group and aggregate conditionally on the tag, and
-    * the zero-fill falls out of `coalesce` over the conditional aggs.
+    * the batch's zero-fill applies to the aggregated row.
     * Late events beyond the watermark are dropped — the streaming
     * trade-off the batch job doesn't make.
     *
@@ -584,216 +253,27 @@ object StreamingPipeline {
       rules: Seq[graft.model.EventRule],
       watermark: String = "2 hours"): DataFrame =
     summaryAggregate(
-      graft.ops.ErrorRules.flag(summaryRows(clean).toDF(), rules), Some(watermark))
+      graft.ops.ErrorRules.flag(summaryRows(clean).toDF(), rules), watermark)
 
-  /** The FULL streaming hourly summary over OUT-OF-ORDER delivery, as ONE
-    * query: [[summaryRowsOrdered]]'s reorder buffer feeding the 19-column
-    * windowed aggregation.
-    *
-    * Why the aggregation carries NO watermark here (unlike
-    * [[hourlySummaryStream]]): a second `withWatermark(cycle_start_ts)`
-    * node downstream of the buffer deadlocks the query — the engine's
-    * global watermark is the MIN across watermark nodes, the downstream
-    * node stays at epoch until it observes rows, and the buffer releases
-    * rows only once the global watermark advances. Measured, not
-    * theorized: the chained form stalls with `watermark: 1970-01-01` in
-    * the query progress forever. So this single-query form aggregates
-    * without a watermark, which means (a) it must be consumed in UPDATE
-    * mode (a window re-emits whenever a released row lands in it — pair
-    * it with an upsert sink keyed on (date, hour, machine), exactly
-    * [[startJdbcUpsert]]'s contract), and (b) window state is never
-    * evicted: O(hours-seen × machines). For a bounded fleet that is a few
-    * hundred rows per machine-year; an always-on unbounded deployment
-    * should use the two-query relay ([[summaryRowsToParquet]] →
-    * [[hourlySummaryFromRows]]) whose aggregation evicts in append mode.
-    *
-    * Spark's conservative multi-stateful-operator check
-    * (`spark.sql.streaming.statefulOperator.checkCorrectness.enabled`)
-    * flags the FMGWS→aggregation chain; the buffer only releases rows the
-    * watermark already passed, so the chain is safe and the check must be
-    * disabled for this query. This method refuses to build otherwise, so
-    * the failure is an explanation instead of a mid-query
-    * AnalysisException.
+  /** The 19-column windowed aggregation over tagged summary rows (see
+    * [[hourlySummaryStream]] for the semantics). The event-side
+    * aggregates, zero-fill, rounding and column order are
+    * [[graft.ops.HourlyRollup]]'s own; only the cycle-side stats (one
+    * tagged row per closed cycle here, not the batch's cycle table) and
+    * the window → (date, hour) keys are the stream's.
     */
-  def hourlySummaryStreamOrdered(
-      clean: Dataset[CleanedEvent],
-      rules: Seq[graft.model.EventRule],
-      delay: String): DataFrame = {
-    val conf = clean.sparkSession.conf
-    val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    require(!conf.get(checkKey, "true").toBoolean,
-      s"hourlySummaryStreamOrdered chains a reorder buffer into an aggregation; " +
-        s"Spark's conservative correctness check rejects that chain. Set " +
-        s"$checkKey=false — safe here because the buffer only releases rows " +
-        s"the watermark has passed (see scaladoc).")
-    summaryAggregate(
-      graft.ops.ErrorRules.flag(summaryRowsOrdered(clean, delay).toDF(), rules),
-      watermark = None)
-  }
-
-  /** Query 1 of the two-query relay for ordered full-summary streaming at
-    * scale: reorder-buffered tagged summary rows appended to a parquet
-    * directory. Breaking the pipeline at a durable boundary is what gives
-    * BOTH stages correct watermarks — a single query cannot carry a
-    * second watermark node downstream of the buffer (see
-    * [[hourlySummaryStreamOrdered]]), but a fresh query over the relay
-    * directory derives its own watermark from `cycle_start_ts` and so
-    * aggregates in APPEND mode with full state eviction. The relay is
-    * also the natural restart point: each query checkpoints
-    * independently, and the parquet handoff is exactly-once (file-source
-    * reads are idempotent, the file sink commits atomically via its
-    * manifest).
-    */
-  def summaryRowsToParquet(
-      clean: Dataset[CleanedEvent],
-      delay: String,
-      relayDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    summaryRowsOrdered(clean, delay).toDF()
-      .writeStream.format("parquet")
-      .option("path", relayDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
-  /** Query 2 of the relay: the 19-column summary over the relay
-    * directory's summary rows, watermarked on `cycle_start_ts` (its own
-    * single watermark node — no chaining hazard) and therefore
-    * append-capable: each (hour, machine) row emits exactly once, when
-    * the watermark passes its window, and its state is evicted. The
-    * `watermark` must cover the upstream reorder `delay` plus the span of
-    * one cycle — a released row's `cycle_start_ts` lags the event time
-    * driving new relay files by at most that much.
-    */
-  def hourlySummaryFromRows(
-      spark: SparkSession,
-      relayDir: String,
-      rules: Seq[graft.model.EventRule],
-      watermark: String = "2 hours"): DataFrame = {
-    import spark.implicits._
-    val rows = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[SummaryRow]].schema)
-      .parquet(relayDir)
-    summaryAggregate(graft.ops.ErrorRules.flag(rows, rules), Some(watermark))
-  }
-
-  /** The shared 19-column windowed aggregation over tagged summary rows
-    * (see [[hourlySummaryStream]] for the semantics). `watermark = None`
-    * aggregates without a watermark node — update-mode-only, state never
-    * evicted (see [[hourlySummaryStreamOrdered]] for when that trade is
-    * right).
-    */
-  private def summaryAggregate(
-      flagged0: DataFrame, watermark: Option[String]): DataFrame = {
-    val flagged = watermark.fold(flagged0)(flagged0.withWatermark("cycle_start_ts", _))
-    val ev = col("side") === "e"
+  private def summaryAggregate(flagged: DataFrame, watermark: String): DataFrame = {
     val cy = col("side") === "c"
-    def forceValue(event: String) =
-      when(ev && col("event_name") === event && col("parameter_name") === "PP_Force",
-        col("value"))
-    def errorCount(param: String, event: String) =
-      sum(when(ev && col("parameter_name") === param && col("event_name") === event &&
-        col("is_error") === 1, 1).otherwise(0))
-    val agg = flagged
+    val aggs = graft.ops.HourlyRollup.eventAggregates(Some(col("side") === "e")) ++ Seq(
+      count(when(cy, lit(1))).as("cycle_count"),
+      min(when(cy, col("cycle_time_seconds"))).as("min_cycle_time_seconds"),
+      max(when(cy, col("cycle_time_seconds"))).as("max_cycle_time_seconds"),
+      avg(when(cy, col("cycle_time_seconds"))).as("avg_cycle_time_seconds"))
+    graft.ops.HourlyRollup.finishSummary(flagged
+      .withWatermark("cycle_start_ts", watermark)
       .groupBy(window(col("cycle_start_ts"), "1 hour").as("w"), col("machine_id"))
-      .agg(
-        avg(forceValue("Pick_Check")).as("avg_pick_force"),
-        max(forceValue("Pick_Check")).as("max_pick_force"),
-        min(forceValue("Pick_Check")).as("min_pick_force"),
-        avg(forceValue("Place_Check")).as("avg_place_force"),
-        max(forceValue("Place_Check")).as("max_place_force"),
-        min(forceValue("Place_Check")).as("min_place_force"),
-        errorCount("AS_VacuumUnits", "AS_Check").as("as_vacuum_error_count"),
-        errorCount("PP_VacuumUnits", "Pick_Check").as("pp_vacuum_error_count"),
-        errorCount("AS_VacuumUnits", "AS_Blowoff_Check").as("as_release_error_count"),
-        errorCount("PP_VacuumUnits", "Place_Check").as("pp_release_error_count"),
-        errorCount("PP_Force", "Pick_Check").as("pick_force_error_count"),
-        errorCount("PP_Force", "Place_Check").as("place_force_error_count"),
-        sum(when(ev, col("is_error")).otherwise(0)).as("total_error_count"),
-        count(when(cy, lit(1))).as("cycle_count"),
-        min(when(cy, col("cycle_time_seconds"))).as("min_cycle_time_seconds"),
-        max(when(cy, col("cycle_time_seconds"))).as("max_cycle_time_seconds"),
-        avg(when(cy, col("cycle_time_seconds"))).as("avg_cycle_time_seconds"))
-      .na.fill(0, Seq(
-        "cycle_count", "avg_cycle_time_seconds", "min_cycle_time_seconds",
-        "max_cycle_time_seconds", "avg_pick_force", "max_pick_force", "min_pick_force",
-        "avg_place_force", "max_place_force", "min_place_force"))
-    val rounded = Seq(
-      "min_cycle_time_seconds" -> 3, "max_cycle_time_seconds" -> 3, "avg_cycle_time_seconds" -> 3,
-      "avg_pick_force" -> 2, "max_pick_force" -> 2, "min_pick_force" -> 2,
-      "avg_place_force" -> 2, "max_place_force" -> 2, "min_place_force" -> 2
-    ).foldLeft(agg) { case (df, (c, scale)) => df.withColumn(c, round(col(c), scale)) }
-    rounded.select(
-      to_date(col("w.start")).as("summary_date"),
-      hour(col("w.start")).as("hour_of_day"),
-      col("machine_id"),
-      col("avg_pick_force"), col("max_pick_force"), col("min_pick_force"),
-      col("avg_place_force"), col("max_place_force"), col("min_place_force"),
-      col("as_vacuum_error_count"), col("pp_vacuum_error_count"),
-      col("as_release_error_count"), col("pp_release_error_count"),
-      col("pick_force_error_count"), col("place_force_error_count"),
-      col("cycle_count"), col("min_cycle_time_seconds"),
-      col("max_cycle_time_seconds"), col("avg_cycle_time_seconds"))
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumn("summary_date", to_date(col("w.start")))
+      .withColumn("hour_of_day", hour(col("w.start"))))
   }
-
-  /** Streaming gap sessionization — the stream form of the batch
-    * [[graft.ops.CycleDetection.sessionizeByGap]] family, on the built-in
-    * `session_window`: per-key sessions that extend while successive
-    * events arrive within `gap` of the session end, merged across
-    * micro-batches by the engine's session-merging state store (late
-    * events within the watermark merge INTO their session, even
-    * splitting/bridging two previously separate ones — state the marker
-    * FMGWS stages never need). In append mode a session row is emitted
-    * exactly once, when the watermark passes its end.
-    *
-    * Boundary semantics: `session_window` sessions are half-open
-    * `[first, last + gap)`, so an event exactly `gap` after the last one
-    * starts a NEW session, while the batch `sessionizeByGap` breaks only
-    * when the gap is strictly GREATER — equal-to-gap spacing diverges.
-    * At microsecond resolution that knife-edge is measure-zero; callers
-    * needing exact batch parity add 1µs to `gap`.
-    *
-    * The still-open trailing session per key never emits (no
-    * end-of-stream) — the same documented divergence as the cycle stages.
-    *
-    * @return (keyCols…, session_start, session_end, n_events); note
-    *         `session_end` is `last event + gap`, the window bound, not
-    *         the last event's timestamp.
-    */
-  def gapSessions(
-      events: DataFrame,
-      keyCols: Seq[String],
-      tsCol: String,
-      gap: String,
-      watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap).as("sw") +: keyCols.map(col): _*)
-      .agg(count(lit(1)).as("n_events"))
-      .select(keyCols.map(col) ++ Seq(
-        col("sw.start").as("session_start"),
-        col("sw.end").as("session_end"),
-        col("n_events")): _*)
-
-  /** Stream → JDBC upsert via foreachBatch: each micro-batch merges the
-    * CHANGED windows into the summary table (update mode — so the
-    * watermark actually evicts window state and write volume stays
-    * proportional to fresh data; complete mode would retain all state
-    * forever and rewrite the full history every batch). Upsert idempotence
-    * makes batch replays safe.
-    */
-  def startJdbcUpsert(
-      counts: DataFrame,
-      url: String,
-      table: String,
-      dialect: graft.io.JdbcSinks.UpsertDialect,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    counts.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        graft.io.JdbcSinks.upsert(df, url, table,
-          keyCols = Seq("summary_date", "hour_of_day", "machine_id"), dialect)
-      }
-      .start()
 }

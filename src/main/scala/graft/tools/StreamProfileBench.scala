@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.core.GraftSession
 import graft.model.Rules
+import graft.streaming.StreamingPipeline
 
 /** Where does a streaming micro-batch's time go? Replays the machine-day
   * through the full stateful pipeline (cleanse → FMGWS summary rows →
@@ -16,7 +17,8 @@ import graft.model.Rules
   *
   *   STREAM_SHUFFLE_PARTITIONS  state/shuffle partition count (default: the cores)
   *   STREAM_FILES_PER_TRIGGER   micro-batch size in files (default 2 of 24)
-  *   STREAM_STATE_PROVIDER      "rocksdb" to swap the state store
+  *   STREAM_STATE_PROVIDER      "hdfs" (default) or "rocksdb"; anything
+  *                              else exits 1 before the session starts
   *   STREAM_CHUNKS              replay granularity (default 24 files/day)
   *   STREAM_MACHINES            key geometry: machines in the corpus (default 1)
   *   STREAM_HOURS               corpus span in hours (default 24; 8 machines
@@ -35,21 +37,19 @@ object StreamProfileBench {
     val shuffle = sys.env.getOrElse("STREAM_SHUFFLE_PARTITIONS", cpus)
     val filesPerTrigger = sys.env.getOrElse("STREAM_FILES_PER_TRIGGER", "2").toInt
     val chunks = sys.env.getOrElse("STREAM_CHUNKS", "24").toInt
-    val provider = sys.env.get("STREAM_STATE_PROVIDER") match {
-      case Some("rocksdb") =>
-        Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case None | Some("hdfs") => None // the default store, accepted so sweeps can name it
-      case Some(other) => sys.error(s"unknown STREAM_STATE_PROVIDER: $other")
+    val provider = sys.env.getOrElse("STREAM_STATE_PROVIDER", "hdfs")
+    val rocksDb = StreamingPipeline.stateStoreFlag("STREAM_STATE_PROVIDER", provider) match {
+      case Right(flag) => flag
+      case Left(err) => System.err.println(err); sys.exit(1)
     }
     val spark = GraftSession.local(cpus.toInt, "graft-stream-profile")
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    StreamingPipeline.configureStateSizing(spark, shuffle.toInt, rocksDb)
     // recentProgress keeps only the last N updates (default 100); a
     // fine-grained sweep (STREAM_CHUNKS > 100 with 1 file/trigger)
     // would silently truncate the per-batch table this tool exists
     // to print, so size the buffer to the worst-case batch count.
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       math.max(100, chunks + 8).toString)
-    provider.foreach(spark.conf.set("spark.sql.streaming.stateStore.providerClass", _))
 
     val machines = sys.env.getOrElse("STREAM_MACHINES", "1").toInt
     val hours = sys.env.getOrElse("STREAM_HOURS", "24").toInt
@@ -57,11 +57,9 @@ object StreamProfileBench {
       if (machines == 1 && hours == 24) MachineDayFixture.streamDir(chunks)
       else MachineDayFixture.multiStreamDir(machines, hours, chunks)
     val t0 = System.nanoTime()
-    val clean = graft.streaming.StreamingPipeline.cleanse(
-      graft.streaming.StreamingPipeline.readCsvStream(
-        spark, dir.getPath, maxFilesPerTrigger = filesPerTrigger))
-    val summary = graft.streaming.StreamingPipeline.hourlySummaryStream(
-      clean, Rules.referenceDefaults)
+    val clean = StreamingPipeline.cleanse(
+      StreamingPipeline.readCsvStream(spark, dir.getPath, maxFilesPerTrigger = filesPerTrigger))
+    val summary = StreamingPipeline.hourlySummaryStream(clean, Rules.referenceDefaults)
     val q = summary.writeStream.outputMode("update").format("noop").start()
     try q.processAllAvailable() finally q.stop()
     val wall = (System.nanoTime() - t0) / 1e9
@@ -69,7 +67,7 @@ object StreamProfileBench {
     val progs = q.recentProgress.filter(_.numInputRows > 0)
     println(s"== conf: shuffle=$shuffle filesPerTrigger=$filesPerTrigger " +
       s"chunks=$chunks machines=$machines hours=$hours " +
-      s"provider=${sys.env.getOrElse("STREAM_STATE_PROVIDER", "hdfs")}")
+      s"provider=$provider")
     println(s"== wall ${String.format(java.util.Locale.ROOT, "%.2f", Double.box(wall))} s, " +
       s"batches ${progs.length}, rows ${progs.map(_.numInputRows).sum}")
     progs.foreach(p => println(p.json))

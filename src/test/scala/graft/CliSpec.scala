@@ -80,4 +80,38 @@ class CliSpec extends AnyFunSuite {
     assert(FixtureGen.runCli(args, base + ("GRAFT_SEED" -> "1e9")) ==
       Left("invalid GRAFT_SEED '1e9' (expected a number)"))
   }
+
+  private val streamingDb = Map(
+    "DB_HOST" -> "h", "DB_NAME" -> "n", "DB_USER" -> "u", "DB_PASS" -> "p")
+
+  test("streaming CLI: defaults and the accepted state-store names") {
+    import graft.streaming.{StreamingMain, StreamingPipeline}
+    val d = StreamingMain.settings(streamingDb).fold(err => fail(err), identity)
+    assert(d.cores == 32 && !d.rocksDbStateStore &&
+      d.statePartitions == StreamingPipeline.DefaultStatePartitions)
+    assert(d.url == "jdbc:postgresql://h/n")
+    val set = StreamingMain.settings(streamingDb ++ Map(
+      "GRAFT_CORES" -> "4", "GRAFT_STATE_PARTITIONS" -> "16",
+      "GRAFT_STATE_PROVIDER" -> "rocksdb")).fold(err => fail(err), identity)
+    assert(set.cores == 4 && set.statePartitions == 16 && set.rocksDbStateStore)
+    assert(StreamingMain.settings(streamingDb + ("GRAFT_STATE_PROVIDER" -> "hdfs"))
+      .map(_.rocksDbStateStore) == Right(false))
+    assert(StreamingMain.settings(Map.empty).isLeft)
+  }
+
+  // each malformed value takes the named-error exit, never a
+  // NumberFormatException trace or a silently swapped state store
+  Seq(
+    "GRAFT_STATE_PROVIDER" -> "RocksDB" -> "(expected hdfs or rocksdb)",
+    "GRAFT_STATE_PROVIDER" -> "rocks" -> "(expected hdfs or rocksdb)",
+    "GRAFT_STATE_PARTITIONS" -> "eight" -> "(expected a positive integer)",
+    "GRAFT_STATE_PARTITIONS" -> "0" -> "(expected a positive integer)",
+    "GRAFT_CORES" -> "4.5" -> "(expected a positive integer)",
+    "GRAFT_CORES" -> "-2" -> "(expected a positive integer)"
+  ).foreach { case ((key, raw), expected) =>
+    test(s"streaming CLI: malformed $key '$raw' is a named error") {
+      assert(graft.streaming.StreamingMain.settings(streamingDb + (key -> raw)) ==
+        Left(s"invalid $key '$raw' $expected"))
+    }
+  }
 }

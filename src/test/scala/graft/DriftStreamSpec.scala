@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Quality
-import graft.ops.Quality.Check._
-import graft.streaming.{DriftStream, ExpectationStream}
+import graft.streaming.DriftStream
 
 /** Continuous categorical-PSI drift monitoring (streaming/DriftStream):
   * the streamed per-window terms must equal the batch twin on identical
@@ -173,58 +172,6 @@ class DriftStreamSpec extends AnyFunSuite {
     assert(fromOp == fromStream)
     // and the collapsed hour trips the alert
     assert(fromStream.toSeq.map(_._4).sum > 0.2)
-  }
-
-  test("windowed expectations: stream equals the batch twin, alerts fire per window") {
-    val checks = Seq(
-      InSet("cat", Seq("a", "b", "c")),        // hour 1's d rows violate
-      Matches("cat", "^[a-c]$"),               // same violations, regex form
-      RowCountBetween(5L, 100L),               // hour-2 sentinel window has 1 row
-      Unique("cat", maxDupFrac = 1.0))         // approx-distinct leg exercised
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).csv(streamDir)
-    val out = ExpectationStream.windowedExpectations(
-      stream, "ts", checks, windowDur = "1 hour", watermarkDelay = "0 seconds")
-    val q = out.writeStream.format("memory").queryName("exp_out")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val streamed = spark.table("exp_out")
-    // hours 0 and 1 finalized: 2 windows x 4 checks
-    assert(streamed.count() == 8)
-    val batch = ExpectationStream.windowedExpectationsBatch(
-        spark.read.schema(schema).csv(streamDir), "ts", checks, "1 hour")
-      .filter(col("window_end") <= lit("2024-10-16 12:00:01").cast("timestamp"))
-    assert(batch.exceptAll(streamed).count() == 0)
-    assert(streamed.exceptAll(batch).count() == 0)
-
-    // hour 0 is clean; hour 1 trips the set/regex gates (4 of 10 rows = 0.4)
-    val byWindow = streamed
-      .select(date_format(col("window_start"), "HH").cast("int").as("h"),
-        col("check_type"), col("metric"), col("passed"))
-      .as[(Int, String, Double, Int)].collect()
-    assert(byWindow.filter(_._1 == 10).forall(_._4 == 1), "hour 0 passes all")
-    val h1 = byWindow.filter(_._1 == 11).map(r => r._2 -> ((r._3, r._4))).toMap
-    assert(h1("in_set") == ((0.4, 0)) && h1("matches") == ((0.4, 0)))
-    assert(h1("row_count") == ((10.0, 1)))
-  }
-
-  test("windowed expectations: RefIntegrity via stream-static broadcast join") {
-    val dim = Seq("a", "b", "c").toDF("code")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).csv(streamDir)
-    val out = ExpectationStream.windowedExpectations(
-      stream, "ts", Seq(RefIntegrity("cat", dim, "code")),
-      windowDur = "1 hour", watermarkDelay = "0 seconds")
-    val q = out.writeStream.format("memory").queryName("exp_ri_out")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val rows = spark.table("exp_ri_out")
-      .select(date_format(col("window_start"), "HH").cast("int").as("h"),
-        col("metric"), col("passed"))
-      .as[(Int, Double, Int)].collect().sortBy(_._1).toList
-    // hour 0: all of a/b/c resolve; hour 1: the 4 d-rows are orphans
-    assert(rows == List((10, 0.0, 1), (11, 0.4, 0)))
   }
 
   test("drift monitor window state survives a checkpoint restart") {

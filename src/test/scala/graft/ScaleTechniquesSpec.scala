@@ -237,6 +237,21 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       "the native operator must not fall back to an ordered window pass")
   }
 
+  test("w8 boundary: an event exactly one gap after the last extends the session") {
+    // w8_session_window's rule: touching session windows MERGE (the
+    // engine coalesces on start <= currentEnd), so 10:54 — exactly 30
+    // minutes after 10:24 — joins 10:24's session instead of opening a
+    // new one, the same sessions as w4's strict-> gap test
+    val ev = Seq("2024-10-16 10:24:00", "2024-10-16 10:54:00").toDF("s")
+      .select(lit(10L).as("user_id"), col("s").cast("timestamp").as("ts"))
+    val sessions = ev.groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(date_format(min("ts"), "HH:mm").as("s_ts"),
+        date_format(max("ts"), "HH:mm").as("e_ts"), count(lit(1)).as("n_events"))
+      .select("s_ts", "e_ts", "n_events")
+      .as[(String, String, Long)].collect().toSeq
+    assert(sessions == Seq(("10:24", "10:54", 2L)))
+  }
+
   test("fuzzy match plans as a bin equi-join, never a nested-loop fallback") {
     val names = (1 to 50).map(i => s"name$i").toDF("name")
     val pairs = graft.ops.FuzzyJoin.dictionaryMatches(names, "name", maxDist = 2)

@@ -9,7 +9,7 @@ import graft.fixtures.{FixtureGen, Fixtures}
 import graft.io.JdbcSinks
 import graft.ops.CycleDetection
 import graft.pipeline.DailyAggregatorJob
-import graft.streaming.{FunnelStream, StreamingPipeline, StreamJoins}
+import graft.streaming.StreamingPipeline
 
 /** Streaming ≡ batch on the fixture, including cross-micro-batch state. */
 class StreamingSpec extends AnyFunSuite {
@@ -98,103 +98,6 @@ class StreamingSpec extends AnyFunSuite {
     dir
   }
 
-  test("stateful cycle_seq across micro-batches equals the batch window") {
-    val clean = StreamingPipeline.cleanse(
-      StreamingPipeline.readCsvStream(spark, streamDir, maxFilesPerTrigger = 1))
-    val q = StreamingPipeline.withCycleSeq(clean).toDF()
-      .writeStream.format("memory").queryName("seq_out").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val streamed = spark.table("seq_out")
-    val (batch, _) = CycleDetection.detect(
-      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, Fixtures.rawCsv)))
-    val batchAligned = batch.select(
-      "event_timestamp", "machine_id", "event_name", "parameter_name", "value", "cycle_seq")
-    assert(streamed.count() == batchAligned.count())
-    assert(batchAligned.exceptAll(streamed).count() == 0)
-    assert(streamed.exceptAll(batchAligned).count() == 0)
-    // two micro-batches actually happened (state crossed a boundary)
-    assert(q.recentProgress.count(_.numInputRows > 0) >= 2)
-  }
-
-  test("stateful cycle times across micro-batches equal batch boundaries (closed cycles)") {
-    val clean = StreamingPipeline.cleanse(
-      StreamingPipeline.readCsvStream(spark, streamDir, maxFilesPerTrigger = 1))
-    val q = StreamingPipeline.cycleTimes(clean).toDF()
-      .writeStream.format("memory").queryName("ct_out").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val streamed = spark.table("ct_out")
-      .select(col("machine_id"), col("cycle_seq"),
-        col("cycle_start_ts"), round(col("cycle_time_seconds"), 3).as("ct"))
-    val (_, batchCycles) = CycleDetection.detect(
-      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, Fixtures.rawCsv)))
-    // exclude each machine's trailing End-less cycle (batch closes it with
-    // 0.0 at end-of-file; the stream keeps it open)
-    val lastSeq = batchCycles.groupBy("machine_id").agg(max("cycle_seq").as("mx"))
-    val batchClosed = batchCycles
-      .join(lastSeq, Seq("machine_id"))
-      .filter(col("cycle_seq") < col("mx"))
-      .select(col("machine_id"), col("cycle_seq"),
-        col("cycle_start_ts"), round(col("cycle_time_seconds"), 3).as("ct"))
-    assert(streamed.count() == batchClosed.count())
-    assert(batchClosed.exceptAll(streamed).count() == 0)
-    assert(streamed.exceptAll(batchClosed).count() == 0)
-  }
-
-  test("cycle state survives a full query restart from the checkpoint") {
-    // file1 arrives, query runs and STOPS; file2 arrives, a NEW query on
-    // the same checkpoint resumes — the running counters must continue,
-    // not restart, so the union of both runs equals the batch result.
-    val dir = Files.createTempDirectory("graft_restart").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
-    val src = new java.io.File(streamDir).listFiles().map(_.getPath).sorted
-    java.nio.file.Files.copy(java.nio.file.Paths.get(src(0)),
-      java.nio.file.Paths.get(s"$dir/part1.csv"))
-
-    StreamingSpec.restartRows.clear()
-    def run(): Unit = {
-      val clean = StreamingPipeline.cleanse(
-        StreamingPipeline.readCsvStream(spark, dir, maxFilesPerTrigger = 1))
-      val q = StreamingPipeline.withCycleSeq(clean).toDF()
-        .writeStream
-        .option("checkpointLocation", ckpt).outputMode("append")
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          StreamingSpec.restartRows.synchronized {
-            StreamingSpec.restartRows ++= df.collect()
-          }: Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()                                  // processes file1, stops
-    java.nio.file.Files.copy(java.nio.file.Paths.get(src(1)),
-      java.nio.file.Paths.get(s"$dir/part2.csv"))
-    run()                                  // restarts from checkpoint, file2
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_timestamp",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("machine_id",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("event_name",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("parameter_name",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.FloatType),
-      org.apache.spark.sql.types.StructField("cycle_seq",
-        org.apache.spark.sql.types.LongType)))
-    val streamed = spark.createDataFrame(
-      java.util.Arrays.asList(StreamingSpec.restartRows.toSeq: _*), schema)
-    val (batch, _) = CycleDetection.detect(
-      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, Fixtures.rawCsv)))
-    val batchAligned = batch.select(
-      "event_timestamp", "machine_id", "event_name", "parameter_name", "value", "cycle_seq")
-    assert(streamed.count() == batchAligned.count())
-    assert(batchAligned.exceptAll(streamed).count() == 0)
-  }
-
   test("streaming 19-column hourly summary equals the batch rollup on the fixture") {
     val clean = StreamingPipeline.cleanse(
       StreamingPipeline.readCsvStream(spark, streamDir, maxFilesPerTrigger = 1))
@@ -235,637 +138,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.count() == expected.count())
     assert(expected.exceptAll(streamed).count() == 0)
     assert(streamed.exceptAll(expected).count() == 0)
-  }
-
-  /** Out-of-order delivery fixture: three cycles for one machine where
-    * the SECOND file delivers the EARLIEST cycle (event-time 00:00) a
-    * micro-batch after the 00:10 cycle — the cross-batch disorder a
-    * per-batch sort cannot fix. A far-future sentinel row in the last
-    * file pushes the watermark past everything so reorder buffers drain
-    * during processAllAvailable(). Returns (streamDir, batchOracleCsv).
-    */
-  private def outOfOrderFixture(): (String, String) = {
-    def cyc(hhmm: String): Seq[String] = {
-      val base = s"2024-10-16T$hhmm"
-      Seq(
-        s"$base:00.000Z,M1,Cycle_Start,,",
-        s"$base:00.100Z,M1,Pick_Check,PP_Force,80.0",
-        s"$base:00.500Z,M1,Cycle_End,,")
-    }
-    val header = "timestamp,machine_id,event_name,parameter_name,value"
-    val sentinel = "2024-10-20T00:00:00.000Z,M_FLUSH,Cycle_Start,,"
-    val dir = Files.createTempDirectory("graft_reorder").toString
-    val base = System.currentTimeMillis()
-    Seq(
-      header +: cyc("00:10"),              // newer cycle arrives first
-      header +: cyc("00:00"),              // oldest cycle arrives second
-      (header +: cyc("00:20")) :+ sentinel // third cycle + watermark push
-    ).zipWithIndex.foreach { case (lines, i) =>
-      FixtureGen.writeCsv(s"$dir/f$i.csv", lines)
-      new java.io.File(s"$dir/f$i.csv").setLastModified(base + i * 2000L): Unit
-    }
-    // batch oracle over the same events in event-time order — written
-    // OUTSIDE the streamed dir (the file source would ingest it too)
-    val allRows = header +: (cyc("00:00") ++ cyc("00:10") ++ cyc("00:20"))
-    val batchCsv = Files.createTempDirectory("graft_reorder_oracle").toString + "/all.csv"
-    FixtureGen.writeCsv(batchCsv, allRows)
-    (dir, batchCsv)
-  }
-
-  test("reorderByEventTime: cross-batch out-of-order delivery still matches batch") {
-    val (dir, batchCsv) = outOfOrderFixture()
-
-    def runStream(buffered: Boolean, name: String) = {
-      val clean = StreamingPipeline.cleanse(
-        StreamingPipeline.readCsvStream(spark, dir, maxFilesPerTrigger = 1))
-      val seqd = if (buffered) StreamingPipeline.withCycleSeqOrdered(clean, "1 hour")
-                 else StreamingPipeline.withCycleSeq(clean)
-      val q = seqd.toDF()
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table(name).filter(col("machine_id") === "M1")
-        .select("event_timestamp", "event_name", "cycle_seq")
-        .as[(java.sql.Timestamp, String, Long)].collect().toSet
-    }
-
-    val (batch, _) = CycleDetection.detect(
-      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, batchCsv)))
-    val expected = batch.select("event_timestamp", "event_name", "cycle_seq")
-      .as[(java.sql.Timestamp, String, Long)].collect().toSet
-
-    val unbuffered = runStream(buffered = false, "reorder_off")
-    assert(unbuffered != expected,
-      "test must be non-vacuous: raw delivery order has to mis-assign cycles")
-    val bufferedGot = runStream(buffered = true, "reorder_on")
-    assert(bufferedGot == expected)
-  }
-
-  test("streaming funnel: step reaches equal batch stamped under out-of-order delivery") {
-    // user 1's conversion arrives REVERSED across micro-batches (the
-    // purchase and click land a batch before the view that anchors
-    // them); user 3 proves order-sensitivity (purchase BEFORE its view
-    // must not convert); sentinel user 999 pushes the watermark so the
-    // reorder buffers drain.
-    val header = "user_id,event_type,ts"
-    val dir = Files.createTempDirectory("graft_funnel_stream").toString
-    def l(u: Long, t: String, ts: String) = s"$u,$t,${ts}Z"
-    val base = System.currentTimeMillis()
-    // all disorder stays WITHIN the 1 h watermark delay — anything
-    // older is dropped by Spark's late-data rule (the documented
-    // contract of every ordered stage)
-    Seq(
-      Seq(l(1, "click", "2024-10-16T10:05:00.000"),
-        l(1, "purchase", "2024-10-16T10:10:00.000"),
-        l(3, "purchase", "2024-10-16T09:40:00.000")),
-      Seq(l(1, "view", "2024-10-16T10:00:00.000"),
-        l(2, "view", "2024-10-16T09:50:00.000"),
-        l(3, "view", "2024-10-16T09:45:00.000")),
-      Seq(l(3, "click", "2024-10-16T09:50:00.000"),
-        l(999, "view", "2024-10-20T00:00:00.000"))
-    ).zipWithIndex.foreach { case (rows, i) =>
-      FixtureGen.writeCsv(s"$dir/f$i.csv", header +: rows)
-      new java.io.File(s"$dir/f$i.csv").setLastModified(base + i * 2000L): Unit
-    }
-    val schema = "user_id LONG, event_type STRING, ts TIMESTAMP"
-    val tsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-    def readStreamed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).option("header", "true")
-      .option("timestampFormat", tsFmt).csv(dir)
-    def readBatch = spark.read.schema(schema).option("header", "true")
-      .option("timestampFormat", tsFmt).csv(dir)
-    val steps = Seq("view", "click", "purchase")
-    val q = FunnelStream.stepReaches(
-      readStreamed.as[FunnelStream.FunnelEvent], steps, "1 hour")
-      .toDF()
-      .writeStream.format("memory").queryName("funnel_st").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("funnel_st").filter(col("user_id") < 999)
-      .select("user_id", "step_idx", "ts")
-      .as[(Long, Int, java.sql.Timestamp)].collect()
-    // append exactly-once: no (user, step) may emit twice
-    assert(streamed.map(r => (r._1, r._2)).distinct.length == streamed.length)
-    // batch oracle: ops.Funnel.stamped over the same rows
-    val stamped = graft.ops.Funnel.stamped(
-      readBatch.filter(col("user_id") < 999),
-      "user_id", "event_type", "ts", steps)
-      .groupBy("user_id")
-      .agg(min("step_ts_1").as("t1"), min("step_ts_2").as("t2"),
-        min("step_ts_3").as("t3"))
-      .as[(Long, Option[java.sql.Timestamp], Option[java.sql.Timestamp],
-        Option[java.sql.Timestamp])].collect()
-    val expected = stamped.flatMap { case (u, t1, t2, t3) =>
-      Seq(t1, t2, t3).zipWithIndex.collect {
-        case (Some(ts), i) => (u, i + 1, ts)
-      }
-    }.toSet
-    assert(streamed.toSet == expected)
-    // the fixture is non-vacuous: a full conversion, a partial, and an
-    // order-blocked purchase
-    assert(expected.count(_._1 == 1L) == 3 && expected.count(_._1 == 2L) == 1 &&
-      expected.count(_._1 == 3L) == 2)
-  }
-
-  test("funnel state (pending buffer + reached steps) survives a checkpoint restart") {
-    // run 1 ingests the LATER funnel steps (they stay pending in the
-    // reorder buffer); the query stops; run 2 resumes from the
-    // checkpoint, delivers the anchoring view plus the watermark push —
-    // the restored buffer must release in order and convert fully
-    val dir = Files.createTempDirectory("graft_funnel_restart").toString
-    val ckpt = Files.createTempDirectory("graft_funnel_ckpt").toString
-    val header = "user_id,event_type,ts"
-    def put(name: String, rows: Seq[String], i: Int): Unit = {
-      FixtureGen.writeCsv(s"$dir/$name", header +: rows)
-      new java.io.File(s"$dir/$name").setLastModified(System.currentTimeMillis() + i): Unit
-    }
-    put("f0.csv", Seq(
-      "1,click,2024-10-16T10:05:00.000Z",
-      "1,purchase,2024-10-16T10:10:00.000Z"), 0)
-    val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-    StreamingSpec.funnelRestartRows.clear()
-    def run(): Unit = {
-      val src = spark.readStream
-        .schema("user_id LONG, event_type STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1).option("header", "true")
-        .option("timestampFormat", fmt).csv(dir)
-        .as[FunnelStream.FunnelEvent]
-      val q = FunnelStream.stepReaches(src, Seq("view", "click", "purchase"), "1 hour")
-        .toDF()
-        .writeStream.option("checkpointLocation", ckpt).outputMode("append")
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          val rows = df.select("user_id", "step_idx", "ts")
-            .as[(Long, Int, java.sql.Timestamp)].collect()
-          StreamingSpec.funnelRestartRows.synchronized {
-            StreamingSpec.funnelRestartRows ++= rows
-          }: Unit
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    put("f1.csv", Seq(
-      "1,view,2024-10-16T10:00:00.000Z",
-      "999,view,2024-10-20T00:00:00.000Z"), 1000)
-    run()
-    val got = StreamingSpec.funnelRestartRows.filter(_._1 < 999).toSet
-    val t = (s: String) => java.sql.Timestamp.from(java.time.Instant.parse(s))
-    assert(got == Set(
-      (1L, 1, t("2024-10-16T10:00:00.000Z")),
-      (1L, 2, t("2024-10-16T10:05:00.000Z")),
-      (1L, 3, t("2024-10-16T10:10:00.000Z"))),
-      "the restored pending buffer must anchor and release the full chain")
-  }
-
-  test("stream-stream interval join equals the batch range join across micro-batches") {
-    // views land within/outside the 10-minute window after errors of
-    // the same user; the two sides arrive in SEPARATE streams and
-    // different micro-batches
-    val vDir = Files.createTempDirectory("graft_ssj_v").toString
-    val eDir = Files.createTempDirectory("graft_ssj_e").toString
-    val base = System.currentTimeMillis()
-    def write(dir: String, name: String, header: String, rows: Seq[String], i: Int): Unit = {
-      FixtureGen.writeCsv(s"$dir/$name", header +: rows)
-      new java.io.File(s"$dir/$name").setLastModified(base + i * 2000L): Unit
-    }
-    write(vDir, "v0.csv", "user_id,view_id,vts", Seq(
-      "1,10,2024-10-16T10:05:00.000Z",   // inside [10:00, 10:10]
-      "1,11,2024-10-16T10:15:00.000Z",   // outside
-      "2,12,2024-10-16T10:05:00.000Z"), 0) // user 2: no error
-    write(vDir, "v1.csv", "user_id,view_id,vts", Seq(
-      "1,13,2024-10-16T10:10:00.000Z",   // boundary: inclusive
-      "1,14,2024-10-16T09:59:59.000Z"), 1) // before the error
-    write(eDir, "e0.csv", "user_id,err_id,ets", Seq(
-      "1,90,2024-10-16T10:00:00.000Z"), 0)
-    write(eDir, "e1.csv", "user_id,err_id,ets", Seq(
-      "3,91,2024-10-16T10:00:00.000Z"), 1) // error with no views
-    val vSchema = "user_id LONG, view_id LONG, vts TIMESTAMP"
-    val eSchema = "user_id LONG, err_id LONG, ets TIMESTAMP"
-    val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-    def rd(dir: String, schema: String, stream: Boolean) =
-      if (stream) spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .option("header", "true").option("timestampFormat", fmt).csv(dir)
-      else spark.read.schema(schema).option("header", "true")
-        .option("timestampFormat", fmt).csv(dir)
-    val joined = StreamJoins.intervalJoin(
-      rd(vDir, vSchema, stream = true), rd(eDir, eSchema, stream = true),
-      keyCols = Seq("user_id"), leftTs = "vts", rightTs = "ets",
-      lowerSec = 0L, upperSec = 600L, delay = "1 hour")
-      .select("view_id", "err_id")
-    val q = joined.writeStream.format("memory").queryName("ssj")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("ssj").as[(Long, Long)].collect().toSet
-    // batch oracle: plain inequality join over the same files
-    val expected = rd(vDir, vSchema, stream = false).as("v")
-      .join(rd(eDir, eSchema, stream = false).as("e"),
-        col("v.user_id") === col("e.user_id") &&
-          col("vts") >= col("ets") &&
-          col("vts") <= col("ets") + expr("interval 600 seconds"))
-      .select("view_id", "err_id").as[(Long, Long)].collect().toSet
-    assert(expected == Set((10L, 90L), (13L, 90L)), "fixture must be non-trivial")
-    assert(streamed == expected)
-  }
-
-  test("stream-stream LEFT OUTER interval join: unmatched rows emit once the watermark closes them") {
-    val vDir = Files.createTempDirectory("graft_ssjo_v").toString
-    val eDir = Files.createTempDirectory("graft_ssjo_e").toString
-    val base = System.currentTimeMillis()
-    def write(dir: String, name: String, header: String, rows: Seq[String], i: Int): Unit = {
-      FixtureGen.writeCsv(s"$dir/$name", header +: rows)
-      new java.io.File(s"$dir/$name").setLastModified(base + i * 2000L): Unit
-    }
-    write(vDir, "v0.csv", "user_id,view_id,vts", Seq(
-      "1,10,2024-10-16T10:05:00.000Z",      // matched
-      "2,12,2024-10-16T10:05:00.000Z"), 0)  // no error: outer row
-    // far-future sentinels on BOTH sides push both watermarks past the
-    // outer candidates so the null-padded rows actually emit
-    write(vDir, "v1.csv", "user_id,view_id,vts", Seq(
-      "998,99,2024-10-20T00:00:00.000Z"), 1)
-    write(eDir, "e0.csv", "user_id,err_id,ets", Seq(
-      "1,90,2024-10-16T10:00:00.000Z"), 0)
-    write(eDir, "e1.csv", "user_id,err_id,ets", Seq(
-      "998,98,2024-10-20T00:00:00.000Z"), 1)
-    val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-    def rd(dir: String, schema: String) =
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .option("header", "true").option("timestampFormat", fmt).csv(dir)
-    val joined = StreamJoins.intervalJoin(
-      rd(vDir, "user_id LONG, view_id LONG, vts TIMESTAMP"),
-      rd(eDir, "user_id LONG, err_id LONG, ets TIMESTAMP"),
-      keyCols = Seq("user_id"), leftTs = "vts", rightTs = "ets",
-      lowerSec = 0L, upperSec = 600L, delay = "1 hour",
-      joinType = "leftOuter")
-      .select(col("view_id"), col("err_id"))
-    val q = joined.writeStream.format("memory").queryName("ssj_outer")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("ssj_outer").filter(col("view_id") < 99)
-      .as[(Long, Option[Long])].collect().toSet
-    assert(got == Set((10L, Some(90L)), (12L, None)),
-      "matched row eager, unmatched row null-padded after watermark closure")
-  }
-
-  test("cycleTimesOrdered: closed-cycle boundaries survive out-of-order delivery") {
-    val (dir, batchCsv) = outOfOrderFixture()
-    val clean = StreamingPipeline.cleanse(
-      StreamingPipeline.readCsvStream(spark, dir, maxFilesPerTrigger = 1))
-    val q = StreamingPipeline.cycleTimesOrdered(clean, "1 hour").toDF()
-      .writeStream.format("memory").queryName("ct_ord").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("ct_ord").filter(col("machine_id") === "M1")
-      .select(col("cycle_seq"), col("cycle_start_ts"),
-        round(col("cycle_time_seconds"), 3).as("ct"))
-      .as[(Long, java.sql.Timestamp, Double)].collect().toSet
-    val (_, batchCycles) = CycleDetection.detect(
-      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, batchCsv)))
-    val expected = batchCycles
-      .select(col("cycle_seq"), col("cycle_start_ts"),
-        round(col("cycle_time_seconds"), 3).as("ct"))
-      .as[(Long, java.sql.Timestamp, Double)].collect().toSet
-    // the fixture's cycles all close with an explicit End, so stream ==
-    // batch exactly (no trailing open cycle in the comparison set)
-    assert(streamed == expected)
-  }
-
-  test("ewmaStreamOrdered: stream equals the batch kernel under out-of-order delivery") {
-    // three cycles with DIFFERENT forces so the smooth actually moves;
-    // nulls (marker rows) must pass through without disturbing it
-    def cyc(hhmm: String, force: Double): Seq[String] = {
-      val base = s"2024-10-16T$hhmm"
-      Seq(
-        s"$base:00.000Z,M1,Cycle_Start,,",
-        s"$base:00.100Z,M1,Pick_Check,PP_Force,$force",
-        s"$base:00.500Z,M1,Cycle_End,,")
-    }
-    val header = "timestamp,machine_id,event_name,parameter_name,value"
-    val sentinel = "2024-10-20T00:00:00.000Z,M_FLUSH,Cycle_Start,,"
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma_s").toString
-    val base = System.currentTimeMillis()
-    Seq(
-      header +: cyc("00:10", 90.0),               // newer arrives first
-      header +: cyc("00:00", 80.0),               // oldest second
-      (header +: cyc("00:20", 70.0)) :+ sentinel  // + watermark push
-    ).zipWithIndex.foreach { case (lines, i) =>
-      FixtureGen.writeCsv(s"$dir/f$i.csv", lines)
-      new java.io.File(s"$dir/f$i.csv").setLastModified(base + i * 2000L): Unit
-    }
-    val clean = StreamingPipeline.cleanse(
-      StreamingPipeline.readCsvStream(spark, dir, maxFilesPerTrigger = 1))
-    val q = StreamingPipeline.ewmaStreamOrdered(clean, "1 hour").toDF()
-      .writeStream.format("memory").queryName("ewma_ord").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("ewma_ord").filter(col("machine_id") === "M1")
-      .select("event_timestamp", "parameter_name", "ewma")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1)) ->
-        (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-    // batch kernel over the same rows in event-time order (window large
-    // enough that truncation never kicks in -> same rational number)
-    val batchRows = header +: (cyc("00:00", 80.0) ++ cyc("00:10", 90.0) ++
-      cyc("00:20", 70.0))
-    val batchCsv = java.nio.file.Files.createTempDirectory("graft_ewma_b")
-      .toString + "/all.csv"
-    FixtureGen.writeCsv(batchCsv, batchRows)
-    val batch = graft.ops.Resample.ewma(
-      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, batchCsv)).toDF(),
-      keys = Seq("machine_id"), orderCols = Seq("event_timestamp", "parameter_name"),
-      valueCol = "value", decay = 0.5, window = 1000)
-      .select("event_timestamp", "parameter_name", "ewma")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1)) ->
-        (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-    assert(streamed.keySet == batch.keySet && streamed.nonEmpty)
-    streamed.foreach { case (k, sv) =>
-      (sv, batch(k)) match {
-        case (Some(a), Some(b)) => assert(math.abs(a - b) < 1e-9, s"$k: $a vs $b")
-        case (a, b) => assert(a == b, s"$k: $a vs $b")
-      }
-    }
-    // the smooth follows the forces: 80, then (90+.5*80)/1.5, then
-    // (70+.5*90+.25*80)/1.75 — spot-check the valued rows
-    val valued = streamed.collect { case ((_, "PP_Force"), Some(v)) => v }.toSeq.sorted
-    assert(valued.contains(80.0))
-    assert(valued.exists(v => math.abs(v - (90.0 + 0.5 * 80.0) / 1.5) < 1e-9))
-    assert(valued.exists(v => math.abs(v - (70.0 + 0.5 * 90.0 + 0.25 * 80.0) / 1.75) < 1e-9))
-  }
-
-  test("summaryRowsOrdered: tagged summary rows survive out-of-order delivery") {
-    val (dir, batchCsv) = outOfOrderFixture()
-    def rows(df: org.apache.spark.sql.Dataset[StreamingPipeline.SummaryRow], name: String) = {
-      val q = df.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table(name).filter(col("machine_id") === "M1")
-        .select("cycle_start_ts", "side", "event_name", "parameter_name",
-          "value", "cycle_time_seconds")
-        .collect().toSet
-    }
-    // expected: the same events delivered IN ORDER in one file — the
-    // per-batch sort makes the plain variant correct there
-    val inOrder = StreamingPipeline.cleanse(StreamingPipeline.readCsvStream(
-      spark, new java.io.File(batchCsv).getParent, maxFilesPerTrigger = 1))
-    val expected = rows(StreamingPipeline.summaryRows(inOrder), "sum_inorder")
-    val outOfOrder = StreamingPipeline.cleanse(
-      StreamingPipeline.readCsvStream(spark, dir, maxFilesPerTrigger = 1))
-    val got = rows(StreamingPipeline.summaryRowsOrdered(outOfOrder, "1 hour"), "sum_ord")
-    assert(expected.nonEmpty && got == expected)
-  }
-
-  test("idleTtl: quiet keys are evicted from ordered state; active keys keep exact numbering") {
-    // Timeline (reorder delay 1h, TTL 2h, all event time):
-    //   M1 cycles at 00:00 and (after its TTL expired) Oct-20 12:00
-    //   M2 cycles at 00:30 and 02:00 (second arrives within TTL)
-    //   M9/M8 far-future single Starts that push the watermark
-    // Expected with TTL: M2 keeps exact numbering (1 then 2); M1's
-    // revival restarts at 1 (the documented expiry contract); final state
-    // holds only the still-live groups. Without TTL: M1's second cycle
-    // continues at 2 and every group ever seen stays in state.
-    val header = "timestamp,machine_id,event_name,parameter_name,value"
-    def cyc(m: String, base: String): Seq[String] = Seq(
-      s"${base}:00.000Z,$m,Cycle_Start,,",
-      s"${base}:00.500Z,$m,Cycle_End,,")
-    def mkDir(): String = {
-      val dir = Files.createTempDirectory("graft_ttl").toString
-      val base = System.currentTimeMillis()
-      Seq(
-        header +: (cyc("M1", "2024-10-16T00:00") ++ cyc("M2", "2024-10-16T00:30")),
-        header +: cyc("M2", "2024-10-16T02:00"),
-        Seq(header, "2024-10-20T00:00:00.000Z,M9,Cycle_Start,,"),
-        header +: cyc("M1", "2024-10-20T12:00"),
-        Seq(header, "2024-10-25T00:00:00.000Z,M8,Cycle_Start,,")
-      ).zipWithIndex.foreach { case (lines, i) =>
-        FixtureGen.writeCsv(s"$dir/f$i.csv", lines)
-        new java.io.File(s"$dir/f$i.csv").setLastModified(base + i * 2000L): Unit
-      }
-      dir
-    }
-    // Listener-based state-store observability: capture (batchId, stored
-    // rows, memory bytes) per progress event so eviction is asserted as an
-    // actual mid-run DROP in the store, not just a smaller final count.
-    final class StateSeriesListener(name: String)
-        extends org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      val series = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == name)
-          e.progress.stateOperators.headOption.foreach { so =>
-            series.synchronized {
-              series += ((e.progress.batchId, so.numRowsTotal, so.memoryUsedBytes))
-            }: Unit
-          }
-    }
-    def run(ttl: Option[String], name: String)
-        : (Set[(String, String, Long)], Long, Seq[(Long, Long, Long)]) = {
-      val listener = new StateSeriesListener(name)
-      spark.streams.addListener(listener)
-      val clean = StreamingPipeline.cleanse(
-        StreamingPipeline.readCsvStream(spark, mkDir(), maxFilesPerTrigger = 1))
-      val q = StreamingPipeline.withCycleSeqOrdered(clean, "1 hour", ttl).toDF()
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        val stateRows = q.recentProgress.reverse
-          .flatMap(_.stateOperators.headOption).head.numRowsTotal
-        // listener delivery is async: wait until it has seen the final batch
-        val lastBatch = q.recentProgress.filter(_.stateOperators.nonEmpty)
-          .map(_.batchId).max
-        val deadline = System.currentTimeMillis() + 30000L
-        while (listener.series.synchronized(
-            !listener.series.exists(_._1 >= lastBatch)) &&
-            System.currentTimeMillis() < deadline)
-          Thread.sleep(50L)
-        val rows = spark.table(name)
-          .filter(col("event_name") === "Cycle_Start")
-          .select(col("machine_id"),
-            date_format(col("event_timestamp"), "yyyy-MM-dd HH:mm").as("t"),
-            col("cycle_seq"))
-          .as[(String, String, Long)].collect().toSet
-        (rows, stateRows, listener.series.synchronized(listener.series.sortBy(_._1).toSeq))
-      } finally {
-        q.stop()
-        spark.streams.removeListener(listener)
-      }
-    }
-
-    val (withTtl, stateWithTtl, seriesWithTtl) = run(Some("2 hours"), "ttl_on")
-    val (noTtl, stateNoTtl, seriesNoTtl) = run(None, "ttl_off")
-
-    // active-within-TTL key M2 numbers exactly like the unevicted run
-    assert(withTtl.filter(_._1 == "M2") == Set(
-      ("M2", "2024-10-16 00:30", 1L), ("M2", "2024-10-16 02:00", 2L)))
-    assert(noTtl.filter(_._1 == "M2") == withTtl.filter(_._1 == "M2"))
-    // expired M1 restarts at 1; unevicted M1 continues at 2
-    assert(withTtl.filter(_._1 == "M1") == Set(
-      ("M1", "2024-10-16 00:00", 1L), ("M1", "2024-10-20 12:00", 1L)))
-    assert(noTtl.filter(_._1 == "M1") == Set(
-      ("M1", "2024-10-16 00:00", 1L), ("M1", "2024-10-20 12:00", 2L)))
-    // and the state actually shrank: every group ever seen without TTL,
-    // only the still-live ones with it
-    assert(stateNoTtl == 4, s"expected all 4 groups retained, got $stateNoTtl")
-    assert(stateWithTtl < stateNoTtl,
-      s"TTL must evict quiet groups: $stateWithTtl vs $stateNoTtl")
-    // listener evidence: with TTL the stored-row series must DROP at some
-    // trigger (the eviction firing); without TTL it never shrinks. Memory
-    // is captured per operator and must be a real (positive) measurement.
-    def rowsOf(s: Seq[(Long, Long, Long)]) = s.map(_._2)
-    assert(rowsOf(seriesWithTtl).sliding(2).exists {
-        case Seq(a, b) => b < a; case _ => false },
-      s"TTL eviction must shrink the state store mid-run: ${rowsOf(seriesWithTtl)}")
-    assert(rowsOf(seriesNoTtl).sliding(2).forall {
-        case Seq(a, b) => b >= a; case _ => true },
-      s"without TTL state must never shrink: ${rowsOf(seriesNoTtl)}")
-    assert(seriesWithTtl.nonEmpty && seriesWithTtl.forall(_._3 > 0L),
-      "listener must capture positive state-store memory per progress event")
-  }
-
-  test("hourlySummaryStreamOrdered: full 19-column summary equals batch under cross-batch out-of-order delivery") {
-    // Cycle B is SPLIT across files out of event-time order: its Pick and
-    // End rows arrive a micro-batch BEFORE its Start. The unordered
-    // variant drops the Pick (no open cycle yet) and times B wrong; the
-    // reorder buffer must reassemble it. M2's later closed cycle exists
-    // to be RELEASED by the buffer (unlike the far-future pusher, which
-    // stays buffered), driving the aggregation watermark past M1's hour
-    // window so append mode actually emits it — the full eviction path,
-    // not just update-mode re-emission.
-    val header = "timestamp,machine_id,event_name,parameter_name,value"
-    def cyc(m: String, base: String): Seq[String] = Seq(
-      s"${base}:00.000Z,$m,Cycle_Start,,",
-      s"${base}:00.100Z,$m,Pick_Check,PP_Force,80.0",
-      s"${base}:00.500Z,$m,Cycle_End,,")
-    val b = cyc("M1", "2024-10-16T00:10")
-    val dir = Files.createTempDirectory("graft_sum_ord").toString
-    val base = System.currentTimeMillis()
-    Seq(
-      header +: Seq(b(1), b(2)),                   // B's Pick+End, Start missing
-      header +: (b.head +: cyc("M1", "2024-10-16T00:00")), // B's Start + cycle A
-      header +: cyc("M1", "2024-10-16T00:20"),     // cycle C
-      header +: cyc("M2", "2024-10-16T06:00"),     // releasable flush cycle
-      Seq(header, "2024-10-20T00:00:00.000Z,M3,Cycle_Start,,") // watermark pusher
-    ).zipWithIndex.foreach { case (lines, i) =>
-      FixtureGen.writeCsv(s"$dir/f$i.csv", lines)
-      new java.io.File(s"$dir/f$i.csv").setLastModified(base + i * 2000L): Unit
-    }
-    val oracleCsv = Files.createTempDirectory("graft_sum_ord_oracle").toString + "/all.csv"
-    FixtureGen.writeCsv(oracleCsv, header +: (
-      cyc("M1", "2024-10-16T00:00") ++ b ++ cyc("M1", "2024-10-16T00:20")))
-
-    def cleanStream() = StreamingPipeline.cleanse(
-      StreamingPipeline.readCsvStream(spark, dir, maxFilesPerTrigger = 1))
-
-    // batch oracle: every M1 cycle closes with an explicit End, so no
-    // trailing-open-cycle exclusion is needed
-    val (events, cycles) = CycleDetection.detect(
-      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, oracleCsv)))
-    val flagged = graft.ops.ErrorRules.flag(events, graft.model.Rules.referenceDefaults)
-    val expected = graft.ops.HourlyRollup.hourlySummary(flagged, cycles, cycles)
-      .filter(col("machine_id") === "M1").collect().toSet
-    assert(expected.nonEmpty)
-
-    // non-vacuity: the UNORDERED composition mis-times cycle B (its End
-    // arrives before its Start) — out-of-order delivery has to matter
-    val qUn = StreamingPipeline.hourlySummaryStream(
-        cleanStream(), graft.model.Rules.referenceDefaults)
-      .writeStream.format("memory").queryName("sum_unord").outputMode("append").start()
-    try qUn.processAllAvailable() finally qUn.stop()
-    val unordered = spark.table("sum_unord")
-      .filter(col("machine_id") === "M1").collect().toSet
-    assert(unordered != expected,
-      "fixture must be order-sensitive or the test proves nothing")
-
-    // path 1 — single-query composition (update mode + upsert semantics):
-    // refuses to build while the conservative check would kill the query
-    val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    assertThrows[IllegalArgumentException] {
-      StreamingPipeline.hourlySummaryStreamOrdered(
-        cleanStream(), graft.model.Rules.referenceDefaults, "1 hour")
-    }
-    spark.conf.set(checkKey, "false")
-    val singleQuery =
-      try {
-        val summary = StreamingPipeline.hourlySummaryStreamOrdered(
-          cleanStream(), graft.model.Rules.referenceDefaults, "1 hour")
-        val schema = summary.schema
-        StreamingSpec.summaryRows.clear()
-        val q = summary.writeStream.outputMode("update")
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            StreamingSpec.summaryRows.synchronized {
-              df.collect().foreach { r =>
-                StreamingSpec.summaryRows((r.getDate(0), r.getInt(1), r.getString(2))) = r
-              }
-            }: Unit
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-        spark.createDataFrame(
-            java.util.Arrays.asList(StreamingSpec.summaryRows.values.toSeq: _*), schema)
-          .filter(col("machine_id") === "M1").collect().toSet
-      } finally spark.conf.set(checkKey, "true")
-    assert(singleQuery == expected)
-
-    // path 2 — two-query relay (append mode, full state eviction): rows
-    // land in a parquet relay dir; a second query with its OWN watermark
-    // on cycle_start_ts aggregates and emits each window exactly once
-    val relay = Files.createTempDirectory("graft_sum_relay").toString
-    val q1 = StreamingPipeline.summaryRowsToParquet(
-      cleanStream(), "1 hour", s"$relay/rows", s"$relay/ckpt1")
-    try q1.processAllAvailable() finally q1.stop()
-    val q2 = StreamingPipeline.hourlySummaryFromRows(
-        spark, s"$relay/rows", graft.model.Rules.referenceDefaults)
-      .writeStream.format("memory").queryName("sum_relay").outputMode("append").start()
-    try q2.processAllAvailable() finally q2.stop()
-    val relayed = spark.table("sum_relay")
-      .filter(col("machine_id") === "M1").collect().toSet
-    assert(relayed == expected)
-  }
-
-  test("gapSessions: session_window across out-of-order micro-batches equals batch") {
-    // user A: two sessions (3 events from 00:00, 2 events from 01:00,
-    // 10-min gap); user B: a singleton. The SECOND session's file arrives
-    // FIRST — session merging must absorb the earlier events from a later
-    // micro-batch. A far-future sentinel closes the watermark.
-    val dir = Files.createTempDirectory("graft_sess").toString
-    val header = "user_id,ts"
-    def r(u: String, t: String) = s"$u,2024-10-16T${t}.000Z"
-    val base = System.currentTimeMillis()
-    Seq(
-      Seq(header, r("A", "01:00:00"), r("A", "01:01:00")),
-      Seq(header, r("A", "00:00:00"), r("A", "00:02:00"), r("A", "00:03:00"),
-        r("B", "00:30:00")),
-      Seq(header, r("Z", "10:00:00"))
-    ).zipWithIndex.foreach { case (lines, i) =>
-      FixtureGen.writeCsv(s"$dir/f$i.csv", lines)
-      new java.io.File(s"$dir/f$i.csv").setLastModified(base + i * 2000L): Unit
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val stream = spark.readStream.schema(schema)
-      .option("header", "true")
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-      .option("maxFilesPerTrigger", 1)
-      .csv(dir)
-    val q = StreamingPipeline.gapSessions(stream, Seq("user_id"), "ts",
-      gap = "10 minutes", watermark = "2 hours")
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("sess_out")
-      .filter(col("user_id") =!= "Z") // trailing open session never emits
-      .select(col("user_id"), col("session_start"), col("n_events"))
-      .as[(String, java.sql.Timestamp, Long)].collect().toSet
-
-    val batchEvents = Seq(
-      ("A", "2024-10-16 01:00:00"), ("A", "2024-10-16 01:01:00"),
-      ("A", "2024-10-16 00:00:00"), ("A", "2024-10-16 00:02:00"),
-      ("A", "2024-10-16 00:03:00"), ("B", "2024-10-16 00:30:00"))
-      .toDF("user_id", "s").select(col("user_id"), col("s").cast("timestamp").as("ts"))
-    val expected = CycleDetection.sessionizeByGap(
-        batchEvents, Seq("user_id"), "ts", gapSeconds = 600L,
-        orderTiebreak = Seq(col("ts").asc))
-      .groupBy("user_id", "session_seq")
-      .agg(min("ts").as("session_start"), count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_start"), col("n_events"))
-      .as[(String, java.sql.Timestamp, Long)].collect().toSet
-    assert(expected.size == 3 && streamed == expected)
   }
 
   test("dropDuplicatesWithinWatermark: replayed delivery still yields exactly-once rows") {
@@ -1021,52 +293,92 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
-  test("watermarked hourly windows + foreachBatch upsert match batch cycle counts") {
-    val url = "jdbc:derby:memory:graftstream;create=true"
+  test("StreamingMain.run resumes cycle and window state from its checkpoint after a restart") {
+    val url = "jdbc:derby:memory:graftrestart;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
       st.execute(
-        """CREATE TABLE stream_summary (
+        """CREATE TABLE restart_sum (
           |  summary_date DATE NOT NULL, hour_of_day INT NOT NULL,
-          |  machine_id VARCHAR(50) NOT NULL, cycle_count BIGINT,
+          |  machine_id VARCHAR(50) NOT NULL,
+          |  avg_pick_force DOUBLE, max_pick_force FLOAT, min_pick_force FLOAT,
+          |  avg_place_force DOUBLE, max_place_force FLOAT, min_place_force FLOAT,
+          |  as_vacuum_error_count BIGINT, pp_vacuum_error_count BIGINT,
+          |  as_release_error_count BIGINT, pp_release_error_count BIGINT,
+          |  pick_force_error_count BIGINT, place_force_error_count BIGINT,
+          |  cycle_count BIGINT,
+          |  min_cycle_time_seconds FLOAT, max_cycle_time_seconds FLOAT,
+          |  avg_cycle_time_seconds DOUBLE,
           |  PRIMARY KEY (summary_date, hour_of_day, machine_id))""".stripMargin)
       st.close()
     } finally conn.close()
 
-    val clean = StreamingPipeline.cleanse(
-      StreamingPipeline.readCsvStream(spark, streamDir, maxFilesPerTrigger = 1))
-    val counts = StreamingPipeline.hourlyCycleCounts(clean)
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    val q = StreamingPipeline.startJdbcUpsert(
-      counts, url, "stream_summary", JdbcSinks.UpdateInsertUpsert, ckpt)
-    try q.processAllAvailable() finally q.stop()
+    // file 1 arrives, the production query runs and STOPS; file 2
+    // arrives and a NEW query on the same checkpoint resumes. The files
+    // split the fixture in the middle of a cycle of each machine and of
+    // the 23:00 hour (streamDir's midnight split falls between cycles
+    // and hours, where a restart that lost all state reads the same):
+    // had the per-machine cycle state not survived, file 2's events
+    // would lose their open cycle and it would never close; had the
+    // window state not survived, the resumed query would upsert 23:00
+    // from file 2's rows alone.
+    val split = java.time.Instant.parse("2024-10-16T23:39:00.200Z")
+    val dir = Files.createTempDirectory("graft_main_restart").toString
+    val ckpt = Files.createTempDirectory("graft_main_restart_ckpt").toString
+    val (header, rows) = {
+      val src = scala.io.Source.fromFile(Fixtures.rawCsv, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      (lines.head, lines.tail)
+    }
+    val (before, after) = rows.partition { l =>
+      try java.time.Instant.parse(l.takeWhile(_ != ',')).isBefore(split)
+      catch { case _: Exception => true } // garbage rows -> first file
+    }
+    def deliver(name: String, part: Seq[String]): Unit =
+      FixtureGen.writeCsv(s"$dir/$name", header +: part)
+    def runUntilIdle(): Unit = withRestoredStateConf {
+      val q = graft.streaming.StreamingMain.run(
+        spark, dir, url, "restart_sum", JdbcSinks.UpdateInsertUpsert, ckpt,
+        graft.model.Rules.referenceDefaults)
+      try q.processAllAvailable() finally q.stop()
+    }
 
-    val got = JdbcSinks.read(spark, url, "stream_summary")
-      .select(date_format(col("summary_date"), "yyyy-MM-dd"),
-        col("hour_of_day"), col("machine_id"), col("cycle_count"))
-      .as[(String, Int, String, Long)].collect().toSet
+    val (events, cycles) = CycleDetection.detect(
+      DailyAggregatorJob.cleanse(DailyAggregatorJob.readRawCsv(spark, Fixtures.rawCsv)))
+    val flagged = graft.ops.ErrorRules.flag(events, graft.model.Rules.referenceDefaults)
+    val lastSeq = cycles.groupBy("machine_id").agg(max("cycle_seq").as("mx"))
+    val statCycles = cycles.join(lastSeq, Seq("machine_id"))
+      .filter(col("cycle_seq") < col("mx")).drop("mx")
+    def key(df: org.apache.spark.sql.DataFrame) = df.select(
+      date_format(col("summary_date"), "yyyy-MM-dd"), col("hour_of_day"),
+      col("machine_id"), col("cycle_count"), col("as_vacuum_error_count"),
+      col("pick_force_error_count"))
+      .as[(String, Int, String, Long, Long, Long)].collect().toSet
+    val expected = key(
+      graft.ops.HourlyRollup.hourlySummary(flagged, cycles, statCycles))
 
-    // batch oracle: count Cycle_Start per (date, hour, machine)
-    val want = DailyAggregatorJob.cleanse(
-        DailyAggregatorJob.readRawCsv(spark, Fixtures.rawCsv))
-      .filter(col("event_name") === "Cycle_Start")
-      .groupBy(
-        date_format(col("event_timestamp"), "yyyy-MM-dd").as("d"),
-        hour(col("event_timestamp")).as("h"), col("machine_id"))
-      .agg(count(lit(1)).as("n"))
-      .as[(String, Int, String, Long)].collect().toSet
+    val spanning = cycles.filter(col("cycle_start_ts") < lit(java.sql.Timestamp.from(split)) &&
+      unix_micros(col("cycle_start_ts")) + col("cycle_time_seconds") * 1e6 >
+        lit(split.toEpochMilli * 1000L))
+    assert(spanning.count() == 2, "the split must cut one cycle of each machine")
 
-    assert(got == want)
+    deliver("part1.csv", before)
+    runUntilIdle()
+    val afterFirst = key(JdbcSinks.read(spark, url, "restart_sum"))
+    assert(afterFirst.nonEmpty && afterFirst != expected,
+      "the first run alone must leave the summary incomplete")
+    deliver("part2.csv", after)
+    runUntilIdle()
+    assert(key(JdbcSinks.read(spark, url, "restart_sum")) == expected)
   }
 }
 
-/** Driver-side collector for the checkpoint-restart test (foreachBatch
-  * sinks are recoverable; the memory sink is not).
+/** Driver-side collector for the summary parity test (a foreachBatch
+  * sink keeps the upsert's last-write-wins semantics; the memory sink
+  * cannot).
   */
 object StreamingSpec {
-  val restartRows = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
   val summaryRows = scala.collection.mutable.LinkedHashMap[
     (java.sql.Date, Int, String), org.apache.spark.sql.Row]()
-  val funnelRestartRows = scala.collection.mutable.ArrayBuffer[(Long, Int, java.sql.Timestamp)]()
 }
