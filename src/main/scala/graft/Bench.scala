@@ -976,11 +976,11 @@ object Bench {
       sfDir: String,
       trials: Int,
       fullPath: String,
-      isolationChecks: Seq[String] = Nil,
-      calibrationJson: String = "",
-      driftFlags: Seq[String] = Nil,
-      historyJson: String = "",
-      priorJson: String = ""): Unit = {
+      isolationChecks: Seq[String],
+      calibrationJson: String,
+      driftFlags: Seq[String],
+      historyJson: String,
+      priorJson: String): Unit = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fm(v.median, 3) }
       .mkString("{", ",", "}")
     val total = results.values.map(_.median).filter(_ >= 0).sum

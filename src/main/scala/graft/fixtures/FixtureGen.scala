@@ -429,7 +429,7 @@ object FixtureGen {
       a
     }
     def bmpPixelFile(w: Int, h: Int, topDown: Boolean, pix: Array[Byte],
-        bits: Int = 24): Array[Byte] = {
+        bits: Int): Array[Byte] = {
       val px = bits / 8 // 24-bit BGR or 32-bit BGRX
       val stride = ((w * px + 3) / 4) * 4 // rows pad to 4-byte boundaries
       val data = new Array[Byte](stride * h)

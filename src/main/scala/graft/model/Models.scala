@@ -1,68 +1,12 @@
 package graft.model
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.types._
 
-/** Case-class data model for the machine-event pipeline.
-  *
-  * Mirrors the three schemas of the reference
-  * (`src/daily_aggregator.py:152-156` input, `:181-184` enriched events,
-  * `:256-265` hourly summary; DB types in `src/init_db.sql:4-42`).
+/** Schema and event-name constants of the machine-event pipeline's
+  * input (`src/daily_aggregator.py:152-156`, `:15`, `:51-65` of the
+  * reference). The enriched-event and hourly-summary columns are built
+  * in `ops.CycleDetection` and `ops.HourlyRollup`.
   */
-
-/** Raw CSV row — all strings, all nullable (`daily_aggregator.py:152-156`). */
-final case class RawEvent(
-    timestamp: String,
-    machine_id: String,
-    event_name: String,
-    parameter_name: String,
-    value: String)
-
-/** Enriched event written to `processed_machine_events`
-  * (`daily_aggregator.py:181-184`, `init_db.sql:4-14`).
-  */
-final case class ProcessedEvent(
-    event_timestamp: Timestamp,
-    machine_id: String,
-    event_name: String,
-    parameter_name: String,
-    value: Option[Float],
-    is_error: Int,
-    cycle_seq: Long,
-    cycle_time_seconds: Option[Float])
-
-/** Per-cycle boundary row (`daily_aggregator.py:51-65`). */
-final case class CycleTime(
-    machine_id: String,
-    cycle_seq: Long,
-    cycle_start_ts: Timestamp,
-    cycle_time_seconds: Option[Float])
-
-/** Hourly rollup row written to `hourly_machine_summary`
-  * (`daily_aggregator.py:256-265`, `init_db.sql:21-42`).
-  */
-final case class HourlySummary(
-    summary_date: java.sql.Date,
-    hour_of_day: Int,
-    machine_id: String,
-    avg_pick_force: Double,
-    max_pick_force: Double,
-    min_pick_force: Double,
-    avg_place_force: Double,
-    max_place_force: Double,
-    min_place_force: Double,
-    as_vacuum_error_count: Long,
-    pp_vacuum_error_count: Long,
-    as_release_error_count: Long,
-    pp_release_error_count: Long,
-    pick_force_error_count: Long,
-    place_force_error_count: Long,
-    cycle_count: Long,
-    min_cycle_time_seconds: Double,
-    max_cycle_time_seconds: Double,
-    avg_cycle_time_seconds: Double)
-
 object Schemas {
 
   /** Explicit input schema — never inferred (`daily_aggregator.py:152-156`). */

@@ -112,16 +112,4 @@ object QualityModel {
     val m = LogisticRegressionModel.load(path)
     Trained(m, m.numFeatures)
   }
-
-  /** The composed filter: train on the labeled sample, keep corpus docs
-    * scoring at or above `minProb`.
-    */
-  def filterByModel(
-      docs: DataFrame,
-      labeled: DataFrame,
-      minProb: Double = 0.5,
-      numFeatures: Int = 1 << 14,
-      textCol: String = "text"): DataFrame =
-    score(docs, train(labeled, numFeatures, textCol = textCol), textCol)
-      .filter(col("quality_prob") >= minProb)
 }

@@ -4,16 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Slowly-changing-dimension (type 2) derivation and maintenance — the
-  * warehouse-side counterpart of the event-log pipelines: turn a change
-  * log into validity intervals, and merge a batch of changed rows into a
-  * dimension while preserving history.
+/** Slowly-changing-dimension (type 2) derivation — the warehouse-side
+  * counterpart of the event-log pipelines: turn a change log into
+  * validity intervals.
   *
-  * Scale shape: both operators are one shuffle on the dimension key
-  * followed by per-key windows — the same partitioning the key's
-  * downstream joins want, so at 100 TB the exchange is reused, not
-  * repeated. No driver actions, no skew beyond per-key history length
-  * (bounded by change frequency, not corpus size).
+  * Scale shape: one shuffle on the dimension key followed by per-key
+  * windows — the same partitioning the key's downstream joins want, so
+  * at 100 TB the exchange is reused, not repeated. No driver actions, no
+  * skew beyond per-key history length (bounded by change frequency, not
+  * corpus size).
   */
 object Scd2 {
 
@@ -52,57 +51,5 @@ object Scd2 {
       .withColumn("is_current", col("valid_to").isNull.cast("int"))
       .select(col(keyCol), col(stateCol), col("valid_from"), col("valid_to"),
         col("n_events"), col("is_current"))
-  }
-
-  /** SCD2 merge: apply a batch of (key, state, effective ts) changes to
-    * an interval dimension produced by [[fromEvents]] (or a previous
-    * `applyBatch`). For each changed key the current row is closed at the
-    * change's effective time and a new open row appended; unchanged keys
-    * pass through untouched; keys new to the dimension insert an open
-    * row. A batch row whose state equals the key's current state is a
-    * no-op (no empty interval is created).
-    *
-    * `batch` columns: keyCol, stateCol, tsCol (effective-from). One
-    * change per key per batch — enforced here by keeping only the latest
-    * (micro-batch compaction), which is what a CDC feed needs anyway.
-    */
-  def applyBatch(
-      dim: DataFrame,
-      batch: DataFrame,
-      keyCol: String = "user_id",
-      stateCol: String = "event_type",
-      tsCol: String = "ts"): DataFrame = {
-    val latest = Window.partitionBy(col(keyCol))
-      .orderBy(desc(tsCol), desc(stateCol))
-    val b = batch
-      .withColumn("rk", row_number().over(latest)).filter(col("rk") === 1)
-      .select(col(keyCol), col(stateCol).as("b_state"), col(tsCol).as("b_from"))
-    val joined = dim.join(b, Seq(keyCol), "full_outer")
-    val closed = joined
-      .withColumn("real_change",
-        col("b_state").isNotNull &&
-          (col("is_current") =!= 1 || col(stateCol).isNull ||
-            col(stateCol) =!= col("b_state")))
-      .withColumn("valid_to",
-        when(col("is_current") === 1 && col("real_change") &&
-          col(stateCol) =!= col("b_state"), col("b_from"))
-          .otherwise(col("valid_to")))
-      .withColumn("is_current",
-        when(col("is_current") === 1 && col("real_change") &&
-          col(stateCol) =!= col("b_state"), 0)
-          .otherwise(col("is_current")))
-    val kept = closed.filter(col(stateCol).isNotNull)
-      .select(dim.columns.toIndexedSeq.map(col): _*)
-    // insert one open row per key whose batch state differs from its
-    // (pre-merge) current state, or that is new to the dimension
-    val currentState = dim.filter(col("is_current") === 1)
-      .select(col(keyCol), col(stateCol).as("cur_state"))
-    val inserts = b.join(currentState, Seq(keyCol), "left")
-      .filter(col("cur_state").isNull || col("cur_state") =!= col("b_state"))
-      .select(col(keyCol), col("b_state").as(stateCol),
-        col("b_from").as("valid_from"),
-        lit(null).cast("timestamp").as("valid_to"),
-        lit(0L).as("n_events"), lit(1).as("is_current"))
-    kept.unionByName(inserts.select(dim.columns.toIndexedSeq.map(col): _*))
   }
 }

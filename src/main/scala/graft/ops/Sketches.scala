@@ -64,7 +64,7 @@ object Sketches {
       buildShards: Int = 64): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     // two-stage build — per-(group, hash-shard) top-k, then k-smallest-
-    // of-union (associative, the kmvMergeShards identity): a hot group's
+    // of-union (an associative merge): a hot group's
     // distinct hashes never sort through ONE task; the per-task sort
     // input is distinct/buildShards and the merge input is ≤ shards·k
     val w = org.apache.spark.sql.expressions.Window
@@ -133,30 +133,6 @@ object Sketches {
           .otherwise(lit(0.0)))
       .select("g1", "g2", "est_intersection", "est_union", "est_jaccard")
   }
-
-  /** Merge per-(group, shard) KMV sketches into per-group sketches:
-    * union the samples, drop duplicate hashes, keep the k smallest.
-    * "k smallest of a union" is associative, so shard-built-then-merged
-    * is IDENTICAL to one-pass (array equality, pinned in SketchesSpec) —
-    * the same operational property the HLL path proves: days/sources
-    * sketch independently and combine later.
-    */
-  def kmvMergeShards(
-      shardSketches: DataFrame, groupCol: String, k: Int = 256): DataFrame =
-    shardSketches.groupBy(col(groupCol))
-      .agg(slice(array_sort(array_distinct(flatten(collect_list(col("kmv"))))),
-        1, k).as("kmv"),
-        min(col("kmv_k")).as("__mn_k"), max(col("kmv_k")).as("__mx_k"))
-      // merging to k demands every input sketch held AT LEAST the k
-      // smallest of its shard — a shard built with a smaller k may have
-      // already dropped hashes the merged sketch needs
-      .withColumn("kmv_k",
-        when(col("__mn_k") === col("__mx_k") && col("__mn_k") >= k, lit(k))
-          .otherwise(raise_error(concat(lit(
-            s"kmvMergeShards(k=$k) needs uniform shard k >= $k, got min="),
-            col("__mn_k"), lit(" max="), col("__mx_k")))))
-      .drop("__mn_k", "__mx_k")
-      .withColumn("kmv_n", size(col("kmv")))
 
   /** Count-Min frequency estimates for `probes`, from one pass over the
     * data. The sketch is a single O(1/eps · ln(1/conf)) aggregate row —

@@ -1240,7 +1240,7 @@ object TextDedup {
   private def localUnionFind(
       pairs: DataFrame,
       rows: Array[org.apache.spark.sql.Row],
-      singleVerts: Array[Any] = Array.empty): DataFrame = {
+      singleVerts: Array[Any]): DataFrame = {
     def lt(a: Any, b: Any): Boolean = (a, b) match {
       case (x: String, y: String) =>
         // Spark's min() on strings orders by UTF-8 BYTES; String.compareTo

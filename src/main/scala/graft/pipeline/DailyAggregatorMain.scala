@@ -16,7 +16,8 @@ import graft.model.Rules
   *   - `GRAFT_DATA_DIR` — input directory (default `./raw_data`);
   *   - `GRAFT_CONFIG` — rules JSON (default `./config/rules.json`;
   *     missing file ⇒ no rules, all events clean);
-  *   - `GRAFT_CORES` — local parallelism (default 32).
+  *   - `GRAFT_CORES` — local parallelism (default 32; not a positive
+  *     integer ⇒ exit 1 naming the variable).
   *
   * The summary write is a true upsert (re-running a day updates in
   * place), not the reference's append-and-swallow-PK-violation.
@@ -37,6 +38,16 @@ object DailyAggregatorMain {
     else Right(env)
   }
 
+  /** A count from the environment: `default` when `key` is unset, else a
+    * positive integer or an error naming the variable — the clean exit-1
+    * path, not a NumberFormatException trace.
+    */
+  def positiveInt(env: Map[String, String], key: String, default: Int): Either[String, Int] =
+    env.get(key).fold[Either[String, Int]](Right(default)) { raw =>
+      raw.toIntOption.filter(_ > 0)
+        .toRight(s"invalid $key '$raw' (expected a positive integer)")
+    }
+
   def main(args: Array[String]): Unit = {
     val file = args.toSeq match {
       case Seq(f) => validateFilename(f) match {
@@ -46,8 +57,11 @@ object DailyAggregatorMain {
       case _ => System.err.println("usage: DailyAggregatorMain <file.csv>"); sys.exit(1)
     }
     val env = sys.env
-    val db = requiredEnv(env, Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS")) match {
-      case Right(e) => e
+    val (db, cores) = (for {
+      db <- requiredEnv(env, Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS"))
+      cores <- positiveInt(env, "GRAFT_CORES", 32)
+    } yield (db, cores)) match {
+      case Right(ok) => ok
       case Left(err) => System.err.println(err); sys.exit(1)
     }
     val dataDir = env.getOrElse("GRAFT_DATA_DIR", "./raw_data")
@@ -60,7 +74,7 @@ object DailyAggregatorMain {
     props.setProperty("password", db("DB_PASS"))
     props.setProperty("driver", "org.postgresql.Driver")
 
-    val spark = GraftSession.local(env.getOrElse("GRAFT_CORES", "32").toInt, "graft-daily")
+    val spark = GraftSession.local(cores, "graft-daily")
     try {
       val out = DailyAggregatorJob.run(spark, s"$dataDir/$file", rules)
       JdbcSinks.append(out.enrichedEvents, url, "processed_machine_events", props)

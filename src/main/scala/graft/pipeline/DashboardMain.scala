@@ -46,9 +46,12 @@ object DashboardMain {
   }
 
   def main(args: Array[String]): Unit = {
-    val db = DailyAggregatorMain.requiredEnv(sys.env,
-      Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS")) match {
-      case Right(e) => e
+    val (db, cores) = (for {
+      db <- DailyAggregatorMain.requiredEnv(sys.env,
+        Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS"))
+      cores <- DailyAggregatorMain.positiveInt(sys.env, "GRAFT_CORES", 4)
+    } yield (db, cores)) match {
+      case Right(ok) => ok
       case Left(err) => System.err.println(err); sys.exit(1)
     }
     val date = args.toSeq match {
@@ -70,8 +73,7 @@ object DashboardMain {
     props.setProperty("password", db("DB_PASS"))
     props.setProperty("driver", "org.postgresql.Driver")
 
-    val spark: SparkSession =
-      GraftSession.local(sys.env.getOrElse("GRAFT_CORES", "4").toInt, "graft-dashboard")
+    val spark: SparkSession = GraftSession.local(cores, "graft-dashboard")
     try {
       val summary = JdbcSinks.read(spark, url, "hourly_machine_summary", props)
       date match {

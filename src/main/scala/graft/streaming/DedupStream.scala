@@ -5,54 +5,19 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.TextDedup
 
-/** Streaming exact deduplication — the ingest-time form of the batch
-  * `TextDedup.exactGroups` stage: keep the FIRST arrival of each exact
-  * text (same `md5(text)` key as the batch operator) and drop repeats,
-  * as documents flow in.
+/** The continuously-growing deduplicated text corpus: each micro-batch
+  * is deduplicated (exact and near, Jaccard ≥ τ) against a persisted
+  * shingle index of the seed corpus plus every earlier batch's
+  * survivors, and the survivors grow both the corpus and the index.
   *
-  * State design: `dropDuplicatesWithinWatermark` holds one state row per
-  * key seen within the watermark horizon and EVICTS it once the
-  * watermark passes — state is bounded by arrival rate × delay, never by
-  * corpus size (a plain streaming `dropDuplicates` would grow keys
-  * forever — the thing that kills a long-running ingest). The price is
-  * the documented re-admission: an exact duplicate arriving with an
-  * event time beyond the horizon is a NEW document to this stage; the
-  * nightly batch dedup (exactGroups / minHash) is the backstop, exactly
-  * as in the reference curation pipelines.
+  * State design: the index IS the state — on disk, one `batch=<tag>`
+  * slice per tick, folded back into `base` by an in-loop compaction —
+  * so the loop needs no watermark and holds no stream state, and the
+  * per-tick cost is batch work plus index scans, never corpus². The
+  * nightly batch dedup (`TextDedup.exactGroups` / minHash) stays the
+  * backstop for whatever the tick's τ misses.
   */
 object DedupStream {
-
-  /** Keep the first arrival per exact text within the watermark horizon.
-    * Output = the input columns (the hash key is internal).
-    */
-  def dedupExact(stream: DataFrame, tsCol: String, textCol: String,
-      watermarkDelay: String): DataFrame =
-    stream
-      .withColumn("__text_hash", md5(col(textCol)))
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("__text_hash")
-      .drop("__text_hash")
-
-  /** Batch twin: first arrival per exact text by (ts, tiebreak) order.
-    * The streamed output equals this when every duplicate pair lies
-    * inside the horizon AND arrival order matches event-time order (the
-    * file-replay contract the specs use). For out-of-order arrival the
-    * two legitimately differ in WHICH copy survives — the stream keeps
-    * the first-PROCESSED duplicate (arrival order is its only notion of
-    * "first"), the batch twin the event-time-least — while the surviving
-    * key set is identical either way; exact-duplicate texts make the
-    * difference invisible to downstream content anyway. `tieCol`
-    * resolves equal timestamps (file order is not a batch concept).
-    */
-  def dedupExactBatch(df: DataFrame, tsCol: String, textCol: String,
-      tieCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(md5(col(textCol)))
-      .orderBy(col(tsCol).asc, col(tieCol).asc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
 
   /** One tick of the continuously-growing-deduped-corpus loop, as a
     * plain batch function (the `foreachBatch` body of
@@ -161,10 +126,6 @@ object DedupStream {
     * the checkpointed source offsets make restarts safe: a replayed
     * micro-batch has the same batchId, hence the same tag, hence
     * rewrites its own slices.
-    *
-    * Unlike [[dedupExact]] this form needs NO watermark and holds NO
-    * stream state — the index IS the state, on disk and unbounded-safe:
-    * per-tick cost is batch work + index scans, never corpus².
     *
     * Composition notes: `maxTokens` bounds pathological documents at
     * the operator boundary (the ingest-side guard

@@ -103,26 +103,14 @@ object EmbedIngest {
       embCol: String = "embedding",
       maxSlices: Option[Int] = None,
       rebuildHotShare: Option[Double] = None,
-      rebuildMinRows: Long = 1000L,
-      rebuildStride: Option[Long] = None,
-      autoRebuildStride: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
+      rebuildMinRows: Long = 1000L): org.apache.spark.sql.streaming.StreamingQuery =
     SlicedIngest.start(stream, ivfIndex, indexDir, checkpointDir) {
       (spark, tag) =>
         // a rebuild resets slices too, so it subsumes this tick's
-        // compaction check. rebuildStride decouples the REBUILD's
-        // centroid allocation from the ingest path's: stride == expected
-        // rows/list, and the measured drift ladders (PLANS.md round-16)
-        // show a drift response often wants SMALLER post-rebuild lists
-        // than the original build — at 100k, rebuilding at stride 100
-        // instead of the ingest's 500 cut the probe bill 12x for 5x
-        // rebuild cost at unchanged recall. autoRebuildStride derives
-        // that number from the measured bill instead of a hand pick
-        // ([[deriveRebuildStride]]); an explicit rebuildStride wins.
+        // compaction check
         val rebuilt = rebuildHotShare.exists(th =>
-          rebuildIfDrifted(spark, indexDir, th,
-            rebuildStride.getOrElse(centroidStride),
-            currentTag = tag, minRows = rebuildMinRows,
-            autoStride = autoRebuildStride && rebuildStride.isEmpty))
+          rebuildIfDrifted(spark, indexDir, th, centroidStride,
+            currentTag = tag, minRows = rebuildMinRows))
         if (!rebuilt) maxSlices.foreach(m =>
           compactIfNeeded(spark, indexDir, m, currentTag = tag))
     } { (spark, df, tag) =>
@@ -149,8 +137,7 @@ object EmbedIngest {
   def rebuildIfDrifted(
       spark: SparkSession, indexDir: String, hotShareThreshold: Double,
       centroidStride: Long, currentTag: String,
-      minRows: Long = 1000L,
-      autoStride: Boolean = false): Boolean = {
+      minRows: Long = 1000L): Boolean = {
     require(hotShareThreshold > 0.0 && hotShareThreshold <= 1.0,
       "hotShareThreshold must be in (0, 1]")
     FsPaths.recoverSwap(spark, indexDir)
@@ -177,102 +164,12 @@ object EmbedIngest {
     val total = byList.getAs[Long]("total")
     val hot = byList.getAs[Long]("hot")
     if (total >= minRows && hot.toDouble / total >= hotShareThreshold) {
-      val stride =
-        if (autoStride) {
-          val d = deriveRebuildStrideInfo(spark, indexDir, centroidStride, currentTag)
-          // the saturation marker (round-17 verdict task 3): when the
-          // derived stride hits the designStride/10 clamp floor the
-          // post-rebuild bill can still land over target — without this
-          // line the operator looks self-tuned while missing its target.
-          // One JSON line per rebuild to the loop's telemetry stream.
-          System.err.println(d.telemetryJson)
-          d.stride
-        } else centroidStride
       FsPaths.rebuildAndSwap(spark, indexDir) { dst =>
-        Similarity.rebuildIvfIndex(spark, indexDir, dst, stride,
+        Similarity.rebuildIvfIndex(spark, indexDir, dst, centroidStride,
           excludeTag = Some(currentTag))
       }
       true
     } else false
-  }
-
-  /** Result of [[deriveRebuildStrideInfo]]: the derived stride plus the
-    * numbers that produced it. `saturated = true` means the unclamped
-    * derivation wanted a stride BELOW the `designStride/10` clamp floor
-    * — the measured bill is more than 10× the design target, so even
-    * the floored rebuild will land over target. A deployment loop reads
-    * this to tell "tuned" from "clamped": a saturated rebuild warrants
-    * a second rebuild after the first settles, or a raised nLists. */
-  final case class StrideDerivation(
-      measuredBill: Double,
-      targetBill: Double,
-      stride: Long,
-      saturated: Boolean) {
-    /** The one-line JSON marker [[rebuildIfDrifted]] emits per rebuild. */
-    def telemetryJson: String = {
-      def f(x: Double) =
-        String.format(java.util.Locale.ROOT, "%.1f", Double.box(x))
-      s"""{"event":"rebuild_stride_derived","measured_bill":${f(measuredBill)},""" +
-        s""""target_bill":${f(targetBill)},"derived_stride":$stride,""" +
-        s""""saturated":$saturated}"""
-    }
-  }
-
-  /** Derives the rebuild's centroid stride from the MEASURED probe bill
-    * instead of a hand pick (round-16 verdict task 3 — the r16 ladder
-    * proved the stride lever head-to-head at 100 k: rebuilding at 100
-    * instead of the ingest's 500 cut the post-rebuild probe bill 23.5×
-    * for 5× rebuild cost, recall untouched, but callers had to KNOW the
-    * right number).
-    *
-    * The bill math ([[Similarity.ivfProbeCells]] is the direct form):
-    * a drifted query's primary probed list is, in expectation, the list
-    * the appended mass landed in, so the measured per-list bill is the
-    * appended-mass-weighted mean TOTAL list size
-    * `Σ_L share_appended(L) · rows(L)`. The design target is
-    * `designStride` rows per probed list (stride == expected rows/list
-    * by construction). The response scales the stride by
-    * `target / measured`, clamped to `[designStride/10, designStride]` —
-    * never coarser than the design (over-splitting is bounded: 10× the
-    * centroid-ranking cost at most), and a bill already at or under
-    * target rebuilds at the design stride unchanged. The current tag's
-    * crashed-attempt slices are excluded like everywhere else in the
-    * replay contract.
-    */
-  def deriveRebuildStride(
-      spark: SparkSession, indexDir: String, designStride: Long,
-      currentTag: String): Long =
-    deriveRebuildStrideInfo(spark, indexDir, designStride, currentTag).stride
-
-  /** [[deriveRebuildStride]] with the derivation's inputs and the clamp
-    * saturation marker attached ([[StrideDerivation]]). */
-  def deriveRebuildStrideInfo(
-      spark: SparkSession, indexDir: String, designStride: Long,
-      currentTag: String): StrideDerivation = {
-    val stats = Similarity.ivfListStats(spark, indexDir)
-      .filter(col("batch") =!= currentTag)
-    val perList = stats.groupBy("list_id").agg(
-      sum("n").as("total_n"),
-      sum(when(col("batch") =!= "base", col("n")).otherwise(lit(0L))).as("app_n"))
-    val bill = perList
-      .agg((sum(col("app_n") * col("total_n")) /
-        sum(col("app_n"))).as("bill"))
-      .head().getAs[Any]("bill") match {
-      case null => designStride.toDouble // no appended mass: design holds
-      case d: java.lang.Double => d.doubleValue
-      case other => other.toString.toDouble
-    }
-    val scaled = designStride * (designStride.toDouble / math.max(bill, 1.0))
-    val floor = designStride / 10
-    val raw = math.round(scaled)
-    val stride = math.max(1L, math.min(designStride, math.max(floor, raw)))
-    // saturated = the unclamped derivation wanted LESS than the floor the
-    // clamp enforces (bill > 10x target); compare the UNROUNDED value —
-    // rounding `scaled` up to the floor (bills in the (10x, ~11.1x] band)
-    // must still report saturation. A floor of 0 (designStride < 10)
-    // never saturates — the max(1, _) there is arithmetic, not a clamp
-    StrideDerivation(bill, designStride.toDouble, stride,
-      saturated = floor > 0 && scaled < floor)
   }
 
   /** The IVF index: `lists/codes` slices over `base` and `appended`. */

@@ -97,16 +97,12 @@ object StreamingMain {
     * NumberFormatException trace or a silently swapped store.
     */
   def settings(env: Map[String, String]): Either[String, Settings] = {
-    def positiveInt(key: String, default: Int): Either[String, Int] =
-      env.get(key).fold[Either[String, Int]](Right(default)) { raw =>
-        raw.toIntOption.filter(_ > 0)
-          .toRight(s"invalid $key '$raw' (expected a positive integer)")
-      }
+    import graft.pipeline.DailyAggregatorMain.{positiveInt, requiredEnv}
     for {
-      db <- graft.pipeline.DailyAggregatorMain.requiredEnv(
-        env, Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS"))
-      cores <- positiveInt("GRAFT_CORES", 32)
-      stateParts <- positiveInt("GRAFT_STATE_PARTITIONS", StreamingPipeline.DefaultStatePartitions)
+      db <- requiredEnv(env, Seq("DB_HOST", "DB_NAME", "DB_USER", "DB_PASS"))
+      cores <- positiveInt(env, "GRAFT_CORES", 32)
+      stateParts <- positiveInt(env, "GRAFT_STATE_PARTITIONS",
+        StreamingPipeline.DefaultStatePartitions)
       rocksDb <- env.get("GRAFT_STATE_PROVIDER").fold[Either[String, Boolean]](Right(false))(
         StreamingPipeline.stateStoreFlag("GRAFT_STATE_PROVIDER", _))
     } yield Settings(

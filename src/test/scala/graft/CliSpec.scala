@@ -114,4 +114,13 @@ class CliSpec extends AnyFunSuite {
         Left(s"invalid $key '$raw' $expected"))
     }
   }
+
+  // the batch mains (DailyAggregatorMain, DashboardMain) read GRAFT_CORES
+  // through the same parser as StreamingMain.settings
+  Seq("four", "0", "-2").foreach { raw =>
+    test(s"batch CLI: malformed GRAFT_CORES '$raw' is a named error") {
+      assert(DailyAggregatorMain.positiveInt(Map("GRAFT_CORES" -> raw), "GRAFT_CORES", 32) ==
+        Left(s"invalid GRAFT_CORES '$raw' (expected a positive integer)"))
+    }
+  }
 }

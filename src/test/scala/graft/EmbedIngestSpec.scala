@@ -366,45 +366,6 @@ class EmbedIngestSpec extends AnyFunSuite {
     assert(b0.select("n_id").as[Long].collect().toSet == Set(1000L, 1001L, 1002L))
   }
 
-  test("incrementalIngest: rebuildStride decouples the rebuild's allocation") {
-    // the measured drift lever (PLANS.md round-16): a rebuild may want
-    // SMALLER lists than the ingest build — rebuildStride must reach
-    // rebuildIfDrifted instead of the tick path's centroidStride
-    val (idx, out) = freshDirs()
-    val ckpt = Files.createTempDirectory("graft_embing_rsckpt").toString
-    Similarity.writeIvfIndex(emb.filter($"vec_id" < 200), idx,
-      centroidStride = 50L)
-    val nLists0 = spark.read.parquet(s"$idx/centroids").count()
-    def drifted(lo: Long, hi: Long, offset: Long) =
-      emb.filter($"vec_id" >= lo && $"vec_id" < hi)
-        .select(($"vec_id" + offset).as("vec_id"),
-          transform($"embedding", (x, i) =>
-            when(i === 0, lit(4.0f)).otherwise(x)).as("embedding"))
-        .as[(Long, Seq[Float])].collect().toSeq
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val source = MemoryStream[(Long, Seq[Float])]
-    val q = EmbedIngest.incrementalIngest(
-      source.toDF().toDF("vec_id", "embedding"), idx, out, ckpt,
-      tau = 0.99, nProbe = 2, centroidStride = 50L,
-      rebuildHotShare = Some(0.2), rebuildMinRows = 50L,
-      rebuildStride = Some(5L))
-    try {
-      source.addData(drifted(200L, 300L, 10000L): _*) // appends ~100 drifted rows
-      q.processAllAvailable()
-      source.addData(drifted(300L, 310L, 20000L): _*) // b1: rebuild fires first
-      q.processAllAvailable()
-    } finally q.stop()
-    val nLists1 = spark.read.parquet(s"$idx/centroids").count()
-    // the retrain sampled at stride 5 over ~300 rows, not the tick
-    // path's 50 — allocation visibly finer than the original build
-    assert(nLists1 > nLists0 * 2,
-      s"rebuildStride ignored: $nLists0 -> $nLists1 centroids")
-    // the rebuild reset appended mass to base; b1's slice rides on top
-    val names = graft.core.FsPaths
-      .childNames(spark, s"$idx/lists", "batch=").toSet
-    assert(names == Set("batch=base", "batch=b1"), names.toString)
-  }
-
   test("rebuildIvfIndex preserves the PQ halves of an IVFPQ index") {
     val (idx, _) = freshDirs()
     val corpus = emb.filter($"vec_id" < 100)
@@ -467,96 +428,11 @@ class EmbedIngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$idx/lists").count() == 400L)
   }
 
-  test("deriveRebuildStride: bill-derived, clamped, design-stride fallback") {
-    val (idx, _) = freshDirs()
-    Similarity.writeIvfIndex(emb.filter($"vec_id" < 200), idx,
-      centroidStride = 50L) // ~4 lists of ~50
-    // no appended mass at all: the design stride holds
-    assert(EmbedIngest.deriveRebuildStride(spark, idx, 50L, "bX") == 50L)
-    // pile 300 copies of one corpus vector into its list: the textbook
-    // drift shape — all appended mass in ONE list
-    val v0 = emb.filter($"vec_id" === 0).select($"embedding")
-      .as[Seq[Float]].head()
-    val hot = spark.range(1000L, 1300L)
-      .select($"id".as("vec_id"), typedLit(v0).as("embedding"))
-    Similarity.appendIvfIndex(spark, hot, idx, "b0")
-    // mirror the documented bill math on the raw list stats
-    val sts = Similarity.ivfListStats(spark, idx)
-      .select($"batch", $"list_id".cast("long"), $"n".cast("long"))
-      .as[(String, Long, Long)].collect()
-    val totals = sts.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
-    val app = sts.filter(_._1 != "base").groupBy(_._2)
-      .view.mapValues(_.map(_._3).sum).toMap
-    val bill = app.map { case (l, n) => n.toDouble * totals(l) }.sum /
-      app.values.sum.toDouble
-    val expected = math.max(1L,
-      math.min(50L, math.max(5L, math.round(50L * 50.0 / bill))))
-    val derived = EmbedIngest.deriveRebuildStride(spark, idx, 50L, "bX")
-    assert(derived == expected, s"derived $derived, formula says $expected")
-    assert(derived < 50L && derived >= 5L,
-      s"a one-hot-list bill must respond finer than design: $derived")
-    // the current tag's crashed-attempt slices are not drift evidence
-    assert(EmbedIngest.deriveRebuildStride(spark, idx, 50L, "b0") == 50L)
-  }
-
-  test("deriveRebuildStrideInfo: a bill over 10x target saturates the clamp, visibly") {
-    val (idx, _) = freshDirs()
-    Similarity.writeIvfIndex(emb.filter($"vec_id" < 200), idx,
-      centroidStride = 50L) // ~4 lists of ~50, design target 50 rows/list
-    // a drift burst 12x worse than the clamp can answer: 600 copies of
-    // one corpus vector into its list -> measured bill ~650 rows/query,
-    // unclamped stride round(2500/650) = 4, below the floor of 5
-    val v0 = emb.filter($"vec_id" === 0).select($"embedding")
-      .as[Seq[Float]].head()
-    val burst = spark.range(1000L, 1600L)
-      .select($"id".as("vec_id"), typedLit(v0).as("embedding"))
-    Similarity.appendIvfIndex(spark, burst, idx, "b0")
-    val d = EmbedIngest.deriveRebuildStrideInfo(spark, idx, 50L, "bX")
-    assert(d.saturated,
-      s"bill ${d.measuredBill} is over 10x the 50-row target; must mark saturated")
-    assert(d.stride == 5L, s"saturated derivation must sit ON the floor: ${d.stride}")
-    assert(d.measuredBill > 500.0 && d.targetBill == 50.0)
-    // the telemetry line a deployment loop greps for — "tuned" vs "clamped"
-    assert(d.telemetryJson.contains("\"saturated\":true") &&
-      d.telemetryJson.contains("\"derived_stride\":5"), d.telemetryJson)
-    // contrast: the milder one-hot fixture of the previous test does NOT
-    // saturate — marker false, stride strictly between floor and design
-    val (idx2, _) = freshDirs()
-    Similarity.writeIvfIndex(emb.filter($"vec_id" < 200), idx2,
-      centroidStride = 50L)
-    Similarity.appendIvfIndex(spark,
-      spark.range(1000L, 1300L)
-        .select($"id".as("vec_id"), typedLit(v0).as("embedding")),
-      idx2, "b0")
-    val d2 = EmbedIngest.deriveRebuildStrideInfo(spark, idx2, 50L, "bX")
-    assert(!d2.saturated && d2.stride > 5L && d2.stride < 50L,
-      s"unsaturated derivation expected: $d2")
-    // the rounding band: a bill in (10x, ~11.1x] target derives an
-    // UNROUNDED stride below the floor that math.round lifts back onto
-    // it (480 copies -> bill ~510-550, scaled 2500/bill ~4.5-4.9 ->
-    // round = 5 == floor). The marker must compare the unrounded value:
-    // these rebuilds land over target just like the 12x burst above,
-    // and a deployment loop grepping "saturated":true must see them.
-    val (idx3, _) = freshDirs()
-    Similarity.writeIvfIndex(emb.filter($"vec_id" < 200), idx3,
-      centroidStride = 50L)
-    Similarity.appendIvfIndex(spark,
-      spark.range(1000L, 1480L)
-        .select($"id".as("vec_id"), typedLit(v0).as("embedding")),
-      idx3, "b0")
-    val d3 = EmbedIngest.deriveRebuildStrideInfo(spark, idx3, 50L, "bX")
-    assert(d3.measuredBill > 500.0 && d3.measuredBill < 555.0,
-      s"fixture must sit in the rounding band: $d3")
-    assert(d3.saturated && d3.stride == 5L,
-      s"band bill rounds onto the floor but still exceeds 10x target: $d3")
-  }
-
-  test("incrementalIngest: autoRebuildStride derives the rebuild allocation") {
+  test("incrementalIngest: the drift rebuild runs in the loop before the next tick") {
     val (idx, out) = freshDirs()
-    val ckpt = Files.createTempDirectory("graft_embing_asckpt").toString
+    val ckpt = Files.createTempDirectory("graft_embing_rbckpt").toString
     Similarity.writeIvfIndex(emb.filter($"vec_id" < 200), idx,
       centroidStride = 50L)
-    val nLists0 = spark.read.parquet(s"$idx/centroids").count()
     def drifted(lo: Long, hi: Long, offset: Long) =
       emb.filter($"vec_id" >= lo && $"vec_id" < hi)
         .select(($"vec_id" + offset).as("vec_id"),
@@ -568,28 +444,19 @@ class EmbedIngestSpec extends AnyFunSuite {
     val q = EmbedIngest.incrementalIngest(
       source.toDF().toDF("vec_id", "embedding"), idx, out, ckpt,
       tau = 0.99, nProbe = 2, centroidStride = 50L,
-      rebuildHotShare = Some(0.2), rebuildMinRows = 50L,
-      autoRebuildStride = true)
+      rebuildHotShare = Some(0.2), rebuildMinRows = 50L)
     try {
-      source.addData(drifted(200L, 300L, 10000L): _*) // ~100 drifted rows append
+      source.addData(drifted(200L, 300L, 10000L): _*) // b0: ~100 drifted rows append
       q.processAllAvailable()
       source.addData(drifted(300L, 310L, 20000L): _*) // b1: rebuild fires first
       q.processAllAvailable()
     } finally q.stop()
-    // the drift response chose a finer allocation than the design WITHOUT
-    // a hand-picked rebuildStride...
-    val nLists1 = spark.read.parquet(s"$idx/centroids").count()
-    assert(nLists1 > nLists0,
-      s"autoRebuildStride ignored: $nLists0 -> $nLists1 centroids")
-    // ...and the post-rebuild per-list bill is at or under the design
-    // target (the verdict's within-2x bar; balanced lists at a derived
-    // stride <= design land under it by construction)
-    val meanRows = spark.read.parquet(s"$idx/lists")
-      .groupBy("list_id").count().agg(avg("count")).head().getDouble(0)
-    assert(meanRows <= 2.0 * 50.0,
-      s"post-rebuild mean rows/list $meanRows exceeds 2x the design target")
+    // the rebuild re-sliced the seed and b0's survivors into `base`, and
+    // b1 appended on top of the rebuilt index
     val names = graft.core.FsPaths
       .childNames(spark, s"$idx/lists", "batch=").toSet
     assert(names == Set("batch=base", "batch=b1"), names.toString)
+    assert(spark.read.parquet(s"$idx/lists").count() ==
+      200L + spark.read.parquet(out).count())
   }
 }

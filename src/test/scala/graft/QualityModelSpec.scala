@@ -53,15 +53,6 @@ class QualityModelSpec extends AnyFunSuite {
     scored.unpersist()
   }
 
-  test("filterByModel keeps exactly the docs at/above the probability gate") {
-    val corpus = planted(200)
-    val kept = QualityModel.filterByModel(corpus, corpus, minProb = 0.5)
-    // on the separable corpus the gate keeps the good half
-    val ids = kept.select("doc_id").as[Long].collect().toSet
-    assert(ids.nonEmpty && ids.forall(_ % 2 == 0))
-    assert(kept.filter($"quality_prob" < 0.5).count() == 0)
-  }
-
   test("save/load round-trips the model: loaded scores are identical") {
     val corpus = planted(200)
     val trained = QualityModel.train(corpus)

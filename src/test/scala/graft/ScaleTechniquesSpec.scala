@@ -3,47 +3,15 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Layouts, Tables}
 import graft.ops.Skew
 
-/** The explicit 100 TB techniques: bucketed co-located joins (no shuffle
-  * in the executed plan) and salted skew joins (identical results).
+/** The explicit 100 TB techniques: partition pruning, salted skew joins
+  * (identical results), key-skew profiles, and the plan shapes the
+  * catalog's headline queries must keep.
   */
 class ScaleTechniquesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("bucketed tables join without any shuffle exchange") {
-    val dir = "/root/testdata/sf0.001"
-    Layouts.writeBucketed(Tables.lineitem(spark, dir), "li_bucketed", Seq("l_orderkey"), 8)
-    Layouts.writeBucketed(Tables.orders(spark, dir), "ord_bucketed", Seq("o_orderkey"), 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    try {
-      val joined = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed"), $"l_orderkey" === $"o_orderkey")
-        .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
-      // the join itself is co-located; the only exchange allowed is the
-      // final aggregation's
-      // positive control: the same join on UNBUCKETED inputs must show a
-      // shuffle — guards against the predicate going vacuous (e.g. an AQE
-      // root hiding the real plan)
-      val unbucketed = Tables.lineitem(spark, dir)
-        .join(Tables.orders(spark, dir), $"l_orderkey" === $"o_orderkey")
-      unbucketed.write.format("noop").mode("overwrite").save()
-      assert(!Layouts.isShuffleFree(unbucketed),
-        "control failed: unbucketed join must contain a shuffle")
-      val joinOnly = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed"), $"l_orderkey" === $"o_orderkey")
-      joinOnly.write.format("noop").mode("overwrite").save()
-      assert(Layouts.isShuffleFree(joinOnly),
-        "bucketed equi-join must not shuffle either side")
-      // and it computes the right thing
-      val expect = Tables.lineitem(spark, dir)
-        .join(Tables.orders(spark, dir), $"l_orderkey" === $"o_orderkey").count()
-      assert(joined.agg(sum("n")).as[Long].collect().head == expect)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 
   test("date-partitioned parquet sink prunes partitions on read") {
     Fxt.ensure(spark)
@@ -64,66 +32,6 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       s"no partition filter in plan:\n$plan")
     assert(read.count() > 0)
     assert(read.select("summary_date").distinct().count() == 1)
-  }
-
-  test("zValue interleaves bits; z-ordered layout skips files a linear sort cannot") {
-    // bit-interleave ground truth: x=0b11, y=0b00 -> z has x's bits at
-    // even positions -> 0b0101 = 5 (x is dim 0)
-    val z = Seq((3L, 0L)).toDF("x", "y")
-      .select(Layouts.zValue(Seq(col("x"), col("y")), bits = 2).as("z"))
-      .as[Long].collect().head
-    assert(z == 5L)
-
-    // 64k uniform points on a 256x256 grid, written two ways
-    val pts = spark.range(0, 65536).select(
-      (col("id") % 256).as("x"), expr("id div 256").as("y"))
-      .withColumn("x", pmod(col("x") * 37 + col("y") * 11, lit(256))) // decorrelate
-    val zDir = java.nio.file.Files.createTempDirectory("graft_z").toString
-    val linDir = java.nio.file.Files.createTempDirectory("graft_lin").toString
-    Layouts.writeZOrdered(pts, zDir,
-      dims = Seq(col("x"), col("y")), bits = 8, numFiles = 32)
-    pts.repartitionByRange(32, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(linDir)
-
-    // a query box thin in y but full-width in x: per-file min/max
-    // envelopes (what Delta/Iceberg file stats or parquet row-group
-    // stats prune on) must let the z layout skip most files, while the
-    // x-sorted layout intersects nearly all of them
-    def touchedFiles(dir: String): (Int, Int) = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      val touched = files.count { f =>
-        val r = spark.read.parquet(f.getPath)
-          .agg(min("y"), max("y"), min("x"), max("x")).collect().head
-        // box: y in [100, 107], all x
-        r.getLong(0) <= 107 && r.getLong(1) >= 100
-      }
-      (touched, files.length)
-    }
-    val (zTouched, zTotal) = touchedFiles(zDir)
-    val (linTouched, linTotal) = touchedFiles(linDir)
-    assert(zTotal >= 16 && linTotal >= 16, s"want many files, got $zTotal/$linTotal")
-    assert(linTouched >= linTotal - 2,
-      s"control: x-sorted layout should intersect ~all files for a y-box ($linTouched/$linTotal)")
-    assert(zTouched * 2 <= zTotal,
-      s"z-ordered layout must skip at least half the files ($zTouched/$zTotal)")
-  }
-
-  test("compact rewrites a many-tiny-file directory into few even files, lossless") {
-    val dir = "/root/testdata/sf0.001"
-    val inDir = java.nio.file.Files.createTempDirectory("graft_tiny").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val docs = Tables.documents(spark, dir)
-    docs.repartition(64).write.mode("overwrite").parquet(inDir)
-    def parquetFiles(d: String) = new java.io.File(d).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(parquetFiles(inDir) == 64)
-    val n = Layouts.compact(spark, inDir, outDir, targetBytes = 1L << 20)
-    assert(parquetFiles(outDir) == n && n < 16, s"expected few files, got $n")
-    // lossless: same rows
-    val before = docs.orderBy("doc_id").collect()
-    val after = spark.read.parquet(outDir).orderBy("doc_id").collect()
-    assert(before.sameElements(after))
   }
 
   test("salted join output is identical to the plain join on skewed data") {
@@ -150,34 +58,6 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     val sum = Skew.keySummary(df, Seq("k"))
       .as[(Long, Long, Long, Double, Double)].collect().head
     assert(sum == ((4L, 1000L, 989L, 250.0, 3.956)))
-  }
-
-  test("upsertPartitioned: untouched partitions keep their exact files; touched merge") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/t"
-    Seq((1L, "a", 1), (2L, "b", 1), (3L, "c", 2), (4L, "d", 2), (5L, "e", 3))
-      .toDF("id", "v", "p")
-      .write.partitionBy("p").parquet(dir)
-    def files(p: Int): Map[String, Long] = {
-      val d = new java.io.File(s"$dir/p=$p")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val (f1, f3) = (files(1), files(3))
-    assert(f1.nonEmpty && f3.nonEmpty)
-    // update id=3 (existing, p=2) and insert id=40 (new, p=2)
-    graft.core.Layouts.upsertPartitioned(spark, dir,
-      Seq((3L, "C!", 2), (40L, "x", 2)).toDF("id", "v", "p"),
-      keyCols = Seq("id"), partitionCol = "p")
-    assert(files(1) == f1 && files(3) == f3,
-      "partitions the batch does not touch must not be rewritten")
-    val got = spark.read.parquet(dir).as[(Long, String, Int)].collect().toSet
-    assert(got == Set((1L, "a", 1), (2L, "b", 1), (3L, "C!", 2), (4L, "d", 2),
-      (40L, "x", 2), (5L, "e", 3)))
-    // idempotent re-apply: same result
-    graft.core.Layouts.upsertPartitioned(spark, dir,
-      Seq((3L, "C!", 2), (40L, "x", 2)).toDF("id", "v", "p"),
-      keyCols = Seq("id"), partitionCol = "p")
-    assert(spark.read.parquet(dir).count() == 6)
   }
 
   test("headline q1/q5 plans: pushed scan filters, broadcast dims, no sort-merge joins") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Scd2
 
-/** SCD2 interval derivation and batch merge. */
+/** SCD2 interval derivation. */
 class Scd2Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -46,97 +46,6 @@ class Scd2Spec extends AnyFunSuite {
     val states = Scd2.fromEvents(events).orderBy("valid_from", "event_type")
       .select("event_type", "is_current").as[(String, Int)].collect().toSeq
     assert(states == Seq(("A", 0), ("B", 1)))
-  }
-
-  test("applyBatch closes current rows, inserts changes/new keys, ignores no-ops") {
-    val dim = Scd2.fromEvents(log(
-      (0L, 1L, "A", "2024-01-01 00:00:00"),
-      (1L, 2L, "B", "2024-01-01 00:00:00")))
-    val batch = Seq(
-      (1L, "X", ts("2024-01-02 00:00:00")), // real change for user 1
-      (2L, "B", ts("2024-01-02 00:00:00")), // no-op: already current state
-      (3L, "Z", ts("2024-01-02 00:00:00"))  // brand-new key
-    ).toDF("user_id", "event_type", "ts")
-    val out = Scd2.applyBatch(dim, batch)
-      .select($"user_id", $"event_type", $"valid_to", $"is_current")
-      .as[(Long, String, Option[Timestamp], Int)].collect().toSet
-    assert(out == Set(
-      (1L, "A", Some(ts("2024-01-02 00:00:00")), 0), // closed at change time
-      (1L, "X", None, 1),
-      (2L, "B", None, 1),                            // untouched no-op
-      (3L, "Z", None, 1)))
-  }
-
-  test("applyBatch of the next change equals fromEvents over the extended log") {
-    val prefix = log(
-      (0L, 1L, "A", "2024-01-01 00:00:00"),
-      (1L, 1L, "B", "2024-01-01 01:00:00"),
-      (2L, 2L, "C", "2024-01-01 00:00:00"))
-    val change = (3L, 1L, "D", "2024-01-01 02:00:00")
-    val merged = Scd2.applyBatch(
-      Scd2.fromEvents(prefix),
-      Seq((change._2, change._3, ts(change._4))).toDF("user_id", "event_type", "ts"))
-    // collect the Timestamps directly — a date_format/re-parse round trip
-    // renders in the session TZ (UTC) but Timestamp.valueOf re-reads in
-    // the JVM default TZ, shifting every instant on a non-UTC host
-    val direct = Scd2.fromEvents(
-      (prefix.select($"event_id", $"user_id", $"event_type", $"ts")
-        .as[(Long, Long, String, Timestamp)].collect().toSeq :+
-        (change._1, change._2, change._3, ts(change._4)))
-        .toDF("event_id", "user_id", "event_type", "ts"))
-    // n_events excluded: the merge path can't know how many raw events
-    // back an interval it didn't derive (inserted rows carry 0)
-    val cols = Seq("user_id", "event_type", "valid_from", "valid_to", "is_current")
-    val m = merged.select(cols.map(col): _*)
-    val d = direct.select(cols.map(col): _*)
-    assert(m.exceptAll(d).count() == 0 && d.exceptAll(m).count() == 0)
-  }
-
-  test("streaming CDC maintenance: foreachBatch applyBatch equals batch derivation") {
-    // the production shape: a change-feed arrives in micro-batches and
-    // the SCD2 dimension is maintained incrementally (close-current /
-    // insert-open per batch) instead of re-derived from the full log.
-    // applyBatch compacts to one change per key per batch, so the
-    // fixture delivers at most one state change per user per batch —
-    // exactly what a keyed CDC feed guarantees.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, String, Timestamp)]
-    val changes = ms.toDF().toDF("user_id", "event_type", "ts")
-
-    var dim = Scd2.fromEvents(
-      Seq.empty[(Long, Long, String, Timestamp)]
-        .toDF("event_id", "user_id", "event_type", "ts"))
-    val lock = new Object
-    val q = changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        lock.synchronized {
-          // localCheckpoint: the dimension must not accumulate lineage
-          // across batches (same contract as the CC loop)
-          dim = Scd2.applyBatch(dim, batch).localCheckpoint()
-        }: Unit
-      }
-      .start()
-    try {
-      ms.addData((1L, "A", ts("2024-01-01 00:00:00")), (2L, "C", ts("2024-01-01 00:00:00")))
-      q.processAllAvailable()
-      ms.addData((1L, "B", ts("2024-01-01 01:00:00")))
-      q.processAllAvailable()
-      ms.addData((1L, "A", ts("2024-01-01 02:00:00")), (3L, "D", ts("2024-01-01 02:00:00")))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val direct = Scd2.fromEvents(log(
-      (0L, 1L, "A", "2024-01-01 00:00:00"),
-      (1L, 2L, "C", "2024-01-01 00:00:00"),
-      (2L, 1L, "B", "2024-01-01 01:00:00"),
-      (3L, 1L, "A", "2024-01-01 02:00:00"),
-      (4L, 3L, "D", "2024-01-01 02:00:00")))
-    val cols = Seq("user_id", "event_type", "valid_from", "valid_to", "is_current")
-    val m = dim.select(cols.map(col): _*)
-    val d = direct.select(cols.map(col): _*)
-    assert(m.exceptAll(d).count() == 0 && d.exceptAll(m).count() == 0,
-      "incrementally maintained dimension must equal the batch-derived one")
   }
 
   test("fromEvents on the corpus: intervals tile each user's history exactly") {

@@ -211,32 +211,6 @@ class SketchesSpec extends AnyFunSuite {
     assert(math.abs(d("B") - 30000) / 30000.0 <= 0.15, s"B ${d("B")}")
   }
 
-  test("KMV shard merge: shard-built-then-merged equals the one-pass sketch") {
-    import spark.implicits._
-    val rows = (0 until 20000).map(i => ("G", i.toLong)).toDF("g", "v")
-    val k = 256
-    val onePass = Sketches.kmvSketches(rows, "g", "v", k)
-      .select($"g", $"kmv", $"kmv_n", $"kmv_k")
-      .as[(String, Seq[Long], Int, Int)].collect().head
-    val shards = Sketches.kmvSketches(
-      rows.withColumn("g_shard", concat($"g", lit(":"), ($"v" % 4).cast("string"))),
-      "g_shard", "v", k)
-      .withColumn("g", split(col("g_shard"), ":").getItem(0))
-    val merged = Sketches.kmvMergeShards(shards, "g", k)
-      .select($"g", $"kmv", $"kmv_n", $"kmv_k")
-      .as[(String, Seq[Long], Int, Int)].collect().head
-    assert(merged == onePass, "k-smallest-of-union must be associative")
-    // a shard built with a SMALLER k cannot legally merge to k
-    val ex = intercept[Exception] {
-      Sketches.kmvMergeShards(
-        Sketches.kmvSketches(rows, "g", "v", k / 2), "g", k).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(ex).exists(_.contains("kmvMergeShards")),
-      s"expected the uniform-k guard, got: $ex")
-  }
-
   test("kmv u(): the Long.MaxValue boundary is deterministic and pinned") {
     // u maps a signed 64-bit hash through a 53-bit-mantissa double:
     // (2^63 - 1).toDouble rounds UP to 2^63 exactly, so u(Long.MaxValue)

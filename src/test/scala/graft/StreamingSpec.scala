@@ -71,30 +71,45 @@ class StreamingSpec extends AnyFunSuite {
     assert(s2.conf.get("spark.sql.shuffle.partitions") == "17")
   }
 
-  /** Fixture CSV split into two time-ordered files => two micro-batches
-    * (maxFilesPerTrigger=1), so cycle state must survive a batch boundary.
+  /** A split inside one cycle of each machine and inside the 23:00
+    * hour: a stream that loses its cycle or window state across a batch
+    * boundary at this instant reads differently from the batch job. */
+  private val midCycle = java.time.Instant.parse("2024-10-16T23:39:00.200Z")
+
+  /** The fixture CSV's header, then its rows split at `at`: those
+    * stamped before it (unparseable garbage rows included) and the rest.
+    */
+  private def splitFixture(at: java.time.Instant): (String, Seq[String], Seq[String]) = {
+    Fixtures.ensure(spark)
+    val lines = {
+      val src = scala.io.Source.fromFile(Fixtures.rawCsv, "UTF-8")
+      try src.getLines().toVector finally src.close()
+    }
+    val (before, after) = lines.tail.partition { l =>
+      try java.time.Instant.parse(l.takeWhile(_ != ',')).isBefore(at)
+      catch { case _: Exception => true } // garbage rows -> first file
+    }
+    (lines.head, before, after)
+  }
+
+  /** Fixture CSV split at [[midCycle]] into two time-ordered files => two
+    * micro-batches (maxFilesPerTrigger=1), so cycle and hour-window state
+    * must survive a batch boundary.
     */
   private lazy val streamDir: String = {
-    Fixtures.ensure(spark)
-    val lines = scala.io.Source.fromFile(Fixtures.rawCsv, "UTF-8").getLines().toSeq
-    val (header, rows) = (lines.head, lines.tail)
+    val (header, early, late) = splitFixture(midCycle)
     val dir = Files.createTempDirectory("graft_stream").toString
-    val mid = java.time.Instant.parse("2024-10-17T00:00:00Z").toEpochMilli
-    def tsOf(l: String): Long =
-      try java.time.Instant.parse(l.takeWhile(_ != ',')).toEpochMilli
-      catch { case _: Exception => 0L } // garbage rows -> first file
-    val (early, late) = rows.partition(tsOf(_) < mid)
-    FixtureGen.writeCsv(s"$dir/day1_part1.csv", header +: early)
-    FixtureGen.writeCsv(s"$dir/day2_part2.csv", header +: late)
+    FixtureGen.writeCsv(s"$dir/part1.csv", header +: early)
+    FixtureGen.writeCsv(s"$dir/part2.csv", header +: late)
     // Ordering guarantee: the file source sorts pending files by
     // modification time, and two back-to-back writes can land in the same
     // millisecond — under full-suite load the tie broke either way, so the
     // micro-batch order (and with it every cross-batch cycle number)
     // flipped in ~1 of 2 runs. Pinning strictly increasing mtimes makes
-    // "day1 before day2" structural rather than a race.
+    // "part1 before part2" structural rather than a race.
     val base = System.currentTimeMillis()
-    new java.io.File(s"$dir/day1_part1.csv").setLastModified(base): Unit
-    new java.io.File(s"$dir/day2_part2.csv").setLastModified(base + 60000L): Unit
+    new java.io.File(s"$dir/part1.csv").setLastModified(base): Unit
+    new java.io.File(s"$dir/part2.csv").setLastModified(base + 60000L): Unit
     dir
   }
 
@@ -316,25 +331,15 @@ class StreamingSpec extends AnyFunSuite {
 
     // file 1 arrives, the production query runs and STOPS; file 2
     // arrives and a NEW query on the same checkpoint resumes. The files
-    // split the fixture in the middle of a cycle of each machine and of
-    // the 23:00 hour (streamDir's midnight split falls between cycles
-    // and hours, where a restart that lost all state reads the same):
-    // had the per-machine cycle state not survived, file 2's events
-    // would lose their open cycle and it would never close; had the
-    // window state not survived, the resumed query would upsert 23:00
-    // from file 2's rows alone.
-    val split = java.time.Instant.parse("2024-10-16T23:39:00.200Z")
+    // split the fixture at `midCycle`, in the middle of a cycle of each
+    // machine and of the 23:00 hour: had the per-machine cycle state not
+    // survived, file 2's events would lose their open cycle and it would
+    // never close; had the window state not survived, the resumed query
+    // would upsert 23:00 from file 2's rows alone.
+    val split = midCycle
     val dir = Files.createTempDirectory("graft_main_restart").toString
     val ckpt = Files.createTempDirectory("graft_main_restart_ckpt").toString
-    val (header, rows) = {
-      val src = scala.io.Source.fromFile(Fixtures.rawCsv, "UTF-8")
-      val lines = try src.getLines().toVector finally src.close()
-      (lines.head, lines.tail)
-    }
-    val (before, after) = rows.partition { l =>
-      try java.time.Instant.parse(l.takeWhile(_ != ',')).isBefore(split)
-      catch { case _: Exception => true } // garbage rows -> first file
-    }
+    val (header, before, after) = splitFixture(split)
     def deliver(name: String, part: Seq[String]): Unit =
       FixtureGen.writeCsv(s"$dir/$name", header +: part)
     def runUntilIdle(): Unit = withRestoredStateConf {
