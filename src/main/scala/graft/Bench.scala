@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.model.Rules
 import graft.pipeline.DailyAggregatorJob
+import graft.tools.BenchUtil
+import graft.tools.BenchUtil.{force, time}
 
 /** Benchmark main: every declared catalog query against
   * `SPARK_GRAFT_SF_DIR` (driver: sf0.1) plus the reference-shaped workload
@@ -20,9 +22,6 @@ import graft.pipeline.DailyAggregatorJob
   */
 object Bench {
 
-  private def force(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   /** Last streaming trial's engine telemetry (JSON object), for the full
     * result file — rows/sec and mean micro-batch latency have no slot in
     * the per-query median table. */
@@ -33,12 +32,6 @@ object Bench {
     * host noise; the per-trigger series makes a slow median attributable
     * to a specific contaminated trigger instead of the whole replay). */
   private var driftTelemetry: Option[String] = None
-
-  private def time(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    body
-    (System.nanoTime() - t0) / 1e9
-  }
 
   /** One benchmarked query: per-trial wall times (chronological), the
     * median the driver grades on, and machine-load telemetry captured
@@ -213,8 +206,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-bench")
+    val nCpus = BenchUtil.envPositiveInt("SPARK_GRAFT_CPUS", 32)
+    val spark = graft.core.GraftSession.local(nCpus, "graft-bench")
 
     // Counts AQE skew-join splits across every executed plan: OptimizeSkewedJoin
     // tags handled joins "(skew=true)" in the final adaptive plan. Per-trial
@@ -328,7 +321,6 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
 
-    val nCpus = cpus.toInt
     val canaryStart = canary(nCpus)
 
     graft.queries.Catalog.all

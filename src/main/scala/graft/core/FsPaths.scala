@@ -30,14 +30,6 @@ object FsPaths {
     q.getFileSystem(spark.sessionState.newHadoopConf()).exists(q)
   }
 
-  /** Direct children of `dir` whose name starts with `prefix` (0 when
-    * `dir` is absent) — one FileSystem listing, no Spark job. The
-    * ingest loops' compaction trigger reads [[childNames]] instead,
-    * because it must leave the permanent slices out of the count.
-    */
-  def countChildren(spark: SparkSession, dir: String, prefix: String): Int =
-    childNames(spark, dir, prefix).size
-
   /** Names of the direct children of `dir` starting with `prefix`
     * (empty when `dir` is absent) — one FileSystem listing, no Spark
     * job; lets guards inspect WHICH slices exist (e.g. the drift check

@@ -295,23 +295,7 @@ object Curation {
       docs: DataFrame,
       n: Int,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    ngramOccurrences(docs, n, idCol, textCol)
-      .groupBy(col(idCol), col("feat"))
-      .agg(count(lit(1)).as("tf"))
-
-  /** The ONE copy of the occurrence extraction (map-only: tokenize,
-    * filter empties, window, explode — one output row per n-gram
-    * OCCURRENCE). [[ngramTf]] aggregates it to counts; [[scoreImportance]]
-    * consumes it raw so its single aggregation stays streaming-legal. A
-    * tokenization tweak edited here cannot desynchronize the batch
-    * weights from the frozen-model stream scores.
-    */
-  private def ngramOccurrences(
-      docs: DataFrame,
-      n: Int,
-      idCol: String,
-      textCol: String): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
     docs
       .select(col(idCol),
@@ -320,13 +304,13 @@ object Curation {
       .select(col(idCol), explode(expr(
         s"transform(sequence(0, size(graft_ws) - $n), " +
           s"i -> array_join(slice(graft_ws, i + 1, $n), ' '))")).as("feat"))
+      .groupBy(col(idCol), col("feat"))
+      .agg(count(lit(1)).as("tf"))
   }
 
-  /** The ONE copy of the seeded Gumbel perturbation: u in (0,1) from 40
-    * xxhash64 bits centered in their bucket, g = −ln(−ln u). Shared by
-    * [[dsirSelect]] and [[dsirSelectThreshold]] so their keys stay
-    * bit-identical (the documented "same seeded keys" contract between
-    * the exact and threshold draws).
+  /** The seeded Gumbel perturbation of [[dsirSelectFromWeights]]: u in
+    * (0,1) from 40 xxhash64 bits centered in their bucket,
+    * g = −ln(−ln u).
     */
   private def gumbelKey(idCol: String, seed: String): Column = {
     val span = (1L << 40).toDouble
@@ -360,7 +344,7 @@ object Curation {
     *         DuckDB reproduces them bit-identically). `avg_log_ratio` is
     *         the length-normalized variant for gating on a threshold
     *         without length bias; `log_w` (the paper's form) is what
-    *         [[dsirSelect]] resamples on.
+    *         [[dsirSelectFromWeights]] resamples on.
     */
   def importanceWeights(
       raw: DataFrame,
@@ -423,125 +407,28 @@ object Curation {
         round(sum(col("tf") * logRatio) / sum(col("tf")), 6).as("avg_log_ratio"))
   }
 
-  /** The frozen-model half of DSIR, the production deployment shape: fit
-    * the hashed feature model ONCE (offline, possibly on a sample) and
-    * score any corpus — or stream — against it later. Returns a DENSE
-    * per-bucket table `(feat, log_ratio)` covering every bucket in
-    * [0, buckets): buckets observed in neither corpus carry the
-    * smoothed unseen ratio `ln((nr+αV)/(nt+αV))`, so a scoring join can
-    * never miss. Bounded at `buckets` rows by construction — small
-    * enough to broadcast, persist as an artifact, or ship to a stream.
-    */
-  def importanceModel(
-      raw: DataFrame,
-      target: DataFrame,
-      n: Int = 2,
-      buckets: Int = 10000,
-      alpha: Double = 1.0,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    require(buckets > 0, "buckets must be positive")
-    def cf(df: DataFrame, out: String): DataFrame =
-      ngramTf(df, n, idCol, textCol)
-        .groupBy(pmod(xxhash64(col("feat")), lit(buckets.toLong)).as("feat"))
-        .agg(sum("tf").as(out))
-    val spark = raw.sparkSession
-    val dense = spark.range(buckets).select(col("id").as("feat"))
-    val model = dense
-      .join(cf(raw, "cfr"), Seq("feat"), "left_outer")
-      .join(cf(target, "cft"), Seq("feat"), "left_outer")
-      .select(col("feat"),
-        coalesce(col("cfr"), lit(0L)).as("cfr"),
-        coalesce(col("cft"), lit(0L)).as("cft"))
-      .localCheckpoint()
-    // V is the number of buckets with any mass (the union vocabulary of
-    // the fitted corpora — identical to importanceWeights' hashed V)
-    val corpus = model
-      .filter(col("cfr") > 0 || col("cft") > 0)
-      .agg(count(lit(1)).as("v"), sum("cfr").as("nr"), sum("cft").as("nt"))
-    model.crossJoin(broadcast(corpus))
-      .select(col("feat"),
-        (log((col("cft") + lit(alpha)) / (col("nt") + lit(alpha) * col("v"))) -
-          log((col("cfr") + lit(alpha)) / (col("nr") + lit(alpha) * col("v"))))
-          .as("log_ratio"))
-  }
-
-  /** Score documents against a fitted [[importanceModel]]: per-occurrence
-    * n-gram explode (map-only — no pre-aggregation), one stream-static
-    * BROADCAST join onto the dense model, ONE rollup on the doc key.
-    * `Σ_occurrences log_ratio` equals the tf-weighted sum by definition,
-    * so this is [[importanceWeights]]' score with one fewer shuffle (the
-    * per-occurrence rows never exchange — only the per-doc partials do),
-    * and the single-aggregation shape is what makes it STREAMING-LEGAL:
-    * the same call scores a file stream (frozen model = static side),
-    * which a (doc, feat) tf pre-combine would forbid (two chained
-    * streaming aggregations). Same output contract and 6-dp rounding as
-    * [[importanceWeights]]; CurationSpec pins the batch equivalence and
-    * the stream ≡ batch twin.
-    */
-  def scoreImportance(
-      docs: DataFrame,
-      model: DataFrame,
-      n: Int = 2,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    // the bucket count is a property of the FITTED model (it is dense:
-    // one row per bucket), so it is derived, never re-supplied — a
-    // mismatched caller value would silently hash occurrences into
-    // bucket ids the join cannot match, biasing every score
-    val buckets = model.count()
-    val occ = ngramOccurrences(docs, n, idCol, textCol)
-      .select(col(idCol), pmod(xxhash64(col("feat")), lit(buckets)).as("feat"))
-    occ.join(broadcast(model), Seq("feat"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_feats"),
-        round(sum(col("log_ratio")), 6).as("log_w"),
-        round(sum(col("log_ratio")) / count(lit(1)), 6).as("avg_log_ratio"))
-  }
-
-  /** The resampling half of DSIR: draw `k` raw documents WITHOUT
-    * replacement with probability ∝ exp(log_w) via Gumbel-top-k
+  /** The resampling half of DSIR over an already-computed `(idCol, log_w)`
+    * weight table (from [[importanceWeights]]): draw `k` raw documents
+    * WITHOUT replacement with probability ∝ exp(log_w) via Gumbel-top-k
     * (Efraimidis–Spirakis weighted reservoir in its Gumbel form): perturb
     * each log-weight with an independent Gumbel noise term and keep the k
     * largest. The "noise" is a seeded hash of the doc id mapped through
     * the inverse Gumbel CDF, so the draw is fully deterministic —
     * reproducible across runs, engines, and reshards, the same contract
-    * as [[resampleToMixture]].
+    * as [[resampleToMixture]]. Taking the weights as an input lets a
+    * caller that needs the weights AND the sample (the catalog's upweight
+    * verdict does) run the weight pipeline — two tf passes, model build,
+    * scoring join, the dominant cost — once.
     *
     * Scale shape: `orderBy(..).limit(k)` compiles to
     * TakeOrderedAndProject — per-partition top-k, merged once; no global
     * sort. k is driver-bounded by construction (it is the sample you are
-    * materializing); for a k too large to merge on the driver, gate on a
-    * `gumbel_key` threshold from `approxQuantileEdges` instead and accept
-    * ±ε on the sample size.
+    * materializing).
     *
-    * Documents with no features (fewer than `n` tokens) have no weight
-    * and cannot be drawn.
+    * Documents with no weight (fewer than `n` tokens) cannot be drawn.
     *
     * @return the k sampled rows of `raw` plus (log_w, gumbel_key),
     *         gumbel_key rounded 6 dp.
-    */
-  def dsirSelect(
-      raw: DataFrame,
-      target: DataFrame,
-      k: Int,
-      seed: String = "dsir",
-      n: Int = 2,
-      buckets: Option[Int] = Some(10000),
-      alpha: Double = 1.0,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val w = importanceWeights(raw, target, n, buckets, alpha, idCol, textCol)
-      .select(col(idCol), col("log_w"))
-    dsirSelectFromWeights(raw, w, k, seed, idCol)
-  }
-
-  /** The selection half of [[dsirSelect]] over an ALREADY-computed
-    * `(idCol, log_w)` weight table (r20) — for a caller that needs the
-    * weights AND the sample (the catalog's upweight verdict does): the
-    * weight pipeline (two tf passes, model build, scoring join) is the
-    * dominant cost and must not run once per consumer. Selection
-    * semantics are byte-identical to [[dsirSelect]].
     */
   def dsirSelectFromWeights(
       raw: DataFrame,
@@ -553,72 +440,4 @@ object Curation {
       .withColumn("gumbel_key", round(col("log_w") + gumbelKey(idCol, seed), 6))
       .orderBy(col("gumbel_key").desc, col(idCol).asc)
       .limit(k)
-
-  /** [[dsirSelect]] for a k too large to merge on the driver: instead of
-    * an exact top-k, gate on the (1 − k/N) quantile of the Gumbel keys
-    * from ONE mergeable `percentile_approx` pass (the
-    * [[Quality.approxQuantileEdges]] scale pattern) and keep everything
-    * at or above it. The sample size is k ± the quantile-sketch error
-    * (`accuracy` trades memory for tightness; keys are continuous, so
-    * ties at the threshold are measure-zero). Same weights, same seeded
-    * Gumbel keys as the exact form — but NOT the same reproducibility
-    * contract: `percentile_approx` is a compressing sketch whose merged
-    * result depends on partition boundaries once it compresses (beyond
-    * ~`accuracy` rows per partition), so the estimated cut — and with it
-    * the ±ε membership at the boundary — can shift across reshards at
-    * production scale. The KEYS are deterministic; only the cut floats.
-    * For a bit-reproducible sample use [[dsirSelect]]; this form trades
-    * that for never merging k rows on the driver.
-    *
-    * @param knownN the SCORED-frame row count when the caller already
-    *               has it — skips the extra count() job. This is NOT
-    *               the raw corpus count: documents with fewer than `n`
-    *               tokens drop out of the importance join, and a corpus
-    *               count here silently under-samples by that fraction.
-    *               `None` (the safe default) counts the scored frame.
-    * @return the ≈k sampled rows of `raw` plus (log_w, gumbel_key,
-    *         key_threshold); empty input returns the empty keyed frame
-    *         (no NaN percentage reaches the quantile sketch).
-    */
-  def dsirSelectThreshold(
-      raw: DataFrame,
-      target: DataFrame,
-      k: Long,
-      seed: String = "dsir",
-      n: Int = 2,
-      buckets: Option[Int] = Some(10000),
-      alpha: Double = 1.0,
-      accuracy: Int = 10000,
-      knownN: Option[Long] = None,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val w = importanceWeights(raw, target, n, buckets, alpha, idCol, textCol)
-      .select(col(idCol), col("log_w"))
-    // eager DISK-backed localCheckpoint, not persist(): three consumers
-    // (count, sketch, filter) reuse it, the lineage is cut, and the
-    // blocks are released by the context cleaner when the result is
-    // dropped — a persist() here would pin a corpus-sized cache for the
-    // life of the session with no unpersist hook for the caller
-    val keyed = raw.join(w, Seq(idCol))
-      .withColumn("gumbel_key", round(col("log_w") + gumbelKey(idCol, seed), 6))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // percentile_approx needs a FOLDABLE percentage, so the scored count
-    // is one scalar job over the checkpointed keys unless the caller
-    // supplied it. knownN is the SCORED-frame count — raw docs shorter
-    // than the n-gram order drop out of the importance join, so passing
-    // the raw corpus count here silently under-samples by the short-doc
-    // fraction (frac would be computed against the wrong denominator);
-    // omit it unless the scored count is genuinely already known
-    val nRows = knownN.getOrElse(keyed.count())
-    if (nRows == 0L)
-      return keyed.withColumn("key_threshold", lit(null).cast("double"))
-    val frac = math.max(0.0, 1.0 - k.toDouble / nRows)
-    // one mergeable sketch pass for the cut, broadcast back as one row
-    val cut = keyed.agg(
-      percentile_approx(col("gumbel_key"), lit(frac), lit(accuracy))
-        .as("key_threshold"))
-    keyed.crossJoin(broadcast(cut))
-      .filter(col("gumbel_key") >= col("key_threshold"))
-  }
 }

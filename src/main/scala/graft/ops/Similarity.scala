@@ -15,18 +15,6 @@ import graft.core.{Actions, GraftExtensions}
   */
 object Similarity {
 
-  /** Sequential-order double dot product via higher-order functions —
-    * session-free reference form; the DataFrame operators below use the
-    * codegen'd [[graft.functions.VectorDot]] (bit-identical, ~an order of
-    * magnitude faster: primitive loop inside whole-stage codegen vs
-    * interpreted lambdas + a materialized zipped array per row).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** Codegen'd dot (registers `vector_dot` on the session if needed). */
   def dot(spark: SparkSession)(a: Column, b: Column): Column =
     GraftExtensions.vectorDot(spark, a, b)
@@ -328,7 +316,7 @@ object Similarity {
     * exact-IVF and IVFPQ paths so a metric or tie-break change cannot
     * silently diverge them.
     */
-  private def probeAssignments(
+  private[graft] def probeAssignments(
       centroids: DataFrame, queries: DataFrame, nProbe: Int,
       idCol: String): DataFrame = {
     val s = queries.sparkSession
@@ -1038,7 +1026,7 @@ object Similarity {
   /** Append a batch of NEW vectors to a persisted [[writeIvfIndex]]
     * index under the index's FROZEN coarse centroids — the
     * embedding-corpus twin of the dedup ingest loop's index growth
-    * (`TextDedup.appendIncrementalIndex`). The batch is assigned with
+    * (`TextDedup.appendIndexSlicePrecomputed`). The batch is assigned with
     * the same argmax as the base build and lands in its own
     * `batch=<tag>` slice with OVERWRITE semantics, so a replayed ingest
     * batch rewrites its slice instead of duplicating it; probes read the
@@ -1130,20 +1118,6 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$dstDir/codebooks")
       compactTable("codes")
     }
-  }
-
-  /** The (q_id, list_id) probe assignments a persisted index serves for
-    * `queries` — the cost-accounting companion to [[ivfListStats]]:
-    * joined against per-list sizes it yields the rows a probe actually
-    * scans, which is the number hot-list drift inflates (recall can stay
-    * flat while every query pays the hot list's bill).
-    */
-  def ivfProbeCells(
-      spark: SparkSession, dir: String, queries: DataFrame,
-      nProbe: Int = 2, idCol: String = "vec_id"): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    probeAssignments(centroids, queries, nProbe, idCol)
-      .select(col("q_id"), col("list_id"))
   }
 
   /** Drift response for a frozen-centroid IVF index: RETRAIN the coarse
@@ -1250,7 +1224,7 @@ object Similarity {
       mHint = Some(m), dimHint = Some(dim))
   }
 
-  private def writeCodesSlice(
+  private[graft] def writeCodesSlice(
       emb: DataFrame, cb: DataFrame, dir: String, tag: String,
       idCol: String,
       mHint: Option[Int] = None, dimHint: Option[Int] = None): Unit = {
@@ -1264,21 +1238,6 @@ object Similarity {
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$dir/codes/batch=$tag")
-  }
-
-  /** [[appendIvfIndex]] for the full IVFPQ layout: the batch lands as a
-    * `batch=<tag>` slice of BOTH the raw lists (re-rank side) and the
-    * PQ codes (ADC side), encoded with the index's FROZEN codebooks.
-    * Same idempotency and drift caveats as [[appendIvfIndex]] — PQ adds
-    * one more frozen artifact (codebooks), so codebook-era drift is a
-    * second rebuild trigger.
-    */
-  def appendIvfPqIndex(
-      spark: SparkSession, newEmb: DataFrame, dir: String,
-      batchTag: String, idCol: String = "vec_id"): Unit = {
-    appendIvfIndex(spark, newEmb, dir, batchTag, idCol)
-    val cb = spark.read.parquet(s"$dir/codebooks")
-    writeCodesSlice(newEmb, cb, dir, batchTag, idCol)
   }
 
   /** IVF-pruned ADC top-k over a persisted [[writeIvfPqIndex]] index —

@@ -83,18 +83,6 @@ object Sketches {
   private def u(h: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     h.cast("double") / lit(math.pow(2.0, 64)) + lit(0.5)
 
-  /** Distinct-count estimate from a [[kmvSketches]] row: exact (= kmv_n)
-    * while the sketch is not full; `(k-1)/θ` once it is, θ = the k-th
-    * smallest normalized hash. k is read from the sketch row (`kmv_k`),
-    * never re-supplied — a mismatched caller value would silently flip
-    * full sketches into the "exact" branch and return kmv_n for a set
-    * orders of magnitude larger.
-    */
-  def kmvDistinct(sketches: DataFrame): DataFrame =
-    sketches.withColumn("est_distinct",
-      when(col("kmv_n") < col("kmv_k"), col("kmv_n").cast("double"))
-        .otherwise((col("kmv_k") - lit(1)) / u(element_at(col("kmv"), col("kmv_k")))))
-
   /** Pairwise set-operation estimates between every two groups' sketches
     * (the theta-sketch combine): cut both samples at θ = min(θ_A, θ_B),
     * then `|A∩B| ≈ |common hashes below θ| / θ`, same for the union, and

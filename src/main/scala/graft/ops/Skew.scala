@@ -53,21 +53,4 @@ object Skew {
         max(col("key_n")).as("max_key_rows"))
       .orderBy(col("log2_bucket"))
   }
-
-  /** One-row summary of the same profile: key count, row count, the
-    * hottest key's share, and `skew_ratio` = max/avg rows per key (1.0 =
-    * perfectly uniform; the salting heuristic threshold is usually ~an
-    * order of magnitude above the key count's parallelism headroom).
-    */
-  def keySummary(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val counts = df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("key_n"))
-    counts.agg(
-      count(lit(1)).as("n_keys"),
-      sum(col("key_n")).as("n_rows"),
-      max(col("key_n")).as("max_key_rows"))
-      .select(col("n_keys"), col("n_rows"), col("max_key_rows"),
-        round(col("n_rows").cast("double") / col("n_keys"), 6).as("avg_key_rows"),
-        round(col("max_key_rows").cast("double") * col("n_keys") / col("n_rows"), 6)
-          .as("skew_ratio"))
-  }
 }

@@ -377,26 +377,18 @@ object TextDedup {
     verifyJaccard(candidates, sh, tau, idCol)
   }
 
-  /** MinHash signatures, column form: per doc, the min of `numHashes`
-    * seeded xxhash64 values over its shingle set. Kept as the reference
-    * implementation for [[minHashSignaturesAgg]]'s parity test.
-    */
-  def minHashSignatures(sh: DataFrame, numHashes: Int, idCol: String = "doc_id"): DataFrame =
-    sh.groupBy(idCol)
-      .agg(
-        min(xxhash64(lit(0), col("shingle"))).as("mh0"),
-        (1 until numHashes).map(i =>
-          min(xxhash64(lit(i), col("shingle"))).as(s"mh$i")): _*)
-
   /** MinHash signatures via the custom [[graft.functions.MinHashAggregator]]
     * — one mergeable Array[Long] buffer per doc instead of `numHashes`
-    * separate column aggregates; bit-identical signatures (same hash
-    * family), returned as one `sig` array column.
+    * separate column aggregates (per doc, the min of `numHashes` seeded
+    * xxhash64 values over its shingle set), returned as one `sig` array
+    * column. The shingle-set size `sz` rides the same grouping pass (one
+    * extra count slot, no extra aggregation) for [[minHashPairs]]' length
+    * prune.
     */
   def minHashSignaturesAgg(sh: DataFrame, numHashes: Int, idCol: String = "doc_id"): DataFrame = {
     val mh = udaf(new graft.functions.MinHashAggregator(numHashes),
       org.apache.spark.sql.Encoders.STRING)
-    sh.groupBy(idCol).agg(mh(col("shingle")).as("sig"))
+    sh.groupBy(idCol).agg(mh(col("shingle")).as("sig"), count(lit(1)).as("sz"))
   }
 
   /** LSH-banded MinHash near-dup pairs: signatures are cut into
@@ -427,17 +419,13 @@ object TextDedup {
     val sh = shingles(docs, k, idCol).persist()
     try {
       sh.count()
-      // shingle-set size rides the same grouping pass as the signature
-      // (one extra count slot, no extra aggregation) so the banded join
-      // can length-prune candidates (r20, guide §3.2 pre-filter the big
-      // side): J(A,B) ≥ τ forces τ·|A| ≤ |B| ≤ |A|/τ, so a colliding
-      // pair outside that band can NEVER verify — dropping it before
-      // the pair-distinct exchange is output-identical and cuts both
-      // the distinct volume and the verify joins.
-      val mh = udaf(new graft.functions.MinHashAggregator(numHashes),
-        org.apache.spark.sql.Encoders.STRING)
-      val sig = sh.groupBy(idCol)
-        .agg(mh(col("shingle")).as("sig"), count(lit(1)).as("sz"))
+      // the signature pass also carries the shingle-set size, so the
+      // banded join can length-prune candidates (r20, guide §3.2
+      // pre-filter the big side): J(A,B) ≥ τ forces τ·|A| ≤ |B| ≤ |A|/τ,
+      // so a colliding pair outside that band can NEVER verify —
+      // dropping it before the pair-distinct exchange is output-identical
+      // and cuts both the distinct volume and the verify joins.
+      val sig = minHashSignaturesAgg(sh, numHashes, idCol)
       val numBands = numHashes / rowsPerBand
       // One (id, band, bandHash) row per band; collisions inside a band bucket
       // are the candidate pairs. element_at is 1-based.
@@ -678,29 +666,6 @@ object TextDedup {
     appendIndexSlicePrecomputed(corpus, shingles(corpus, k, idCol, textCol),
       dir, "base", idCol, textCol)
 
-  /** Append one ingest batch's survivors to a [[writeIncrementalIndex]]
-    * index — the corpus-GROWTH half of the ingest loop. Each append
-    * lands in its own `batch=<tag>` partition directory with OVERWRITE
-    * semantics, so a replayed micro-batch (the foreachBatch retry
-    * contract) rewrites its own slice instead of duplicating it —
-    * idempotent per tag by construction. Readers see the union of all
-    * slices through ordinary partition discovery; the df table is
-    * per-slice partial counts that [[incrementalSurvivorsIndexed]] sums
-    * at read time (shingle-level rows — far smaller than the shingle
-    * table — so the per-tick re-aggregate is cheap; the loop's opt-in
-    * `maxSlices` trigger, `DedupStream.compactIfNeeded`, folds the
-    * slices back into one through [[compactIncrementalIndex]]).
-    *
-    * Only call with rows that SURVIVED against this index (the loop in
-    * `DedupStream.incrementalIngest` does): survivors are new content by
-    * construction, so slices never overlap on hash or shingle ownership.
-    */
-  def appendIncrementalIndex(
-      survivors: DataFrame, dir: String, batchTag: String, k: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    appendIndexSlicePrecomputed(survivors,
-      shingles(survivors, k, idCol, textCol), dir, batchTag, idCol, textCol)
-
   /** Merge every slice of a sliced incremental index into a single fresh
     * `base` slice at `dstDir`. After thousands of ingest ticks the
     * per-tick costs that scale with SLICE COUNT (partition discovery
@@ -749,7 +714,7 @@ object TextDedup {
     * `hashes/`, `shingles/` and `df/` for `written`'s documents, hashes
     * overlapped with shingles+df (guide §2.6). `shKeep` must be exactly
     * the shingle rows of `written`'s documents — `shingles(written, k)`
-    * for the base build and the public append, and for the ingest tick
+    * for the base build, and for the ingest tick
     * an id semi-join on its cached batch shingle table (computed once
     * for all three dedup layers — r19; shingle rows are per-document, so
     * the filter IS the re-shingle).
@@ -1292,8 +1257,7 @@ object TextDedup {
     * fingerprint bit. One packed [[graft.functions.SimHashAggregator]]
     * per doc (r20) instead of 64 separate `sum(when(...))` column
     * aggregates — bit-identical fingerprints (parity pinned in
-    * DedupSpec against the column form, kept as
-    * [[simHashColumnForm]]).
+    * DedupSpec against the column form).
     */
   def simHash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val tok = docs.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
@@ -1301,22 +1265,6 @@ object TextDedup {
     val sh = udaf(new graft.functions.SimHashAggregator,
       org.apache.spark.sql.Encoders.scalaLong)
     tok.groupBy(idCol).agg(sh(col("h")).as("simhash"))
-  }
-
-  /** Column-aggregate SimHash — the reference implementation for
-    * [[simHash]]'s parity test. */
-  private[graft] def simHashColumnForm(
-      docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = docs.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
-      .withColumn("h", xxhash64(col("w")))
-    val bitVotes = (0 until 64).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, 1).otherwise(-1)).as(s"v$j")
-    }
-    val votes = tok.groupBy(idCol).agg(bitVotes.head, bitVotes.tail: _*)
-    val sig = (0 until 64).map { j =>
-      when(col(s"v$j") > 0, shiftleft(lit(1L), j)).otherwise(0L)
-    }.reduce[Column](_.bitwiseOR(_))
-    votes.select(col(idCol), sig.as("simhash"))
   }
 
   /** SimHash near-dup pairs within `maxHamming` bits, candidate-generated

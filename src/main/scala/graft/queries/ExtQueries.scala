@@ -2217,10 +2217,10 @@ object ExtQueries {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
         val target = docs.filter(col("lang") === "en")
-        // ONE weight pipeline for both consumers (r20): the old shape ran
-        // the full importanceWeights build twice — once inside dsirSelect
-        // and once for the corpus average. localCheckpoint because the
-        // per-doc weight table feeds two separate aggregations.
+        // ONE weight pipeline for both consumers (r20): the draw and the
+        // corpus average share one importanceWeights build.
+        // localCheckpoint because the per-doc weight table feeds two
+        // separate aggregations.
         val w = Curation.importanceWeights(docs, target, buckets = Some(4096))
           .select(col("doc_id"), col("log_w"))
           .localCheckpoint()

@@ -35,9 +35,8 @@ object DedupStream {
     *      [[TextDedup.clusters]] over the (batch-bounded) survivors of
     *      layer 2 — min-id keeper per near-dup cluster.
     *
-    * Survivors are then appended to the index
-    * ([[TextDedup.appendIncrementalIndex]], one `batch=<tag>` slice per
-    * layer table) and written to `outDir/batch=<tag>`. Every write is
+    * Survivors are then appended to the index (one `batch=<tag>` slice
+    * per index table, `TextDedup.appendIndexSlicePrecomputed`) and written to `outDir/batch=<tag>`. Every write is
     * OVERWRITE into the tag's own partition directory, so replaying a
     * tag (the foreachBatch retry contract) rewrites its slices instead
     * of duplicating them — the whole tick is idempotent per tag.

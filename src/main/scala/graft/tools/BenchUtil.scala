@@ -2,12 +2,13 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared timing/forcing helpers for the standalone measurement mains
-  * (ReferenceShapeBench, QueryJobProfile) plus the history/steal
-  * bookkeeping of `graft.Bench`'s artifact. One copy so a methodology fix
-  * lands everywhere at once; `graft.Bench` keeps its own richer
-  * `timeMedian` (cache clearing + GC/load telemetry) because its numbers
-  * feed the per-round BENCH artifact.
+/** Shared timing/forcing and env-parsing helpers for the measurement mains
+  * (`graft.Bench`, ReferenceShapeBench, QueryJobProfile,
+  * StreamProfileBench) plus the history/steal bookkeeping of
+  * `graft.Bench`'s artifact. One copy so a methodology fix lands
+  * everywhere at once; `graft.Bench` keeps its own richer `timeMedian`
+  * (cache clearing + GC/load telemetry) because its numbers feed the
+  * per-round BENCH artifact.
   */
 private[graft] object BenchUtil {
 
@@ -21,6 +22,15 @@ private[graft] object BenchUtil {
     body
     (System.nanoTime() - t0) / 1e9
   }
+
+  /** A positive-integer env knob of a measurement main, parsed by the
+    * production mains' `DailyAggregatorMain.positiveInt`: a bad value
+    * exits 1 with `invalid <KEY> '<v>' …` before any session starts. */
+  def envPositiveInt(key: String, default: Int): Int =
+    graft.pipeline.DailyAggregatorMain.positiveInt(sys.env, key, default) match {
+      case Right(v) => v
+      case Left(err) => System.err.println(err); sys.exit(1)
+    }
 
   /** True midpoint median: even-length inputs average the two middle
     * elements (picking the upper-middle alone biases the stat upward). */

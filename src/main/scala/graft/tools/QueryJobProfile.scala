@@ -15,9 +15,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *   sbt "runMain graft.tools.QueryJobProfile ext_ingest_loop ext_semdedup"
   *
   * Each named query runs once untimed (JIT/IO warm-up), then once under a
-  * job listener; per-job rows print largest-first. The gap between the
-  * summed job time and the query wall time is driver-side work (planning,
-  * collect post-processing, file listing). The session is
+  * job listener; per-job rows print largest-first. The wall time not
+  * covered by any job (wall minus the union of the job intervals, so
+  * overlapping `inParallel` jobs count once) is driver-side work
+  * (planning, collect post-processing, file listing). The session is
   * `GraftSession.local($SPARK_GRAFT_CPUS)` (default 32) over
   * `$SPARK_GRAFT_SF_DIR` (default sf0.1), the same as `graft.Bench`'s; an
   * unknown query name exits 2 before any session starts.
@@ -27,6 +28,15 @@ object QueryJobProfile {
   private final case class JobRow(
       jobId: Int, started: Long, var ended: Long = -1L,
       site: String = "", tasks: Int = 0, stages: Int = 0)
+
+  /** Length of the union of `[start, end]` intervals: overlapping or
+    * nested intervals count once. */
+  private[graft] def unionLength(intervals: Seq[(Long, Long)]): Long =
+    intervals.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
+      case ((covered, reach), (start, end)) =>
+        if (end <= reach) (covered, reach)
+        else (covered + end - math.max(start, reach), end)
+    }._1
 
   def main(args: Array[String]): Unit = {
     val known = graft.queries.Catalog.all.map(q => q.name -> q).toMap
@@ -38,7 +48,7 @@ object QueryJobProfile {
       sys.exit(2)
     }
     val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-query-job-profile")
+      BenchUtil.envPositiveInt("SPARK_GRAFT_CPUS", 32), "graft-query-job-profile")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val jobs = new ConcurrentHashMap[Int, JobRow]()
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[(Long, Int, String)]()
@@ -78,9 +88,12 @@ object QueryJobProfile {
       spark.sparkContext.removeSparkListener(listener)
       spark.sharedState.cacheManager.clearCache()
       val rows = jobs.values.asScala.toSeq.sortBy(r => -(r.ended - r.started))
-      val summed = rows.filter(_.ended > 0).map(r => r.ended - r.started).sum
+      val done = rows.filter(_.ended > 0)
+      val summed = done.map(r => r.ended - r.started).sum
+      val covered = unionLength(done.map(r => (r.started, r.ended)))
       println(f"%n[profile] $name wall=${wall}%.3f s jobs=${rows.size} " +
-        f"job_sum=${summed / 1000.0}%.3f s driver_gap=${wall - summed / 1000.0}%.3f s")
+        f"job_sum=${summed / 1000.0}%.3f s job_union=${covered / 1000.0}%.3f s " +
+        f"driver_gap=${wall - covered / 1000.0}%.3f s")
       rows.take(15).foreach { r =>
         val d = if (r.ended > 0) (r.ended - r.started) / 1000.0 else -1.0
         println(f"[profile]   ${d}%7.3f s  tasks=${r.tasks}%4d stages=${r.stages}%2d  ${r.site}")

@@ -29,7 +29,7 @@ object ReferenceShapeBench {
 
   def main(args: Array[String]): Unit = {
     val trials = if (args.nonEmpty) args(0).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = BenchUtil.envPositiveInt("SPARK_GRAFT_CPUS", 32)
     val spark = graft.core.GraftSession.local(cpus, "graft-reference-shape-bench")
     val csv = MachineDayFixture.csv().getPath
     val rules = Rules.referenceDefaults

@@ -17,14 +17,17 @@ import graft.streaming.StreamingPipeline
   *
   *   STREAM_SHUFFLE_PARTITIONS  state/shuffle partition count (default: the cores)
   *   STREAM_FILES_PER_TRIGGER   micro-batch size in files (default 2 of 24)
-  *   STREAM_STATE_PROVIDER      "hdfs" (default) or "rocksdb"; anything
-  *                              else exits 1 before the session starts
+  *   STREAM_STATE_PROVIDER      "hdfs" (default) or "rocksdb"
   *   STREAM_CHUNKS              replay granularity (default 24 files/day)
   *   STREAM_MACHINES            key geometry: machines in the corpus (default 1)
   *   STREAM_HOURS               corpus span in hours (default 24; 8 machines
   *                              x 3 h holds rows AND window keys equal to
   *                              the 1-machine day while multiplying FMGWS
   *                              group parallelism 8x)
+  *
+  * The counts and `SPARK_GRAFT_CPUS` must be positive integers and the
+  * provider one of the two names; anything else exits 1 with a named
+  * error before the session starts.
   *
   * This is the measurement tool behind any stream-perf change: the rule
   * (PLANS.md) is that plan/conf switches cite a measured breakdown, not a
@@ -33,17 +36,20 @@ import graft.streaming.StreamingPipeline
 object StreamProfileBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("STREAM_SHUFFLE_PARTITIONS", cpus)
-    val filesPerTrigger = sys.env.getOrElse("STREAM_FILES_PER_TRIGGER", "2").toInt
-    val chunks = sys.env.getOrElse("STREAM_CHUNKS", "24").toInt
+    import BenchUtil.envPositiveInt
+    val cpus = envPositiveInt("SPARK_GRAFT_CPUS", 32)
+    val shuffle = envPositiveInt("STREAM_SHUFFLE_PARTITIONS", cpus)
+    val filesPerTrigger = envPositiveInt("STREAM_FILES_PER_TRIGGER", 2)
+    val chunks = envPositiveInt("STREAM_CHUNKS", 24)
+    val machines = envPositiveInt("STREAM_MACHINES", 1)
+    val hours = envPositiveInt("STREAM_HOURS", 24)
     val provider = sys.env.getOrElse("STREAM_STATE_PROVIDER", "hdfs")
     val rocksDb = StreamingPipeline.stateStoreFlag("STREAM_STATE_PROVIDER", provider) match {
       case Right(flag) => flag
       case Left(err) => System.err.println(err); sys.exit(1)
     }
-    val spark = GraftSession.local(cpus.toInt, "graft-stream-profile")
-    StreamingPipeline.configureStateSizing(spark, shuffle.toInt, rocksDb)
+    val spark = GraftSession.local(cpus, "graft-stream-profile")
+    StreamingPipeline.configureStateSizing(spark, shuffle, rocksDb)
     // recentProgress keeps only the last N updates (default 100); a
     // fine-grained sweep (STREAM_CHUNKS > 100 with 1 file/trigger)
     // would silently truncate the per-batch table this tool exists
@@ -51,8 +57,6 @@ object StreamProfileBench {
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       math.max(100, chunks + 8).toString)
 
-    val machines = sys.env.getOrElse("STREAM_MACHINES", "1").toInt
-    val hours = sys.env.getOrElse("STREAM_HOURS", "24").toInt
     val dir =
       if (machines == 1 && hours == 24) MachineDayFixture.streamDir(chunks)
       else MachineDayFixture.multiStreamDir(machines, hours, chunks)

@@ -172,7 +172,8 @@ class CurationSpec extends AnyFunSuite {
     // the draw: exactly k, and equal to an independent local top-k
     // recomputation of log_w + inverse-Gumbel(seeded doc-id hash)
     val k = 20
-    val sel = Curation.dsirSelect(docs, target, k = k, buckets = Some(4096))
+    val sel = Curation.dsirSelectFromWeights(docs,
+      Curation.importanceWeights(docs, target, buckets = Some(4096)), k)
     val got = sel.select("doc_id").as[Long].collect().toSet
     assert(got.size == k)
     val g = docs.select($"doc_id",
@@ -190,8 +191,10 @@ class CurationSpec extends AnyFunSuite {
       .take(k).map(_._1).toSet
     assert(got == expect)
     // draw invariant under repartitioning
-    val again = Curation.dsirSelect(docs.repartition(7), target, k = k,
-      buckets = Some(4096)).select("doc_id").as[Long].collect().toSet
+    val docs7 = docs.repartition(7)
+    val again = Curation.dsirSelectFromWeights(docs7,
+        Curation.importanceWeights(docs7, target, buckets = Some(4096)), k)
+      .select("doc_id").as[Long].collect().toSet
     assert(again == got)
     // the 100 TB contract of the hashed mode: the bounded model table
     // BROADCASTS onto the raw tf table — scoring never exchanges the
@@ -201,89 +204,6 @@ class CurationSpec extends AnyFunSuite {
     assert(hashedPlan.contains("BroadcastHashJoin"),
       s"hashed model join must broadcast:\n$hashedPlan")
     exact.unpersist(); hashed.unpersist()
-  }
-
-  test("frozen DSIR model: dense buckets; scoreImportance equals importanceWeights") {
-    val docs = Tables.documents(spark, dir)
-    val target = docs.filter($"lang" === "en")
-    val b = 4096
-    val model = Curation.importanceModel(docs, target, buckets = b).cache()
-    // dense: every bucket has exactly one row, so a scoring join can
-    // never miss, and every zero-mass bucket carries the same smoothed
-    // unseen ratio
-    assert(model.count() == b)
-    assert(model.select("feat").distinct().count() == b)
-    // the occurrence-sum score equals the tf-weighted score of the
-    // fit-on-the-same-corpus path, doc for doc (6-dp ulp tolerance)
-    val w1 = Curation.importanceWeights(docs, target, buckets = Some(b))
-    val w2 = Curation.scoreImportance(docs, model)
-    val joined = w1.select($"doc_id", $"n_feats".as("nf1"), $"log_w".as("lw1"))
-      .join(w2.select($"doc_id", $"n_feats".as("nf2"), $"log_w".as("lw2")), "doc_id")
-      .cache()
-    assert(joined.count() == w1.count() && w1.count() == w2.count())
-    assert(joined.filter($"nf1" =!= $"nf2").count() == 0)
-    val maxDiff = joined.agg(max(abs($"lw1" - $"lw2"))).as[Double].collect().head
-    assert(maxDiff <= 1e-6, s"frozen-model score drifted: $maxDiff")
-    joined.unpersist(); model.unpersist()
-  }
-
-  test("frozen DSIR scoring on a stream equals the batch twin") {
-    val docs = Tables.documents(spark, dir)
-    val target = docs.filter($"lang" === "en")
-    val b = 4096
-    val model = Curation.importanceModel(docs, target, buckets = b)
-      .cache()
-    model.count()
-    // stream the corpus as CSV files; the frozen model is the static side
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_dsir_stream").toString
-    val rows = docs.select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
-    val base = System.currentTimeMillis()
-    rows.grouped(rows.length / 3 + 1).zipWithIndex.foreach { case (chunk, i) =>
-      val f = new java.io.File(streamDir, s"f$i.csv")
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try chunk.foreach { case (id, t) => w.println(s"$id,$t") }
-      finally w.close()
-      f.setLastModified(base + i * 60000L): Unit
-    }
-    val schema = "doc_id LONG, text STRING"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).csv(streamDir)
-    val q = Curation.scoreImportance(stream, model)
-      .writeStream.format("memory").queryName("dsir_stream_out")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("dsir_stream_out")
-      .as[(Long, Long, Double, Double)].collect().toSet
-    val batch = Curation.scoreImportance(
-        spark.read.schema(schema).csv(streamDir), model)
-      .as[(Long, Long, Double, Double)].collect().toSet
-    assert(streamed == batch)
-    assert(streamed.map(_._1) == rows.map(_._1).toSet)
-    assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
-      "scoring must have crossed micro-batch boundaries")
-    model.unpersist()
-  }
-
-  test("dsirSelectThreshold: quantile-gated draw tracks the exact top-k") {
-    val docs = Tables.documents(spark, dir)
-    val target = docs.filter($"lang" === "en")
-    val k = 20
-    val exact = Curation.dsirSelect(docs, target, k = k, buckets = Some(4096))
-      .select("doc_id").as[Long].collect().toSet
-    val gated = Curation.dsirSelectThreshold(docs, target, k = k,
-      buckets = Some(4096))
-    val got = gated.select("doc_id").as[Long].collect().toSet
-    // the cut is an estimated rank-k key value: size lands on k ± the
-    // sketch/rank-rounding slack (tiny here), members track the exact set
-    assert(math.abs(got.size - k) <= 1, s"size ${got.size} vs k=$k")
-    assert((exact intersect got).size >= k - 1,
-      s"threshold draw diverged from exact top-k: ${exact.diff(got)}")
-    // a kept row's key is never below the broadcast threshold
-    assert(gated.filter($"gumbel_key" < $"key_threshold").count() == 0)
-    // same determinism contract as the exact form
-    val again = Curation.dsirSelectThreshold(docs.repartition(5), target,
-      k = k, buckets = Some(4096)).select("doc_id").as[Long].collect().toSet
-    assert(again == got)
   }
 
   test("blockFilter keeps null-text docs (rlike(null) must not eat them)") {

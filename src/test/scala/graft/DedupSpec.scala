@@ -199,13 +199,16 @@ class DedupSpec extends AnyFunSuite {
   test("MinHashAggregator signatures are bit-identical to the column-min form") {
     val sh = TextDedup.shingles(docs, 2).persist()
     val n = 32
-    val colForm = TextDedup.minHashSignatures(sh, n)
+    val colForm = ReferenceForms.minHashSignatures(sh, n)
       .select(col("doc_id"), array((0 until n).map(i => col(s"mh$i")): _*).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     val aggForm = TextDedup.minHashSignaturesAgg(sh, n)
-      .as[(Long, Seq[Long])].collect().toMap
+      .as[(Long, Seq[Long], Long)].collect().map { case (id, sig, sz) => id -> (sig, sz) }.toMap
     assert(aggForm.keySet == colForm.keySet)
-    aggForm.foreach { case (id, sig) => assert(sig == colForm(id), s"doc $id") }
+    aggForm.foreach { case (id, (sig, _)) => assert(sig == colForm(id), s"doc $id") }
+    // the same pass counts each doc's shingle set for minHashPairs' length prune
+    val sizes = sh.groupBy("doc_id").count().as[(Long, Long)].collect().toMap
+    aggForm.foreach { case (id, (_, sz)) => assert(sz == sizes(id), s"doc $id size") }
     sh.unpersist()
   }
 
@@ -217,7 +220,7 @@ class DedupSpec extends AnyFunSuite {
       (1001L, "x x x y"), (1002L, "z")).toDF("doc_id", "text"))
     val aggForm = TextDedup.simHash(fixture)
       .as[(Long, Long)].collect().toMap
-    val colForm = TextDedup.simHashColumnForm(fixture)
+    val colForm = ReferenceForms.simHashColumnForm(fixture)
       .as[(Long, Long)].collect().toMap
     assert(aggForm == colForm)
   }

@@ -134,7 +134,7 @@ class EmbedIngestSpec extends AnyFunSuite {
     Similarity.writeIvfPqIndex(corpus, idx, centroidStride = 20L,
       m = 8, ks = 16, maxIter = 3)
     val b0 = negated(emb.filter($"vec_id" < 20), 1000L)
-    Similarity.appendIvfPqIndex(spark, b0, idx, "b0")
+    IndexSetup.appendIvfPqIndex(spark, b0, idx, "b0")
     val dst = Files.createTempDirectory("graft_embing_compact").toString
     Similarity.compactIvfIndex(spark, idx, dst)
     // post-training mass folds to ONE `appended` slice, never into
@@ -225,7 +225,9 @@ class EmbedIngestSpec extends AnyFunSuite {
       val sizes = spark.read.parquet(s"$dir/lists")
         .groupBy("list_id").agg(count(lit(1)).as("sz"))
       val total = spark.read.parquet(s"$dir/lists").count().toDouble
-      Similarity.ivfProbeCells(spark, dir, queries, nProbe)
+      Similarity.probeAssignments(spark.read.parquet(s"$dir/centroids"),
+          queries, nProbe, "vec_id")
+        .select("q_id", "list_id")
         .join(sizes, Seq("list_id"))
         .groupBy("q_id").agg(sum("sz").as("scanned"))
         .agg(avg(col("scanned"))).as[Double].head() / total
@@ -373,7 +375,7 @@ class EmbedIngestSpec extends AnyFunSuite {
       m = 8, ks = 16, maxIter = 3)
     val b0 = negated(emb.filter($"vec_id" < 20), 1000L)
       .unionByName(copies(emb.filter($"vec_id" === 3), 2000L))
-    Similarity.appendIvfPqIndex(spark, b0, idx, "b0")
+    IndexSetup.appendIvfPqIndex(spark, b0, idx, "b0")
     val dst = Files.createTempDirectory("graft_embing_pqrb").toString
     Similarity.rebuildIvfIndex(spark, idx, dst, centroidStride = 30L)
     // codebooks are coarse-quantizer-independent (trained on raw

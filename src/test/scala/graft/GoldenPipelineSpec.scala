@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.fixtures.{FixtureGen, Fixtures}
+import graft.fixtures.Fixtures
 import graft.model.Rules
 import graft.pipeline.DailyAggregatorJob
 

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Rules

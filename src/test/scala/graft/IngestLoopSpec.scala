@@ -224,7 +224,7 @@ class IngestLoopSpec extends AnyFunSuite {
         idx, out, tag, k = 2, tau = 0.8)
     tick("b0", Seq((100L, "first wave novel payload with words")))
     tick("b1", Seq((200L, "second wave novel payload with words")))
-    def slices() = graft.core.FsPaths.countChildren(spark, s"$idx/hashes", "batch=")
+    def slices() = graft.core.FsPaths.childNames(spark, s"$idx/hashes", "batch=").size
     assert(slices() == 3) // base + b0 + b1
     // below the trigger (2 loose slices, 3 tolerated): no-op
     assert(!DedupStream.compactIfNeeded(spark, idx, maxSlices = 3, currentTag = "b2"))
@@ -233,7 +233,7 @@ class IngestLoopSpec extends AnyFunSuite {
     assert(!DedupStream.compactIfNeeded(spark, idx, maxSlices = 2, currentTag = "b2"))
     // crashed-attempt simulation: b2's index slices were written but the
     // tick never committed; compaction at replay start must DROP them
-    TextDedup.appendIncrementalIndex(
+    IndexSetup.appendIncrementalIndex(
       Seq((300L, "third wave novel payload with words")).toDF("doc_id", "text"),
       idx, "b2", k = 2)
     assert(slices() == 4) // base + b0 + b1 + crashed b2
@@ -241,7 +241,7 @@ class IngestLoopSpec extends AnyFunSuite {
     // does NOT fire — a cheap delete, not a wait-for-next-compaction
     assert(!DedupStream.compactIfNeeded(spark, idx, maxSlices = 99, currentTag = "b2"))
     assert(slices() == 3, "crashed b2 must be deleted by the no-op check")
-    TextDedup.appendIncrementalIndex(
+    IndexSetup.appendIncrementalIndex(
       Seq((300L, "third wave novel payload with words")).toDF("doc_id", "text"),
       idx, "b2", k = 2) // re-create the leftover for the firing path
     assert(DedupStream.compactIfNeeded(spark, idx, maxSlices = 1, currentTag = "b2"))
@@ -294,7 +294,7 @@ class IngestLoopSpec extends AnyFunSuite {
     assert(compacted == plain)
     assert(compacted == Set(100L, 200L, 300L))
     // the compacting run actually compacted: slice count stayed bounded
-    assert(graft.core.FsPaths.countChildren(spark, s"$idxB/hashes", "batch=") <=
+    assert(graft.core.FsPaths.childNames(spark, s"$idxB/hashes", "batch=").size <=
       2, "maxSlices=1 run never compacted")
   }
 
@@ -307,10 +307,10 @@ class IngestLoopSpec extends AnyFunSuite {
     val (idx, out) = freshDirs()
     val ckpt = Files.createTempDirectory("graft_ingest_crashckpt").toString
     TextDedup.writeIncrementalIndex(corpus, idx, k = 2)
-    TextDedup.appendIncrementalIndex(
+    IndexSetup.appendIncrementalIndex(
       Seq((100L, "crashed wave novel payload with words")).toDF("doc_id", "text"),
       idx, "b0", k = 2)
-    assert(graft.core.FsPaths.countChildren(spark, s"$idx/hashes", "batch=") == 2)
+    assert(graft.core.FsPaths.childNames(spark, s"$idx/hashes", "batch=").size == 2)
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, String)]
     val q = DedupStream.incrementalIngest(
@@ -325,7 +325,7 @@ class IngestLoopSpec extends AnyFunSuite {
       "replayed batch deduped against its own crashed slice or lost the dup check")
     // the replay's own committed slice is the only b0 slice left: the
     // crashed one was deleted, then overwritten by the tick's append
-    assert(graft.core.FsPaths.countChildren(spark, s"$idx/hashes", "batch=") == 2)
+    assert(graft.core.FsPaths.childNames(spark, s"$idx/hashes", "batch=").size == 2)
     assert(spark.read.parquet(s"$idx/hashes").count() == corpus.count() + 1,
       "crashed leftover rows must not accumulate next to the replay's write")
   }

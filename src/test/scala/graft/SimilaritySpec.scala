@@ -17,7 +17,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("codegen vector_dot is bit-identical to the higher-order-function dot") {
     val diff = emb.select(
       (Similarity.dot(spark)(col("embedding"), col("embedding")) -
-        Similarity.dotHof(col("embedding"), col("embedding"))).as("d"))
+        ReferenceForms.dotHof(col("embedding"), col("embedding"))).as("d"))
       .agg(max(abs(col("d")))).as[Double].collect().head
     assert(diff == 0.0)
   }
@@ -193,7 +193,7 @@ class SimilaritySpec extends AnyFunSuite {
     val queries = emb.filter($"vec_id" < 10)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_app").toString
     Similarity.writeIvfPqIndex(half1, idx, centroidStride = 50L, m = 8, ks = 16, maxIter = 3)
-    Similarity.appendIvfPqIndex(spark, half2, idx, "b0")
+    IndexSetup.appendIvfPqIndex(spark, half2, idx, "b0")
     // every appended vector is servable: codes and lists slices agree row-for-row
     val lists = spark.read.parquet(s"$idx/lists").select($"n_id".as("vec_id"), $"list_id", $"batch")
     val codes = spark.read.parquet(s"$idx/codes").select($"vec_id", $"list_id", $"batch")

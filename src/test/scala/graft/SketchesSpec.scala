@@ -131,8 +131,8 @@ class SketchesSpec extends AnyFunSuite {
       // the sketch returns actual data values, not interpolations
       assert(vs.contains(p50) && vs.contains(p95))
     }
-    // No RowsOnlyEvidence entry any more: the catalog row emits the
-    // envelope verdict directly and is hash-checked against DuckDB.
+    // The catalog row emits the envelope verdict directly and is
+    // hash-checked against DuckDB.
   }
 
   test("approx quantile: eps*n element-rank bound holds across group sizes incl. n < 1/eps") {
@@ -203,12 +203,6 @@ class SketchesSpec extends AnyFunSuite {
     assert(math.abs(est._3 - 10000) / 10000.0 <= 0.15, s"intersection ${est._3}")
     assert(math.abs(est._4 - 50000) / 50000.0 <= 0.15, s"union ${est._4}")
     assert(math.abs(est._5 - 0.2) / 0.2 <= 0.25, s"jaccard ${est._5}")
-    // distinct estimates from the same sketches
-    val d = Sketches.kmvDistinct(
-        Sketches.kmvSketches(rows, "g", "v", k))
-      .select($"g", $"est_distinct").as[(String, Double)].collect().toMap
-    assert(math.abs(d("A") - 30000) / 30000.0 <= 0.15, s"A ${d("A")}")
-    assert(math.abs(d("B") - 30000) / 30000.0 <= 0.15, s"B ${d("B")}")
   }
 
   test("kmv u(): the Long.MaxValue boundary is deterministic and pinned") {
@@ -218,13 +212,6 @@ class SketchesSpec extends AnyFunSuite {
     // every consumer's behavior at that edge rather than leaving it to
     // narrative.
     val max = Long.MaxValue
-    // kmvDistinct, full sketch whose k-th (largest kept) hash is the
-    // boundary: θ = u(max) = 1.0, so est = (k-1)/θ = k-1 exactly
-    val full = Seq(("g", Seq(10L, 20L, max), 3, 3))
-      .toDF("g", "kmv", "kmv_n", "kmv_k")
-    val est = Sketches.kmvDistinct(full)
-      .select("est_distinct").as[Double].head()
-    assert(est == 2.0, s"(k-1)/u(Long.MaxValue) must be exactly k-1, got $est")
     // kmvOverlap, not-full sketches carrying a boundary hash: θ = 1.0
     // short-circuits the cut, so the boundary hash survives and the
     // not-full ⇒ exact property holds all the way to Long.MaxValue

@@ -2,20 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM), built by
+  * the production factory so the tests run the engine's conf set.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.GraftSession.local(4, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
