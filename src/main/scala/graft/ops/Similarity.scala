@@ -748,8 +748,7 @@ object Similarity {
   /** Nearest-code assignment for a (id, sub_id, sub_vec) frame against a
     * broadcast codebook; ties break on the smaller code id.
     */
-  // kept as the reference twin for assignCodesLocal's parity test
-  private[graft] def assignCodes(subs: DataFrame, codebooks: DataFrame, idCol: String): DataFrame = {
+  private def assignCodes(subs: DataFrame, codebooks: DataFrame, idCol: String): DataFrame = {
     val s = subs.sparkSession
     // min-struct argmin (see kmeansAssign's max-struct note): one row
     // per (vector, subspace) crosses the exchange instead of one per
@@ -760,43 +759,6 @@ object Similarity {
       .agg(first(col("sub_vec")).as("sub_vec"),
         min(struct(col("d2"), col("code"))).as("m"))
       .select(col(idCol), col("sub_id"), col("sub_vec"), col("m.code"))
-  }
-
-  /** [[assignCodes]] against a DRIVER-LOCAL codebook (r20, Lloyd-loop
-    * fixed-cost cut): per subspace the ks candidate distances become ONE
-    * literal array_min expression — no broadcast build job, no ks-way
-    * join expansion, and the whole (id, sub) re-aggregation EXCHANGE
-    * disappears (the argmin is computed in place on the single input
-    * row). Same l2sq expression, same struct(d2, code) ordering, same
-    * smaller-code tie-break — codes are bit-identical. Codebooks are
-    * bounded driver state by the PQ contract (m·ks·dsub doubles).
-    */
-  private[graft] def assignCodesLocal(
-      subs: DataFrame,
-      cb: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String): DataFrame = {
-    val s = subs.sparkSession
-    val si = schema.fieldIndex("sub_id")
-    val ci = schema.fieldIndex("code")
-    val vi = schema.fieldIndex("c_vec")
-    val elemType = schema(vi).dataType
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-    val m = cb.groupBy(_.getInt(si)).toSeq.sortBy(_._1)
-      .foldLeft(lit(null).cast("struct<d2:double,code:int>")) {
-        case (acc, (sid, entries)) =>
-          when(col("sub_id") === sid,
-            array_min(array(entries.sortBy(_.getInt(ci)).map { e =>
-              struct(
-                l2sq(s)(col("sub_vec"), litVec(e.getSeq[Any](vi), elemType)).as("d2"),
-                lit(e.getInt(ci)).as("code"))
-            }: _*))).otherwise(acc)
-      }
-    subs.withColumn("__m", m)
-      // mirrors the inner join: a subspace with no codebook rows drops
-      .filter(col("__m").isNotNull)
-      .select(col(idCol), col("sub_id"), col("sub_vec"),
-        col("__m").getField("code").as("code"))
   }
 
   /** Train per-subspace codebooks: independent Lloyd's k-means (L2, the
@@ -863,8 +825,9 @@ object Similarity {
       val meanCols = (0 until dsub).map(i =>
         (sum(col("sub_vec").getItem(i).cast("decimal(38,18)")) / count(lit(1)))
           .cast("double").as(s"m$i"))
-      // NOTE (r20): a literal-expression assignment (assignCodesLocal)
-      // was tried here and REVERTED — m·ks l2sq terms inline is ~384
+      // NOTE (r20): a literal-expression assignment (one array_min per
+      // subspace over the driver-local codebook) was tried here and
+      // REVERTED — m·ks l2sq terms inline is ~384
       // vector-dot subexpressions in one generated method, which blows
       // past JIT/codegen method limits and measured ~2× slower than the
       // broadcast-join argmin (ext_ann_pq 5.1 → 9.3 s). The join form

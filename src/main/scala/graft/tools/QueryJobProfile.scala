@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
+import graft.tools.BenchUtil.fmt
+
 /** Optimization-round instrument: attribute one catalog query's wall time
   * to its individual Spark JOBS — count, per-job duration, task count and
   * the call site that launched it — so "this query is slow" becomes
@@ -91,17 +93,17 @@ object QueryJobProfile {
       val done = rows.filter(_.ended > 0)
       val summed = done.map(r => r.ended - r.started).sum
       val covered = unionLength(done.map(r => (r.started, r.ended)))
-      println(f"%n[profile] $name wall=${wall}%.3f s jobs=${rows.size} " +
-        f"job_sum=${summed / 1000.0}%.3f s job_union=${covered / 1000.0}%.3f s " +
-        f"driver_gap=${wall - covered / 1000.0}%.3f s")
+      println(s"\n[profile] $name wall=${fmt(wall, 3)} s jobs=${rows.size} " +
+        s"job_sum=${fmt(summed / 1000.0, 3)} s job_union=${fmt(covered / 1000.0, 3)} s " +
+        s"driver_gap=${fmt(wall - covered / 1000.0, 3)} s")
       rows.take(15).foreach { r =>
         val d = if (r.ended > 0) (r.ended - r.started) / 1000.0 else -1.0
-        println(f"[profile]   ${d}%7.3f s  tasks=${r.tasks}%4d stages=${r.stages}%2d  ${r.site}")
+        println(f"[profile]   ${fmt(d, 3)}%7s s  tasks=${r.tasks}%4d stages=${r.stages}%2d  ${r.site}")
       }
       val st = stages.asScala.toSeq.sortBy(-_._1)
       println(f"[profile]  -- stages: n=${st.size} task_total=${st.map(_._2).sum} --")
       st.take(30).foreach { case (d, n, nm) =>
-        println(f"[profile]   stage ${d / 1000.0}%7.3f s tasks=$n%4d  $nm")
+        println(f"[profile]   stage ${fmt(d / 1000.0, 3)}%7s s tasks=$n%4d  $nm")
       }
     }
     spark.stop()

@@ -22,13 +22,27 @@ import graft.pipeline.DailyAggregatorJob
   * benefits from running later in a warm JVM.
   *
   * Usage: runMain graft.tools.ReferenceShapeBench [trials]
-  * (cores from `SPARK_GRAFT_CPUS`, default 32, as for `graft.Bench`)
+  * (trials a positive integer, default 3; anything else exits 2 with a
+  * named error; cores from `SPARK_GRAFT_CPUS`, default 32, as for
+  * `graft.Bench`)
   */
 object ReferenceShapeBench {
-  import BenchUtil.{force, time, median, fmt3}
+  import BenchUtil.{force, time, median, fmt}
+
+  /** The optional trials argument, by the production mains' positive-
+    * integer rule (`DailyAggregatorMain.positiveInt`); default 3. */
+  private[graft] def trialsArg(args: Seq[String]): Either[String, Int] =
+    graft.pipeline.DailyAggregatorMain.positiveInt(
+      args.headOption.map("trials" -> _).toMap, "trials", 3)
 
   def main(args: Array[String]): Unit = {
-    val trials = if (args.nonEmpty) args(0).toInt else 3
+    val trials = trialsArg(args.toSeq) match {
+      case Right(n) => n
+      case Left(err) =>
+        System.err.println(err)
+        System.err.println("usage: ReferenceShapeBench [trials]")
+        sys.exit(2)
+    }
     val cpus = BenchUtil.envPositiveInt("SPARK_GRAFT_CPUS", 32)
     val spark = graft.core.GraftSession.local(cpus, "graft-reference-shape-bench")
     val csv = MachineDayFixture.csv().getPath
@@ -73,10 +87,10 @@ object ReferenceShapeBench {
     }
     println(
       s"""{"metric":"reference_shape_vs_engine","trials":$trials,""" +
-        s""""reference_shape_sec":${fmt3(median(ref.toSeq))},""" +
-        s""""reference_trials":[${ref.map(fmt3).mkString(",")}],""" +
-        s""""engine_sec":${fmt3(median(eng.toSeq))},""" +
-        s""""engine_trials":[${eng.map(fmt3).mkString(",")}]}""")
+        s""""reference_shape_sec":${fmt(median(ref.toSeq), 3)},""" +
+        s""""reference_trials":[${ref.map(fmt(_, 3)).mkString(",")}],""" +
+        s""""engine_sec":${fmt(median(eng.toSeq), 3)},""" +
+        s""""engine_trials":[${eng.map(fmt(_, 3)).mkString(",")}]}""")
     spark.stop()
   }
 }

@@ -72,7 +72,7 @@ object StreamProfileBench {
     println(s"== conf: shuffle=$shuffle filesPerTrigger=$filesPerTrigger " +
       s"chunks=$chunks machines=$machines hours=$hours " +
       s"provider=$provider")
-    println(s"== wall ${String.format(java.util.Locale.ROOT, "%.2f", Double.box(wall))} s, " +
+    println(s"== wall ${BenchUtil.fmt(wall, 2)} s, " +
       s"batches ${progs.length}, rows ${progs.map(_.numInputRows).sum}")
     progs.foreach(p => println(p.json))
     spark.stop()

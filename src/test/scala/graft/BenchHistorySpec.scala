@@ -4,47 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.BenchUtil
 
-/** The bench's rolling-history / sub-gate-creep machinery (round-16
-  * verdict task 2). Pure-function pins — no Spark session needed.
+/** The bench's steal-clean median rule and its entry loop. Pure-function
+  * pins — no Spark session needed.
   */
 class BenchHistorySpec extends AnyFunSuite {
-
-  test("parseHistory: locates the artifact's rolling block, ignores trial arrays") {
-    val artifact =
-      """{
-        |  "sf": "x",
-        |  "drift_flags": [
-        |    {"query":"q_a","median":9.000,"best_prior_3r":6.000,"ratio_vs_best":1.50,"window":[6.000,7.000]}
-        |  ],
-        |  "history": {"q_a":[6.000,7.000,10.000],"q_b":[0.500]},
-        |  "queries": {
-        |    "q_a": {"median":9.000,"trials":[9.1,9.0,8.9],"gc_ms":[1,2,3]}
-        |  }
-        |}""".stripMargin
-    val h = BenchUtil.parseHistory(artifact)
-    assert(h == Map("q_a" -> Seq(6.0, 7.0, 10.0), "q_b" -> Seq(0.5)))
-    // a seed file whose whole content is the map parses with wholeFile
-    val seed = """{"q_a": [6.0, 7.0], "q_b": [0.5]}"""
-    assert(BenchUtil.parseHistory(seed, wholeFile = true) ==
-      Map("q_a" -> Seq(6.0, 7.0), "q_b" -> Seq(0.5)))
-    // no history block at all (a pre-r17 artifact) -> empty, not garbage
-    assert(BenchUtil.parseHistory("""{"queries":{"q":{"median":1.0,"trials":[1.0]}}}""").isEmpty)
-  }
-
-  test("parseHistory: balanced-brace extraction survives what first-} could not") {
-    // the old first-'}' scan would truncate this window to just q_a if
-    // the map ever grew a nested object; the balanced scan reads it whole
-    val nested =
-      """{"history": {"q_a":[1.000,2.000], "q_b":[3.000]}, "queries": {}}"""
-    assert(BenchUtil.parseHistory(nested) ==
-      Map("q_a" -> Seq(1.0, 2.0), "q_b" -> Seq(3.0)))
-    // a shape change that puts anything but whitespace between the key
-    // and its map returns empty instead of guessing at the wrong object
-    val reshaped = """{"history": "v2", "history_v2": {"q_a":[1.0]}}"""
-    assert(BenchUtil.parseHistory(reshaped).isEmpty)
-    // unterminated map (truncated artifact): empty, not an exception
-    assert(BenchUtil.parseHistory("""{"history": {"q_a":[1.0]""").isEmpty)
-  }
 
   test("stealDirty/splitBySteal: medians reject steal-contaminated trials") {
     // the r17 committed capture's actual shape: ~5 s of wall carrying
@@ -111,51 +74,27 @@ class BenchHistorySpec extends AnyFunSuite {
     }
   }
 
-  test("rollHistory: appends the prior run's medians, keeps the newest 3") {
-    val rolled = BenchUtil.rollHistory(
-      priorHistory = Map("q_a" -> Seq(5.0, 6.0, 7.0), "q_gone" -> Seq(1.0)),
-      priorMedians = Map("q_a" -> 10.0, "q_new" -> 2.0, "q_failed" -> -1.0))
-    assert(rolled("q_a") == Seq(6.0, 7.0, 10.0)) // oldest dropped
-    assert(rolled("q_new") == Seq(2.0))
-    assert(rolled("q_gone") == Seq(1.0)) // absent from prior run: history kept
-    assert(!rolled.contains("q_failed")) // failed medians never enter history
-  }
-
-  test("creepFlags: catches ext_semdedup's r14-r16 drift retroactively") {
-    // the real committed medians: r14 6.957, r15 7.062, r16 10.049 —
-    // each single-round step was under the 1.5x isolation gate
-    // (10.049/7.062 = 1.42), so the family crept +44% unseen; vs the
-    // 3-round BEST the r16 number is 1.44x and flags
-    val history = Map("ext_semdedup" -> Seq(6.957, 7.062))
-    val flags = BenchUtil.creepFlags(
-      current = Map("ext_semdedup" -> 10.049), history = history)
-    assert(flags.map(_._1) == Seq("ext_semdedup"))
-    val (_, m, best, r) = flags.head
-    assert(m == 10.049 && best == 6.957 && math.abs(r - 1.444) < 0.01)
-  }
-
-  test("creepFlags: sub-second entries and sub-ratio movement stay unflagged") {
-    val history = Map(
-      "fast" -> Seq(0.2, 0.25), // jittery sub-second entry: never flagged
-      "ok" -> Seq(5.0, 5.2), // 1.15x: under the gate
-      "worst" -> Seq(2.0), "bad" -> Seq(3.0))
-    val flags = BenchUtil.creepFlags(
-      current = Map("fast" -> 0.9, "ok" -> 6.0, "worst" -> 4.0, "bad" -> 4.2),
-      history = history)
-    // sorted worst-ratio first
-    assert(flags.map(_._1) == Seq("worst", "bad"))
-    assert(math.abs(flags.head._4 - 2.0) < 1e-9)
-  }
-
-  test("the committed seed carries the r14/r15 medians the window needs") {
-    val src = scala.io.Source.fromFile("config/bench_history_seed.json", "UTF-8")
-    val seed = try BenchUtil.parseHistory(src.mkString, wholeFile = true)
-    finally src.close()
-    assert(seed.size > 150)
-    assert(seed("ext_semdedup") == Seq(6.957, 7.062))
-    // rolled forward with the r16 committed medians the creep window is
-    // 3 rounds deep on the first post-seed run
-    val rolled = BenchUtil.rollHistory(seed, Map("ext_semdedup" -> 10.049))
-    assert(rolled("ext_semdedup") == Seq(6.957, 7.062, 10.049))
+  test("timeEntries: a throwing entry records -1 and the next entry still runs") {
+    val ran = scala.collection.mutable.ArrayBuffer[String]()
+    val entries: Seq[(String, () => Unit)] = Seq(
+      "w2_single_window" -> (() => throw new RuntimeException("boom")),
+      "w2_two_phase_prefix_sum" -> (() => ran += "w2_two_phase_prefix_sum"),
+      "skew_join_plain" -> (() => ran += "skew_join_plain"))
+    def timeMedian(body: () => Unit): Bench.QueryResult = {
+      body()
+      Bench.QueryResult(1.0, Seq(1.0), 0.0, 0.0, 0.0)
+    }
+    val all = Bench.timeEntries(entries, only = None)(timeMedian)
+    assert(all.map { case (k, r) => k -> r.median } == Seq(
+      "w2_single_window" -> -1.0,
+      "w2_two_phase_prefix_sum" -> 1.0,
+      "skew_join_plain" -> 1.0))
+    assert(ran == Seq("w2_two_phase_prefix_sum", "skew_join_plain"))
+    // BENCH_ONLY selects by name, keeping entry order
+    ran.clear()
+    val some = Bench.timeEntries(entries,
+      only = Some(Set("skew_join_plain", "w2_single_window")))(timeMedian)
+    assert(some.map(_._1) == Seq("w2_single_window", "skew_join_plain"))
+    assert(ran == Seq("skew_join_plain"))
   }
 }

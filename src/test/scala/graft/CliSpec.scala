@@ -123,4 +123,13 @@ class CliSpec extends AnyFunSuite {
         Left(s"invalid GRAFT_CORES '$raw' (expected a positive integer)"))
     }
   }
+
+  test("reference-shape bench: a malformed trials argument is a named error") {
+    import graft.tools.ReferenceShapeBench.trialsArg
+    assert(trialsArg(Nil) == Right(3))
+    assert(trialsArg(Seq("5")) == Right(5))
+    Seq("ext_semdedup", "0").foreach { raw =>
+      assert(trialsArg(Seq(raw)) == Left(s"invalid trials '$raw' (expected a positive integer)"))
+    }
+  }
 }

@@ -41,20 +41,6 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("literal-form PQ code assignment is bit-identical to the broadcast-join form") {
-    val cb = Similarity.pqCodebooks(emb, m = 8, ks = 16, maxIter = 2)
-    val dim = emb.select(size($"embedding")).head().getInt(0)
-    val subs = emb.select($"vec_id",
-      posexplode(array((0 until 8).map(j =>
-        slice($"embedding", j * (dim / 8) + 1, dim / 8).cast("array<double>")): _*))
-        .as(Seq("sub_id", "sub_vec")))
-    val joinForm = Similarity.assignCodes(subs, cb, "vec_id")
-      .select("vec_id", "sub_id", "code").as[(Long, Int, Int)].collect().toSet
-    val litForm = Similarity.assignCodesLocal(subs, cb.collect().toSeq, cb.schema, "vec_id")
-      .select("vec_id", "sub_id", "code").as[(Long, Int, Int)].collect().toSet
-    assert(litForm == joinForm && litForm.nonEmpty)
-  }
-
   test("spreadForVectorWork spreads a one-split corpus and no-ops below the floor") {
     // r20: the n² bruteForcePairs kernel is map-side in a broadcast
     // nested-loop join, so its parallelism IS the streamed side's
