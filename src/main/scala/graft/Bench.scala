@@ -525,10 +525,12 @@ object Bench {
           val src = scala.io.Source.fromFile("bench_full.json", "UTF-8")
           try src.mkString finally src.close()
         } catch { case _: Throwable => "" }
-      // the leading quote in the key already excludes membw_parallel_sec
-      // from the CPU axis (its preceding char is '_', not '"'); both keys
-      // appear only inside `calibration`, so a flat regex is unambiguous
-      (priorCalibration(prior, "parallel_sec"), priorCalibration(prior, "membw_parallel_sec"))
+      priorCanaries(prior, nCpus) match {
+        case Right(p) => p
+        case Left(why) =>
+          System.err.println(s"[bench] no host_speed_ratio or membw_ratio: $why")
+          (None, None)
+      }
     }
     def segment(c: (Double, Double, Double, Double)): String =
       s"""{"serial_sec":${fmt(c._1, 3)},"parallel_sec":${fmt(c._2, 3)},""" +
@@ -560,14 +562,31 @@ object Bench {
     finalDigest(spark, results, sfDir, fullPath)
   }
 
-  /** Median of every `"<key>":<number>` in a committed full-result
-    * file's text — the canary denominators. None when the file is absent
-    * or predates the key (CPU canary: round 15; membw canary: round 17).
+  /** The committed run's (parallel CPU, parallel membw) canary medians,
+    * the denominators of `host_speed_ratio` and `membw_ratio`; each is
+    * None when the file is absent or predates its key (CPU canary:
+    * round 15; membw canary: round 17). Left(why) when the committed run
+    * used another thread count than `nCpus`: each thread spins a fixed
+    * count, so canaries at different thread counts measure different
+    * work, and a total "normalized" by their ratio would compare runs
+    * whose Spark stages had different cores.
     */
-  private def priorCalibration(text: String, key: String): Option[Double] = {
-    val xs = ("\"" + key + "\":(-?[0-9.]+)").r
-      .findAllMatchIn(text).map(_.group(1).toDouble).toSeq
-    if (xs.isEmpty) None else Some(BenchUtil.median(xs))
+  private[graft] def priorCanaries(committed: String, nCpus: Int)
+      : Either[String, (Option[Double], Option[Double])] = {
+    // the leading quote in the key already excludes membw_parallel_sec
+    // from the CPU axis (its preceding char is '_', not '"'); the keys
+    // appear only inside `calibration`, so a flat regex is unambiguous
+    def median(key: String): Option[Double] = {
+      val xs = ("\"" + key + "\":(-?[0-9.]+)").r
+        .findAllMatchIn(committed).map(_.group(1).toDouble).toSeq
+      if (xs.isEmpty) None else Some(BenchUtil.median(xs))
+    }
+    val cpu = median("parallel_sec")
+    val threads = median("threads").map(_.toInt)
+    if (cpu.isDefined && !threads.contains(nCpus))
+      Left(s"the committed canary ran at ${threads.fold("an unrecorded number of")(_.toString)} " +
+        s"threads, this run at $nCpus")
+    else Right((cpu, median("membw_parallel_sec")))
   }
 
   /** Rounds 8–10 all lost the driver's stdout capture (`parsed: null`):

@@ -93,6 +93,12 @@ object CycleDetection {
     * offset of all prior buckets back. Output is identical to the
     * single-window form (same running count; bucket boundaries are
     * time-ordered), verified by CycleDetectionSpec's equivalence test.
+    *
+    * It reads `df` twice: once in the phase-1 window branch and once in
+    * the phase-2 per-bucket totals. Column pruning drops the window from
+    * the totals branch, so the two branches plan different exchanges and
+    * Spark reuses neither; over a file scan, the file is parsed twice.
+    * Pass a cached input.
     */
   def sessionizeByMarkerScalable(
       df: DataFrame,
@@ -131,7 +137,10 @@ object CycleDetection {
       .select(df.columns.toIndexedSeq.map(col) :+ col(seqCol): _*)
   }
 
-  /** Reference-parity cycle detection.
+  /** Reference-parity cycle detection: [[withUid]], then [[sequence]],
+    * then [[cycleTimes]] of the sequenced events. `DailyAggregatorJob`
+    * calls the three itself, to persist the stamped events between the
+    * first two.
     *
     * `scalable = true` (the default) runs the two-phase distributed
     * prefix sum over 10-minute buckets; `false` keeps the reference's
@@ -149,26 +158,43 @@ object CycleDetection {
     *         `machine_id, cycle_seq, cycle_start_ts, cycle_time_seconds`)
     */
   def detect(events: DataFrame, scalable: Boolean = true): (DataFrame, DataFrame) = {
-    // Tie-breaker id; ties never involve Cycle_Start (SURVEY §7.4) so the
-    // cycle assignment itself is deterministic.
-    val withId = events.withColumn("graft_uid", monotonically_increasing_id())
+    val withSeq = sequence(withUid(events), scalable)
+    (withSeq, cycleTimes(withSeq))
+  }
 
+  /** Adds the `graft_uid` tie-breaker that orders same-timestamp events;
+    * ties never involve Cycle_Start (SURVEY §7.4) so the cycle assignment
+    * itself is deterministic. The id depends on the partition a row is in:
+    * stamp once and let every consumer read the same stamped frame.
+    */
+  def withUid(events: DataFrame): DataFrame =
+    events.withColumn("graft_uid", monotonically_increasing_id())
+
+  /** Events of a [[withUid]] frame with their `cycle_seq`, without the uid.
+    * The scalable form reads `stamped` twice (see
+    * [[sessionizeByMarkerScalable]]).
+    */
+  def sequence(stamped: DataFrame, scalable: Boolean = true): DataFrame = {
     val order = Seq(col("event_timestamp"), col("graft_uid"))
     val marker = col("event_name") === Schemas.cycleStartEvent
     val withSeq =
       if (scalable)
         sessionizeByMarkerScalable(
-          withId,
+          stamped,
           partitionKeys = Seq("machine_id"),
           orderCols = order,
           isMarker = marker,
           bucketCol = floor(unix_micros(col("event_timestamp")) / lit(600L * 1000000)))
       else sessionizeByMarker(
-        withId,
+        stamped,
         partitionKeys = Seq("machine_id"),
         orderCols = order,
         isMarker = marker)
+    withSeq.drop("graft_uid")
+  }
 
+  /** Per-cycle boundaries and duration of [[sequence]]'s output. */
+  def cycleTimes(withSeq: DataFrame): DataFrame = {
     val boundaries = withSeq
       .filter(col("cycle_seq") > 0)
       .filter(col("event_name").isin(Schemas.cycleStartEvent, Schemas.cycleEndEvent))
@@ -177,7 +203,7 @@ object CycleDetection {
         min("event_timestamp").as("cycle_start_ts"),
         max("event_timestamp").as("cycle_end_ts"))
 
-    val cycleTimes = boundaries
+    boundaries
       .withColumn(
         "cycle_time_seconds",
         when(
@@ -186,7 +212,5 @@ object CycleDetection {
           .otherwise(lit(null))
           .cast(FloatType))
       .select("machine_id", "cycle_seq", "cycle_start_ts", "cycle_time_seconds")
-
-    (withSeq.drop("graft_uid"), cycleTimes)
   }
 }

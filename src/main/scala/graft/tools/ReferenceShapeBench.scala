@@ -70,7 +70,8 @@ object ReferenceShapeBench {
       force(HourlyRollup.hourlySummary(flagged, cycleTimes))
     }
 
-    // This engine: DailyAggregatorJob.run (two-phase default + persists).
+    // This engine: DailyAggregatorJob.run (two-phase default, one parse
+    // of the CSV into a filled cache, persisted intermediates).
     def engineShape(): Unit = {
       val out = DailyAggregatorJob.run(spark, csv, rules)
       try { force(out.enrichedEvents); force(out.hourlySummary) }

@@ -97,4 +97,18 @@ class BenchHistorySpec extends AnyFunSuite {
     assert(some.map(_._1) == Seq("w2_single_window", "skew_join_plain"))
     assert(ran == Seq("skew_join_plain"))
   }
+
+  test("priorCanaries: the committed canary divides only a run at its thread count") {
+    val committed =
+      """{"calibration":{"threads":32,"start":{"parallel_sec":0.449,"membw_parallel_sec":0.233},""" +
+        """"mid":{"parallel_sec":0.457,"membw_parallel_sec":0.221},""" +
+        """"end":{"parallel_sec":0.418,"membw_parallel_sec":0.233}}}"""
+    assert(Bench.priorCanaries(committed, 32) == Right((Some(0.449), Some(0.233))))
+    val other = Bench.priorCanaries(committed, 4)
+    assert(other.left.exists(why => why.contains("32") && why.contains("4")), other)
+    // a file without a threads key cannot show it matches
+    assert(Bench.priorCanaries(committed.replace("\"threads\":32,", ""), 32).isLeft)
+    // no committed file: nothing to divide by, and nothing to explain
+    assert(Bench.priorCanaries("", 4) == Right((None, None)))
+  }
 }
