@@ -5,16 +5,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session factory for the engine.
   *
   * Mirrors the reference's session config (`src/daily_aggregator.py:125-129`:
-  * UTC session timezone) and adds the settings a 100 TB deployment needs from
-  * day one: AQE (runtime re-planning, skew-join splitting, partition
-  * coalescing) and a shuffle-partition count sized to the local test harness
-  * (on a real cluster this is `2-3 x total cores` and AQE coalesces down).
+  * UTC session timezone) and adds AQE (runtime re-planning, skew-join
+  * splitting, partition coalescing) and a shuffle-partition count sized to
+  * the core count. A session that spark-submit creates gets the same SQL
+  * confs from `SparkEntry`.
   */
 object GraftSession {
 
-  /** The SQL confs every engine session runs under — the one copy. Builder
-    * sessions get them from `common`; `SparkEntry` sets them per call on a
-    * driver-created session, so both run the same conf set.
+  /** The SQL confs every engine session runs under — the one copy.
+    * [[local]] builds its session with them; `SparkEntry` sets them per
+    * call on a driver-created session, so both run the same conf set.
     */
   val sqlConfs: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
@@ -34,36 +34,16 @@ object GraftSession {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64KB")
 
-  /** Settings shared by local and cluster deployments. */
-  private def common(b: SparkSession.Builder): SparkSession.Builder =
-    sqlConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
-
-  /** Production factory for a real cluster: master/deploy come from
-    * spark-submit; shuffle partitions sized 3× total cores (AQE coalesces
-    * down at runtime), 128 MB scan partitions so a 100 TB input splits into
-    * ~800 k well-sized tasks, and vector/dedup functions registered via
-    * extensions.
-    */
-  def cluster(totalCores: Int, appName: String = "graft"): SparkSession = {
-    val spark = common(SparkSession.builder())
-      .appName(appName)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", (totalCores * 3).toString)
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      .getOrCreate()
-    GraftExtensions.ensure(spark)
-    spark
-  }
-
-  /** Local harness session. Note `common`: ANSI off is PySpark-3.5
-    * reference parity (failed casts/parses yield NULL — cleanse depends on
-    * it; Spark 4 flipped the default), and nanosAsLong lets a
+  /** The engine session on `cores` local cores. Note [[sqlConfs]]: ANSI
+    * off is PySpark-3.5 reference parity (failed casts/parses yield NULL —
+    * cleanse depends on it; Spark 4 flipped the default), and nanosAsLong lets a
     * TIMESTAMP(NANOS)-encoded events corpus scan as int64 (normalized to
     * µs TimestampType in Tables.events — see fixNanos for all four
     * encodings, matching DuckDB's truncation).
     */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = common(SparkSession.builder())
+    val spark = sqlConfs
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master(s"local[$cores]")
       .appName(appName)
       .withExtensions(new GraftExtensions)

@@ -52,6 +52,13 @@ object Rules {
     * skipped; keys with no entry in [[parameterEventMapping]] would have
     * crashed the reference (`.get` on None at `:79`) — we skip them and
     * keep going, a deliberate robustness improvement.
+    *
+    * A limit is a JSON number or a string that parses as a finite double
+    * (the reference's Spark comparison casts such a string too); a range
+    * is an array whose first two elements are limits. Anything else —
+    * `"seventy"`, `null`, `true`, a one-element range — throws an
+    * `IllegalArgumentException` naming the key and the kind, instead of
+    * reading as a silent 0.0 limit.
     */
   def parseJson(json: String): Seq[EventRule] = {
     val root: JsonNode = new ObjectMapper().readTree(json)
@@ -60,14 +67,25 @@ object Rules {
       val (key, node) = (e.getKey, e.getValue)
       if (key.startsWith("_") || !node.isObject) None
       else parameterEventMapping.get(key).flatMap { case (param, event) =>
-        val th: Option[Threshold] =
-          if (node.has("error_if_above")) Some(Threshold.Above(node.get("error_if_above").asDouble()))
-          else if (node.has("error_if_below")) Some(Threshold.Below(node.get("error_if_below").asDouble()))
-          else if (node.has("error_if_outside_range")) {
-            val arr = node.get("error_if_outside_range")
-            if (arr.isArray && arr.size() >= 2)
-              Some(Threshold.OutsideRange(arr.get(0).asDouble(), arr.get(1).asDouble()))
+        def limit(kind: String, v: JsonNode): Double = {
+          val d =
+            if (v.isNumber) Some(v.asDouble())
+            else if (v.isTextual) v.asText().trim.toDoubleOption
             else None
+          d.filter(_.isFinite).getOrElse(throw new IllegalArgumentException(
+            s"rule '$key': $kind must be a finite number or numeric string, got $v"))
+        }
+        val th: Option[Threshold] =
+          if (node.has("error_if_above"))
+            Some(Threshold.Above(limit("error_if_above", node.get("error_if_above"))))
+          else if (node.has("error_if_below"))
+            Some(Threshold.Below(limit("error_if_below", node.get("error_if_below"))))
+          else if (node.has("error_if_outside_range")) {
+            val kind = "error_if_outside_range"
+            val arr = node.get(kind)
+            if (!arr.isArray || arr.size() < 2) throw new IllegalArgumentException(
+              s"rule '$key': $kind must be an array [lo, hi], got $arr")
+            Some(Threshold.OutsideRange(limit(kind, arr.get(0)), limit(kind, arr.get(1))))
           } else None
         th.map(EventRule(param, event, _))
       }

@@ -126,9 +126,8 @@ object Anomaly {
     * Scale shape: two rank windows (each one exchange on `keys` — the
     * deviation pass re-sorts but does not re-shuffle), reduced to a
     * per-group {med, MAD} frame that is broadcast back onto the stream.
-    * At 100 TB the same contract ships with approx_percentile medians,
-    * the way A2 ships approx_count_distinct — exact rank here is the
-    * oracle-checkable form.
+    * At 100 TB the same contract would ship with approx_percentile
+    * medians — exact rank here is the oracle-checkable form.
     */
   def madFlags(
       events: DataFrame,

@@ -30,17 +30,15 @@ object Funnel {
 
   /** Per-event frame annotated with the entity's matched step timestamps
     * `step_ts_1..step_ts_k` (constant within an entity; null = step not
-    * reached). `withinUs` optionally requires every later step to land
-    * within that many microseconds of the step-1 match (a "convert within
-    * 7 days" funnel); `None` = unbounded.
+    * reached). Each later step must land strictly after the previous
+    * step's match.
     */
   def stamped(
       events: DataFrame,
       entityCol: String,
       typeCol: String,
       tsCol: String,
-      steps: Seq[String],
-      withinUs: Option[Long] = None): DataFrame = {
+      steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     val w = Window.partitionBy(entityCol)
     var df = events.select(col(entityCol), col(typeCol), col(tsCol))
@@ -48,13 +46,7 @@ object Funnel {
       val isStep = col(typeCol) === lit(step)
       val cond =
         if (i == 0) isStep
-        else {
-          val afterPrev = isStep && col(tsCol) > col(s"step_ts_$i")
-          withinUs.fold(afterPrev) { us =>
-            afterPrev &&
-              unix_micros(col(tsCol)) - unix_micros(col("step_ts_1")) <= lit(us)
-          }
-        }
+        else isStep && col(tsCol) > col(s"step_ts_$i")
       df = df.withColumn(s"step_ts_${i + 1}", min(when(cond, col(tsCol))).over(w))
     }
     df
@@ -99,9 +91,8 @@ object Funnel {
       entityCol: String,
       typeCol: String,
       tsCol: String,
-      steps: Seq[String],
-      withinUs: Option[Long] = None): DataFrame = {
-    val perEntity = stamped(events, entityCol, typeCol, tsCol, steps, withinUs)
+      steps: Seq[String]): DataFrame = {
+    val perEntity = stamped(events, entityCol, typeCol, tsCol, steps)
       .groupBy(col(entityCol))
       .agg(
         min(col("step_ts_1")).as("t1"),

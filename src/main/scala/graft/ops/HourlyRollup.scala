@@ -53,20 +53,12 @@ object HourlyRollup {
     .withColumn("hour_of_day", hour(col("cycle_start_ts")))
     .filter(col("summary_date").isNotNull)
 
-  /** Cycle-side hourly stats (`daily_aggregator.py:193-205`).
-    *
-    * `approxDistinct` swaps the exact `countDistinct` for HLL++
-    * (`approx_count_distinct`, rsd 1%) — the 100 TB opt-in when the
-    * distinct key set per group is itself huge. Off by default: the input
-    * here has one row per cycle, so exact counting costs the same as
-    * `count(*)` and stays reference-faithful.
-    */
-  def cycleSummary(cycleTimes: DataFrame, approxDistinct: Boolean = false): DataFrame =
+  /** Cycle-side hourly stats (`daily_aggregator.py:193-205`). */
+  def cycleSummary(cycleTimes: DataFrame): DataFrame =
     withHourBucket(cycleTimes)
       .groupBy("summary_date", "hour_of_day", "machine_id")
       .agg(
-        (if (approxDistinct) approx_count_distinct("cycle_seq", 0.01)
-         else countDistinct("cycle_seq")).as("cycle_count"),
+        countDistinct("cycle_seq").as("cycle_count"),
         avg("cycle_time_seconds").as("avg_cycle_time_seconds"),
         min("cycle_time_seconds").as("min_cycle_time_seconds"),
         max("cycle_time_seconds").as("max_cycle_time_seconds"))
@@ -138,21 +130,7 @@ object HourlyRollup {
     * column order (`daily_aggregator.py:234-265`).
     */
   def hourlySummary(flaggedEvents: DataFrame, cycleTimes: DataFrame): DataFrame =
-    hourlySummary(flaggedEvents, cycleTimes, cycleTimes)
-
-  /** Variant with the event-side enrichment cycles separated from the
-    * cycle-stat cycles: an incremental caller can report an hour whose
-    * trailing cycle is still open — its events contribute to the event
-    * side while its not-yet-final cycle row is absent from the stats
-    * (which then zero-fill). This is the batch expectation of the
-    * streaming summary (`StreamingPipeline.hourlySummaryStream`), which
-    * never emits the row of a cycle that has not closed.
-    */
-  def hourlySummary(
-      flaggedEvents: DataFrame,
-      enrichCycles: DataFrame,
-      statCycles: DataFrame): DataFrame =
-    finishSummary(cycleSummary(statCycles)
-      .join(eventSummary(flaggedEvents, enrichCycles),
+    finishSummary(cycleSummary(cycleTimes)
+      .join(eventSummary(flaggedEvents, cycleTimes),
         Seq("summary_date", "hour_of_day", "machine_id"), "outer"))
 }

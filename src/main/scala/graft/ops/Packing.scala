@@ -52,17 +52,6 @@ object Packing {
       .drop("__h")
   }
 
-  /** Greedy context-window packing: documents are laid out in shuffled
-    * order (per shard) and cut into bins of `contextLen` tokens — a doc
-    * opens a new bin when the running total before it has crossed the
-    * bin boundary. This is the streaming-concatenation packing most
-    * pretraining pipelines use (docs may straddle bin edges; `bin_id`
-    * names the bin a doc STARTS in, `bin_offset` where).
-    *
-    * One window per shard computes the running sum — the shard is the
-    * parallelism unit, so packing 100 TB is numShards independent
-    * sorted scans, not a global sequence.
-    */
   /** Sliding-window chunking: cut each document's token sequence into
     * fixed-size windows of `windowLen` tokens advancing by `stride`
     * (overlap = windowLen − stride) — the context-window preparation for
@@ -78,8 +67,7 @@ object Packing {
       df: DataFrame,
       windowLen: Int,
       stride: Int,
-      contentCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+      contentCol: String = "text"): DataFrame = {
     require(windowLen > 0, "windowLen must be positive")
     require(stride > 0 && stride <= windowLen,
       "stride must be in [1, windowLen] — a larger stride would skip tokens")
@@ -95,6 +83,17 @@ object Packing {
       .drop("graft_words", "graft_chunk")
   }
 
+  /** Greedy context-window packing: documents are laid out in shuffled
+    * order (per shard) and cut into bins of `contextLen` tokens — a doc
+    * opens a new bin when the running total before it has crossed the
+    * bin boundary. This is the streaming-concatenation packing most
+    * pretraining pipelines use (docs may straddle bin edges; `bin_id`
+    * names the bin a doc STARTS in, `bin_offset` where).
+    *
+    * One window per shard computes the running sum — the shard is the
+    * parallelism unit, so packing 100 TB is numShards independent
+    * sorted scans, not a global sequence.
+    */
   def pack(
       df: DataFrame,
       contextLen: Int,

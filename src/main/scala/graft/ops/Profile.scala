@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * reshapes it tall — the table is never scanned per column. The exact
   * `countDistinct` aggregates are the oracle-checkable contract; each
   * distinct aggregate costs an Expand duplication of the scan rows, so
-  * the 100 TB form swaps them for `approx_count_distinct` exactly like
-  * the A2 summary column (same opt-in pattern).
+  * a 100 TB form would swap them for `approx_count_distinct`.
   */
 object Profile {
 

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *    integrity checks pre-join their bounded dimension broadcast-left
   *    so the fact side is still scanned once). The only non-combinable
   *    aggregate is the exact `countDistinct` behind `Unique` — the
-  *    100 TB form swaps it for `approx_count_distinct` exactly like the
-  *    A2 summary column (same opt-in pattern as `Profile.table`).
+  *    observed gate swaps it for `approx_count_distinct`, which
+  *    `CollectMetrics` can carry.
   *  - [[psiDrift]] derives exact reference-quantile bin edges from the
   *    per-VALUE count table (cumulative window over DISTINCT values
   *    only — the buildVocab/spearman bounded-domain pattern, never a
@@ -236,11 +236,7 @@ object Quality {
     * runs over the DISTINCT value domain — bounded and cheap for gridded
     * data (2-dp telemetry, counts, categorical codes), but a CONTINUOUS
     * double column has ~n distinct values, so the single-partition
-    * window degenerates to an O(n) scan through one task. For that shape
-    * use [[approxQuantileEdges]] (mergeable one-pass sketch, no window at
-    * all) — PSI only needs ref and cur to share a fixed bucketing, not
-    * exact deciles, so the swap changes bucket boundaries slightly but
-    * keeps the monitor's semantics.
+    * window degenerates to an O(n) scan through one task.
     */
   def quantileEdges(df: DataFrame, column: String, bins: Int): Seq[Double] = {
     require(bins >= 2, "need at least 2 bins")
@@ -301,16 +297,13 @@ object Quality {
     * bigram-LM ln-ulp rule). Every bucket 0..bins-1 appears, empty or
     * not. Σ psi_term is the PSI (alert ≥ 0.2 by convention).
     */
-  def psiDrift(ref: DataFrame, cur: DataFrame, column: String, bins: Int,
-      exactEdges: Boolean = true): DataFrame = {
+  def psiDrift(ref: DataFrame, cur: DataFrame, column: String, bins: Int): DataFrame = {
     require(bins >= 2, "need at least 2 bins")
     // ONE code path for the PSI arithmetic across psiDrift, the
     // categorical variant, and both streaming twins: spine (edges + ref
     // bucket counts, bounded collected artifacts) → single-aggregate
     // histogram of the current snapshot → shared smoothed projection.
-    val edges =
-      if (exactEdges) quantileEdges(ref, column, bins)
-      else approxQuantileEdges(ref, column, bins)
+    val edges = quantileEdges(ref, column, bins)
     val refCounts = bucketCounts(ref, column, edges, bins)
     val aggs = bucketHistogramAggs(column, edges, bins)
     val agg = cur.agg(aggs.head, aggs.tail: _*)
@@ -400,28 +393,6 @@ object Quality {
     agg.select(keyCols.map(col) :+ explode(array(rows: _*)).as("__s"): _*)
       .select(keyCols.map(col) ++ Seq(col(s"__s.$labelName"), col("__s.ref_n"),
         col("__s.cur_n"), col("__s.psi_term")): _*)
-  }
-
-  /** Approximate quantile edges for the continuous-column 100 TB path:
-    * `approx_percentile` (Greenwald–Khanna summaries — one
-    * map-side-combinable pass, mergeable across partitions, NO window
-    * over the value domain). `accuracy` bounds the rank error at
-    * n/accuracy; at the default 10⁴ the edges are exact for inputs
-    * under 10⁴ rows and within 0.01 % of rank beyond. Deterministic for
-    * a fixed partitioning; across REpartitionings the merge tree can
-    * shift an edge by up to the rank-error bound (unlike
-    * [[quantileEdges]] — the price of the one-pass sketch).
-    */
-  def approxQuantileEdges(df: DataFrame, column: String, bins: Int,
-      accuracy: Int = 10000): Seq[Double] = {
-    require(bins >= 2, "need at least 2 bins")
-    val ps = (1 until bins).map(_.toDouble / bins)
-    val row = df.filter(col(column).cast("double").isNotNull)
-      .agg(percentile_approx(col(column).cast("double"),
-        array(ps.map(lit): _*), lit(accuracy)).as("qs"))
-      .head()
-    require(!row.isNullAt(0), s"reference snapshot has no non-null '$column'")
-    row.getSeq[Double](0).toSeq
   }
 
   /** Multi-column drift report: PSI of EVERY listed numeric column in a
@@ -665,7 +636,7 @@ object Quality {
 
   /** Binned two-sample KS for the continuous-column 100 TB path:
     * |F_ref − F_cur| evaluated at the bucket boundaries of `edges`
-    * (e.g. [[approxQuantileEdges]] of the reference, or a fixed grid)
+    * (e.g. [[quantileEdges]] of the reference, or a fixed grid)
     * instead of at every distinct value. Each side collapses to ≤
     * edges.size+1 bucket counts with one map-side-combinable aggregate;
     * the cumulative window then runs over that BOUNDED bucket spine.

@@ -600,8 +600,7 @@ object Similarity {
       emb: DataFrame,
       k: Int,
       maxIter: Int = 5,
-      idCol: String = "vec_id",
-      initCentroids: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+      idCol: String = "vec_id"): (DataFrame, DataFrame) = {
     val s = emb.sparkSession
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     // NOT spread (r20, measured): each Lloyd round's n·k assignment
@@ -614,7 +613,7 @@ object Similarity {
     // is a literal expression — one aggregation job per iteration, no
     // broadcast-build job, no assignment exchange (r20, verdict task 6).
     // Iteration count, seeding, means, and tie-breaks are unchanged.
-    val init = initCentroids.getOrElse(kmeansInitParallel(emb, k, idCol = idCol))
+    val init = kmeansInitParallel(emb, k, idCol = idCol)
     var rows: Seq[org.apache.spark.sql.Row] = init.collect().toSeq
     var schema = init.schema
     val meanCols = (0 until dim).map(i =>
@@ -664,10 +663,9 @@ object Similarity {
       tau: Double,
       kmeansIter: Int = 3,
       probe: Int = 2,
-      idCol: String = "vec_id",
-      initCentroids: Option[DataFrame] = None): DataFrame = {
+      idCol: String = "vec_id"): DataFrame = {
     val s = emb.sparkSession
-    val (assigned, centroids) = kmeans(emb, k, kmeansIter, idCol, initCentroids)
+    val (assigned, centroids) = kmeans(emb, k, kmeansIter, idCol)
     // top-probe cells as ONE literal sort_array+slice expression per
     // vector (r20): the centroids are bounded driver state (kmeans
     // contract, local rows already), so the candidate scoring needs no
@@ -782,7 +780,6 @@ object Similarity {
       ks: Int = 16,
       maxIter: Int = 5,
       idCol: String = "vec_id",
-      trainSample: Option[Int] = None,
       dimHint: Option[Int] = None): DataFrame = {
     val s = emb.sparkSession
     // dimHint (r20, job-count cut): the PQ paths are job-tax-bound (~70
@@ -795,22 +792,7 @@ object Similarity {
       emb.select(size(col("embedding"))).head().getInt(0))
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val dsub = dim / m
-    // Standard PQ practice (Jegou et al. 2011 train on learning sets far
-    // smaller than the corpus): Lloyd iterations run over a bounded
-    // DETERMINISTIC sample — the trainSample vectors with the smallest
-    // xxhash64(id), one global sort-limit, partitioning-independent —
-    // so codebook training cost is O(sample * maxIter) regardless of
-    // corpus size. ~1000*ks vectors per subquantizer is plenty; the
-    // ENCODE pass still covers every vector. None = train on the corpus
-    // (the small-corpus / oracle-pinned configuration).
-    val trainBase = trainSample match {
-      case Some(n) if n > 0 =>
-        emb.select(col(idCol), col("embedding"))
-          .withColumn("graft_h", xxhash64(col(idCol)))
-          .orderBy(col("graft_h"), col(idCol)).limit(n).drop("graft_h")
-      case _ => emb
-    }
-    val subs = subVectors(trainBase, m, dim, idCol).persist()
+    val subs = subVectors(emb, m, dim, idCol).persist()
     try {
       subs.count() // fill the persist before the iteration fan-out
       val seedW = org.apache.spark.sql.expressions.Window
@@ -910,11 +892,10 @@ object Similarity {
       ks: Int = 16,
       maxIter: Int = 5,
       rerank: Int = 8,
-      idCol: String = "vec_id",
-      trainSample: Option[Int] = None): DataFrame = {
+      idCol: String = "vec_id"): DataFrame = {
     val s = emb.sparkSession
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val cb = pqCodebooks(emb, m, ks, maxIter, idCol, trainSample, Some(dim))
+    val cb = pqCodebooks(emb, m, ks, maxIter, idCol, Some(dim))
     val codes = pqEncode(emb, cb, idCol, Some(m), Some(dim))
       .select(col(idCol).as("n_id"), posexplode(col("codes")).as(Seq("sub_id", "code")))
     val lut = adcLut(queries, cb, m, dim, idCol)
@@ -1163,8 +1144,7 @@ object Similarity {
       emb: DataFrame, dir: String,
       centroidStride: Long = 100L,
       m: Int = 8, ks: Int = 16, maxIter: Int = 5,
-      idCol: String = "vec_id",
-      trainSample: Option[Int] = None): Unit = {
+      idCol: String = "vec_id"): Unit = {
     // the coarse index build (centroids → lists) and the PQ codebook
     // training are INDEPENDENT — overlap them from driver threads
     // (guide §2.6; the FIFO scheduler back-fills each side's idle
@@ -1179,7 +1159,7 @@ object Similarity {
     Actions.inParallel(
       () => writeIvfIndex(emb, dir, centroidStride, idCol),
       () => {
-        val cb = pqCodebooks(emb, m, ks, maxIter, idCol, trainSample, Some(dim))
+        val cb = pqCodebooks(emb, m, ks, maxIter, idCol, Some(dim))
         cb.write.mode("overwrite").parquet(s"$dir/codebooks")
         cbHolder.set(cb)
       })

@@ -465,7 +465,7 @@ object ExtQueries {
     * trials and JVMs.
     */
   private def seedIndexCopy(
-      s: SparkSession, dir: String, table: String, params: String,
+      dir: String, table: String, params: String,
       cacheName: String)(build: String => Unit): String = {
     val cache = cachedBuild(dir, table, params, cacheName)(build)
     val dst = new java.io.File(graft.core.TmpDirs.scoped(
@@ -518,8 +518,8 @@ object ExtQueries {
     * and the corpus window can never drift apart across the family.
     */
   private def ingestSeedIdx(
-      s: SparkSession, dir: String, corpus: DataFrame): String =
-    seedIndexCopy(s, dir, "documents.parquet",
+      dir: String, corpus: DataFrame): String =
+    seedIndexCopy(dir, "documents.parquet",
       "ingest_seed,k=2,id<300", "graft_ingest_seed_cache")(p =>
       TextDedup.writeIncrementalIndex(corpus, p, k = 2))
 
@@ -554,8 +554,8 @@ object ExtQueries {
 
   /** [[ingestSeedIdx]]'s embedding twin. */
   private def embedSeedIdx(
-      s: SparkSession, dir: String, corpus: DataFrame): String =
-    seedIndexCopy(s, dir, "embeddings.parquet",
+      dir: String, corpus: DataFrame): String =
+    seedIndexCopy(dir, "embeddings.parquet",
       "embed_seed,stride=50,id<300", "graft_embed_seed_cache")(p =>
       Similarity.writeIvfIndex(corpus, p, centroidStride = 50L))
 
@@ -722,15 +722,14 @@ object ExtQueries {
         |  SELECT e.src AS id, r.label FROM edges e JOIN reach r ON e.dst = r.id)
         |SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id""".stripMargin)),
 
-    // Large-star/small-star connected components (Kiveris et al. SoCC'14)
-    // on a high-diameter input the verified-pair graph can't produce:
-    // chains linking consecutive doc_ids within each century block
-    // (diameter 99, one component per 100 ids). Exercises the
-    // edge-rewriting alternative to ext_dedup_clusters' label
-    // propagation end-to-end against the same recursive-CTE oracle shape;
-    // ground truth is the closed form cluster_id = doc_id - doc_id % 100.
-    Q("ext_dedup_clusters_star",
-      (s, dir) => TextDedup.clustersStar(
+    // Connected components on a high-diameter input the verified-pair
+    // graph can't produce: chains linking consecutive doc_ids within each
+    // century block (diameter 99, one component per 100 ids). Checks
+    // TextDedup.clusters on long paths against the same recursive-CTE
+    // oracle shape as ext_dedup_clusters; ground truth is the closed form
+    // cluster_id = doc_id - doc_id % 100.
+    Q("ext_dedup_clusters_chain",
+      (s, dir) => TextDedup.clusters(
         Tables.documents(s, dir)
           .filter(pmod(col("doc_id"), lit(100)) =!= 99)
           .select(col("doc_id").as("d1"), (col("doc_id") + 1).as("d2")))
@@ -864,7 +863,7 @@ object ExtQueries {
         // not see the previous trial's appended slices as corpus
         val run = java.util.UUID.randomUUID.toString.take(8)
         val out = graft.core.TmpDirs.scoped(s"ingest_loop_out_$run")
-        val idx = ingestSeedIdx(s, dir, corpus)
+        val idx = ingestSeedIdx(dir, corpus)
         graft.streaming.DedupStream.ingestTick(s, b0, idx, out, "b0",
           k = 2, tau = 0.8, maxShingleDf = Long.MaxValue): Unit
         graft.streaming.DedupStream.ingestTick(s, b1, idx, out, "b1",
@@ -888,7 +887,7 @@ object ExtQueries {
         val (corpus, b0, b1) = ingestLoopBatches(docs)
         val run = java.util.UUID.randomUUID.toString.take(8)
         val out = graft.core.TmpDirs.scoped(s"ingest_ac_out_$run")
-        val idx = ingestSeedIdx(s, dir, corpus)
+        val idx = ingestSeedIdx(dir, corpus)
         graft.streaming.DedupStream.ingestTick(s, b0, idx, out, "b0",
           k = 2, tau = 0.8, maxShingleDf = Long.MaxValue): Unit
         require(graft.streaming.DedupStream.compactIfNeeded(
@@ -914,7 +913,7 @@ object ExtQueries {
         val (corpus, b0, b1) = embedLoopBatches(emb)
         val run = java.util.UUID.randomUUID.toString.take(8)
         val out = graft.core.TmpDirs.scoped(s"embed_loop_out_$run")
-        val idx = embedSeedIdx(s, dir, corpus)
+        val idx = embedSeedIdx(dir, corpus)
         graft.streaming.EmbedIngest.ingestTick(
           s, b0, idx, out, "b0", tau = 0.8, nProbe = 2): Unit
         graft.streaming.EmbedIngest.ingestTick(
@@ -937,7 +936,7 @@ object ExtQueries {
         val (corpus, b0, b1) = embedLoopBatches(emb)
         val run = java.util.UUID.randomUUID.toString.take(8)
         val out = graft.core.TmpDirs.scoped(s"embed_ac_out_$run")
-        val idx = embedSeedIdx(s, dir, corpus)
+        val idx = embedSeedIdx(dir, corpus)
         graft.streaming.EmbedIngest.ingestTick(
           s, b0, idx, out, "b0", tau = 0.8, nProbe = 2): Unit
         require(graft.streaming.EmbedIngest.compactIfNeeded(
@@ -965,7 +964,7 @@ object ExtQueries {
         val (corpus, b0, b1) = embedLoopBatches(emb)
         val run = java.util.UUID.randomUUID.toString.take(8)
         val out = graft.core.TmpDirs.scoped(s"embed_rb_out_$run")
-        val idx = embedSeedIdx(s, dir, corpus)
+        val idx = embedSeedIdx(dir, corpus)
         graft.streaming.EmbedIngest.ingestTick(
           s, b0, idx, out, "b0", tau = 0.8, nProbe = 2): Unit
         graft.core.FsPaths.rebuildAndSwap(s, idx) { dst =>

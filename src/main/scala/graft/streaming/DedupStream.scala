@@ -58,7 +58,6 @@ object DedupStream {
       maxShingleDf: Long = 1000L,
       idCol: String = "doc_id",
       textCol: String = "text",
-      bloomBits: Option[Int] = None,
       maxTokens: Option[Int] = None): Long = {
     import org.apache.spark.sql.expressions.Window
     // maxTokens: the ingest-side length cap (`Curation.lengthCap`,
@@ -88,7 +87,7 @@ object DedupStream {
     val (corpusHashes, shOld, dfOld) =
       TextDedup.indexSides(spark, indexDir, idCol, Some(batchTag))
     val exactSurvivors = TextDedup.exactSurvivorsVsHashes(
-      intraExact, corpusHashes, textCol, bloomBits, bloomHashes = 5).persist()
+      intraExact, corpusHashes, textCol, bloomBits = None, bloomHashes = 5).persist()
     val shNew = TextDedup.shingles(exactSurvivors, k, idCol, textCol).persist()
     try {
       shNew.count() // fill both caches before the multi-consumer fan-out
@@ -145,7 +144,6 @@ object DedupStream {
       maxShingleDf: Long = 1000L,
       idCol: String = "doc_id",
       textCol: String = "text",
-      bloomBits: Option[Int] = None,
       maxTokens: Option[Int] = None,
       maxSlices: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery =
     SlicedIngest.start(stream, textIndex, indexDir, checkpointDir) {
@@ -153,7 +151,7 @@ object DedupStream {
         maxSlices.foreach(m => compactIfNeeded(spark, indexDir, m, currentTag = tag))
     } { (spark, df, tag) =>
       ingestTick(spark, df, indexDir, outDir, tag,
-        k, tau, maxShingleDf, idCol, textCol, bloomBits, maxTokens): Unit
+        k, tau, maxShingleDf, idCol, textCol, maxTokens): Unit
     }
 
   /** The text index: `hashes/shingles/df` slices over one `base`. */

@@ -50,8 +50,7 @@ object DriftStream {
   private def windowed(df: DataFrame, tsCol: String, column: String,
       spine: Seq[(String, Long)], windowDur: String): DataFrame =
     project(
-      windowedAgg(df, tsCol, column, Quality.histogramAggs(column, spine),
-        windowDur),
+      windowedAgg(df, tsCol, Quality.histogramAggs(column, spine), windowDur),
       spine.map { case (c, n) => (lit(c), n) }, "category")
 
   /** Streaming per-window NUMERIC PSI against a static reference's exact
@@ -76,12 +75,12 @@ object DriftStream {
       spine: (Seq[Double], Seq[Long]), windowDur: String): DataFrame = {
     val (edges, refCounts) = spine
     project(
-      windowedAgg(df, tsCol, column,
+      windowedAgg(df, tsCol,
         Quality.bucketHistogramAggs(column, edges, refCounts.size), windowDur),
       refCounts.zipWithIndex.map { case (n, i) => (lit(i), n) }, "bucket")
   }
 
-  private def windowedAgg(df: DataFrame, tsCol: String, column: String,
+  private def windowedAgg(df: DataFrame, tsCol: String,
       aggs: Seq[org.apache.spark.sql.Column], windowDur: String): DataFrame =
     // Filter on the EVENT TIME, not the monitored column: the histogram
     // aggs null-guard internally, and a window whose monitored column

@@ -262,6 +262,37 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("clusters: the distributed loop labels a diameter-1000 chain in 11 rounds") {
+    // chain 0-1-2-...-1000: one component, diameter 1000 — the worst case
+    // for naive propagation (1000 rounds). Pointer jumping doubles each
+    // label's reach per round: 10 rounds of progress (2^10 > 1000) plus
+    // one stability-detect round. Both are deterministic, so a regression
+    // in the loop's progress per round shows up here.
+    val chain = spark.range(1000).select(col("id").as("d1"), (col("id") + 1).as("d2"))
+    var rounds = -1
+    val got = TextDedup.clusters(chain, maxIter = 50,
+      localFinishMaxEdges = -1, roundCounter = r => rounds = r)
+      .select(col("id").cast("long"), col("cluster_id").cast("long"))
+      .as[(Long, Long)].collect().toMap
+    assert(got.size == 1001)
+    assert(got.values.forall(_ == 0L), "every chain vertex labels to the minimum 0")
+    assert(rounds == 11, s"rounds moved: $rounds")
+  }
+
+  test("clusters: null endpoints and self-pairs, on the local and distributed paths") {
+    // a null endpoint carries no edge, but its non-null side is still a
+    // vertex (a singleton); a self-pair is a singleton; both-null drops
+    val pairs = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 3L), (7L, 7L), (9L, null), (null, 4L), (null, null))
+      .toDF("d1", "d2")
+    val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 9L, 4L -> 4L)
+    val local = TextDedup.clusters(pairs).as[(Long, Long)].collect().toMap
+    val dist = TextDedup.clusters(pairs, localFinishMaxEdges = -1)
+      .as[(Long, Long)].collect().toMap
+    assert(local == expect)
+    assert(dist == expect)
+  }
+
   test("jaccardPairs/incrementalSurvivors with a reliable checkpoint dir equal the default path") {
     // the checkpointDir option swaps executor-memory localCheckpoint for a
     // reliable checkpoint (the cluster-survivability path) — results must

@@ -80,4 +80,30 @@ class ErrorRulesSpec extends AnyFunSuite {
         |}""".stripMargin
     assert(Rules.parseJson(json).toSet == Rules.referenceDefaults.toSet)
   }
+
+  test("parser rejects a non-numeric limit, naming the key and the kind") {
+    def rejected(rule: String): String =
+      intercept[IllegalArgumentException](Rules.parseJson(s"""{"AS_VacuumUnits": $rule}"""))
+        .getMessage
+    Seq("""{"error_if_above": "seventy"}""", """{"error_if_above": null}""",
+      """{"error_if_above": true}""").foreach { rule =>
+      val msg = rejected(rule)
+      assert(msg.contains("AS_VacuumUnits") && msg.contains("error_if_above"), msg)
+    }
+    val range = rejected("""{"error_if_outside_range": [60.0]}""")
+    assert(range.contains("AS_VacuumUnits") && range.contains("error_if_outside_range"), range)
+    val elem = rejected("""{"error_if_outside_range": [60.0, "high"]}""")
+    assert(elem.contains("error_if_outside_range"), elem)
+  }
+
+  test("parser reads a numeric string limit as its number") {
+    val json =
+      """{
+        |  "AS_VacuumUnits": {"error_if_above": "70"},
+        |  "PickForce": {"error_if_outside_range": ["60", 120.0]}
+        |}""".stripMargin
+    assert(Rules.parseJson(json) == Seq(
+      graft.model.EventRule("AS_VacuumUnits", "AS_Check", Threshold.Above(70.0)),
+      graft.model.EventRule("PP_Force", "Pick_Check", Threshold.OutsideRange(60.0, 120.0))))
+  }
 }

@@ -23,11 +23,10 @@ class FunnelSpec extends AnyFunSuite {
 
   private val steps = Seq("view", "click", "purchase")
 
-  private def summary(rows: Seq[(Long, String, Timestamp)],
-                      withinUs: Option[Long] = None): Map[String, (Long, Int)] =
+  private def summary(rows: Seq[(Long, String, Timestamp)]): Map[String, (Long, Int)] =
     Funnel.conversionSummary(
       rows.toDF("user_id", "event_type", "t"),
-      "user_id", "event_type", "t", steps, withinUs)
+      "user_id", "event_type", "t", steps)
       .collect()
       .map(r => r.getString(1) -> (r.getLong(2), r.getInt(0)))
       .toMap
@@ -65,18 +64,6 @@ class FunnelSpec extends AnyFunSuite {
       (1L, "purchase", ts("2024-01-01 11:30:00")))
     val got = summary(rows)
     assert(got("purchase")._1 == 1L)
-  }
-
-  test("withinUs bounds the whole chain relative to step 1") {
-    val rows = Seq(
-      (1L, "view", ts("2024-01-01 10:00:00")),
-      (1L, "click", ts("2024-01-01 10:30:00")),
-      (1L, "purchase", ts("2024-01-01 12:00:01")), // 1s past the 2h budget
-      (2L, "view", ts("2024-01-01 10:00:00")),
-      (2L, "click", ts("2024-01-01 10:30:00")),
-      (2L, "purchase", ts("2024-01-01 11:59:59")))
-    val got = summary(rows, withinUs = Some(2L * 3600 * 1000000))
-    assert(got("click")._1 == 2L && got("purchase")._1 == 1L)
   }
 
   test("conversion fractions divide by the step-1 population") {

@@ -61,25 +61,6 @@ class HourlyRollupSpec extends AnyFunSuite {
     assert(row.getAs[Long]("place_force_error_count") == 0L)
   }
 
-  test("approx_count_distinct opt-in stays within rsd of the exact count") {
-    Fxt.ensure(spark)
-    val clean = spark.read.parquet(graft.fixtures.Fixtures.cleanParquet)
-    val (_, cycles) = CycleDetection.detect(clean)
-    val exact = HourlyRollup.cycleSummary(cycles)
-      .select("summary_date", "hour_of_day", "machine_id", "cycle_count")
-      .as[(java.sql.Date, Int, String, Long)].collect()
-      .map { case (d, h, m, c) => ((d.toString, h, m), c) }.toMap
-    val approx = HourlyRollup.cycleSummary(cycles, approxDistinct = true)
-      .select("summary_date", "hour_of_day", "machine_id", "cycle_count")
-      .as[(java.sql.Date, Int, String, Long)].collect()
-    assert(approx.nonEmpty)
-    approx.foreach { case (d, h, m, c) =>
-      val e = exact((d.toString, h, m))
-      assert(math.abs(c - e) <= math.max(2L, (e * 0.05).toLong),
-        s"approx $c vs exact $e for ($d,$h,$m)")
-    }
-  }
-
   test("events bucket to the hour of their cycle's START timestamp") {
     // cycle starts at 00:59:59.900, its check lands at 01:00:00.100 —
     // the check must be counted in hour 0, not hour 1

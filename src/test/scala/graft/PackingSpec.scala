@@ -68,8 +68,7 @@ class PackingSpec extends AnyFunSuite {
     // 9 tokens: the tail chunk is short
     assert(got(3L).last == (("v7 v8 v9", 3)) && got(3L).size == 4)
     // coverage: every token position appears in at least one chunk
-    val covered = got(1L).zipWithIndex.flatMap { case ((t, _), i) =>
-      t.split(" ").toSeq }.toSet
+    val covered = got(1L).flatMap { case (t, _) => t.split(" ").toSeq }.toSet
     assert(covered == (1 to 10).map(i => s"w$i").toSet)
   }
 

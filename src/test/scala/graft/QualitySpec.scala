@@ -305,20 +305,6 @@ class QualitySpec extends AnyFunSuite {
     assert(ok == Seq(("a", 3L), ("(other)", 1L)))
   }
 
-  test("approxQuantileEdges: exact below the accuracy bound, psi swap agrees") {
-    val ref = (1 to 1000).map(_.toDouble).toDF("value")
-    // n < accuracy -> GK summaries are exact -> identical edges
-    assert(Quality.approxQuantileEdges(ref, "value", 10) ==
-      Quality.quantileEdges(ref, "value", 10))
-    // and therefore the whole PSI output is identical on this data
-    val cur = (501 to 1500).map(_.toDouble).toDF("value")
-    val exact = Quality.psiDrift(ref, cur, "value", 10)
-      .collect().map(_.toSeq).toSet
-    val approx = Quality.psiDrift(ref, cur, "value", 10, exactEdges = false)
-      .collect().map(_.toSeq).toSet
-    assert(exact == approx)
-  }
-
   test("ksDriftBinned: lower bound on exact D, equal when edges = distinct values") {
     val r = Seq(1.0, 2.0, 3.0, 4.0).toDF("value")
     val c = Seq(3.0, 4.0, 5.0, 6.0).toDF("value")

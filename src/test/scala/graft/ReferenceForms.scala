@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.HourlyRollup
+
 /** Plain column-expression twins of the engine's custom aggregates and
-  * codegen'd expressions. The parity specs pin the engine's forms
-  * bit-identical to these.
+  * codegen'd expressions, and batch expectations of the streaming forms.
+  * The parity specs pin the engine's forms against these.
   */
 object ReferenceForms {
 
@@ -45,4 +47,20 @@ object ReferenceForms {
     }.reduce[Column](_.bitwiseOR(_))
     votes.select(col(idCol), sig.as("simhash"))
   }
+
+  /** The batch hourly summary with the event-side enrichment cycles
+    * separated from the cycle-stat cycles: an hour whose trailing cycle
+    * is still open keeps its events on the event side while its
+    * not-yet-final cycle row is absent from the stats (which then
+    * zero-fill). This is the batch expectation of
+    * `StreamingPipeline.hourlySummaryStream`, which never emits the row
+    * of a cycle that has not closed.
+    */
+  def hourlySummary(
+      flaggedEvents: DataFrame,
+      enrichCycles: DataFrame,
+      statCycles: DataFrame): DataFrame =
+    HourlyRollup.finishSummary(HourlyRollup.cycleSummary(statCycles)
+      .join(HourlyRollup.eventSummary(flaggedEvents, enrichCycles),
+        Seq("summary_date", "hour_of_day", "machine_id"), "outer"))
 }

@@ -213,32 +213,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(codes7 == codes)
   }
 
-  test("PQ codebooks trained on a bounded sample: deterministic, recall holds") {
-    // the 100 TB configuration: Lloyd runs over the trainSample
-    // hash-smallest vectors only (build cost decoupled from corpus
-    // size), the encode pass still covers everything. Pins (a) the
-    // sample is partitioning-independent — bit-identical codebooks from
-    // different repartitionings — and (b) sample-trained recall@10 stays
-    // above the family floor on this corpus.
-    val n = (emb.count() / 2).toInt
-    val cbS = Similarity.pqCodebooks(emb, m = 8, ks = 16, maxIter = 3,
-      trainSample = Some(n))
-    val cbS9 = Similarity.pqCodebooks(emb.repartition(9), m = 8, ks = 16,
-      maxIter = 3, trainSample = Some(n))
-    val key = (df: org.apache.spark.sql.DataFrame) =>
-      df.as[(Int, Int, Seq[Double])].collect()
-        .map(r => (r._1, r._2) -> r._3).toMap
-    assert(key(cbS) == key(cbS9), "sample-trained codebooks drift across partitionings")
-    val queries = emb.filter($"vec_id" < 10)
-    val exact = Similarity.topK(emb, queries, k = 10)
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val pq = Similarity.pqTopK(emb, queries, k = 10, m = 8, ks = 16,
-      maxIter = 3, rerank = 8, trainSample = Some(n))
-      .select("q_id", "n_id").as[(Long, Long)].collect().toSet
-    val recall = (exact intersect pq).size.toDouble / exact.size
-    assert(recall >= 0.5, s"sample-trained pq recall@10 $recall")
-  }
-
   test("PQ ADC top-k with exact re-rank: recall@10 vs brute force") {
     val queries = emb.filter($"vec_id" < 10)
     val exact = Similarity.topK(emb, queries, k = 10)
@@ -351,7 +325,7 @@ class SimilaritySpec extends AnyFunSuite {
       nDups <- Gen.choose(5, 10)
     } yield {
       val members = centers.zip(sizes).flatMap { case (c, n) =>
-        (0 until n).map(i => c) // jitter applied below, index-aligned
+        (0 until n).map(_ => c) // jitter applied below, index-aligned
       }.zip(jitters).map { case (c, j) =>
         c.zip(j).map { case (a, b) => a + b }
       }

@@ -147,7 +147,7 @@ class StreamingSpec extends AnyFunSuite {
     val statCycles = cycles.join(lastSeq, Seq("machine_id"))
       .filter(col("cycle_seq") < col("mx"))
       .drop("mx")
-    val expected = graft.ops.HourlyRollup.hourlySummary(flagged, cycles, statCycles)
+    val expected = ReferenceForms.hourlySummary(flagged, cycles, statCycles)
 
     assert(streamed.columns.toSeq == expected.columns.toSeq)
     assert(streamed.count() == expected.count())
@@ -240,7 +240,7 @@ class StreamingSpec extends AnyFunSuite {
       col("machine_id"), col("cycle_count"), col("as_vacuum_error_count"))
       .as[(String, Int, String, Long, Long)].collect().toSet
     val expected = key(
-      graft.ops.HourlyRollup.hourlySummary(flagged, cycles, statCycles))
+      ReferenceForms.hourlySummary(flagged, cycles, statCycles))
     val got = key(JdbcSinks.read(spark, url, "replay_sum"))
     assert(got == expected)
   }
@@ -303,7 +303,7 @@ class StreamingSpec extends AnyFunSuite {
       col("pick_force_error_count"))
       .as[(String, Int, String, Long, Long, Long)].collect().toSet
     val expected = key(
-      graft.ops.HourlyRollup.hourlySummary(flagged, cycles, statCycles))
+      ReferenceForms.hourlySummary(flagged, cycles, statCycles))
     val got = key(JdbcSinks.read(spark, url, "stream_full"))
     assert(got == expected)
   }
@@ -361,7 +361,7 @@ class StreamingSpec extends AnyFunSuite {
       col("pick_force_error_count"))
       .as[(String, Int, String, Long, Long, Long)].collect().toSet
     val expected = key(
-      graft.ops.HourlyRollup.hourlySummary(flagged, cycles, statCycles))
+      ReferenceForms.hourlySummary(flagged, cycles, statCycles))
 
     val spanning = cycles.filter(col("cycle_start_ts") < lit(java.sql.Timestamp.from(split)) &&
       unix_micros(col("cycle_start_ts")) + col("cycle_time_seconds") * 1e6 >
