@@ -629,6 +629,18 @@ object Bench {
     System.out.flush()
   }
 
+  /** Writes `content` to `path` through a sibling temp file and one
+    * atomic move over it, so a failed write or a kill mid-way leaves the
+    * previous file whole (the next run's `host_speed_ratio` reads it). */
+  private[graft] def replaceFile(path: String, content: String): Unit = {
+    val dst = java.nio.file.Paths.get(path)
+    val tmp = java.nio.file.Paths.get(path + ".tmp")
+    java.nio.file.Files.writeString(tmp, content)
+    java.nio.file.Files.move(tmp, dst,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** Prints the ONE driver-graded JSON line (shape unchanged since round 1:
     * median per query) and writes the complete self-defending result —
     * per-trial times, loadavg before/after each query, process-CPU — to
@@ -684,13 +696,7 @@ object Bench {
            |  }
            |}
            |""".stripMargin
-      val tmp = new java.io.File(fullPath + ".tmp")
-      val w = new java.io.PrintWriter(tmp, "UTF-8")
-      try w.print(json) finally w.close()
-      val dst = new java.io.File(fullPath)
-      if (dst.exists()) dst.delete()
-      if (!tmp.renameTo(dst))
-        System.err.println(s"[bench] rename to $fullPath failed")
+      replaceFile(fullPath, json)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] full-result write failed: ${e.getMessage}")
     }

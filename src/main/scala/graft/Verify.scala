@@ -19,15 +19,36 @@ object Verify {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** `<sfDir> <outDir>`, or the usage line for any other arity. */
+  private[graft] def parseArgs(args: Seq[String]): Either[String, (String, String)] =
+    args match {
+      case Seq(sfDir, outDir) => Right((sfDir, outDir))
+      case _ => Left("usage: Verify <sfDir> <outDir>")
+    }
+
+  /** The names of a subset filter that name no catalog entry, sorted. */
+  private[graft] def unknownNames(only: Set[String], known: Set[String]): Seq[String] =
+    only.diff(known).toSeq.sorted
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val spark = rawDriverSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val (sfDir, outDir) = parseArgs(args.toSeq) match {
+      case Right(a) => a
+      case Left(usage) => System.err.println(usage); sys.exit(2)
+    }
     // Optional name filter for local iteration (comma-separated); the
     // driver never sets it, so driver runs always dump the full catalog.
+    // A misspelt name is an error, not a silently skipped entry.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
+    val unknown = unknownNames(only, SparkEntry.queries.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown SPARK_GRAFT_ONLY entries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    val cpus = graft.tools.BenchUtil.envPositiveInt("SPARK_GRAFT_CPUS", 4)
+    val spark = rawDriverSession(cpus.toString)
+    spark.sparkContext.setLogLevel("WARN")
+    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

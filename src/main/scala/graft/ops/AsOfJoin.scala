@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** As-of (temporal point-in-time) join — the operator Spark's built-in
   * joins lack: for every left row, attach the single most recent right
-  * row with the same key and `right.time <= left.time` (or strictly
-  * `<`), LEFT-OUTER style (no prior right row ⇒ nulls). The canonical
+  * row with the same key and `right.time <= left.time` (an equal-time
+  * right row matches), LEFT-OUTER style (no prior right row ⇒ nulls). The canonical
   * uses are event attribution ("which view preceded this purchase") and
   * point-in-time feature lookup ("the sensor state in force when this
   * reading happened").
@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * the plan you want when both sides are 100 TB event streams. Within
   * a key, ties on time are resolved deterministically: the right row
   * with the greatest `rightTiebreak` wins, and an equal-time right row
-  * sorts before (inclusive) or after (strict) the left row.
+  * sorts before the left row, so it is visible to it.
   */
 object AsOfJoin {
 
@@ -36,8 +36,6 @@ object AsOfJoin {
     *                      prefixing).
     * @param rightTiebreak right column ordering equal-time right rows —
     *                      the greatest value wins (e.g. an event id).
-    * @param inclusive     true ⇒ `right.time <= left.time` (an equal-time
-    *                      right row matches); false ⇒ strictly earlier.
     * @param rightPrefix   prefix for the attached right columns.
     */
   def asOf(
@@ -48,7 +46,6 @@ object AsOfJoin {
       rightTime: String,
       rightCols: Seq[String],
       rightTiebreak: String,
-      inclusive: Boolean = true,
       rightPrefix: String = "r_"): DataFrame = {
     // Internal helper columns are derived from the input schemas instead
     // of hardcoded: a left or right frame that already contains a column
@@ -87,14 +84,13 @@ object AsOfJoin {
       .withColumn(cR, lit(null).cast(rType))
       .unionByName(rTagged.withColumn(cL, lit(null).cast(lType)))
 
-    // Equal-time ordering encodes the bound: inclusive ⇒ right (side 0)
-    // sorts before left (side 1) and is visible to it; strict ⇒ left
-    // first. The side column fully separates left from right at equal
-    // time, so the tiebreak only orders right rows among themselves —
-    // ascending, so `last` picks the greatest.
-    val sideOrder = if (inclusive) col(cSide).asc else col(cSide).desc
+    // Equal-time ordering encodes the `<=` bound: right (side 0) sorts
+    // before left (side 1) and is visible to it. The side column fully
+    // separates left from right at equal time, so the tiebreak only
+    // orders right rows among themselves — ascending, so `last` picks
+    // the greatest.
     val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(cT).asc, sideOrder, col(cTie).asc)
+      .orderBy(col(cT).asc, col(cSide).asc, col(cTie).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     unioned.withColumn(cM, last(col(cR), ignoreNulls = true).over(w))

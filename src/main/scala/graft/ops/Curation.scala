@@ -58,18 +58,14 @@ object Curation {
     * per-doc window; see TextDedup.scala's verify note). Map-only, no
     * shuffle.
     *
-    * `truncate = true` (default): every row survives; text is cut to its
-    * first `maxTokens` whitespace tokens. `truncate = false`: over-long
-    * rows are REJECTED (dropped). Either way the audit rides on the
-    * output — `n_tokens_orig` and the 0/1 `capped` flag (in reject mode
-    * `capped` marks nothing downstream but keeps the schema stable for
-    * pipelines that log both modes), so a curation report can count and
-    * attribute what the cap touched without a second scan.
+    * Every row survives; an over-long text is cut to its first
+    * `maxTokens` whitespace tokens. The audit rides on the output —
+    * `n_tokens_orig` and the 0/1 `capped` flag — so a curation report can
+    * count and attribute what the cap touched without a second scan.
     */
   def lengthCap(
       docs: DataFrame,
       maxTokens: Int,
-      truncate: Boolean = true,
       textCol: String = "text"): DataFrame = {
     require(maxTokens > 0, "maxTokens must be positive")
     // Token count drops empty tokens (the convention the shingle/n-gram
@@ -84,15 +80,13 @@ object Curation {
     // uncapped text passes through byte-identical.
     val ws = filter(split(col(textCol), " "), t => length(t) > 0)
     val rawN = size(split(col(textCol), " "))
-    val base = docs
+    docs
       .withColumn("n_tokens_orig", size(ws).cast("long"))
       .withColumn("capped",
         (col("n_tokens_orig") > maxTokens || rawN > maxTokens).cast("int"))
-    if (truncate)
-      base.withColumn(textCol,
+      .withColumn(textCol,
         when(col("capped") === 1, concat_ws(" ", slice(ws, 1, maxTokens)))
           .otherwise(col(textCol)))
-    else base.filter(col("capped") === 0)
   }
 
   /** The quality-gate stage alone: docs plus (n_words, quality_score),

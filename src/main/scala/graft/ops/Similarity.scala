@@ -42,8 +42,8 @@ object Similarity {
     * `defaultParallelism`.
     *
     * Two deliberate guards, both measured in the r20 A/B:
-    *  - QUADRATIC consumers only. The linear kernels (kmeansAssign /
-    *    ivfAssign argmax, Lloyd rounds, PQ subvector argmins, topK) are
+    *  - QUADRATIC consumers only. The linear kernels (the kmeansAssign
+    *    argmax, Lloyd rounds, PQ subvector argmins, topK) are
     *    milliseconds of serial work; spreading them re-pays a
     *    repartition exchange + an extra AQE stage per ACTION and made
     *    the job-tax-bound IVF/PQ family ~15-30% SLOWER.
@@ -175,6 +175,11 @@ object Similarity {
     * construction). Collision prob for angle θ is 1-(1-(1-θ/π)^p)^L —
     * p=4, L=8 gives ~0.75 recall at cos 0.4 while candidate volume stays
     * Σ bucket² per table ≪ n². See SimilaritySpec's measured-recall test.
+    *
+    * Exact-bucket collisions only, no multi-probe: visiting every
+    * 1-bit-flipped bucket multiplies one side's candidate rows by p+1,
+    * and at p=4 that cancels the bucketing gain (measured 1.6 s → 17 s
+    * on the sf0.1 `ext_ann_lsh` entry). Raise `numTables` for recall.
     */
   def lshPairs(
       emb: DataFrame,
@@ -182,7 +187,6 @@ object Similarity {
       numPlanes: Int = 4,
       numTables: Int = 8,
       dim: Int = 64,
-      multiProbe: Boolean = true,
       seed: Long = 42L,
       idCol: String = "vec_id",
       checkpointDir: Option[String] = None): DataFrame = {
@@ -205,20 +209,7 @@ object Similarity {
       .select(col(idCol), col("embedding"), col("nrm"),
         col("tb.table_id"), col("tb.bucket"))
       .persist()
-    // Multi-probe: one side of the join also visits every 1-bit-flipped
-    // bucket, so pairs whose sign patterns differ in exactly one plane
-    // still collide — per-table hit prob goes from q^p to
-    // q^p + p·q^(p-1)(1-q) at the cost of (p+1)× candidate rows on one
-    // side (NOT candidates²; flipping one side covers both directions
-    // since the flip relation is symmetric).
-    val aProbes =
-      if (!multiProbe) withB
-      else withB.select(
-        col(idCol), col("embedding"), col("nrm"), col("table_id"),
-        explode(array(
-          col("bucket") +: (0 until numPlanes).map(j =>
-            col("bucket").bitwiseXOR(lit(1 << j))): _*)).as("bucket"))
-    val a = aProbes.select(col("table_id"), col("bucket"), col(idCol).as("a_id"),
+    val a = withB.select(col("table_id"), col("bucket"), col(idCol).as("a_id"),
       col("embedding").as("a_emb"), col("nrm").as("a_nrm"))
     val b = withB.select(col("table_id"), col("bucket"), col(idCol).as("b_id"),
       col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
@@ -263,8 +254,8 @@ object Similarity {
       centroidStride: Long = 100L,
       nProbe: Int = 2,
       idCol: String = "vec_id"): DataFrame = {
-    val centroids = ivfCentroids(emb, centroidStride, idCol)
-    probeLists(ivfAssign(emb, centroids, idCol), centroids, queries, k, nProbe, idCol)
+    ivfTopKWithCentroids(emb, ivfCentroids(emb, centroidStride, idCol),
+      queries, k, nProbe, idCol)
   }
 
   /** [[ivfTopK]] with an EXPLICIT (frozen) centroid table instead of a
@@ -276,7 +267,7 @@ object Similarity {
   def ivfTopKWithCentroids(
       emb: DataFrame, centroids: DataFrame, queries: DataFrame,
       k: Int, nProbe: Int = 2, idCol: String = "vec_id"): DataFrame =
-    probeLists(ivfAssign(emb, centroids, idCol), centroids, queries, k, nProbe, idCol)
+    probeLists(ivfLists(emb, centroids, idCol), centroids, queries, k, nProbe, idCol)
 
   /** Deterministic coarse quantizer: hash-based centroid sampling
     * (id-value independent: works for non-contiguous / 1-based / hashed
@@ -291,24 +282,12 @@ object Similarity {
     else sampled
   }
 
-  /** Assign every vector to its nearest centroid (broadcast centroids;
-    * one pass, no shuffle beyond the final grouping).
+  /** Every vector's inverted list: [[kmeansAssign]]'s argmax against the
+    * coarse centroids, as the IVF columns (n_id, n_emb, list_id).
     */
-  private def ivfAssign(emb: DataFrame, centroids: DataFrame, idCol: String): DataFrame = {
-    val s = emb.sparkSession
-    // max-struct argmax (see kmeansAssign): map-side-combined, one row
-    // per vector crosses the exchange instead of one per centroid.
-    // NOT spread (r20, measured): n·k with broadcast centroids is a
-    // light linear kernel; a repartition's exchange + extra AQE stage
-    // cost more than it saves (ivf_indexed +0.4 s in the A/B)
-    emb.select(col(idCol), col("embedding"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(s)(col("embedding"), col("c_emb")))
-      .groupBy(col(idCol))
-      .agg(first(col("embedding")).as("n_emb"),
-        max(struct(col("c_cos"), (-col("c_id")).as("nid"))).as("m"))
-      .select(col(idCol).as("n_id"), col("n_emb"), (-col("m.nid")).as("list_id"))
-  }
+  private def ivfLists(emb: DataFrame, centroids: DataFrame, idCol: String): DataFrame =
+    kmeansAssign(emb, centroids, idCol)
+      .select(col(idCol).as("n_id"), col("embedding").as("n_emb"), col("cluster").as("list_id"))
 
   /** Rank the coarse centroids per query and keep the top `nProbe`
     * assignments: (q_id, q_emb, list_id), ties to the smallest centroid
@@ -363,16 +342,13 @@ object Similarity {
     * the semantic-dedup step of a training-data pipeline — it catches
     * paraphrase-level duplicates that n-gram methods miss.
     *
-    * Pairs default to the exact [[bruteForcePairs]] baseline (oracle-
-    * checkable); at corpus scale pass [[lshPairs]] output instead — the
-    * clustering is pair-source-agnostic.
+    * Pairs are the exact [[bruteForcePairs]] baseline (oracle-checkable).
     */
   def dedupByEmbedding(
       emb: DataFrame,
       tau: Double,
-      idCol: String = "vec_id",
-      pairs: Option[DataFrame] = None): DataFrame = {
-    val p = pairs.getOrElse(bruteForcePairs(emb, tau, idCol))
+      idCol: String = "vec_id"): DataFrame = {
+    val p = bruteForcePairs(emb, tau, idCol)
       .select(col("a_id").as("d1"), col("b_id").as("d2"))
     val cl = TextDedup.clusters(p).withColumnRenamed("id", idCol)
     emb.select(col(idCol))
@@ -396,8 +372,9 @@ object Similarity {
     // the window form's exchange is k× this one. Struct comparison is
     // field-lexicographic: highest cosine first, then highest -c_id =
     // smallest centroid id — the identical tie-break. NOT spread (r20,
-    // measured): see ivfAssign — the linear argmax kernel is cheaper
-    // than the exchange a spread adds (ext_kmeans_assign 0.23→0.35 s)
+    // measured): n·k with broadcast centroids is a light linear kernel;
+    // a repartition's exchange + extra AQE stage cost more than it saves
+    // (ext_kmeans_assign 0.23→0.35 s, ivf_indexed +0.4 s in the A/B)
     emb.select(col(idCol), col("embedding"))
       .crossJoin(broadcast(centroids))
       .withColumn("c_cos", cosine(s)(col("embedding"), col("c_emb")))
@@ -961,7 +938,7 @@ object Similarity {
       emb: DataFrame, centroids: DataFrame, dir: String, tag: String,
       idCol: String): Unit = {
     require(!tag.contains("/") && tag.nonEmpty, s"bad index batch tag: $tag")
-    ivfAssign(emb, centroids, idCol)
+    ivfLists(emb, centroids, idCol)
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$dir/lists/batch=$tag")

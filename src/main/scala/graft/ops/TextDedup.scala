@@ -466,9 +466,9 @@ object TextDedup {
     * exact-unique survivor docs, the near-dup pairs found among them, and
     * the final keeper docs (one per near-dup cluster). All lazy except
     * `nearDupPairs`, which is materialized once (localCheckpoint, or a
-    * reliable checkpoint when `checkpointDir` is set) on BOTH pair
-    * paths, so neither `clusters` nor repeated caller reads re-execute
-    * candidate generation.
+    * reliable checkpoint when `checkpointDir` is set), so neither
+    * `clusters` nor repeated caller reads re-execute candidate
+    * generation.
     */
   final case class DedupPipelineResult(
       exact: DataFrame,
@@ -491,11 +491,11 @@ object TextDedup {
     *   1. [[exactGroups]] collapses every byte-identical replication
     *      group to one keeper — a single hash-groupBy shuffle that
     *      removes ALL replication (measured 1.5× time at 10× input);
-    *   2. near-dup runs on the survivor set, where dfs are back to
-    *      natural levels and the cap is the boilerplate guard it was
-    *      designed to be ([[MinHashLsh]], the default strategy, uses
-    *      [[minHashPairs]] — itself measured exactly lossless under
-    *      replication — so even a still-dup-heavy survivor set is safe);
+    *   2. near-dup runs on the survivor set with the UNCAPPED
+    *      [[jaccardPairs]] (`maxShingleDf = Long.MaxValue`), so its pairs
+    *      are exactly the τ-pairs among the survivors — no df cap can
+    *      overflow, and PPJoin prefix/positional filtering bounds the
+    *      candidate volume;
     *   3. pairs among non-keeper replicas are IMPLIED by `exact`
     *      (every member duplicates its group's keeper), so nothing the
     *      direct path loses is lost here — DedupSpec pins the recovery
@@ -505,45 +505,20 @@ object TextDedup {
     * only unique content, so its bucket geometry is the natural corpus's;
     * `keepers` is two anti-join-shaped prunes off already-small tables.
     */
-  /** Near-dup candidate-generation strategy for [[dedupPipeline]] — a
-    * sealed config per path so each strategy carries ONLY the knobs that
-    * apply to it (a flat parameter list silently ignored `maxShingleDf`
-    * on the MinHash path and `numHashes`/`rowsPerBand` on the shingle
-    * path). */
-  sealed trait NearDupStrategy
-  /** Banded MinHash/LSH (the measured default): candidate volume is
-    * Σ bucket² over (band, band_hash) buckets; exactly lossless under
-    * replication (no df cap to overflow). */
-  final case class MinHashLsh(
-      numHashes: Int = 128, rowsPerBand: Int = 4) extends NearDupStrategy
-  /** Inverted-index shingle Jaccard with PPJoin-style pruning;
-    * `maxShingleDf` caps a shingle's posting list (dup-heavy corpora can
-    * overflow it — which is exactly why the pipeline runs exact-first). */
-  final case class ShingleJaccard(
-      maxShingleDf: Long = 1000L) extends NearDupStrategy
-
   def dedupPipeline(
       docs: DataFrame,
       k: Int = 2,
       tau: Double = 0.8,
-      strategy: NearDupStrategy = MinHashLsh(),
       idCol: String = "doc_id",
       textCol: String = "text",
       checkpointDir: Option[String] = None): DedupPipelineResult = {
     val groups = exactGroups(docs, idCol, textCol)
     val survivors = docs.join(
       groups.select(col("keeper_id").as(idCol)), Seq(idCol), "left_semi")
-    // the (small) pair list arrives already materialized: both pair
-    // paths are eager via their own persist contract, so clusters()
-    // below AND the caller's own reads of nearDupPairs never re-execute
-    // the LSH / inverted-index candidate generation
-    val pairs = strategy match {
-      case MinHashLsh(numHashes, rowsPerBand) =>
-        minHashPairs(survivors, k, numHashes, rowsPerBand, tau, idCol,
-          checkpointDir)
-      case ShingleJaccard(maxShingleDf) =>
-        jaccardPairs(survivors, k, tau, maxShingleDf, idCol, checkpointDir)
-    }
+    // the (small) pair list arrives already materialized (jaccardPairs'
+    // persist contract), so clusters() below AND the caller's own reads
+    // of nearDupPairs never re-execute the candidate generation
+    val pairs = jaccardPairs(survivors, k, tau, Long.MaxValue, idCol, checkpointDir)
     val losers = clusters(pairs, checkpointDir = checkpointDir)
       .filter(col("cluster_id") =!= col("id"))
       .select(col("id").as(idCol))
@@ -591,47 +566,64 @@ object TextDedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       checkpointDir: Option[String] = None,
-      bloomBits: Option[Int] = None,
-      bloomHashes: Int = 5): DataFrame = {
-    // exact layer: one anti-join on the 128-bit content hash. Persisted:
-    // it feeds BOTH the batch shingling and the final anti-join.
+      bloomBits: Option[Int] = None): DataFrame = {
     val corpusHashes = corpus.select(md5(col(textCol)).as("__h")).distinct()
-    val exactSurvivors = exactSurvivorsVsHashes(
-      newDocs, corpusHashes, textCol, bloomBits, bloomHashes).persist()
-    // near-dup layer: inverted-index candidates NEW × CORPUS only. The
-    // df cap applies to the CORPUS posting lists (stop-shingles are a
-    // corpus property); verification always uses full sets. Both shingle
-    // tables are consumed twice (candidate generation + verification), so
-    // materialize them for the scope of this call — same policy as
-    // jaccardPairs — and evaluate the (batch-bounded) result eagerly via
-    // localCheckpoint so no cache entry outlives the function.
-    val shNew = shingles(exactSurvivors, k, idCol, textCol).persist()
+    // the corpus side is computed here, not read from an index: its
+    // shingle table feeds the df count, the candidate join AND the
+    // verification, so persist it and fill it with one job before
+    // vsCorpusLayer fans out (see jaccardPairs — parallel consumer
+    // stages otherwise race the lazy persist and recompute the lineage)
     val shOld = shingles(corpus, k, idCol, textCol).persist()
     try {
-      // fill the caches with one cheap job each BEFORE the multi-consumer
-      // evaluation (see jaccardPairs — parallel consumer stages otherwise
-      // race the lazy persist and recompute the lineage); shNew.count()
-      // also fills exactSurvivors' cache transitively
-      shNew.count()
       shOld.count()
       val dfOld = shOld.groupBy("shingle").agg(count(lit(1)).as("df"))
-      nearDupSurvivors(exactSurvivors, shNew, shOld, dfOld,
-        tau, maxShingleDf, idCol, checkpointDir)
+      vsCorpusLayer(newDocs, (corpusHashes, shOld, dfOld), k, tau,
+        maxShingleDf, idCol, textCol, checkpointDir, bloomBits)((survivors, _) => survivors)
+    } finally {
+      shOld.unpersist()
+      ()
+    }
+  }
+
+  /** The vs-corpus dedup layer of [[incrementalSurvivors]],
+    * [[incrementalSurvivorsIndexed]] and the ingest tick, written once:
+    * the exact anti-join against the corpus hashes
+    * ([[exactSurvivorsVsHashes]]), persisted; the survivors' shingle
+    * table, persisted; ONE fill `count()` (it also fills the exact
+    * survivors' cache transitively) before the multi-consumer fan-out;
+    * then [[nearDupSurvivors]]. `corpusSides` is (hashes, shingles, df)
+    * as [[indexSides]] returns them. `continue` receives the (eager)
+    * survivors and the cached batch shingle table — the tick reuses it
+    * for its intra-batch layer and its index append — and both caches
+    * are dropped when it returns.
+    */
+  private[graft] def vsCorpusLayer[T](
+      newDocs: DataFrame, corpusSides: (DataFrame, DataFrame, DataFrame),
+      k: Int, tau: Double, maxShingleDf: Long, idCol: String, textCol: String,
+      checkpointDir: Option[String], bloomBits: Option[Int])(
+      continue: (DataFrame, DataFrame) => T): T = {
+    val (corpusHashes, shOld, dfOld) = corpusSides
+    val exactSurvivors = exactSurvivorsVsHashes(
+      newDocs, corpusHashes, textCol, bloomBits).persist()
+    val shNew = shingles(exactSurvivors, k, idCol, textCol).persist()
+    try {
+      shNew.count()
+      continue(nearDupSurvivors(exactSurvivors, shNew, shOld, dfOld,
+        tau, maxShingleDf, idCol, checkpointDir), shNew)
     } finally {
       shNew.unpersist()
-      shOld.unpersist()
       exactSurvivors.unpersist()
       ()
     }
   }
 
-  /** Shared near-dup layer of the incremental forms and the ingest
-    * tick: candidates from batch-shingles ⋈ df-capped corpus posting
-    * lists, full-set verify, anti-join the losers out, materialized
-    * eagerly ([[eager]]). `shOld`/`dfOld` may be cached frames (the
-    * self-contained form) or parquet scans (the indexed form).
+  /** The near-dup half of [[vsCorpusLayer]]: candidates from
+    * batch-shingles ⋈ df-capped corpus posting lists, full-set verify,
+    * anti-join the losers out, materialized eagerly ([[eager]]).
+    * `shOld`/`dfOld` may be cached frames (the self-contained form) or
+    * parquet scans (the indexed form and the tick).
     */
-  private[graft] def nearDupSurvivors(
+  private def nearDupSurvivors(
       exactSurvivors: DataFrame, shNew: DataFrame, shOld: DataFrame,
       dfOld: DataFrame, tau: Double, maxShingleDf: Long, idCol: String,
       checkpointDir: Option[String]): DataFrame = {
@@ -759,23 +751,9 @@ object TextDedup {
       k: Int = 2,
       idCol: String = "doc_id",
       textCol: String = "text",
-      checkpointDir: Option[String] = None,
-      excludeBatchTag: Option[String] = None): DataFrame = {
-    val (corpusHashes, shOld, dfOld) =
-      indexSides(spark, indexDir, idCol, excludeBatchTag)
-    val exactSurvivors = exactSurvivorsVsHashes(
-      newDocs, corpusHashes, textCol, bloomBits = None, bloomHashes = 5).persist()
-    val shNew = shingles(exactSurvivors, k, idCol, textCol).persist()
-    try {
-      shNew.count()
-      nearDupSurvivors(exactSurvivors, shNew, shOld, dfOld,
-        tau, maxShingleDf, idCol, checkpointDir)
-    } finally {
-      shNew.unpersist()
-      exactSurvivors.unpersist()
-      ()
-    }
-  }
+      checkpointDir: Option[String] = None): DataFrame =
+    vsCorpusLayer(newDocs, indexSides(spark, indexDir, idCol, None), k, tau,
+      maxShingleDf, idCol, textCol, checkpointDir, bloomBits = None)((survivors, _) => survivors)
 
   /** The three reader frames of a persisted incremental index, own-tag
     * slices excluded. excludeBatchTag: a REPLAYED ingest tick must not
@@ -804,14 +782,14 @@ object TextDedup {
     (corpusHashes, shOld, dfOld)
   }
 
-  /** The exact dedup layer of the incremental forms and the ingest
-    * tick: anti-join the new batch against the corpus hash set,
-    * optionally Bloom-pruning the CORPUS side first (when to enable it:
-    * [[incrementalSurvivors]]). Lazy; callers own persistence.
+  /** The exact dedup layer of [[vsCorpusLayer]]: anti-join the new
+    * batch against the corpus hash set, optionally Bloom-pruning the
+    * CORPUS side first with a `bloomBits`-bit, 5-hash filter (when to
+    * enable it: [[incrementalSurvivors]]). Lazy; callers own persistence.
     */
-  private[graft] def exactSurvivorsVsHashes(
+  private def exactSurvivorsVsHashes(
       newDocs: DataFrame, corpusHashes: DataFrame, textCol: String,
-      bloomBits: Option[Int], bloomHashes: Int): DataFrame = {
+      bloomBits: Option[Int]): DataFrame = {
     val newHashed = newDocs.withColumn("__h", md5(col(textCol)))
     val exactBase = bloomBits match {
       case Some(m) =>
@@ -830,11 +808,12 @@ object TextDedup {
         // at every corpus scale up to 1M docs, 4.7×→1.5×, because the
         // corpus shuffle it was supposed to save survived untouched and
         // the MB-sized literal inflated every task binary ~7×.)
+        val nHashes = 5
         val bloom = graft.functions.BloomFilter.build(
-          newHashed.select(col("__h")), col("__h"), m, bloomHashes)
+          newHashed.select(col("__h")), col("__h"), m, nHashes)
         val corpusMaybe = corpusHashes.filter(
           graft.functions.BloomFilter.mightContain(
-            bloom, col("__h"), m, bloomHashes))
+            bloom, col("__h"), m, nHashes))
         newHashed.join(corpusMaybe, Seq("__h"), "left_anti")
       case None => newHashed.join(corpusHashes, Seq("__h"), "left_anti")
     }
@@ -861,7 +840,7 @@ object TextDedup {
     * row — ~|doc| strings, not a partition's worth — so the row size is
     * bounded by the largest single document, the same bound any exact
     * per-doc set comparison has. A corpus with pathological multi-GB
-    * single documents needs a length cap at ingest (truncate or reject),
+    * single documents needs a length cap at ingest (`Curation.lengthCap`),
     * not a different verify plan.
     */
   private def verifyJaccard(pairs: DataFrame, sh: DataFrame, tau: Double, idCol: String): DataFrame = {
@@ -1144,19 +1123,24 @@ object TextDedup {
   }
 
   /** SimHash near-dup pairs within `maxHamming` bits, candidate-generated
-    * by exact match on one of `numBlocks` equal bit blocks (pigeonhole:
-    * distance ≤ numBlocks-1 guarantees at least one identical block, so
-    * candidate generation is lossless for maxHamming ≤ numBlocks-1).
+    * by exact match on one of `numBlocks` equal bit blocks, where
+    * `numBlocks` is the smallest power of two above `maxHamming`
+    * (3 → 4, 5 and 7 → 8). Pigeonhole: a pair at distance ≤ numBlocks-1
+    * differs in at most numBlocks-1 blocks, so at least one block is
+    * identical and candidate generation is lossless — the pair set is
+    * exactly the `bit_count(a xor b) <= maxHamming` pairs over
+    * [[simHash]]; no fewer blocks (each wider, so fewer collisions)
+    * keeps that guarantee.
     */
   def simHashPairs(
       docs: DataFrame,
       maxHamming: Int = 3,
-      numBlocks: Int = 4,
       idCol: String = "doc_id"): DataFrame = {
-    require(64 % numBlocks == 0, "numBlocks must divide 64")
-    require(maxHamming <= numBlocks - 1, "pigeonhole needs maxHamming <= numBlocks-1")
+    require(maxHamming >= 0 && maxHamming < 64, s"maxHamming must be in [0, 63], got $maxHamming")
+    val numBlocks = math.max(1, Integer.highestOneBit(maxHamming) << 1)
     val bits = 64 / numBlocks
-    val mask = (1L << bits) - 1L
+    // one 64-bit block (maxHamming 0): a JVM shift by 64 is a shift by 0
+    val mask = if (bits == 64) -1L else (1L << bits) - 1L
     val sig = simHash(docs, idCol)
     val blocks = sig.select(
       col(idCol), col("simhash"),

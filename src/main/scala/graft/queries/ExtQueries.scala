@@ -750,13 +750,11 @@ object ExtQueries {
     // near-dup among the exact-unique survivors -> cluster keepers. This
     // is TextDedup.dedupPipeline, the documented scale default for
     // dup-heavy corpora (the df-cap recall collapse it prevents is
-    // measured in PLANS.md and pinned in DedupSpec). Jaccard stage
-    // uncapped here for oracle identity; the MinHash default's pair
-    // equivalence at tau=0.8 is pinned in DedupSpec.
+    // measured in PLANS.md and pinned in DedupSpec). Its near-dup stage
+    // is the uncapped jaccardPairs, so the pairs are exactly the oracle's
+    // tau-pairs among the survivors.
     Q("ext_dedup_pipeline",
-      (s, dir) => TextDedup.dedupPipeline(Tables.documents(s, dir),
-          k = 2, tau = 0.8,
-          strategy = TextDedup.ShingleJaccard(maxShingleDf = Long.MaxValue))
+      (s, dir) => TextDedup.dedupPipeline(Tables.documents(s, dir), k = 2, tau = 0.8)
         .keepers.select("doc_id"),
       Some("""WITH RECURSIVE grp AS (
         |  SELECT md5(text) AS h, min(doc_id) AS keeper
@@ -842,7 +840,7 @@ object ExtQueries {
           maxShingleDf = Long.MaxValue,
           // sized for the BATCH (the build side): ~110 hashes in 4096
           // bits ≈ 0.03% fpp, a 512-byte plan literal
-          bloomBits = Some(1 << 12), bloomHashes = 5).select("doc_id")
+          bloomBits = Some(1 << 12)).select("doc_id")
       },
       Some(incrementalOracle)),
 
@@ -1068,7 +1066,7 @@ object ExtQueries {
         |WHERE tr.split = 'train'
         |  AND tr.s IN (SELECT s FROM shingle WHERE split = 'test')""".stripMargin)),
 
-    // Ingest-side length cap (truncate mode): the guard the dedup
+    // Ingest-side length cap (it truncates): the guard the dedup
     // family's per-doc memory bounds assume. Map-only; the md5 of the
     // capped text pins the exact truncation point, not just the counts.
     Q("ext_length_cap",
@@ -1213,16 +1211,13 @@ object ExtQueries {
     // candidates are cosine-verified) and recall ≥ 0.5 (measured 0.57 /
     // 1.0 / 0.81 at sf0.001/0.01/0.1).
     Q("ext_ann_lsh",
-      // multiProbe off here: candidate volume scales with
-      // L·(p+1)·n²/2^p, and at p=4 the (p+1) probe factor cancels the
-      // bucketing gain (measured 1.6s → 17s at sf0.1). Probing pays only
-      // with more planes (p ≥ 8) or when recall, not throughput, is the
-      // binding constraint — it stays a library option with its recall
-      // pinned in SimilaritySpec.
+      // exact-bucket collisions, no multi-probe: candidate volume with
+      // probing scales with L·(p+1)·n²/2^p, and at p=4 the (p+1) probe
+      // factor cancels the bucketing gain (measured 1.6s → 17s at sf0.1)
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         val lsh = Similarity.lshPairs(emb, tau = 0.45,
-          numPlanes = 4, numTables = 8, multiProbe = false)
+          numPlanes = 4, numTables = 8)
         Verdicts.pairStats(Similarity.bruteForcePairs(emb, 0.45), lsh,
           ("a_id", "b_id"), ("a_id", "b_id"))
           .select(col("n_ref").as("n_exact"),

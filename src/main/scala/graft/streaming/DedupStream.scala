@@ -28,9 +28,12 @@ object DedupStream {
     *      batch-internal duplicate pair both survives the corpus checks
     *      (neither is in the index yet), so without this layer both
     *      copies would enter the corpus;
-    *   2. vs-corpus exact + near (Jaccard ≥ τ):
-    *      [[TextDedup.incrementalSurvivorsIndexed]] over the persisted
-    *      index — per-tick cost scales with the BATCH, never corpus²;
+    *   2. vs-corpus exact + near (Jaccard ≥ τ): the shared
+    *      `TextDedup.vsCorpusLayer` (the one behind
+    *      [[TextDedup.incrementalSurvivorsIndexed]]) over the persisted
+    *      index minus this tick's own slices, so a replayed tag does not
+    *      match itself — per-tick cost scales with the BATCH, never
+    *      corpus²;
     *   3. intra-batch NEAR: [[TextDedup.jaccardPairs]] +
     *      [[TextDedup.clusters]] over the (batch-bounded) survivors of
     *      layer 2 — min-id keeper per near-dup cluster.
@@ -60,8 +63,8 @@ object DedupStream {
       textCol: String = "text",
       maxTokens: Option[Int] = None): Long = {
     import org.apache.spark.sql.expressions.Window
-    // maxTokens: the ingest-side length cap (`Curation.lengthCap`,
-    // truncate mode) applied AT the operator boundary so the memory
+    // maxTokens: the ingest-side length cap (`Curation.lengthCap`, which
+    // truncates) applied AT the operator boundary so the memory
     // guard every per-doc shingle bound assumes cannot be forgotten
     // upstream; audit columns are dropped to keep the output schema =
     // the batch schema (run lengthCap yourself upstream to keep them)
@@ -76,43 +79,35 @@ object DedupStream {
       .withColumn("__rn", row_number().over(wExact))
       .filter(col("__rn") === 1)
       .drop("__h", "__rn")
-    // r19: the batch is shingled ONCE and the table reused by all three
-    // consumers that used to re-shingle independently — the vs-corpus
-    // near layer, the intra-batch jaccardPairs, and the index append
-    // (shingle rows are per-document, so an id semi-join on the cached
-    // table IS the re-shingle of any batch subset). Measured
-    // (QueryJobProfile / PLANS.md r14): each tick is fixed-tax-dominated
-    // small jobs, and the shingle pipeline (posexplode + window +
-    // distinct + persist fill) was paid 3× per tick.
-    val (corpusHashes, shOld, dfOld) =
-      TextDedup.indexSides(spark, indexDir, idCol, Some(batchTag))
-    val exactSurvivors = TextDedup.exactSurvivorsVsHashes(
-      intraExact, corpusHashes, textCol, bloomBits = None, bloomHashes = 5).persist()
-    val shNew = TextDedup.shingles(exactSurvivors, k, idCol, textCol).persist()
-    try {
-      shNew.count() // fill both caches before the multi-consumer fan-out
-      val vsCorpus = TextDedup.nearDupSurvivors(exactSurvivors, shNew,
-        shOld, dfOld, tau, maxShingleDf, idCol, checkpointDir = None)
-      // intra-batch near layer over the survivors' shingles — a cheap
-      // cached-table filter, not a re-shingle; the multi-consumer reads
-      // inside jaccardPairsOn re-evaluate only that filter
-      val shVs = shNew.join(
-        vsCorpus.select(col(idCol)), Seq(idCol), "left_semi")
-      val intraPairs = TextDedup.eager(
-        TextDedup.jaccardPairsOn(shVs, tau, maxShingleDf, idCol), None)
-      val losers = TextDedup.clusters(intraPairs)
-        .filter(col("cluster_id") =!= col("id"))
-        .select(col("id").as(idCol))
-      val keepers = vsCorpus.join(losers, Seq(idCol), "left_anti")
-      SlicedIngest.commit(keepers, outDir, batchTag) { kept =>
-        TextDedup.appendIndexSlicePrecomputed(kept,
-          shNew.join(kept.select(col(idCol)), Seq(idCol), "left_semi"),
-          indexDir, batchTag, idCol, textCol)
-      }
-    } finally {
-      shNew.unpersist()
-      exactSurvivors.unpersist()
-      ()
+    // r19: the batch is shingled ONCE (inside the vs-corpus layer) and
+    // the cached table reused by all three consumers that used to
+    // re-shingle independently — the vs-corpus near layer, the
+    // intra-batch jaccardPairs, and the index append (shingle rows are
+    // per-document, so an id semi-join on the cached table IS the
+    // re-shingle of any batch subset). Measured (QueryJobProfile /
+    // PLANS.md r14): each tick is fixed-tax-dominated small jobs, and the
+    // shingle pipeline (posexplode + window + distinct + persist fill)
+    // was paid 3× per tick.
+    TextDedup.vsCorpusLayer(intraExact,
+      TextDedup.indexSides(spark, indexDir, idCol, Some(batchTag)), k, tau,
+      maxShingleDf, idCol, textCol, checkpointDir = None, bloomBits = None) {
+      (vsCorpus, shNew) =>
+        // intra-batch near layer over the survivors' shingles — a cheap
+        // cached-table filter, not a re-shingle; the multi-consumer reads
+        // inside jaccardPairsOn re-evaluate only that filter
+        val shVs = shNew.join(
+          vsCorpus.select(col(idCol)), Seq(idCol), "left_semi")
+        val intraPairs = TextDedup.eager(
+          TextDedup.jaccardPairsOn(shVs, tau, maxShingleDf, idCol), None)
+        val losers = TextDedup.clusters(intraPairs)
+          .filter(col("cluster_id") =!= col("id"))
+          .select(col("id").as(idCol))
+        val keepers = vsCorpus.join(losers, Seq(idCol), "left_anti")
+        SlicedIngest.commit(keepers, outDir, batchTag) { kept =>
+          TextDedup.appendIndexSlicePrecomputed(kept,
+            shNew.join(kept.select(col(idCol)), Seq(idCol), "left_semi"),
+            indexDir, batchTag, idCol, textCol)
+        }
     }
   }
 

@@ -27,37 +27,31 @@ class AsOfJoinSpec extends AnyFunSuite {
     (1, ts("2024-01-01 00:00:20"), 102L, "c"))
     .toDF("k", "st", "state_id", "payload")
 
-  private def run(inclusive: Boolean) =
+  private def run() =
     AsOfJoin.asOf(reads, states, keys = Seq("k"), leftTime = "t", rightTime = "st",
-      rightCols = Seq("state_id", "payload"), rightTiebreak = "state_id",
-      inclusive = inclusive)
+      rightCols = Seq("state_id", "payload"), rightTiebreak = "state_id")
       .select("read_id", "r_state_id", "r_payload")
       .as[(String, Option[Long], Option[String])].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
 
   test("inclusive: equal-time right row matches; unmatched left gets nulls") {
-    val got = run(inclusive = true)
+    val got = run()
     assert(got("r1") == ((Some(101L), Some("b")))) // :10 state at the read instant
     assert(got("r2") == ((Some(102L), Some("c")))) // latest of the three
     assert(got("r3") == ((None, None)))            // key 2 never had a state
   }
 
-  test("strict: equal-time right row does NOT match") {
-    val got = run(inclusive = false)
-    assert(got("r1") == ((Some(100L), Some("a")))) // only the :05 state is earlier
-    assert(got("r2") == ((Some(102L), Some("c"))))
-  }
-
   test("equal-time right rows: greatest tiebreak wins, deterministically") {
     val dupStates = states.union(
-      Seq((1, ts("2024-01-01 00:00:05"), 99L, "z")).toDF("k", "st", "state_id", "payload"))
+      Seq((1, ts("2024-01-01 00:00:10"), 99L, "z")).toDF("k", "st", "state_id", "payload"))
     val got = AsOfJoin.asOf(
       reads.filter($"read_id" === "r1"), dupStates,
       keys = Seq("k"), leftTime = "t", rightTime = "st",
-      rightCols = Seq("state_id"), rightTiebreak = "state_id", inclusive = false)
+      rightCols = Seq("state_id"), rightTiebreak = "state_id")
       .select("r_state_id").as[Long].collect().toSeq
-    // two :05 states (99 and 100); the greater id is the match
-    assert(got == Seq(100L))
+    // two states at the read instant :10 (99 and 101), both visible;
+    // the greater id is the match
+    assert(got == Seq(101L))
   }
 
   test("inputs already containing __-prefixed columns do not collide with helpers") {

@@ -111,4 +111,13 @@ class BenchHistorySpec extends AnyFunSuite {
     // no committed file: nothing to divide by, and nothing to explain
     assert(Bench.priorCanaries("", 4) == Right((None, None)))
   }
+
+  test("replaceFile: replacing over an existing file leaves the new content") {
+    val dir = java.nio.file.Files.createTempDirectory("bench_replace")
+    val path = dir.resolve("bench_full.json").toString
+    Bench.replaceFile(path, "old")
+    Bench.replaceFile(path, "new")
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == "new")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".tmp")))
+  }
 }

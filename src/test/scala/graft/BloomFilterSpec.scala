@@ -53,7 +53,7 @@ class BloomFilterSpec extends AnyFunSuite {
     val plain = TextDedup.incrementalSurvivors(batch, corpus, k = 2, tau = 0.8)
       .select("doc_id").as[Long].collect().toSet
     val bloomed = TextDedup.incrementalSurvivors(batch, corpus, k = 2, tau = 0.8,
-      bloomBits = Some(1 << 12), bloomHashes = 5)
+      bloomBits = Some(1 << 12))
       .select("doc_id").as[Long].collect().toSet
     assert(bloomed == plain)
     assert(plain.nonEmpty && !plain.exists(_ >= 1000L), "exact dups must be dropped")
@@ -73,7 +73,7 @@ class BloomFilterSpec extends AnyFunSuite {
     val plain = TextDedup.incrementalSurvivors(batch, corpus, k = 2, tau = 0.8)
       .select("doc_id").as[Long].collect().toSet
     val bloomed = TextDedup.incrementalSurvivors(batch, corpus, k = 2, tau = 0.8,
-      bloomBits = Some(1 << 12), bloomHashes = 5)
+      bloomBits = Some(1 << 12))
       .select("doc_id").as[Long].collect().toSet
     assert(bloomed == plain)
     assert(!plain.contains(2000L), "exact dup must be dropped")

@@ -132,4 +132,24 @@ class CliSpec extends AnyFunSuite {
       assert(trialsArg(Seq(raw)) == Left(s"invalid trials '$raw' (expected a positive integer)"))
     }
   }
+
+  test("Verify CLI: a wrong argument count is the usage line, not a MatchError") {
+    assert(Verify.parseArgs(Seq("/sf", "/out")) == Right(("/sf", "/out")))
+    Seq(Nil, Seq("/sf"), Seq("/sf", "/out", "extra")).foreach { args =>
+      assert(Verify.parseArgs(args) == Left("usage: Verify <sfDir> <outDir>"))
+    }
+  }
+
+  test("Verify CLI: a malformed SPARK_GRAFT_CPUS is a named error, not a master-URL trace") {
+    assert(DailyAggregatorMain.positiveInt(Map("SPARK_GRAFT_CPUS" -> "four"), "SPARK_GRAFT_CPUS", 4) ==
+      Left("invalid SPARK_GRAFT_CPUS 'four' (expected a positive integer)"))
+    assert(DailyAggregatorMain.positiveInt(Map.empty, "SPARK_GRAFT_CPUS", 4) == Right(4))
+  }
+
+  test("Verify CLI: subset names are checked against the catalog") {
+    val known = SparkEntry.queries.keySet
+    assert(Verify.unknownNames(Set("ext_asof_join", "ext_ann_lsh"), known).isEmpty)
+    assert(Verify.unknownNames(Set("ext_asof_join", "ext_asof_jion", "q0"), known) ==
+      Seq("ext_asof_jion", "q0"))
+  }
 }

@@ -114,7 +114,7 @@ class PropertySpec extends AnyFunSuite {
     List.tabulate(n)(i => (1 + rnd.nextInt(3), rnd.nextLong(40L) * 1000L, i.toLong))
   }
 
-  test("asOf equals the naive per-row argmax join, inclusive and strict") {
+  test("asOf equals the naive per-row argmax join") {
     (1 to 8).foreach { seed =>
       val lRows = randomTimed(seed, 25)
       val rRows = randomTimed(1000 + seed, 25)
@@ -122,20 +122,17 @@ class PropertySpec extends AnyFunSuite {
         .toDF("k", "t", "l_id")
       val right = rRows.map { case (k, t, i) => (k, new Timestamp(base + t), i) }
         .toDF("k", "rt", "r_id")
-      Seq(true, false).foreach { inclusive =>
-        val got = graft.ops.AsOfJoin.asOf(left, right, Seq("k"), "t", "rt",
-          rightCols = Seq("r_id"), rightTiebreak = "r_id", inclusive = inclusive)
-          .select("l_id", "r_r_id").as[(Long, Option[Long])].collect().toMap
-        // naive reference: for each left row, argmax over all right rows
-        // of the same key with rt <= / < t, latest time then largest id
-        val expected = lRows.map { case (k, t, i) =>
-          val ms = rRows.filter(r => r._1 == k &&
-            (if (inclusive) r._2 <= t else r._2 < t))
-          i -> (if (ms.isEmpty) None
-                else Some(ms.maxBy(r => (r._2, r._3))._3))
-        }.toMap
-        assert(got == expected, s"seed=$seed inclusive=$inclusive")
-      }
+      val got = graft.ops.AsOfJoin.asOf(left, right, Seq("k"), "t", "rt",
+        rightCols = Seq("r_id"), rightTiebreak = "r_id")
+        .select("l_id", "r_r_id").as[(Long, Option[Long])].collect().toMap
+      // naive reference: for each left row, argmax over all right rows
+      // of the same key with rt <= t, latest time then largest id
+      val expected = lRows.map { case (k, t, i) =>
+        val ms = rRows.filter(r => r._1 == k && r._2 <= t)
+        i -> (if (ms.isEmpty) None
+              else Some(ms.maxBy(r => (r._2, r._3))._3))
+      }.toMap
+      assert(got == expected, s"seed=$seed")
     }
   }
 

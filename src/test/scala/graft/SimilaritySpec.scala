@@ -84,19 +84,14 @@ class SimilaritySpec extends AnyFunSuite {
     val tau = 0.4
     val brute = Similarity.bruteForcePairs(emb, tau)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val plain = Similarity.lshPairs(emb, tau, numPlanes = 4, numTables = 8,
-      multiProbe = false).select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val probed = Similarity.lshPairs(emb, tau, numPlanes = 4, numTables = 8)
+    val plain = Similarity.lshPairs(emb, tau, numPlanes = 4, numTables = 8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(brute.nonEmpty)
-    assert(plain.subsetOf(brute) && probed.subsetOf(brute),
+    assert(plain.subsetOf(brute),
       "cosine-verified candidates can never exceed brute force")
-    assert(plain.subsetOf(probed), "multi-probe only adds candidates")
     val recallPlain = (brute intersect plain).size.toDouble / brute.size
-    val recallProbed = (brute intersect probed).size.toDouble / brute.size
-    // p=4, L=8: P[collide | cos=0.4] ≈ 0.75 plain; ≈ 0.998 with 1-bit probes
+    // p=4, L=8: P[collide | cos=0.4] ≈ 0.75
     assert(recallPlain >= 0.5, s"plain recall $recallPlain of ${brute.size}")
-    assert(recallProbed >= 0.9, s"probed recall $recallProbed of ${brute.size}")
   }
 
   test("lshPairs with a reliable checkpoint dir equals the default path") {
