@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare. An entry that throws
+  * does not stop the dump; once every other entry and oracle_sql.json are
+  * written, Verify names each failed entry and exits 1. */
 object Verify {
 
   /** The deliberately RAW driver-shaped session (no GraftSession extras):
@@ -49,6 +51,7 @@ object Verify {
     val spark = rawDriverSession(cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -56,6 +59,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // queries persist intermediates for their own multi-branch plans;
       // drop them between queries so cache pressure doesn't accumulate
@@ -77,5 +81,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} entries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -2,10 +2,11 @@ package graft.core
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.types.StringType
 
-import graft.functions.{NormalizeText, SortedIntersectCount, VectorDot}
+import graft.functions.{NearestCentroids, NormalizeText, SortedIntersectCount, VectorDot}
 
 /** Engine extensions: native Catalyst functions registered via
   * `SparkSessionExtensions` (`.withExtensions(new GraftExtensions)`), or
@@ -14,66 +15,48 @@ import graft.functions.{NormalizeText, SortedIntersectCount, VectorDot}
   * session we didn't build.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.vectorDotDescriptor)
-    ext.injectFunction(GraftExtensions.normalizeTextDescriptor)
-    ext.injectFunction(GraftExtensions.sortedIntersectCountDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
 
-  private val vectorDotDescriptor = (
-    FunctionIdentifier("vector_dot"),
-    new ExpressionInfo(classOf[VectorDot].getName, "vector_dot"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 2,
-        s"vector_dot requires exactly 2 arguments, got ${children.length}")
-      VectorDot(children(0), children(1))
+  /** One native function: its name, its expression class, the argument
+    * counts it accepts and its builder. */
+  private def describe(name: String, cls: Class[_], arities: Int*)(
+      build: Seq[Expression] => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
+    (children: Seq[Expression]) => {
+      require(arities.contains(children.length),
+        s"$name requires ${arities.mkString(" or ")} arguments, got ${children.length}")
+      build(children)
     })
 
-  private val normalizeTextDescriptor = (
-    FunctionIdentifier("normalize_text"),
-    new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 1 || children.length == 2,
-        s"normalize_text requires 1 or 2 arguments, got ${children.length}")
+  /** Every native function, written once: `apply` injects these into a
+    * session being built, `ensure` registers them on a running one. */
+  private val functions = Seq(
+    describe("vector_dot", classOf[VectorDot], 2)(c => VectorDot(c(0), c(1))),
+    describe("normalize_text", classOf[NormalizeText], 1, 2) { c =>
       val form =
-        if (children.length == 1) "NFC"
-        else children(1) match {
-          case lit: org.apache.spark.sql.catalyst.expressions.Literal
-              if lit.dataType == org.apache.spark.sql.types.StringType && lit.value != null =>
-            lit.value.toString
+        if (c.length == 1) "NFC"
+        else c(1) match {
+          case l: Literal if l.dataType == StringType && l.value != null => l.value.toString
           case other => throw new IllegalArgumentException(
             s"normalize_text form must be a string literal, got $other")
         }
-      NormalizeText(children(0), form)
-    })
-
-  private val sortedIntersectCountDescriptor = (
-    FunctionIdentifier("sorted_intersect_count"),
-    new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 2,
-        s"sorted_intersect_count requires exactly 2 arguments, got ${children.length}")
-      SortedIntersectCount(children(0), children(1))
-    })
+      NormalizeText(c(0), form)
+    },
+    describe("sorted_intersect_count", classOf[SortedIntersectCount], 2)(
+      c => SortedIntersectCount(c(0), c(1))),
+    describe("nearest_centroids", classOf[NearestCentroids], 5)(
+      c => NearestCentroids(c(0), c(1), c(2), c(3), c(4))))
 
   /** Idempotently register on an existing session. */
   def ensure(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("vector_dot"))) {
-      registry.createOrReplaceTempFunction(
-        "vector_dot", vectorDotDescriptor._3, "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("normalize_text"))) {
-      registry.createOrReplaceTempFunction(
-        "normalize_text", normalizeTextDescriptor._3, "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("sorted_intersect_count"))) {
-      registry.createOrReplaceTempFunction(
-        "sorted_intersect_count", sortedIntersectCountDescriptor._3, "built-in")
-    }
+    for ((id, _, build) <- functions if !registry.functionExists(id))
+      registry.createOrReplaceTempFunction(id.funcName, build, "built-in")
   }
 
   /** `vector_dot` as a Column op (registers on the session if needed). */
@@ -91,6 +74,14 @@ object GraftExtensions {
   /** `normalize_text` as a Column op (registers on the session if needed). */
   def normalizeText(spark: SparkSession, c: Column, form: String = "NFC"): Column = {
     ensure(spark)
-    call_function("normalize_text", c, org.apache.spark.sql.functions.lit(form))
+    call_function("normalize_text", c, lit(form))
+  }
+
+  /** `nearest_centroids` as a Column op (registers if needed). */
+  def nearestCentroids(
+      spark: SparkSession, vec: Column, centroids: Column, ids: Column,
+      n: Int, metric: String): Column = {
+    ensure(spark)
+    call_function("nearest_centroids", vec, centroids, ids, lit(n), lit(metric))
   }
 }

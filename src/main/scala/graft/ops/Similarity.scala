@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Actions, GraftExtensions}
@@ -42,8 +42,8 @@ object Similarity {
     * `defaultParallelism`.
     *
     * Two deliberate guards, both measured in the r20 A/B:
-    *  - QUADRATIC consumers only. The linear kernels (the kmeansAssign
-    *    argmax, Lloyd rounds, PQ subvector argmins, topK) are
+    *  - QUADRATIC consumers only. The linear kernels (nearest-centroid
+    *    assignment in k-means, IVF and PQ, probe ranking, topK) are
     *    milliseconds of serial work; spreading them re-pays a
     *    repartition exchange + an extra AQE stage per ACTION and made
     *    the job-tax-bound IVF/PQ family ~15-30% SLOWER.
@@ -282,8 +282,8 @@ object Similarity {
     else sampled
   }
 
-  /** Every vector's inverted list: [[kmeansAssign]]'s argmax against the
-    * coarse centroids, as the IVF columns (n_id, n_emb, list_id).
+  /** Every vector's inverted list: its nearest coarse centroid
+    * ([[kmeansAssign]]), as the IVF columns (n_id, n_emb, list_id).
     */
   private def ivfLists(emb: DataFrame, centroids: DataFrame, idCol: String): DataFrame =
     kmeansAssign(emb, centroids, idCol)
@@ -298,23 +298,11 @@ object Similarity {
   private[graft] def probeAssignments(
       centroids: DataFrame, queries: DataFrame, nProbe: Int,
       idCol: String): DataFrame = {
-    val s = queries.sparkSession
-    // top-nProbe via the bounded mergeable TopByAggregator, not a rank
-    // window: each map task pre-reduces a query's candidate cells to
-    // <= nProbe pairs, so the exchange carries O(queries·nProbe) rows
-    // instead of O(queries·centroids) — same (cos DESC, id ASC) order
-    val topby = udaf(new graft.functions.TopByAggregator(nProbe),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
-    queries.select(col(idCol).as("q_id"), col("embedding").as("q_emb"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(s)(col("q_emb"), col("c_emb")))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_emb")).as("q_emb"),
-        // cast: the aggregator's input encoder is (Double, Long); an
-        // int-typed centroid id would otherwise fail at runtime
-        topby(col("c_cos"), col("c_id").cast("long")).as("cells"))
-      .select(col("q_id"), col("q_emb"), explode(col("cells")).as("cell"))
-      .select(col("q_id"), col("q_emb"), col("cell._2").as("list_id"))
+    val cents = centroids.select("c_id", "c_emb").collect().toSeq
+    // map-side: no exchange, whatever the query or centroid count
+    queries.select(col(idCol).as("q_id"), col("embedding").as("q_emb"),
+      explode(nearestCentroids(queries.sparkSession)(
+        col("embedding"), cents, nProbe, "cosine")).as("list_id"))
   }
 
   /** Each query probes its `nProbe` nearest lists; candidates are scored
@@ -357,114 +345,55 @@ object Similarity {
       .withColumn("is_keeper", (col("cluster_id") === col(idCol)).cast("int"))
   }
 
-  /** Assign every vector to its highest-cosine centroid (ties to the
-    * smallest centroid id). Centroids are broadcast — k is small by
-    * construction — so this is one map-side pass over the corpus plus a
-    * per-vector top-1 window bounded by k rows per key; no shuffle of the
-    * embedding column at any k.
+  /** The long ids of the `n` centroids nearest `vec`, best first, as an
+    * array column — the one nearest-centroid search, behind k-means and
+    * IVF list assignment, probe ranking, SemDeDup's cells and PQ
+    * training and encoding: the native `nearest_centroids` over
+    * driver-held (int or long id, float or double vector) rows `cents`.
+    * Ties go to the smaller id ([[graft.functions.NearestCentroids]]
+    * gives the exact order). The rows become plan literals, so they are
+    * bounded driver state: k·dim doubles, like spark.ml's KMeans.
     */
-  def kmeansAssign(emb: DataFrame, centroids: DataFrame, idCol: String = "vec_id"): DataFrame = {
-    val s = emb.sparkSession
-    // argmax as a MAX-STRUCT aggregation, not a row_number window: both
-    // need the n·k scored rows, but max() partial-aggregates map-side,
-    // so what crosses the wire is ONE row per vector instead of k rows
-    // each dragging the embedding — at production k (thousands of cells)
-    // the window form's exchange is k× this one. Struct comparison is
-    // field-lexicographic: highest cosine first, then highest -c_id =
-    // smallest centroid id — the identical tie-break. NOT spread (r20,
-    // measured): n·k with broadcast centroids is a light linear kernel;
-    // a repartition's exchange + extra AQE stage cost more than it saves
-    // (ext_kmeans_assign 0.23→0.35 s, ivf_indexed +0.4 s in the A/B)
-    emb.select(col(idCol), col("embedding"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(s)(col("embedding"), col("c_emb")))
-      // group by the SCALAR id only — an array-typed grouping key would
-      // force a sort-based aggregate over the whole n·k cross product
-      // (measured 2× slower than even the window form); the embedding
-      // rides along as first() since every candidate row carries it
-      .groupBy(col(idCol))
-      .agg(first(col("embedding")).as("embedding"),
-        max(struct(col("c_cos"), (-col("c_id")).as("nid"))).as("m"))
-      .select(col(idCol), col("embedding"), (-col("m.nid")).as("cluster"))
-  }
+  private def nearestCentroids(s: SparkSession)(
+      vec: Column, cents: Seq[Row], n: Int, metric: String): Column =
+    GraftExtensions.nearestCentroids(s, vec,
+      typedLit(cents.map(_.getSeq[Any](1).map {
+        case f: Float => f.toDouble
+        case d: Double => d
+      })),
+      lit(cents.map(_.getAs[Number](0).longValue).toArray), n, metric)
 
-  /** A literal array column that PRESERVES the source element type
-    * (float centroids stay float literals, double means stay double), so
-    * a literal-form distance is bit-identical to its join-form twin. */
-  private def litVec(
-      values: Seq[Any],
-      elemType: org.apache.spark.sql.types.DataType): Column = elemType match {
-    case org.apache.spark.sql.types.FloatType =>
-      lit(values.map(_.asInstanceOf[Float]).toArray)
-    case org.apache.spark.sql.types.DoubleType =>
-      lit(values.map(_.asInstanceOf[Double]).toArray)
-    case other => throw new IllegalArgumentException(
-      s"unsupported embedding element type: $other")
-  }
+  /** A one-partition frame of collected (hence schema-carrying) rows. */
+  private def localFrame(s: SparkSession, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(s.sparkContext.parallelize(rows, 1), rows.head.schema)
 
-  /** [[kmeansAssign]] against DRIVER-LOCAL centroid rows (r20, Lloyd-loop
-    * fixed-cost cut): the k candidate cosines are evaluated as ONE
-    * literal array_max expression per vector — no per-iteration broadcast
-    * build job, no n·k join rows, and no re-aggregation exchange at all;
-    * the struct comparator (c_cos, -c_id) is the aggregate form's
-    * (array_max and max(struct) share the struct ordering), so the argmax
-    * and tie-break are bit-identical. Centroids are bounded driver state
-    * by the [[kmeans]] contract, so the literal plan stays small.
+  /** Assign every vector to its highest-cosine centroid, ties to the
+    * smallest centroid id: (id, embedding, cluster), `cluster` typed like
+    * `c_id`. The centroids are collected to the driver (k is small by
+    * construction) and scored map-side by [[nearestCentroids]], so the
+    * assignment plans no exchange at any k; an empty centroid set
+    * assigns NULL. NOT spread (r20, measured): n·k is a light linear
+    * kernel; a repartition's exchange + extra AQE stage cost more than it
+    * saves (ext_kmeans_assign 0.23→0.35 s, ivf_indexed +0.4 s in the A/B).
     */
-  private[graft] def kmeansAssignLocal(
-      emb: DataFrame,
-      centroids: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType,
-      idCol: String): DataFrame = {
-    val s = emb.sparkSession
-    val ci = schema.fieldIndex("c_id")
-    val vi = schema.fieldIndex("c_emb")
-    // empty centroid set: the join form yields an empty assignment with
-    // the cluster column typed like c_id — reproduce that, don't throw
-    if (centroids.isEmpty)
-      return emb.select(col(idCol), col("embedding")).filter(lit(false))
-        .withColumn("cluster", lit(null).cast(schema(ci).dataType))
-    val elemType = schema(vi).dataType
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-    val scored = array(centroids.map { r =>
-      struct(
-        cosine(s)(col("embedding"), litVec(r.getSeq[Any](vi), elemType)).as("c_cos"),
-        (-lit(r.get(ci))).as("nid"))
-    }: _*)
+  def kmeansAssign(emb: DataFrame, centroids: DataFrame, idCol: String = "vec_id"): DataFrame =
+    assignNearest(emb, centroids.select("c_id", "c_emb").collect().toSeq, idCol)
+
+  private def assignNearest(emb: DataFrame, cents: Seq[Row], idCol: String): DataFrame = {
+    val cluster = nearestCentroids(emb.sparkSession)(col("embedding"), cents, 1, "cosine")
+      .getItem(0)
     emb.select(col(idCol), col("embedding"),
-      (-array_max(scored).getField("nid")).as("cluster"))
+      // typed like c_id (the ids cross the kernel as long)
+      cents.headOption.fold(cluster)(c => cluster.cast(c.schema("c_id").dataType)).as("cluster"))
   }
 
-  /** Lloyd's k-means over the embedding column (cosine assignment,
-    * per-dimension mean update) — the clustering stage of SemDeDup-style
-    * curation and of building a LEARNED IVF quantizer (vs
-    * [[ivfCentroids]]' sampled one).
-    *
-    * Determinism at any partitioning (the repo-wide bit-determinism
-    * contract): the mean is summed in DECIMAL(38,18) — exact, hence
-    * shuffle-order-independent — and only divided/cast to double at the
-    * end; assignment ties break on centroid id. Initial centroids default
-    * to the k vectors with the smallest xxhash64(id) (deterministic,
-    * id-value independent spread).
-    *
-    * Scale shape: per iteration one broadcast-assign pass plus one
-    * groupBy(k)·dim aggregate; centroids (k·dim doubles — bounded driver
-    * state, like spark.ml's KMeans) are collected and re-broadcast each
-    * round, so plan lineage stays flat without checkpointing. A cluster
-    * that loses all members drops out (k may shrink); fixed `maxIter`
-    * rounds, no convergence probe — the assignment argmax stabilizes long
-    * before the means stop drifting at the precision that matters here.
-    * Seeding defaults to [[kmeansInitParallel]] (constant cluster rounds).
-    *
-    * Returns (assignments: id, embedding, cluster; centroids: c_id, c_emb).
-    */
   /** Deterministic k-means‖-style seeding (Bahmani et al. 2012, VLDB —
     * "Scalable k-means++" — with the random distance-proportional draw
     * replaced by a deterministic farthest-batch selection):
     *
     *   1. seed 0 = the vector with the smallest xxhash64(id);
-    *   2. `rounds` (fixed, default 3) oversampling passes, each drawing
-    *      `oversample·k` vectors by DISTANCE-PROPORTIONAL priority
+    *   2. `rounds` (fixed at 3) oversampling passes, each drawing
+    *      `oversample·k` (4·k) vectors by DISTANCE-PROPORTIONAL priority
     *      sampling in ONE broadcast-scored corpus scan: priority =
     *      (1 − closest cosine)² / u(id) with u a seeded md5-uniform in
     *      (0, 1] (the [[DatasetSplit.sampleWeighted]] idiom) — the
@@ -487,22 +416,20 @@ object Similarity {
     * jobs, this is always `rounds`+1. Fully deterministic at any
     * partitioning: the draw is a global sort-limit on a pure function
     * of (id, distances) with a unique id tie-break, the refine is pure
-    * driver arithmetic on sorted candidates.
+    * driver arithmetic on sorted candidates. Returns the seed rows
+    * (c_id, c_emb), held on the driver for [[kmeans]]' first round.
     */
-  def kmeansInitParallel(
-      emb: DataFrame, k: Int,
-      rounds: Int = 3, oversample: Int = 4,
-      idCol: String = "vec_id"): DataFrame = {
+  private def kmeansInitParallel(emb: DataFrame, k: Int, idCol: String): Seq[Row] = {
     val s = emb.sparkSession
+    val (rounds, oversample) = (3, 4)
     // NOT spread (r20, measured): each oversampling round's n·|cands|
     // kernel is linear in the corpus and each round is its own action, so
     // a repartition re-pays its exchange every round — the A/B read the
     // kmeans-family consumers flat-to-slower with the spread
     val sel = emb.select(col(idCol).as("c_id"), col("embedding").as("c_emb"),
       xxhash64(col(idCol)).as("h"))
-    val schema = org.apache.spark.sql.types.StructType(sel.drop("h").schema.fields)
     var cands = Seq(sel.orderBy(col("h"), col("c_id")).limit(1).drop("h").head())
-    def candFrame = s.createDataFrame(s.sparkContext.parallelize(cands, 1), schema)
+    def candFrame = localFrame(s, cands)
     val perRound = math.max(1, oversample * k)
     var round = 0
     while (round < rounds) {
@@ -536,7 +463,7 @@ object Similarity {
     // local maximin refine: greedy farthest-point over the bounded
     // candidate set, starting from the hash-smallest seed already at
     // position 0. O(k · |cands| · dim) driver flops, no cluster jobs.
-    def vec(r: org.apache.spark.sql.Row): Array[Double] =
+    def vec(r: Row): Array[Double] =
       r.getSeq[Any](1).map {
         case f: Float => f.toDouble
         case d: Double => d
@@ -570,42 +497,59 @@ object Similarity {
         i += 1
       }
     }
-    s.createDataFrame(s.sparkContext.parallelize(chosen.toSeq, 1), schema)
+    chosen.toSeq
   }
 
+  /** Lloyd's k-means over the embedding column (cosine assignment,
+    * per-dimension mean update) — the clustering stage of SemDeDup-style
+    * curation and of building a LEARNED IVF quantizer (vs
+    * [[ivfCentroids]]' sampled one).
+    *
+    * Determinism at any partitioning (the repo-wide bit-determinism
+    * contract): the mean is summed in DECIMAL(38,18) — exact, hence
+    * shuffle-order-independent — and only divided/cast to double at the
+    * end; assignment ties break on centroid id. Seeding is
+    * [[kmeansInitParallel]] (constant cluster rounds).
+    *
+    * Scale shape: per iteration one aggregation job — the map-side
+    * [[nearestCentroids]] assignment, then one groupBy(k)·dim exchange;
+    * the centroids (bounded driver state) are collected each round and
+    * feed the next round's assignment as literals, so plan lineage stays
+    * flat without checkpointing. A cluster that loses all members drops
+    * out (k may shrink); fixed `maxIter` rounds, no convergence probe —
+    * the assignment stabilizes long before the means stop drifting at
+    * the precision that matters here.
+    *
+    * Returns (assignments: id, embedding, cluster; centroids: c_id, c_emb).
+    */
   def kmeans(
       emb: DataFrame,
       k: Int,
       maxIter: Int = 5,
       idCol: String = "vec_id"): (DataFrame, DataFrame) = {
-    val s = emb.sparkSession
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    val rows = lloydCentroids(emb, k, maxIter, idCol)
+    (assignNearest(emb, rows, idCol), localFrame(emb.sparkSession, rows))
+  }
+
+  /** [[kmeans]]' centroid rows (c_id, c_emb), held on the driver. */
+  private def lloydCentroids(emb: DataFrame, k: Int, maxIter: Int, idCol: String): Seq[Row] = {
     // NOT spread (r20, measured): each Lloyd round's n·k assignment
     // kernel is linear and each round is its own collect action — a
     // repartition re-pays its exchange every round for a kernel that is
-    // milliseconds at this k (A/B: kmeans consumers flat-to-slower).
-    // centroids are bounded driver state by contract (k·dim doubles, like
-    // spark.ml's KMeans — they were collected every round anyway): hold
-    // them as LOCAL rows for the whole loop, so each round's assignment
-    // is a literal expression — one aggregation job per iteration, no
-    // broadcast-build job, no assignment exchange (r20, verdict task 6).
-    // Iteration count, seeding, means, and tie-breaks are unchanged.
-    val init = kmeansInitParallel(emb, k, idCol = idCol)
-    var rows: Seq[org.apache.spark.sql.Row] = init.collect().toSeq
-    var schema = init.schema
+    // milliseconds at this k (A/B: kmeans consumers flat-to-slower)
+    var rows = kmeansInitParallel(emb, k, idCol)
+    val dim = rows.head.getSeq[Any](1).length
     val meanCols = (0 until dim).map(i =>
       (sum(col("embedding").getItem(i).cast("decimal(38,18)")) / count(lit(1)))
         .cast("double").as(s"m$i"))
     for (_ <- 1 to maxIter) {
-      val upd = kmeansAssignLocal(emb, rows, schema, idCol)
+      rows = assignNearest(emb, rows, idCol)
         .groupBy(col("cluster").as("c_id"))
         .agg(meanCols.head, meanCols.tail: _*)
         .select(col("c_id"), array((0 until dim).map(i => col(s"m$i")): _*).as("c_emb"))
-      rows = upd.collect().toSeq
-      schema = upd.schema
+        .collect().toSeq
     }
-    val centroids = s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
-    (kmeansAssignLocal(emb, rows, schema, idCol), centroids)
+    rows
   }
 
   /** SemDeDup (Abbas et al. 2023): k-means-bucketed embedding dedup —
@@ -613,7 +557,10 @@ object Similarity {
     * within shared cells, connected-components them, keep each dup
     * group's minimum id. The k-means cells play the role LSH buckets play
     * in [[lshPairs]]: candidate volume is Σ cell² · probe², never n², and
-    * the cell count scales with the corpus so cells stay bounded.
+    * the cell count scales with the corpus so cells stay bounded. The
+    * cells and the top-1 `kmeans_cluster` come from the same map-side
+    * nearest-centroid search as [[kmeansAssign]], against the final Lloyd
+    * centroids the driver already holds.
     *
     * `probe`: each vector participates in its `probe` nearest cells for
     * CANDIDATE GENERATION (its reported `kmeans_cluster` stays the top-1
@@ -642,37 +589,15 @@ object Similarity {
       probe: Int = 2,
       idCol: String = "vec_id"): DataFrame = {
     val s = emb.sparkSession
-    val (assigned, centroids) = kmeans(emb, k, kmeansIter, idCol)
-    // top-probe cells as ONE literal sort_array+slice expression per
-    // vector (r20): the centroids are bounded driver state (kmeans
-    // contract, local rows already), so the candidate scoring needs no
-    // crossJoin broadcast, no n·k rows, and NO exchange at all — the old
-    // TopByAggregator groupBy was the family's last corpus×cells
-    // aggregation. Ordering parity with TopBy's (score DESC, id ASC):
-    // struct(c_cos, -c_id) sorted DESCENDING ranks NaN first and folds
-    // -0.0 like Spark's double ordering (exactly TopBy's comparator) and
-    // breaks cosine ties to the smaller id via the negated id.
-    val cRows = centroids.collect().toSeq
-    val cSchema = centroids.schema
-    val cIdx = cSchema.fieldIndex("c_id")
-    val vIdx = cSchema.fieldIndex("c_emb")
-    val cElem = cSchema(vIdx).dataType
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-    val scored = array(cRows.map { r =>
-      struct(
-        cosine(s)(col("embedding"), litVec(r.getSeq[Any](vIdx), cElem)).as("c_cos"),
-        (-lit(r.get(cIdx)).cast("long")).as("nid"))
-    }: _*)
-    // NOT spread (r20, measured): the literal top-probe scoring is a
-    // linear n·k kernel, and the within-cell pair join downstream gets
-    // its parallelism from its own exchange — spreading here only added
-    // an exchange (A/B: semdedup flat-to-slower with it)
-    val probed = emb.select(col(idCol), col("embedding"))
-      .withColumn("__cands", slice(sort_array(scored, asc = false), 1, probe))
-      .select(col(idCol), col("embedding"),
-        norm(s)(col("embedding")).as("nrm"), explode(col("__cands")).as("cell0"))
-      .select(col(idCol), col("embedding"), col("nrm"),
-        (-col("cell0.nid")).as("cell"))
+    val cents = lloydCentroids(emb, k, kmeansIter, idCol)
+    // each vector's top-`probe` cells, scored map-side against the
+    // driver-held centroids: no n·k rows and no exchange. NOT spread
+    // (r20, measured): a linear n·k kernel, and the within-cell pair join
+    // downstream gets its parallelism from its own exchange — spreading
+    // here only added an exchange (A/B: semdedup flat-to-slower with it)
+    val probed = emb.select(col(idCol), col("embedding"),
+      norm(s)(col("embedding")).as("nrm"),
+      explode(nearestCentroids(s)(col("embedding"), cents, probe, "cosine")).as("cell"))
     val a = probed.select(col("cell"), col(idCol).as("d1"),
       col("embedding").as("a_emb"), col("nrm").as("a_nrm"))
     val b = probed.select(col("cell"), col(idCol).as("d2"),
@@ -687,7 +612,7 @@ object Similarity {
       .select("d1", "d2")
       .dropDuplicates("d1", "d2")
     val cl = TextDedup.clusters(pairs).withColumnRenamed("id", idCol)
-    assigned.select(col(idCol), col("cluster").as("kmeans_cluster"))
+    assignNearest(emb, cents, idCol).select(col(idCol), col("cluster").as("kmeans_cluster"))
       .join(cl, Seq(idCol), "left")
       .select(col(idCol), col("kmeans_cluster"),
         coalesce(col("cluster_id"), col(idCol)).as("dup_cluster"))
@@ -697,21 +622,14 @@ object Similarity {
   // ---- Product quantization (Jégou, Douze, Schmid: "Product
   // Quantization for Nearest Neighbor Search", TPAMI 2011) ----
 
-  /** Squared L2 distance via three codegen'd dots — argmin-equivalent to
-    * the elementwise form and an order of magnitude faster than a
-    * higher-order-function loop in the n·m·ks encode hot path.
-    */
-  private def l2sq(s: SparkSession)(a: Column, b: Column): Column =
-    dot(s)(a, a) + dot(s)(b, b) - lit(2.0) * dot(s)(a, b)
-
   /** (id, sub_id, sub_vec): each embedding cut into `m` contiguous
     * subvectors of dim/m dims, cast to double once so every downstream
     * distance runs on a uniform type.
     */
-  private def subVectors(emb: DataFrame, m: Int, dim: Int, idCol: String): DataFrame = {
+  private[graft] def subVectors(emb: DataFrame, m: Int, dim: Int, idCol: String): DataFrame = {
     val dsub = dim / m
-    // NOT spread (r20, measured): the n·m·ks argmin kernels over these
-    // subvectors are linear and the PQ paths are job-tax-bound (70 jobs
+    // NOT spread (r20, measured): the n·m·ks nearest-code kernels over
+    // these subvectors are linear and the PQ paths are job-tax-bound (70 jobs
     // at sf0.1) — adding a repartition exchange per action made
     // ext_ann_ivf_pq ~30% slower in the A/B
     emb.select(col(idCol),
@@ -720,26 +638,30 @@ object Similarity {
         .as(Seq("sub_id", "sub_vec")))
   }
 
-  /** Nearest-code assignment for a (id, sub_id, sub_vec) frame against a
-    * broadcast codebook; ties break on the smaller code id.
-    */
-  private def assignCodes(subs: DataFrame, codebooks: DataFrame, idCol: String): DataFrame = {
-    val s = subs.sparkSession
-    // min-struct argmin (see kmeansAssign's max-struct note): one row
-    // per (vector, subspace) crosses the exchange instead of one per
-    // codebook entry — ks× less shuffle at any corpus size
-    subs.join(broadcast(codebooks), Seq("sub_id"))
-      .withColumn("d2", l2sq(s)(col("sub_vec"), col("c_vec")))
-      .groupBy(col(idCol), col("sub_id"))
-      .agg(first(col("sub_vec")).as("sub_vec"),
-        min(struct(col("d2"), col("code"))).as("m"))
-      .select(col(idCol), col("sub_id"), col("sub_vec"), col("m.code"))
+  /** Codebook rows (sub_id, code, c_vec) as per-subspace (code, c_vec)
+    * rows, subspace j at index j. */
+  private def bySubspace(cb: Seq[Row]): IndexedSeq[Seq[Row]] = {
+    val subs = cb.groupBy(_.getInt(0))
+    (0 to subs.keys.max).map(j => subs(j).map(r => Row(r.getInt(1), r.get(2))))
+  }
+
+  /** The nearest code to subvector `sub` in one subspace's codebook:
+    * squared L2, ties to the smaller code. */
+  private def nearestCode(s: SparkSession)(sub: Column, codes: Seq[Row]): Column =
+    nearestCentroids(s)(sub, codes, 1, "l2sq").getItem(0).cast("int")
+
+  /** (m, dim) of the vectors a codebook encodes. */
+  private def pqShape(cb: Seq[Row]): (Int, Int) = {
+    val m = cb.map(_.getInt(0)).max + 1
+    (m, m * cb.head.getSeq[Any](2).length)
   }
 
   /** Train per-subspace codebooks: independent Lloyd's k-means (L2, the
     * PQ metric) in each of the `m` subspaces, all subspaces trained in
-    * the SAME distributed pass per iteration (one broadcast-assign + one
-    * groupBy((sub, code)) — not m separate jobs).
+    * the SAME distributed pass per iteration ([[codebookRound]]: a
+    * map-side nearest-code assignment against the driver-held codebook,
+    * then one groupBy((sub, code)) exchange and a collect — not m
+    * separate jobs).
     *
     * Determinism: seeds are the `ks` distinct subvectors with the
     * smallest xxhash64 of their minimum owning id (groupBy(min) before
@@ -756,90 +678,95 @@ object Similarity {
       m: Int = 8,
       ks: Int = 16,
       maxIter: Int = 5,
-      idCol: String = "vec_id",
-      dimHint: Option[Int] = None): DataFrame = {
-    val s = emb.sparkSession
-    // dimHint (r20, job-count cut): the PQ paths are job-tax-bound (~70
-    // jobs for ext_ann_ivf_pq at sf0.1, each ~0.1-0.2 s of fixed action
-    // cost); a caller that already probed the vector width passes it in
-    // so this head() job — and its twins in pqEncode — run once per
-    // query instead of once per stage. None keeps the self-probing
-    // behavior; the value is identical either way.
-    val dim = dimHint.getOrElse(
-      emb.select(size(col("embedding"))).head().getInt(0))
+      idCol: String = "vec_id"): DataFrame = {
+    localFrame(emb.sparkSession, trainCodebooks(emb, m, ks, maxIter, idCol))
+  }
+
+  /** [[pqCodebooks]]' rows, held on the driver. */
+  private def trainCodebooks(
+      emb: DataFrame, m: Int, ks: Int, maxIter: Int, idCol: String): Seq[Row] = {
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
     val subs = subVectors(emb, m, dim, idCol).persist()
     try {
-      subs.count() // fill the persist before the iteration fan-out
       val seedW = org.apache.spark.sql.expressions.Window
         .partitionBy(col("sub_id")).orderBy(col("h"), col("seed_id"))
-      val cb = subs.groupBy(col("sub_id"), col("sub_vec"))
+      val seeds = subs.groupBy(col("sub_id"), col("sub_vec"))
         .agg(min(col(idCol)).as("seed_id"))
         .withColumn("h", xxhash64(col("seed_id")))
         .withColumn("rk", row_number().over(seedW))
         .filter(col("rk") <= ks)
         .select(col("sub_id"), (col("rk") - 1).cast("int").as("code"),
           col("sub_vec").as("c_vec"))
-      val meanCols = (0 until dsub).map(i =>
-        (sum(col("sub_vec").getItem(i).cast("decimal(38,18)")) / count(lit(1)))
-          .cast("double").as(s"m$i"))
-      // NOTE (r20): a literal-expression assignment (one array_min per
-      // subspace over the driver-local codebook) was tried here and
-      // REVERTED — m·ks l2sq terms inline is ~384
-      // vector-dot subexpressions in one generated method, which blows
-      // past JIT/codegen method limits and measured ~2× slower than the
-      // broadcast-join argmin (ext_ann_pq 5.1 → 9.3 s). The join form
-      // stays; kmeansAssignLocal keeps the literal form because its k·3
-      // dot terms stay JIT-sized.
-      var cbLoop = cb
-      for (_ <- 1 to maxIter) {
-        val upd = assignCodes(subs, cbLoop, idCol)
-          .groupBy(col("sub_id"), col("code"))
-          .agg(meanCols.head, meanCols.tail: _*)
-          .select(col("sub_id"), col("code"),
-            array((0 until dsub).map(i => col(s"m$i")): _*).as("c_vec"))
-        // ks·dim doubles: bounded driver action; rebuilding from local
-        // rows keeps iteration lineage flat (see kmeans)
-        val rows = upd.collect().toSeq
-        cbLoop = s.createDataFrame(s.sparkContext.parallelize(rows, 1), upd.schema)
-      }
-      cbLoop
+      // ks·dim doubles: a bounded driver collect per round, which also
+      // keeps iteration lineage flat (see kmeans); the seeds' collect
+      // fills the persist the rounds read
+      var rows = seeds.collect().toSeq
+      for (_ <- 1 to maxIter) rows = codebookRound(subs, rows).collect().toSeq
+      rows
     } finally subs.unpersist()
+  }
+
+  /** One Lloyd round of [[pqCodebooks]] over a [[subVectors]] frame:
+    * each subvector's nearest code in its own subspace's codebook `cb`
+    * (one [[nearestCentroids]] call per subspace, so code size grows with
+    * m only), then the per-(sub_id, code) decimal means — the round's one
+    * exchange. Returns (sub_id, code, c_vec).
+    */
+  private[graft] def codebookRound(subs: DataFrame, cb: Seq[Row]): DataFrame = {
+    val s = subs.sparkSession
+    val dsub = cb.head.getSeq[Any](2).length
+    val book = bySubspace(cb)
+    val code = book.indices.tail.foldLeft(
+        when(col("sub_id") === 0, nearestCode(s)(col("sub_vec"), book(0)))) { (w, j) =>
+      w.when(col("sub_id") === j, nearestCode(s)(col("sub_vec"), book(j)))
+    }
+    val meanCols = (0 until dsub).map(i =>
+      (sum(col("sub_vec").getItem(i).cast("decimal(38,18)")) / count(lit(1)))
+        .cast("double").as(s"m$i"))
+    subs.select(col("sub_id"), col("sub_vec"), code.as("code"))
+      .groupBy(col("sub_id"), col("code"))
+      .agg(meanCols.head, meanCols.tail: _*)
+      .select(col("sub_id"), col("code"),
+        array((0 until dsub).map(i => col(s"m$i")): _*).as("c_vec"))
   }
 
   /** Encode each vector as `m` one-byte-ish codes: (id, codes array<int>
     * ordered by subspace). This is the 100 TB storage win — a 64-dim
     * float vector (256 B) compresses to m codes (m B at ks ≤ 256), so a
-    * billion-vector index fits where the raw vectors never would.
+    * billion-vector index fits where the raw vectors never would. The
+    * codebook is collected to the driver; m and the subvector width come
+    * from its rows, and encoding is map-side, with no exchange.
     */
-  def pqEncode(
-      emb: DataFrame, codebooks: DataFrame, idCol: String = "vec_id",
-      mHint: Option[Int] = None, dimHint: Option[Int] = None): DataFrame = {
-    // hints: see pqCodebooks.dimHint — same job-count cut, same values
-    val m = mHint.getOrElse(
-      codebooks.select(max(col("sub_id"))).head().getInt(0) + 1)
-    val dim = dimHint.getOrElse(
-      emb.select(size(col("embedding"))).head().getInt(0))
-    assignCodes(subVectors(emb, m, dim, idCol), codebooks, idCol)
-      .groupBy(col(idCol))
-      .agg(transform(array_sort(collect_list(struct(col("sub_id"), col("code")))),
-        x => x.getField("code")).as("codes"))
+  def pqEncode(emb: DataFrame, codebooks: DataFrame, idCol: String = "vec_id"): DataFrame =
+    encodeRows(emb, codebooks.select("sub_id", "code", "c_vec").collect().toSeq, idCol)
+
+  private def encodeRows(emb: DataFrame, cb: Seq[Row], idCol: String): DataFrame = {
+    val (m, dim) = pqShape(cb)
+    val dsub = dim / m
+    val book = bySubspace(cb)
+    emb.select(col(idCol), array((0 until m).map(j =>
+      nearestCode(emb.sparkSession)(
+        slice(col("embedding"), j * dsub + 1, dsub), book(j))): _*).as("codes"))
   }
 
   /** Per-query ADC lookup table: exact d² from each query's subvectors
     * to every code centroid — (q_id, sub_id, code, d2), nq·m·ks rows,
     * broadcast-sized. The single source of truth for ADC scoring,
-    * shared by [[pqTopK]] and [[ivfPqTopKIndexed]].
+    * shared by [[pqTopK]] and [[ivfPqTopKIndexed]]; d² is
+    * `nearest_centroids`' l2sq arithmetic, three codegen'd dots.
     */
   private def adcLut(
       queries: DataFrame, cb: DataFrame, m: Int, dim: Int,
-      idCol: String): DataFrame =
+      idCol: String): DataFrame = {
+    val d = dot(queries.sparkSession) _
     subVectors(queries, m, dim, idCol)
       .select(col(idCol).as("q_id"), col("sub_id"), col("sub_vec"))
       .join(broadcast(cb), Seq("sub_id"))
       .select(col("q_id"), col("sub_id"), col("code"),
-        l2sq(queries.sparkSession)(col("sub_vec"), col("c_vec")).as("d2"))
+        (d(col("sub_vec"), col("sub_vec")) + d(col("c_vec"), col("c_vec")) -
+          lit(2.0) * d(col("sub_vec"), col("c_vec"))).as("d2"))
+  }
 
   /** ADC (asymmetric distance computation) top-k with exact re-rank.
     *
@@ -871,11 +798,10 @@ object Similarity {
       rerank: Int = 8,
       idCol: String = "vec_id"): DataFrame = {
     val s = emb.sparkSession
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val cb = pqCodebooks(emb, m, ks, maxIter, idCol, Some(dim))
-    val codes = pqEncode(emb, cb, idCol, Some(m), Some(dim))
+    val cb = trainCodebooks(emb, m, ks, maxIter, idCol)
+    val codes = encodeRows(emb, cb, idCol)
       .select(col(idCol).as("n_id"), posexplode(col("codes")).as(Seq("sub_id", "code")))
-    val lut = adcLut(queries, cb, m, dim, idCol)
+    val lut = adcLut(queries, localFrame(s, cb), m, pqShape(cb)._2, idCol)
     val adcW = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(asc("adc_d2"), asc("n_id"))
     val cand = codes.join(broadcast(lut), Seq("sub_id", "code"))
@@ -948,7 +874,7 @@ object Similarity {
     * index under the index's FROZEN coarse centroids — the
     * embedding-corpus twin of the dedup ingest loop's index growth
     * (`TextDedup.appendIndexSlicePrecomputed`). The batch is assigned with
-    * the same argmax as the base build and lands in its own
+    * the same nearest-centroid search as the base build and lands in its own
     * `batch=<tag>` slice with OVERWRITE semantics, so a replayed ingest
     * batch rewrites its slice instead of duplicating it; probes read the
     * union of slices through partition discovery, still pruned by
@@ -1128,32 +1054,27 @@ object Similarity {
     // stages); the codes slice needs both and stays after the barrier.
     // Content is unchanged: training is deterministic (exact decimal
     // means) regardless of what runs beside it.
-    // probe the vector width ONCE for the whole build (job-count cut,
-    // see pqCodebooks.dimHint) — before the fork so neither side re-pays
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val cbHolder =
       new java.util.concurrent.atomic.AtomicReference[DataFrame]()
     Actions.inParallel(
       () => writeIvfIndex(emb, dir, centroidStride, idCol),
       () => {
-        val cb = pqCodebooks(emb, m, ks, maxIter, idCol, Some(dim))
+        val cb = pqCodebooks(emb, m, ks, maxIter, idCol)
         cb.write.mode("overwrite").parquet(s"$dir/codebooks")
         cbHolder.set(cb)
       })
-    writeCodesSlice(emb, cbHolder.get(), dir, "base", idCol,
-      mHint = Some(m), dimHint = Some(dim))
+    writeCodesSlice(emb, cbHolder.get(), dir, "base", idCol)
   }
 
   private[graft] def writeCodesSlice(
       emb: DataFrame, cb: DataFrame, dir: String, tag: String,
-      idCol: String,
-      mHint: Option[Int] = None, dimHint: Option[Int] = None): Unit = {
+      idCol: String): Unit = {
     // read the assignment back from the written slice (not recomputed):
     // codes and lists are guaranteed consistent even if the quantizer
     // implementation changes between the two writes
     val lists = emb.sparkSession.read.parquet(s"$dir/lists/batch=$tag")
       .select(col("n_id").as(idCol), col("list_id"))
-    pqEncode(emb, cb, idCol, mHint, dimHint)
+    pqEncode(emb, cb, idCol)
       .join(lists, Seq(idCol))
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
@@ -1179,8 +1100,7 @@ object Similarity {
       idCol: String = "vec_id"): DataFrame = {
     val centroids = spark.read.parquet(s"$dir/centroids")
     val cb = spark.read.parquet(s"$dir/codebooks")
-    val m = cb.select(max(col("sub_id"))).head().getInt(0) + 1
-    val dim = queries.select(size(col("embedding"))).head().getInt(0)
+    val (m, dim) = pqShape(cb.select("sub_id", "code", "c_vec").collect().toSeq)
     val q = queries.select(col(idCol).as("q_id"), col("embedding").as("q_emb"))
     // q_emb dropped from the broadcast probe frame: the ADC scan only
     // needs (q_id, list_id); raw query vectors rejoin at the re-rank

@@ -22,25 +22,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(diff == 0.0)
   }
 
-  test("literal-form kmeans assignment is bit-identical to the broadcast-join form") {
-    // r20: the Lloyd loop evaluates assignment as a literal array_max
-    // expression over driver-local centroids; same cosines, same
-    // (c_cos, -c_id) tie-break — must equal kmeansAssign row-for-row,
-    // both on float centroids (raw vectors) and double centroids
-    // (post-update means)
-    val centF = emb.filter($"vec_id" < 8)
-      .select($"vec_id".as("c_id"), $"embedding".as("c_emb"))
-    val centD = centF.select($"c_id", $"c_emb".cast("array<double>").as("c_emb"))
-    for (cent <- Seq(centF, centD)) {
-      val joinForm = Similarity.kmeansAssign(emb, cent)
-        .select("vec_id", "cluster").as[(Long, Long)].collect().toMap
-      val litForm = Similarity.kmeansAssignLocal(
-        emb, cent.collect().toSeq, cent.schema, "vec_id")
-        .select("vec_id", "cluster").as[(Long, Long)].collect().toMap
-      assert(litForm == joinForm)
-    }
-  }
-
   test("spreadForVectorWork spreads a one-split corpus and no-ops below the floor") {
     // r20: the n² bruteForcePairs kernel is map-side in a broadcast
     // nested-loop join, so its parallelism IS the streamed side's
