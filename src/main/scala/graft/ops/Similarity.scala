@@ -266,8 +266,10 @@ object Similarity {
     */
   def ivfTopKWithCentroids(
       emb: DataFrame, centroids: DataFrame, queries: DataFrame,
-      k: Int, nProbe: Int = 2, idCol: String = "vec_id"): DataFrame =
-    probeLists(ivfLists(emb, centroids, idCol), centroids, queries, k, nProbe, idCol)
+      k: Int, nProbe: Int = 2, idCol: String = "vec_id"): DataFrame = {
+    val cents = centroidRows(centroids) // one collect: lists and probes
+    probeLists(ivfLists(emb, cents, idCol), cents, queries, k, nProbe, idCol)
+  }
 
   /** Deterministic coarse quantizer: hash-based centroid sampling
     * (id-value independent: works for non-contiguous / 1-based / hashed
@@ -285,8 +287,8 @@ object Similarity {
   /** Every vector's inverted list: its nearest coarse centroid
     * ([[kmeansAssign]]), as the IVF columns (n_id, n_emb, list_id).
     */
-  private def ivfLists(emb: DataFrame, centroids: DataFrame, idCol: String): DataFrame =
-    kmeansAssign(emb, centroids, idCol)
+  private def ivfLists(emb: DataFrame, cents: Seq[Row], idCol: String): DataFrame =
+    assignNearest(emb, cents, idCol)
       .select(col(idCol).as("n_id"), col("embedding").as("n_emb"), col("cluster").as("list_id"))
 
   /** Rank the coarse centroids per query and keep the top `nProbe`
@@ -297,22 +299,25 @@ object Similarity {
     */
   private[graft] def probeAssignments(
       centroids: DataFrame, queries: DataFrame, nProbe: Int,
-      idCol: String): DataFrame = {
-    val cents = centroids.select("c_id", "c_emb").collect().toSeq
+      idCol: String): DataFrame =
+    probeNearest(centroidRows(centroids), queries, nProbe, idCol)
+
+  /** [[probeAssignments]] against driver-held centroid rows. */
+  private def probeNearest(
+      cents: Seq[Row], queries: DataFrame, nProbe: Int, idCol: String): DataFrame =
     // map-side: no exchange, whatever the query or centroid count
     queries.select(col(idCol).as("q_id"), col("embedding").as("q_emb"),
       explode(nearestCentroids(queries.sparkSession)(
         col("embedding"), cents, nProbe, "cosine")).as("list_id"))
-  }
 
   /** Each query probes its `nProbe` nearest lists; candidates are scored
     * exactly and ranked per query.
     */
   private def probeLists(
-      assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
+      assigned: DataFrame, cents: Seq[Row], queries: DataFrame,
       k: Int, nProbe: Int, idCol: String): DataFrame = {
     val s = assigned.sparkSession
-    val probes = probeAssignments(centroids, queries, nProbe, idCol)
+    val probes = probeNearest(cents, queries, nProbe, idCol)
     val scored = assigned.join(broadcast(probes), Seq("list_id"))
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("cosine", cosine(s)(col("q_emb"), col("n_emb")))
@@ -357,10 +362,7 @@ object Similarity {
   private def nearestCentroids(s: SparkSession)(
       vec: Column, cents: Seq[Row], n: Int, metric: String): Column =
     GraftExtensions.nearestCentroids(s, vec,
-      typedLit(cents.map(_.getSeq[Any](1).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-      })),
+      typedLit(cents.map(_.getSeq[Number](1).map(_.doubleValue))),
       lit(cents.map(_.getAs[Number](0).longValue).toArray), n, metric)
 
   /** A one-partition frame of collected (hence schema-carrying) rows. */
@@ -377,7 +379,11 @@ object Similarity {
     * saves (ext_kmeans_assign 0.23→0.35 s, ivf_indexed +0.4 s in the A/B).
     */
   def kmeansAssign(emb: DataFrame, centroids: DataFrame, idCol: String = "vec_id"): DataFrame =
-    assignNearest(emb, centroids.select("c_id", "c_emb").collect().toSeq, idCol)
+    assignNearest(emb, centroidRows(centroids), idCol)
+
+  /** A (c_id, c_emb) centroid frame collected to the driver. */
+  private def centroidRows(centroids: DataFrame): Seq[Row] =
+    centroids.select("c_id", "c_emb").collect().toSeq
 
   private def assignNearest(emb: DataFrame, cents: Seq[Row], idCol: String): DataFrame = {
     val cluster = nearestCentroids(emb.sparkSession)(col("embedding"), cents, 1, "cosine")
@@ -463,19 +469,13 @@ object Similarity {
     // local maximin refine: greedy farthest-point over the bounded
     // candidate set, starting from the hash-smallest seed already at
     // position 0. O(k · |cands| · dim) driver flops, no cluster jobs.
-    def vec(r: Row): Array[Double] =
-      r.getSeq[Any](1).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-        case n: Number => n.doubleValue()
-      }.toArray
     def cos(a: Array[Double], b: Array[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
       if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
     }
     val byId = cands.sortBy(r => r.getLong(0)).toArray
-    val vs = byId.map(vec)
+    val vs = byId.map(_.getSeq[Number](1).map(_.doubleValue).toArray)
     val taken = new Array[Boolean](byId.length)
     val seed0 = byId.indexWhere(_.getLong(0) == cands.head.getLong(0))
     taken(seed0) = true
@@ -678,9 +678,8 @@ object Similarity {
       m: Int = 8,
       ks: Int = 16,
       maxIter: Int = 5,
-      idCol: String = "vec_id"): DataFrame = {
+      idCol: String = "vec_id"): DataFrame =
     localFrame(emb.sparkSession, trainCodebooks(emb, m, ks, maxIter, idCol))
-  }
 
   /** [[pqCodebooks]]' rows, held on the driver. */
   private def trainCodebooks(
@@ -864,7 +863,7 @@ object Similarity {
       emb: DataFrame, centroids: DataFrame, dir: String, tag: String,
       idCol: String): Unit = {
     require(!tag.contains("/") && tag.nonEmpty, s"bad index batch tag: $tag")
-    ivfLists(emb, centroids, idCol)
+    ivfLists(emb, centroidRows(centroids), idCol)
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
       .parquet(s"$dir/lists/batch=$tag")
@@ -1028,13 +1027,13 @@ object Similarity {
       spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, nProbe: Int = 2, idCol: String = "vec_id",
       excludeBatchTag: Option[String] = None): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val cents = centroidRows(spark.read.parquet(s"$dir/centroids"))
     // excludeBatchTag: a replayed ingest tick must not probe its OWN
     // earlier slice (every batch vector is an exact dup of itself there);
     // batch= is a partition level, so exclusion is a directory prune
     val assigned = graft.core.Slices.excludeTag(
       spark.read.parquet(s"$dir/lists"), excludeBatchTag)
-    probeLists(assigned, centroids, queries, k, nProbe, idCol)
+    probeLists(assigned, cents, queries, k, nProbe, idCol)
   }
 
   /** Persist the full IVFPQ layout (the index a 100 TB ANN service

@@ -1,53 +1,19 @@
 package graft
 
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Similarity
 
-/** The bounded top-p aggregator's ordering contract: total under NaN
-  * (zero-norm embeddings), -0.0 ≡ 0.0, identical to the row_number
-  * window form at every partitioning, and tolerant of non-long id types
-  * at the Similarity call sites.
+/** Centroid-id typing at the Similarity probe path. The probe path once
+  * ranked cells with a (Double, Long)-typed top-p aggregator; that
+  * aggregator and its ordering case are gone (the ordering rows are now
+  * inputs of NearestCentroidsSpec), and this case stays to pin that a
+  * non-long centroid id still runs through `nearest_centroids`.
   */
 class TopByAggregatorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  test("NaN and -0.0 keep the window-form order at any partitioning") {
-    val rows = Seq(
-      // key 1: a NaN candidate — Spark's desc ordering ranks NaN FIRST,
-      // so the kept top-2 must be (NaN, then the best real score)
-      (1L, 0.9, 10L), (1L, Double.NaN, 11L), (1L, 0.8, 12L), (1L, 0.7, 13L),
-      // key 2: two NaNs — both kept, tie broken to the smaller id
-      (2L, Double.NaN, 21L), (2L, Double.NaN, 20L), (2L, 1.0, 22L),
-      // key 3: -0.0 vs 0.0 are EQUAL — tie must break by id, not by sign
-      (3L, -0.0, 31L), (3L, 0.0, 30L), (3L, -1.0, 32L))
-      .toDF("key", "score", "id")
-    val topby = udaf(new graft.functions.TopByAggregator(2),
-      ExpressionEncoder[(Double, Long)]())
-    def kept(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
-      df.groupBy("key").agg(topby(col("score"), col("id")).as("top"))
-        .select(col("key"), expr("transform(top, x -> x._2)").as("ids"))
-        .as[(Long, Seq[Long])].collect().toMap
-    // the window form this aggregator replaces (rank by desc score, asc id)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy(desc("score"), asc("id"))
-    val windowForm = rows
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
-      .orderBy("key", "rn")
-      .select("key", "id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val expected = Map(
-      1L -> Seq(11L, 10L), 2L -> Seq(20L, 21L), 3L -> Seq(30L, 31L))
-    assert(windowForm == expected, "window-form baseline moved")
-    // partition-order independence: merge order must not change the set
-    for (parts <- Seq(1, 3, 7)) {
-      assert(kept(rows.repartition(parts)) == expected,
-        s"kept set diverged at $parts partitions")
-    }
-  }
 
   test("int-typed centroid ids work through the probe path") {
     // the aggregator's input encoder is (Double, Long); the call sites
